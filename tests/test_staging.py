@@ -6,7 +6,7 @@ through the same cache key, and aggregations keyed on the bucket
 column inherit the bucketing (zero exchange) instead of shuffling a
 relation ~10x the corpus width.
 
-These tests mutate the session-global caches on purpose — staging is
+These tests mutate the session store on purpose — staging is
 defined to be transparent to consumers, so every later query in the
 shared pytest session reading the staged table IS part of the
 contract under test (results must be identical either way).
@@ -58,28 +58,31 @@ def test_staged_dsir_features_preserve_weights(spark):
            for r in TS.dsir_weights(spark, SF).collect()}
     assert got == want
     # the distribution build reads the bucketed table with no exchange
-    docs = TS._DSIR_FEATS_CACHE[next(
-        k for k in TS._DSIR_FEATS_CACHE
-        if k[-1] == "staged")]
+    docs = _cache.session_peek(spark, ("dsir_feats", SF))
     counts_plan = _plan(docs.groupBy("f").agg(F.count("*").alias("c")))
     assert "Exchange" not in counts_plan, counts_plan
     assert "Scan parquet" in counts_plan
 
 
 def test_session_staged_sweeps_dead_session_entries(spark):
-    """Both cache paths evict entries keyed to other (dead)
+    """Both store paths evict entries keyed to other (dead)
     SparkContexts on a miss — a staged-path miss that skipped the
     sweep would accumulate JVM references in long-lived processes
     (review finding)."""
-    DD._GRAM_CACHE[("dead-app-id", "bogus", 99)] = object()
+    dead = ("dead-app-id", "grams", "bogus", 99)
+    _cache._STORE[dead] = (object(), None)
     DD.stage_gram_relation(spark, SF, k=9)  # fresh key -> miss -> sweep
-    assert ("dead-app-id", "bogus", 99) not in DD._GRAM_CACHE
+    assert dead not in _cache._STORE
 
 
 def test_clear_session_caches_drops_everything(spark):
     DD.stage_gram_relation(spark, SF)
-    assert DD._GRAM_CACHE
+    assert _cache.session_peek(spark, ("grams", SF, DD.DECON_K)) is not None
     _cache.clear_session_caches()
-    assert not DD._GRAM_CACHE and not TS._DSIR_FEATS_CACHE
+    # every entry is gone (the k=9 staged grams and the staged DSIR
+    # features included), not just the two named below
+    assert not _cache._STORE
+    assert _cache.session_peek(spark, ("grams", SF, DD.DECON_K)) is None \
+        and _cache.session_peek(spark, ("dsir_feats", SF)) is None
     # and the next call rebuilds cleanly (persisted path)
     assert DD._gram_relation(spark, SF, DD.DECON_K).count() > 0

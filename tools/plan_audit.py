@@ -204,21 +204,25 @@ def main() -> None:
             DD.winnowing_fingerprints(spark, SF),
     }
 
-    # staging forms LAST: stage_* replaces the session cache entry, so
-    # every section above this line shows the default persisted shape
-    # and the two below show consumers reading the bucketed staged
-    # table (zero exchange on the bucket-keyed aggregation)
+    # staging forms LAST: stage_* replaces (and unpersists) the session
+    # store's in-memory entry, so every section above this line is
+    # formatted first, showing the default persisted shape, and the two
+    # below show consumers reading the bucketed staged table (zero
+    # exchange on the bucket-keyed aggregation)
+    plans = {title: key_lines(fmt(spark, df))
+             for title, df in sections.items()}
     DD.stage_gram_relation(spark, SF)
     TS.stage_dsir_features(spark, SF)
-    sections[
+    plans[
         "q_doc_repeated_ngrams AFTER stage_gram_relation — consumers "
         "scan the h-bucketed staged parquet table; the incidence "
         "groupBy(h) inherits the bucketing (no exchange of the "
-        "corpus-token-sized relation)"] = DD.repeated_ngrams(spark, SF)
-    sections[
+        "corpus-token-sized relation)"] = key_lines(
+        fmt(spark, DD.repeated_ngrams(spark, SF)))
+    plans[
         "q_doc_dsir_weights AFTER stage_dsir_features — distribution "
         "build aggregates straight off the f-bucketed staged scan"] = \
-        TS.dsir_weights(spark, SF)
+        key_lines(fmt(spark, TS.dsir_weights(spark, SF)))
 
     parts = [
         "# PLANS — physical-plan audit of the headline queries",
@@ -231,9 +235,9 @@ def main() -> None:
         "in exactly one MapInPandas stage of the extraction pipeline.",
         "",
     ]
-    for title, df in sections.items():
+    for title, plan in plans.items():
         parts.append(f"## {title}\n")
-        parts.append("```\n" + key_lines(fmt(spark, df)) + "\n```\n")
+        parts.append("```\n" + plan + "\n```\n")
     spark.stop()
 
     path = os.path.join(os.path.dirname(os.path.dirname(

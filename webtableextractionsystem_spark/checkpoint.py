@@ -30,7 +30,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.extraction import extract_all, with_bucket
+from .operators.extraction import bucket_metrics, extract_all, with_bucket
 from .schemas import CHECKPOINT
 
 STAGE_EXTRACT = "extract"
@@ -122,12 +122,7 @@ class CheckpointRunner:
         fresh = out.join(F.broadcast(done), on="bucket", how="left_anti")
         wall_ms = int((time.monotonic() - t0) * 1000)
         metrics = (
-            fresh.groupBy("bucket")
-            .agg(
-                F.count("*").alias("doc_count"),
-                F.sum("n_spans").cast("long").alias("span_count"),
-                F.sum("n_errors").cast("long").alias("error_count"),
-            )
+            bucket_metrics(fresh)
             .withColumn("stage", F.lit(STAGE_EXTRACT))
             .withColumn("status", F.lit("done"))
             .withColumn("wall_ms", F.lit(wall_ms))

@@ -1,36 +1,40 @@
-"""Per-session persisted-DataFrame memoization — the ONE home of the
-memoize-then-persist pattern used by the operators whose intermediate
-relation feeds several consumers (gram relation, PageRank edges, Bloom
-keys/bits, BM25 postings, DSIR features).
+"""The per-session store of shared intermediate relations — the ONE
+home of memoize-then-persist and of its release.
 
-Why persist + materialize eagerly: a lazy persist never warms before
-the caller's single final action, so every downstream consumer would
-re-derive the relation through lineage. Why a module-level cache keyed
-by (applicationId, ...): the returned DataFrames stay LAZY for the
-driver/gate to hash real plans, so there is no point at which the
-operator could unpersist — instead repeated calls (gate, bench, plan
-audit) reuse ONE resident copy per session. Entries from dead
-SparkContexts are dropped on the next build so long-lived processes
-(test suites spawning many corpora) don't accumulate stale references.
+An operator whose intermediate relation feeds several consumers (gram
+relation, PageRank edges, Bloom keys/bits, BM25 postings, DSIR
+features, the band/signature self-joins, PMI's term table, the x_*
+extraction pass) asks for it by ``(name, *args)``. The store prefixes
+the applicationId, builds the relation once, and hands the same
+DataFrame to every later caller in the session, so repeated calls
+(gate, bench, plan audit) reuse ONE resident copy. Each relation keeps
+the materialization it was measured with:
 
-IMMUTABLE-INPUT CONTRACT: entries are keyed by (applicationId,
-sf_dir, ...), never by file listing or mtime — rewriting the parquet
-at the same path within one session would silently serve the stale
-persisted/staged relation to every consumer (bloom keys/bits, BM25
-postings, DSIR features, bigram LM, CMS tokens, gram relation,
-PageRank edges, IVF brute truth). The testdata corpora are read-only
-so this cannot trigger in the driver contract; a long-lived session
-that regenerates a corpus in place must call ``clear_session_caches``
-first.
+* eager (default): persist + count(). A lazy persist never warms
+  before the caller's single final action, so every consumer would
+  re-derive the relation through lineage.
+* ``lazy=True``: persist only — for relations read by one self-join or
+  plan inside one query, where eager measured slower (see
+  lsh_candidate_pairs).
+* ``session_staged``: the 100 TB form for the corpus-token-sized
+  explodes (~10x the corpus width). Written ONCE to a hash-bucketed
+  parquet table that replaces the in-memory entry under the same key,
+  so aggregations and equi-joins on the bucket column reuse the
+  bucketing (zero exchange) instead of re-shuffling a resident copy.
 
-For relations too wide to pin in executor memory — the corpus-token-
-sized explodes (~10x the corpus width: gram relation, DSIR features)
-— ``session_staged`` is the 100 TB form: write ONCE to a hash-
-bucketed parquet table, then every consumer scans the staged table,
-and any aggregation or equi-join keyed on the bucket column reuses
-the bucketing as its partitioning (zero exchange) instead of
-re-shuffling a memory-resident copy. It seeds the SAME cache dict,
-so existing consumers transparently pick up the staged table.
+Lifecycle: the returned DataFrames stay LAZY so the driver/gate hash
+real plans, hence no operator can release what it hands out — the
+store owns every entry. ``clear_session_caches()`` unpersists every
+persisted entry and drops every staged table of the live session;
+entries of dead SparkContexts are forgotten on the next build. After a
+clear, a DataFrame handed out earlier still runs if it was persisted
+(it recomputes through lineage), but not if it read a staged table.
+
+IMMUTABLE-INPUT CONTRACT: keys never include a file listing or mtime —
+rewriting the parquet at the same path within one session would
+silently serve the stale relation. The testdata corpora are read-only;
+a long-lived session that regenerates a corpus in place must call
+``clear_session_caches`` first.
 """
 
 from __future__ import annotations
@@ -38,100 +42,100 @@ from __future__ import annotations
 import hashlib
 from typing import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-_REGISTRY: list[dict] = []   # every cache dict, for clear_session_caches
+# (applicationId, name, *args) -> (relation, staged table name or None;
+# None means an in-memory persist)
+_STORE: dict[tuple, tuple[DataFrame, str | None]] = {}
 
 
-def _registered(cache: dict[tuple, DataFrame]) -> dict:
-    if not any(c is cache for c in _REGISTRY):
-        _REGISTRY.append(cache)
-    return cache
+def _full_key(spark: SparkSession, key: tuple) -> tuple:
+    return (spark.sparkContext.applicationId,) + key
 
 
-def _drop_dead_sessions(cache: dict[tuple, DataFrame], app: str) -> None:
-    """Evict entries bound to other (dead) SparkContexts on every
-    cache-miss build — shared by BOTH the persisted and staged paths,
-    or long-lived processes spawning many sessions would accumulate
-    JVM-side references through whichever path missed the sweep."""
-    for stale in [k for k in cache if k[0] != app]:
-        del cache[stale]
+def _forget_dead_sessions(app: str) -> None:
+    for stale in [k for k in _STORE if k[0] != app]:
+        del _STORE[stale]
 
 
-def session_peek(spark: SparkSession,
-                 cache: dict[tuple, DataFrame],
-                 key_suffix: tuple) -> DataFrame | None:
-    """Return this session's memoized relation for ``key_suffix`` if one
-    exists (persisted or staged), else None — the ONE home of the
-    cache-key shape for opportunistic consumers (decontaminate's probe
-    side, dsir_weights' distribution pass) that want to reuse a
-    relation another operator already paid for but must not FORCE a
-    corpus-wide materialization themselves."""
-    return cache.get((spark.sparkContext.applicationId,) + key_suffix)
+def session_peek(spark: SparkSession, key: tuple) -> DataFrame | None:
+    """Return this session's stored relation for ``key`` if one exists
+    (persisted or staged), else None — for opportunistic consumers
+    (decontaminate's probe side, dsir_weights' distribution pass) that
+    reuse a relation another operator already paid for but must not
+    FORCE a corpus-wide materialization themselves."""
+    entry = _STORE.get(_full_key(spark, key))
+    return None if entry is None else entry[0]
 
 
-def session_persisted(spark: SparkSession,
-                      cache: dict[tuple, DataFrame],
-                      key_suffix: tuple,
-                      build: Callable[[], DataFrame]) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app,) + key_suffix
-    df = _registered(cache).get(key)
-    if df is None:
-        _drop_dead_sessions(cache, app)
+def session_persisted(spark: SparkSession, key: tuple,
+                      build: Callable[[], DataFrame],
+                      lazy: bool = False) -> DataFrame:
+    full = _full_key(spark, key)
+    entry = _STORE.get(full)
+    if entry is None:
+        _forget_dead_sessions(full[0])
         df = build().persist()
-        df.count()
-        cache[key] = df
-    return df
+        if not lazy:
+            df.count()
+        entry = _STORE[full] = (df, None)
+    return entry[0]
 
 
-def session_staged(spark: SparkSession,
-                   cache: dict[tuple, DataFrame],
-                   key_suffix: tuple,
+def _drop_table(spark: SparkSession, name: str) -> None:
+    # a previous SESSION's staging leaves the warehouse directory
+    # behind while the (in-memory) catalog forgets the table, so
+    # saveAsTable would fail with LOCATION_ALREADY_EXISTS — drop both
+    # the catalog entry and any stale location
+    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(wh, name)
+    jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
+
+
+def session_staged(spark: SparkSession, key: tuple,
                    build: Callable[[], DataFrame],
                    bucket_col: str,
                    n_buckets: int = 64) -> DataFrame:
     """Stage ``build()`` as a bucketed parquet table (bucketBy + sortBy
-    on ``bucket_col``) and return a reader over it, seeding ``cache``
-    so later ``session_persisted`` calls with the same key reuse the
-    staged table instead of materializing an in-memory copy. Staging
-    REPLACES an existing persisted entry (references already handed
-    out stay valid — persisted copies are never unpersisted, per the
-    module contract above).
+    on ``bucket_col``) and return a reader over it. The staged table
+    replaces an in-memory entry under the same key, which is then
+    unpersisted, so later ``session_persisted`` calls read the table.
 
     The table name derives from the key alone (not the applicationId),
     so successive sessions overwrite one warehouse table rather than
     accumulating; single writer per warehouse is the caller's contract
     (the driver/gate/bench processes run queries sequentially)."""
-    app = spark.sparkContext.applicationId
-    key = (app,) + key_suffix
-    skey = key + ("staged",)
-    df = _registered(cache).get(skey)
-    if df is None:
-        _drop_dead_sessions(cache, app)
-        name = ("staged_"
-                + hashlib.md5(repr(key_suffix).encode()).hexdigest()[:16])
-        # a previous SESSION's staging leaves the warehouse directory
-        # behind while the (in-memory) catalog forgets the table, so
-        # saveAsTable would fail with LOCATION_ALREADY_EXISTS — drop
-        # both the catalog entry and any stale location first
-        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(wh, name)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-        (build().write.mode("overwrite").format("parquet")
-            .bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
-            .saveAsTable(name))
-        df = spark.table(name)
-        cache[skey] = df
-        cache[key] = df   # consumers via session_persisted read staged
+    full = _full_key(spark, key)
+    entry = _STORE.get(full)
+    if entry is not None and entry[1] is not None:
+        return entry[0]
+    _forget_dead_sessions(full[0])
+    name = "staged_" + hashlib.md5(repr(key).encode()).hexdigest()[:16]
+    _drop_table(spark, name)
+    (build().write.mode("overwrite").format("parquet")
+        .bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
+        .saveAsTable(name))
+    if entry is not None:
+        entry[0].unpersist()
+    df = spark.table(name)
+    _STORE[full] = (df, name)
     return df
 
 
 def clear_session_caches() -> None:
-    """Drop every memoized relation (persisted and staged) — the escape
-    hatch for long-lived sessions that regenerate a corpus at the same
-    path (see the immutable-input contract above)."""
-    for cache in _REGISTRY:
-        cache.clear()
+    """Release every stored relation of the live session — unpersist
+    the persisted ones, drop the staged tables — and forget all
+    entries. The escape hatch for long-lived sessions that regenerate
+    a corpus at the same path (see the immutable-input contract)."""
+    sc = SparkContext._active_spark_context
+    app = sc.applicationId if sc is not None else None
+    for key, (df, table) in _STORE.items():
+        if key[0] != app:
+            continue
+        if table is None:
+            df.unpersist()
+        else:
+            _drop_table(df.sparkSession, table)
+    _STORE.clear()

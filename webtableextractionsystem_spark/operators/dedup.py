@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._cache import session_peek, session_persisted, session_staged
-from .textstats import _tokens, load_documents
+from .textstats import _tokens, load_documents, spread
 
 SHINGLE_K = 3
 N_SEEDS = 8          # minhash permutations
@@ -204,9 +204,7 @@ def band_structs():
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_documents(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(load_documents(spark, sf_dir))
     exploded = docs.select(
         "doc_id", _tokens().alias("_toks")
     ).select(
@@ -300,12 +298,11 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle+hash+aggregate subtree runs once instead of once per side
     (Spark plans self-joins as two scans of the subtree). At warehouse
     scale this boundary is a written signatures table, which is how a
-    100 TB near-dup pass stages anyway. The cache is session-scoped: the
-    driver gate runs each query once; long-lived callers doing repeated
-    dedup passes should stage signatures to a table instead. The persist
-    is deliberately left to LRU eviction rather than unpersisted in a
+    100 TB near-dup pass stages anyway. The persist is held by the
+    session store (operators/_cache.py) rather than unpersisted in a
     finally block — the returned DataFrame is lazy, and an unpersist
-    before the caller materializes it would recompute both join sides.
+    before the caller materializes it would recompute both join sides;
+    clear_session_caches() releases it.
 
     Eager pre-materialization of the cache (a count() before the
     self-join) was measured and REJECTED: alternating-order runs at
@@ -314,7 +311,8 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen warmup, not a cache race), and inside the composed
     curation_funnel the extra serialized pass makes eager ~20% SLOWER
     (6.7 s vs 5.6 s). Lazy persist stands."""
-    bk = lsh_band_keys(spark, sf_dir).persist()
+    bk = session_persisted(spark, ("lsh_band_keys", sf_dir),
+                           lambda: lsh_band_keys(spark, sf_dir), lazy=True)
     return _band_selfjoin(bk)
 
 
@@ -456,12 +454,14 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash dedup (shuffle on a bounded key, candidates only where a chunk
     collides).
 
-    The signature persist is deliberately left to LRU eviction: the
-    returned DataFrame is lazy (the caller materializes it), so an eager
+    The signature persist is held by the session store: the returned
+    DataFrame is lazy (the caller materializes it), so an eager
     unpersist would force recomputation of both self-join sides. Eager
     pre-materialization rejected by measurement — see
     lsh_candidate_pairs."""
-    sig = simhash_signatures(spark, sf_dir).persist()
+    sig = session_persisted(spark, ("simhash_signatures", sf_dir),
+                            lambda: simhash_signatures(spark, sf_dir),
+                            lazy=True)
     chunks = F.array(*[
         F.struct(
             F.lit(i).alias("chunk_idx"),
@@ -876,7 +876,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.md5("g").alias("h"))
         .distinct()
     )
-    probe = session_peek(spark, _GRAM_CACHE, (sf_dir, DECON_K))
+    probe = session_peek(spark, ("grams", sf_dir, DECON_K))
     if probe is None:
         probe = _grams_lazy(spark, sf_dir, DECON_K)
     hits = (
@@ -972,15 +972,6 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade order is the contract."""
     from .textstats import _lang_pred_col, _quality_cols
 
-    # the signal projection is md5/fold-heavy: spread the scan across
-    # the executors (the sf-dir parquet is one file -> one partition;
-    # same pattern as minhash_signatures). Projected to (doc_id, text)
-    # FIRST: persist caches the plan's full output, so the unused
-    # lang/source/n_chars columns would otherwise sit in every cached
-    # block (review finding).
-    docs = load_documents(spark, sf_dir).select("doc_id", "text") \
-        .repartition(spark.sparkContext.defaultParallelism) \
-        .withColumn("toks", _tokens())
     # quality band / language cascade / prefix fp from their single
     # expression homes — the funnel's oracle composes the standalone
     # QUALITY_SQL/LANG_ID_SQL/EXACT_DEDUP_SQL bodies, so inline copies
@@ -989,8 +980,20 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tokens, _stop_hits, quality_ok = _quality_cols(toks)
     # the ONE source read: persisted narrow signature relation; every
     # branch below projects from this cache with column pruning
-    # (lazy persist, LRU-left — see lsh_candidate_pairs docstring)
-    sig = row_minhash(docs, shingles=_shingles(toks=toks)).persist()
+    # (lazy persist held by the session store — see
+    # lsh_candidate_pairs docstring). The signal projection is
+    # md5/fold-heavy, so the scan is spread (same pattern as
+    # minhash_signatures). Projected to (doc_id, text) FIRST: persist
+    # caches the plan's full output, so the unused lang/source/n_chars
+    # columns would otherwise sit in every cached block (review
+    # finding). Built inside the lambda, so a store hit plans no scan.
+    sig = session_persisted(
+        spark, ("funnel_signatures", sf_dir),
+        lambda: row_minhash(
+            spread(load_documents(spark, sf_dir).select("doc_id", "text"))
+            .withColumn("toks", _tokens()),
+            shingles=_shingles(toks=toks)),
+        lazy=True)
     base = sig.select(
         "doc_id",
         quality_ok.alias("quality_ok"),
@@ -1126,21 +1129,20 @@ def bloom_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe) and bits feeds three (count, two probe joins) — without the
     # persists this one-row query re-scans the corpus three times
     # (review finding; cf. curation_funnel's single-scan discipline).
-    # Cached per (app, sf_dir) like _PR_EDGE_CACHE so the returned
+    # Held by the session store like PageRank's edges so the returned
     # DataFrame stays LAZY (the driver/gate hash the REAL composed plan,
     # not a LocalTableScan of pre-collected literals) while repeated
     # calls (gate, bench, plan audit) reuse one resident copy instead of
     # accumulating persists or recomputing from scratch each time.
     fp = _prefix_fp()
     keys = session_persisted(
-        spark, _BLOOM_CACHE, ("keys", sf_dir),
-        lambda: load_documents(spark, sf_dir)
+        spark, ("bloom_keys", sf_dir),
         # spread the one-file scan: the md5 fingerprint projection and
         # the partial-distinct otherwise run on a single core
-        .repartition(spark.sparkContext.defaultParallelism)
+        lambda: spread(load_documents(spark, sf_dir))
         .select(fp.alias("key")).distinct())
     bits = session_persisted(
-        spark, _BLOOM_CACHE, ("bits", sf_dir),
+        spark, ("bloom_bits", sf_dir),
         lambda: keys.select(
             F.explode(_bloom_bits(F.col("key"))).alias("bit")).distinct())
 
@@ -1168,9 +1170,6 @@ def bloom_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_absent_probes", "n_false_positives")
     )
 
-
-# materialized keys/bits relations per (SparkContext, kind, sf_dir)
-_BLOOM_CACHE: dict[tuple, DataFrame] = {}
 
 
 def bloom_filter_sql() -> str:
@@ -1251,13 +1250,10 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str,
     # without the persist every iteration would re-run the expensive
     # LSH+Jaccard derivation through lineage (see _cache.py)
     edges_deg = session_persisted(
-        spark, _PR_EDGE_CACHE, (sf_dir,),
+        spark, ("pagerank_edges", sf_dir),
         lambda: _edges_with_deg(_verified_pairs(spark, sf_dir)))
     return pagerank(docs, edges_deg=edges_deg, iters=iters)
 
-
-# one materialized edge relation per (SparkContext, sf_dir)
-_PR_EDGE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _edges_with_deg(pairs: DataFrame) -> DataFrame:
@@ -1374,23 +1370,18 @@ def repeated_ngrams(spark: SparkSession, sf_dir: str,
     )
 
 
-# one materialized gram relation per (SparkContext, sf_dir, k)
-_GRAM_CACHE: dict[tuple, DataFrame] = {}
-
 
 def _grams_lazy(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """The UN-persisted per-doc-DISTINCT hashed k-gram relation — the
     lazy building block `_gram_relation` persists and `decontaminate`
     scans directly (its doc_id filter still pushes through the
     round-robin exchange and the Generate into the parquet scan —
-    plan-checked in plans/r08). Repartition first: the sf-dir parquet
+    plan-checked in plans/r08). Spread first: the sf-dir parquet
     is one file -> one scan partition, and the gram build is the
     expensive pass; the token array is materialized behind the
     projection so the gram lambda reads an attribute (_shingles
     docstring)."""
-    return load_documents(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(
+    return spread(load_documents(spark, sf_dir)).select(
         "doc_id", _tokens().alias("_toks")
     ).select(
         "doc_id",
@@ -1414,7 +1405,7 @@ def _gram_relation(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     table instead (same cache key), and the incidence groupBy('h') /
     probe equi-joins reuse the bucketing with zero exchange."""
     return session_persisted(
-        spark, _GRAM_CACHE, (sf_dir, k),
+        spark, ("grams", sf_dir, k),
         lambda: _grams_lazy(spark, sf_dir, k))
 
 
@@ -1430,7 +1421,7 @@ def stage_gram_relation(spark: SparkSession, sf_dir: str,
     (plan-asserted in tests) rather than exchanging a corpus-token-
     sized relation."""
     return session_staged(
-        spark, _GRAM_CACHE, (sf_dir, k),
+        spark, ("grams", sf_dir, k),
         lambda: _grams_lazy(spark, sf_dir, k),
         bucket_col="h", n_buckets=n_buckets)
 
@@ -1468,11 +1459,10 @@ def ngram_clean(spark: SparkSession, sf_dir: str,
         .groupBy("doc_id").agg(F.collect_set("h").alias("dup_hashes"))
     )
     base = (
-        load_documents(spark, sf_dir).select("doc_id", "text")
-        # round-robin repartition: if AQE broadcasts doc_dups, the
-        # row-local coverage/filter pass below would otherwise inherit
-        # the one-file scan's single partition
-        .repartition(spark.sparkContext.defaultParallelism)
+        # spread: if AQE broadcasts doc_dups, the row-local
+        # coverage/filter pass below would otherwise inherit the
+        # one-file scan's single partition
+        spread(load_documents(spark, sf_dir).select("doc_id", "text"))
         .join(doc_dups, "doc_id", "left")
         .withColumn("toks", _tokens())
         .withColumn("n", F.size("toks"))

@@ -23,14 +23,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._cache import session_persisted
+from .textstats import spread
 
 N_QUERIES = 10       # query set: vec_id < N_QUERIES
 TOP_K = 5
 N_PLANES = 8
 N_DIMS = 64
-
-# per-session persisted relations (see _cache.session_persisted)
-_SIM_CACHE: dict[tuple, DataFrame] = {}
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,16 +36,8 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_buckets' zero-exchange narrow plan is a pinned production
     property (test_lsh_buckets_plan_is_narrow). Operators whose
     downstream is a fat per-row fold over a one-file local scan spread
-    it themselves with ``_spread``."""
+    it themselves with ``textstats.spread``."""
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition for the one-file local corpus (one row
-    group -> one scan partition): without it the brute-force dot
-    products / centroid folds run on a single core. Results are
-    partitioning-independent (per-row maps, aggs, joins only)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _dot(a, b):
@@ -90,7 +80,7 @@ def topk_bruteforce(spark: SparkSession, sf_dir: str,
     # spread the one-file scan so they don't run on one core (the
     # query side keeps its pushed-down vec_id filter on the raw scan)
     c = _emb_with_norm(spark, sf_dir,
-                       emb_raw=_spread(load_embeddings(spark, sf_dir))) \
+                       emb_raw=spread(load_embeddings(spark, sf_dir))) \
         .select(F.col("vec_id").alias("nbr_id"), F.col("e").alias("ce"),
                 F.col("nrm").alias("cn"))
     sim = _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
@@ -366,7 +356,7 @@ def ivf_recall(spark: SparkSession, sf_dir: str,
     # reuse ONE resident copy; the k-means quantizer is fit ONCE and
     # shared across probes
     brute = session_persisted(
-        spark, _SIM_CACHE, ("ivf_brute", sf_dir, top_k),
+        spark, ("ivf_brute", sf_dir, top_k),
         lambda: topk_bruteforce(spark, sf_dir, top_k=top_k)
         .select("q_id", "nbr_id"))
     quantizer = ivf_assignments(spark, sf_dir)
@@ -434,7 +424,7 @@ def centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     to one array row per label and BROADCASTS back onto the embeddings
     scan, where the dot product is a per-row JVM fold — no second
     shuffle, no row explosion on the big side."""
-    # NOT _spread: measured at sf1.0 the round-robin exchange costs
+    # NOT spread: measured at sf1.0 the round-robin exchange costs
     # more than the single-core posexplode/fold saves (0.75-1.0 s
     # without vs 0.9-2.0 s with; the centroid agg key domain is tiny
     # and the final join's fold is cheap per row)

@@ -28,6 +28,19 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin a corpus scan to defaultParallelism when it has
+    fewer partitions than that — the one-file local corpus (one row
+    group -> one scan partition) would otherwise run its whole per-row
+    projection on one core. An already-parallel scan (a multi-file
+    corpus) comes back unchanged: a repartition there is a full shuffle
+    that buys nothing. The decision reads the planned scan's partition
+    count and runs no Spark job. Every caller's result is
+    partitioning-independent (per-row maps, aggregations, joins)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n) if df.rdd.getNumPartitions() < n else df
+
+
 def _tokens():
     # explicit class, NOT \s+: Java's \s includes vertical tab (\x0B)
     # but RE2's (every DuckDB oracle) does not — a corpus document
@@ -330,9 +343,8 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange in the plan is the round-robin repartition that
     parallelizes single-file local inputs, as in minhash_signatures —
     not a key shuffle."""
-    docs = load_documents(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    ).select("doc_id", _tokens().alias("_toks"))
+    docs = spread(load_documents(spark, sf_dir)).select(
+        "doc_id", _tokens().alias("_toks"))
     toks_n = F.size("_toks")
     n_bigrams = F.when(toks_n >= 2, toks_n - 1).otherwise(0).cast("long")
     bgs = F.array_sort(_bigrams(F.col("_toks")))
@@ -485,11 +497,10 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repetition/DSIR consumers); persisted per session: the exploded
     # relation feeds BOTH the LM build and the join side, and
     # unpersisted each action re-runs the corpus explode twice
-    # (review finding; cf. _BM25_POSTINGS_CACHE)
+    # (review finding; cf. bm25_topk's postings)
     d = session_persisted(
-        spark, _BIGRAM_LM_CACHE, (sf_dir,),
-        lambda: load_documents(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
+        spark, ("bigram_lm", sf_dir),
+        lambda: spread(load_documents(spark, sf_dir))
         .select("doc_id", _tokens().alias("_toks"))
         .select("doc_id", F.explode_outer(_bigrams(F.col("_toks")))
                 .alias("bg")))
@@ -505,10 +516,6 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-# materialized per-session relations (see operators/_cache.py)
-_BIGRAM_LM_CACHE: dict[tuple, DataFrame] = {}
-_CMS_TOKENS_CACHE: dict[tuple, DataFrame] = {}
 
 BIGRAM_LM_SQL = r"""
 WITH d AS (
@@ -903,9 +910,8 @@ def hll_distinct(spark: SparkSession, sf_dir: str,
     bucket, rho, h = _hll_doc_cols()
     # spread the one-file scan: the normalize+md5 register projection
     # is the whole per-row cost and would otherwise run on one core
-    docs = load_documents(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(bucket.alias("b"), rho.alias("r"), h.alias("fp"))
+    docs = spread(load_documents(spark, sf_dir)).select(
+        bucket.alias("b"), rho.alias("r"), h.alias("fp"))
     if not with_exact:
         regs = docs.groupBy("b").agg(F.max("r").alias("mr"))
         sketch = regs.agg(
@@ -1037,9 +1043,8 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted per session: the token explode feeds both the sketch
     # build and the exact top-k probe side (review finding)
     tok_occ = session_persisted(
-        spark, _CMS_TOKENS_CACHE, (sf_dir,),
-        lambda: load_documents(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
+        spark, ("cms_tokens", sf_dir),
+        lambda: spread(load_documents(spark, sf_dir))
         .select(F.explode(_tokens()).alias("token")))
     rows = tok_occ.select(
         "token", F.explode(_cms_hash_structs()).alias("h")
@@ -1173,9 +1178,8 @@ def hll_by_source(spark: SparkSession, sf_dir: str,
     countDistinct(fp) — the shuffle payload is <=256 rows per group
     regardless of corpus size."""
     bucket, rho, h = _hll_doc_cols()
-    docs = load_documents(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    ).select("source", bucket.alias("b"), rho.alias("r"), h.alias("fp"))
+    docs = spread(load_documents(spark, sf_dir)).select(
+        "source", bucket.alias("b"), rho.alias("r"), h.alias("fp"))
     if not with_exact:
         regs = docs.groupBy("source", "b").agg(F.max("r").alias("mr"))
         sketch = regs.groupBy("source").agg(
@@ -1369,7 +1373,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly representable. Ranking ties break on doc_id.
 
     Scale shape: ONE token explode feeding a (token, doc) partial agg,
-    persisted per session (_BM25_POSTINGS_CACHE) because it feeds both
+    persisted per session (_cache.session_persisted) because it feeds both
     the term slice and the scored join — unpersisted, Spark would
     rebuild the whole index twice per invocation (review finding);
     document lengths from a cheap column-pruned second scan; the term
@@ -1379,11 +1383,9 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank (WindowGroupLimit pushes the top-k down)."""
     toks = _tokens()
     postings = session_persisted(
-        spark, _BM25_POSTINGS_CACHE, (sf_dir,),
-        lambda: load_documents(spark, sf_dir)
-        # round-robin repartition: one-file scan -> one partition
-        # otherwise, and the index build is the expensive pass
-        .repartition(spark.sparkContext.defaultParallelism)
+        spark, ("bm25_postings", sf_dir),
+        # spread: the index build is the expensive pass
+        lambda: spread(load_documents(spark, sf_dir))
         .select("doc_id", F.explode(toks).alias("token"))
         .where(F.col("token") != "")
         .groupBy("token", "doc_id")
@@ -1421,9 +1423,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= BM25_TOP_DOCS))
 
-
-# one materialized (token, doc_id, tf) index per (SparkContext, sf_dir)
-_BM25_POSTINGS_CACHE: dict[tuple, DataFrame] = {}
 
 
 BM25_TOPK_SQL = rf"""
@@ -1541,7 +1540,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise it scans the lazy explode. Nothing here forces a
     corpus-token-sized materialization anymore — the 100 TB-safe path
     is now the DEFAULT, staging an optional accelerator."""
-    docs = session_peek(spark, _DSIR_FEATS_CACHE, (sf_dir,))
+    docs = session_peek(spark, ("dsir_feats", sf_dir))
     if docs is None:
         docs = _dsir_feats_lazy(spark, sf_dir)
     tgt = F.col("source").isin(*DSIR_TARGET_SOURCES)
@@ -1577,9 +1576,8 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction on the pre-repartition single-partition scan
     # (measured: 32.7 s vs 2.5 s at sf1.0) — the cheap IsNotNull
     # predicate pushes into the parquet reader instead.
-    scored = load_documents(spark, sf_dir) \
-        .where(F.col("text").isNotNull()) \
-        .repartition(spark.sparkContext.defaultParallelism) \
+    scored = spread(load_documents(spark, sf_dir)
+                    .where(F.col("text").isNotNull())) \
         .select("doc_id", _tokens().alias("_toks")) \
         .select("doc_id", _dsir_features(F.col("_toks")).alias("_f"))
     return scored.select(
@@ -1592,22 +1590,17 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# one materialized (doc_id, source, f) relation per (SparkContext, sf_dir)
-_DSIR_FEATS_CACHE: dict[tuple, DataFrame] = {}
-
 
 def _dsir_feats_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The un-persisted (doc_id, source, f) hashed-feature explode —
     the building block the distribution pass scans and
-    stage_dsir_features writes to a bucketed table. Round-robin
-    repartition first: the sf-dir parquet is one file -> one scan
-    partition (same pattern as minhash_signatures), and the token
+    stage_dsir_features writes to a bucketed table. Spread first:
+    the sf-dir parquet is one file -> one scan partition (same
+    pattern as minhash_signatures), and the token
     array is materialized behind the projection so the bigram lambda
     reads an attribute, not the re-evaluated split (guide §4 / the
     _bigrams docstring)."""
-    return load_documents(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(
+    return spread(load_documents(spark, sf_dir)).select(
         "doc_id", "source", _tokens().alias("_toks")
     ).select(
         "doc_id", "source",
@@ -1623,7 +1616,7 @@ def stage_dsir_features(spark: SparkSession, sf_dir: str,
     build aggregates straight off the bucketed scan with no exchange
     of the corpus-token-sized relation."""
     return session_staged(
-        spark, _DSIR_FEATS_CACHE, (sf_dir,),
+        spark, ("dsir_feats", sf_dir),
         lambda: _dsir_feats_lazy(spark, sf_dir),
         bucket_col="f", n_buckets=n_buckets)
 
@@ -1711,24 +1704,27 @@ def pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and split the tiny type table by contains(' '). Every consumer
     # derives from the same aggregation subtree, so the shuffle is
     # planned once and reused (ReusedExchange — the map side runs one
-    # time; plan-checked in plans/r08). Round-robin repartition spreads
-    # the one-file scan (the minhash_signatures pattern); the token
+    # time; plan-checked in plans/r08). spread() parallelizes the
+    # one-file scan (the minhash_signatures pattern); the token
     # array is materialized behind a projection so the bigram lambda
     # reads an attribute (_bigrams docstring — the inline split
     # re-evaluated per position was ~90% of this query's cost).
-    docs = load_documents(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism)
     # persisted: the term-TYPE table (vocabulary + bigram types, never
     # corpus-sized) feeds five consumers (ux, uy, pairs, both totals);
     # AQE's exchange reuse only deduplicated some of them (measured 6
     # residual scans), so without the persist the corpus explode ran
     # several times per action — 3.9 s -> 0.9-1.4 s at sf1.0. Lazy
-    # persist, LRU-left, same discipline as lsh_candidate_pairs.
-    terms = (docs.select(_tokens().alias("_toks"))
-             .select(F.explode(
-                 F.concat(F.col("_toks"), _bigrams(F.col("_toks"))))
-                 .alias("term"))
-             .groupBy("term").agg(F.count("*").alias("c"))).persist()
+    # persist held by the session store, same discipline as
+    # lsh_candidate_pairs.
+    terms = session_persisted(
+        spark, ("pmi_terms", sf_dir),
+        lambda: spread(load_documents(spark, sf_dir))
+        .select(_tokens().alias("_toks"))
+        .select(F.explode(
+            F.concat(F.col("_toks"), _bigrams(F.col("_toks"))))
+            .alias("term"))
+        .groupBy("term").agg(F.count("*").alias("c")),
+        lazy=True)
     uni = terms.where(~F.col("term").contains(" ")) \
         .select(F.col("term").alias("token"), "c")
     bi = terms.where(F.col("term").contains(" ")) \
@@ -2111,10 +2107,11 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one corpus scan into a source-keyed integer agg
     (map-side partials; source cardinality is the tiny dimension), a
-    one-row totals broadcast, zero further shuffles."""
+    one-row totals broadcast, zero further shuffles. The scan is NOT
+    spread: the round-robin exchange costs more than it saves on this
+    cheap size/groupBy pass (measured 0.779x at sf1.0 with it)."""
     per_src = (
         load_documents(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
         .select("source", F.size(_tokens()).alias("n_tokens"))
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"),
