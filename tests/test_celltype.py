@@ -4,10 +4,9 @@ bug-compatible quirks (decimals/negatives/currency -> 其他类型 because the
 charnum gate rejects '.', '-', '$', '￥', '%')."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
-from webtableextractionsystem_spark.kernel.celltype import classify_one, classify_series
+from webtableextractionsystem_spark.kernel.celltype import classify_batch, classify_one
 from webtableextractionsystem_spark.lexicons import (
     TYPE_DISTANCE,
     TYPE_INDEX,
@@ -53,8 +52,8 @@ def test_img_wins():
 
 
 def test_vectorized_matches_scalar():
-    s = pd.Series([c for c, _ in CASES])
-    got = classify_series(s, np.zeros(len(s), dtype=bool))
+    contents = [c for c, _ in CASES]
+    got = classify_batch(contents, [False] * len(contents))
     assert [TYPE_NAMES[t] for t in got] == [e for _, e in CASES]
 
 

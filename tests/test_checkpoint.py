@@ -98,3 +98,37 @@ def test_pre_metadata_checkpoint_refuses_resume(spark, docs, tmp_path):
     again = CheckpointRunner(spark, str(tmp_path), num_buckets=8)
     with pytest.raises(ValueError, match="no recorded num_buckets"):
         again.run(docs)
+
+
+def _next_job_id(spark) -> int:
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids) + 1 if ids else 0
+
+
+def test_cold_run_job_count(spark, docs, tmp_path):
+    """A cold start reads no checkpoint: its jobs are the extraction
+    write, one read-back of the counters and the checkpoint append."""
+    runner = CheckpointRunner(spark, str(tmp_path), num_buckets=8)
+    first = _next_job_id(spark)
+    assert runner.run(docs)["docs"] == N_DOCS
+    assert _next_job_id(spark) - first == 6
+
+
+def test_same_run_id_counts_only_this_run(spark, docs, tmp_path):
+    runner = CheckpointRunner(spark, str(tmp_path), num_buckets=8)
+    assert runner.run(docs, run_id="r")["docs"] == N_DOCS
+    m2 = runner.run(docs, run_id="r")
+    assert (m2["buckets"], m2["docs"], m2["spans"], m2["errors"]) == \
+        (0, 0, 0, 0)
+
+
+def test_run_leaves_session_overwrite_mode(spark, docs, tmp_path):
+    """Dynamic partition overwrite is a writer option, not session state
+    that later static-mode writes would inherit."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        CheckpointRunner(spark, str(tmp_path), num_buckets=8).run(docs)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)

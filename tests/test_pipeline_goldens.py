@@ -3,7 +3,9 @@ hand-pinned expected ordered span list + entity/triple sets. The
 invariant under test is span-sequence equality on
 (kind, text, media_ref, order) per doc — BASELINE.json north_rule."""
 
+import gc
 import json
+import time
 
 from webtableextractionsystem_spark.fixtures import ARCHETYPES, mega_doc_html
 from webtableextractionsystem_spark.kernel.pipeline import extract_document
@@ -283,6 +285,39 @@ def test_nested_table_double_extraction():
         "姓名", "详情", "甲某", "年份事件1990出生",   # outer (absorbed text)
         "年份", "事件", "1990", "出生",               # inner, standalone
     ]
+
+
+def test_deeply_nested_tables_scale_near_linearly():
+    """Every nested table is located in its own subtree, so any per-table
+    walk of the whole subtree makes extraction quadratic in depth.
+
+    A run times depths 500, 1000 and 2000 back to back, five extractions
+    each, so a slow phase of the host slows every depth of that run
+    alike; the best of 3 runs is kept. The cyclic collector runs between
+    extractions, outside the timer: the parent/child cycles of earlier
+    parse trees would otherwise bill their collection to whichever
+    extraction triggers it."""
+    def seconds_per_doc(depth, reps=5):
+        html = "<table><tr><td>" * depth + "x" + "</td></tr></table>" * depth
+        total = 0.0
+        for _ in range(reps):
+            gc.collect()
+            gc.disable()
+            try:
+                t0 = time.perf_counter()
+                run(html)
+                total += time.perf_counter() - t0
+            finally:
+                gc.enable()
+        return total / reps
+
+    runs = []
+    for _ in range(3):
+        t500, t1000, t2000 = (seconds_per_doc(d) for d in (500, 1000, 2000))
+        runs.append((max(t1000 / t500, t2000 / t1000), t2000))
+    worst_doubling, t2000 = min(runs)
+    assert t2000 < 0.2
+    assert worst_doubling <= 2.5, runs
 
 
 def test_h14_multitoken_header_classifies_property_rel():

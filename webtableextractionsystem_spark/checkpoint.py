@@ -10,12 +10,15 @@ table with per-partition lineage + metrics):
 2. completed buckets are recorded in a checkpoint parquet table
    ``(bucket, stage, status, doc_count, span_count, error_count,
    wall_ms, run_id)``;
-3. a (re)run left-anti joins input buckets against completed ones and
-   only processes the remainder;
+3. a (re)run reads the done bucket ids once into a driver-side list (at
+   most ``num_buckets`` ints; no read on a cold start) and filters input
+   and written output with ``bucket NOT IN (done)``, so only the
+   remainder is processed and read back;
 4. output is written ``partitionBy(bucket)`` with DYNAMIC partition
-   overwrite, so a crash between data write and checkpoint append is
-   safe: the rerun overwrites exactly those bucket partitions
-   (exactly-once output, at-least-once compute).
+   overwrite (a writer option; the session conf is left alone), so a
+   crash between data write and checkpoint append is safe: the rerun
+   overwrites exactly those bucket partitions (exactly-once output,
+   at-least-once compute).
 
 At cluster scale the same layout maps 1:1 onto Iceberg partition
 replacement; parquet is the sandbox stand-in.
@@ -76,75 +79,54 @@ class CheckpointRunner:
             with open(self.meta_path, "w") as f:
                 f.write(str(self.num_buckets))
 
-    # -- checkpoint table ---------------------------------------------------
-
-    def checkpoint_df(self) -> DataFrame:
-        # existence check distinguishes a cold start (empty checkpoint)
-        # from a CORRUPT checkpoint: the latter must surface, not be
-        # silently treated as "nothing done" (which would trigger an
-        # unexplained full recompute of a 100TB input). Cluster: swap for
-        # a catalog table / Iceberg existence probe.
-        if not os.path.isdir(self.ckpt_dir):
-            return self.spark.createDataFrame([], CHECKPOINT)
-        return self.spark.read.parquet(self.ckpt_dir)
-
-    def done_buckets(self, stage: str = STAGE_EXTRACT) -> DataFrame:
-        return (
-            self.checkpoint_df()
-            .where((F.col("stage") == stage) & (F.col("status") == "done"))
-            .select("bucket")
-            .distinct()
-        )
-
     # -- run ----------------------------------------------------------------
+
+    def _done(self) -> list[int]:
+        """Bucket ids the checkpoint records as done: one read, none on a
+        cold start. The existence check tells a cold start (no checkpoint
+        yet) from a CORRUPT checkpoint: the latter must surface, not be
+        silently treated as "nothing done" (which would trigger an
+        unexplained full recompute of a 100TB input). Cluster: swap for a
+        catalog table / Iceberg existence probe."""
+        if not os.path.isdir(self.ckpt_dir):
+            return []
+        return [r.bucket for r in (
+            self.spark.read.parquet(self.ckpt_dir)
+            .where((F.col("stage") == STAGE_EXTRACT)
+                   & (F.col("status") == "done"))
+            .select("bucket").distinct().collect())]
 
     def run(self, docs: DataFrame, run_id: str | None = None) -> dict:
         """Process all not-yet-done buckets; returns run metrics."""
         run_id = run_id or uuid.uuid4().hex[:12]
         self._validate_num_buckets()
         t0 = time.monotonic()
-        docs = with_bucket(docs, self.num_buckets)
-        pending = docs.join(
-            F.broadcast(self.done_buckets()), on="bucket", how="left_anti"
-        )
-        extracted = extract_all(pending, self.num_buckets, repartition=True)
-
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
+        # at most num_buckets ids: small enough for a literal IN list
+        pending = ~F.col("bucket").isin(self._done())
+        extracted = extract_all(
+            with_bucket(docs, self.num_buckets).where(pending),
+            self.num_buckets, repartition=True)
         (extracted.write.partitionBy("bucket")
+         .option("partitionOverwriteMode", "dynamic")
          .mode("overwrite").parquet(self.data_dir))
-
-        # metrics from the written data (column-pruned scan: only the
-        # counters are read back, not the span payloads)
-        out = self.spark.read.parquet(self.data_dir)
-        done = self.done_buckets()
-        fresh = out.join(F.broadcast(done), on="bucket", how="left_anti")
         wall_ms = int((time.monotonic() - t0) * 1000)
-        metrics = (
-            bucket_metrics(fresh)
-            .withColumn("stage", F.lit(STAGE_EXTRACT))
-            .withColumn("status", F.lit("done"))
-            .withColumn("wall_ms", F.lit(wall_ms))
-            .withColumn("run_id", F.lit(run_id))
-            .select([f.name for f in CHECKPOINT.fields])
-        )
-        metrics.write.mode("append").parquet(self.ckpt_dir)
-        row = (
-            self.spark.read.parquet(self.ckpt_dir)
-            .where(F.col("run_id") == run_id)
-            .agg(F.count("*").alias("buckets"),
-                 F.sum("doc_count").alias("docs"),
-                 F.sum("span_count").alias("spans"),
-                 F.sum("error_count").alias("errors"))
-            .first()
-        )
+
+        # counters from the written data: the bucket filter prunes the scan
+        # to the partitions just written, and the column pruning reads only
+        # the counters, not the span payloads
+        counts = bucket_metrics(
+            self.spark.read.parquet(self.data_dir).where(pending)).collect()
+        self.spark.createDataFrame(
+            [(r.bucket, STAGE_EXTRACT, "done", r.doc_count, r.span_count,
+              r.error_count, wall_ms, run_id) for r in counts],
+            CHECKPOINT,
+        ).write.mode("append").parquet(self.ckpt_dir)
         return {
             "run_id": run_id,
-            "buckets": row["buckets"] or 0,
-            "docs": row["docs"] or 0,
-            "spans": row["spans"] or 0,
-            "errors": row["errors"] or 0,
+            "buckets": len(counts),
+            "docs": sum(r.doc_count for r in counts),
+            "spans": sum(r.span_count for r in counts),
+            "errors": sum(r.error_count for r in counts),
             "wall_ms": wall_ms,
         }
 

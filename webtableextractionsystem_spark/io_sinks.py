@@ -9,8 +9,10 @@ interchange formats users of the reference expect:
 * ``write_triples_csv`` — the file/Triad/relationship.csv shape:
   ``[name,url],rel,[name,url]`` per row (FileIO.writeTriad2csv,
   FileIO.py:144-155).
-* ``write_entities_json`` / ``write_json`` — entity.json-shaped output.
-* parquet sink/scan with bucket partitioning (the pickle replacement).
+* ``write_entities_json`` — entity.json-shaped output.
+* ``write_bucketed_table`` — hash-bucketed managed tables for
+  shuffle-free joins; plain parquet partitioned by bucket is the pickle
+  replacement and needs no helper.
 """
 
 from __future__ import annotations
@@ -97,15 +99,6 @@ def write_entity_props_csv(entities: DataFrame, path: str) -> None:
     flat.write.mode("overwrite").option("escape", '"').csv(path)
 
 
-def write_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
-
-
-def write_bucketed_parquet(df: DataFrame, path: str,
-                           partition_col: str = "bucket") -> None:
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-
-
 def write_bucketed_table(df: DataFrame, table: str, key: str,
                          n_buckets: int = 32) -> None:
     """Hash-bucketed + bucket-sorted managed table (Spark bucketing,
@@ -116,10 +109,6 @@ def write_bucketed_table(df: DataFrame, table: str, key: str,
     the physical plan in tests/test_urlfilters_io.py."""
     df.write.mode("overwrite").format("parquet") \
         .bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
-
-
-def read_parquet(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 # ---------------------------------------------------------------------------

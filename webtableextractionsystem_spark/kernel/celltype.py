@@ -26,7 +26,6 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 
 from ..lexicons import TYPE_INDEX
 
@@ -120,14 +119,6 @@ def classify_batch(contents, has_img) -> np.ndarray:
             cache[key] = t
         out[i] = t
     return out
-
-
-def classify_series(contents: pd.Series, has_img: np.ndarray) -> np.ndarray:
-    """Series facade over classify_batch (kept for API stability)."""
-    return classify_batch(
-        contents.fillna("").astype(str).tolist(),
-        np.asarray(has_img, dtype=bool).tolist(),
-    )
 
 
 def classify_one(content: str, has_img: bool = False) -> int:

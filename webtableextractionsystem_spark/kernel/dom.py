@@ -19,6 +19,7 @@ from __future__ import annotations
 import re
 from bisect import bisect_right
 from html.parser import HTMLParser
+from operator import attrgetter
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
@@ -39,6 +40,7 @@ IMPLIED_CLOSE: dict[str, frozenset] = {
 }
 
 _STRIP_TAGS = frozenset({"script", "style", "article", "code"})
+_sid = attrgetter("sid")
 
 
 class Node:
@@ -77,48 +79,26 @@ class Node:
         """Index entries that are strict descendants of self (sid-sorted
         insertion order + bisect; nodes removed by extract() are marked
         dead and filtered out)."""
-        lst = self.idx.get(key) if self.idx is not None else None
+        lst = self.idx.get(key)
         if not lst:
             return []
-        sids = [n.sid for n in lst]
-        lo = bisect_right(sids, self.sid)
-        hi = bisect_right(sids, self.eid)
+        lo = bisect_right(lst, self.sid, key=_sid)
+        hi = bisect_right(lst, self.eid, lo, key=_sid)
         return [n for n in lst[lo:hi] if not n.dead]
 
     def find_all(self, name: str | None = None,
                  class_re: str | re.Pattern | None = None) -> list["Node"]:
-        if self.idx is not None:
-            if name is not None:
-                cand = self._index_range(name)
-                if class_re is None:
-                    return cand
-                pat = (re.compile(class_re) if isinstance(class_re, str)
-                       else class_re)
-                return [n for n in cand
-                        if pat.search(n.attrs.get("class", ""))]
-            if class_re is not None:
-                pat = (re.compile(class_re) if isinstance(class_re, str)
-                       else class_re)
-                return [n for n in self._index_range("@class")
-                        if pat.search(n.attrs.get("class", ""))]
+        """Descendants named ``name``, or carrying a class attribute when
+        only ``class_re`` is given, whose class matches ``class_re``."""
+        cand = self._index_range("@class" if name is None else name)
+        if class_re is None:
+            return cand
         pat = re.compile(class_re) if isinstance(class_re, str) else class_re
-        out = []
-        for node in self.iter_desc():
-            if name is not None and node.name != name:
-                continue
-            if pat is not None and not pat.search(node.attrs.get("class", "")):
-                continue
-            out.append(node)
-        return out
+        return [n for n in cand if pat.search(n.attrs.get("class", ""))]
 
     def find(self, name: str) -> "Node | None":
-        if self.idx is not None:
-            cand = self._index_range(name)
-            return cand[0] if cand else None
-        for node in self.iter_desc():
-            if node.name == name:
-                return node
-        return None
+        cand = self._index_range(name)
+        return cand[0] if cand else None
 
     @property
     def element_children(self) -> list["Node"]:

@@ -370,10 +370,12 @@ def extract_docx_tables(root: Node) -> list[RawTable]:
 
 def extract_list_tables(tag: Node) -> list[RawTable]:
     out: list[RawTable] = []
+    uls = tag.find_all("ul")
+    if not uls:  # titles only pair with uls: skip the subtree walk
+        return out
     titles = [n for n in tag.iter_desc()
               if n.attrs.get("class", "") == LIST_TABLE_TITLE_CLASS]
-    uls = tag.find_all("ul")
-    if not titles or len(titles) != len(uls):
+    if len(titles) != len(uls):
         return out
     for title, ul in zip(titles, uls):
         caption = title.text

@@ -46,13 +46,10 @@ def extract_all(docs: DataFrame, num_buckets: int = DEFAULT_BUCKETS,
 
     def run(batches):
         for pdf in batches:
+            # Arrow hands each span over as a dict already; a null list or
+            # a null struct element must not kill the task
             spans_lists = [
-                [
-                    {"kind": s["kind"], "text": s["text"],
-                     "media_ref": s["media_ref"], "offset": s["offset"]}
-                    for s in (spans if spans is not None else [])
-                    if s is not None  # null struct elements must not kill the task
-                ]
+                [] if spans is None else [s for s in spans if s is not None]
                 for spans in pdf["spans"]
             ]
             results = extract_batch(pdf["doc_id"].tolist(), spans_lists)
