@@ -1,10 +1,19 @@
 """Local-mode e2e (SURVEY.md §5.3): distributed pipeline vs the single-doc
 kernel oracle, span ordering stability across partitions, derived views."""
 
+import hashlib
+import json
+import re
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from webtableextractionsystem_spark.datagen import gen_document, gen_documents_df
+from webtableextractionsystem_spark.datagen import (
+    MEGA_EVERY,
+    gen_document,
+    gen_documents_df,
+)
 from webtableextractionsystem_spark.kernel.pipeline import extract_document
 from webtableextractionsystem_spark.operators.extraction import (
     extract_all,
@@ -14,6 +23,7 @@ from webtableextractionsystem_spark.operators.extraction import (
     triples_view,
 )
 from webtableextractionsystem_spark.operators.fusion import fuse_entities
+from webtableextractionsystem_spark.schemas import DOCUMENTS, EXTRACTED
 
 N_DOCS = 120
 
@@ -84,6 +94,87 @@ def test_determinism_across_runs(spark, extracted):
             F.concat_ws("\x02", "doc_id", "seq", "kind", "text",
                         "media_ref")))).alias("h")).first()["h"]
     assert s1 == s2
+
+
+def _span(kind, text, media_ref="", offset=0):
+    return {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
+
+
+def _boundary_docs():
+    """Documents that exercise every null path of the Arrow boundary, plus
+    generated docs (maps, nested cells, triples) and one mega-doc."""
+    table = gen_document(1)["spans"]
+    return [
+        ("null-list", None),
+        ("null-elems", [None] + table + [None]),
+        ("null-text", [_span("html", None), _span("text", None, offset=1)]),
+        ("null-kind", [_span(None, "<table><tr><td>x</td></tr></table>")]),
+        ("empty", []),
+        ("media-only", [_span("media", None, "img/a.png"),
+                        _span("media", "", "img/b.png", 1)]),
+    ] + [(d["doc_id"], d["spans"])
+         for d in map(gen_document, [*range(1, 41), MEGA_EVERY])]
+
+
+def _canon(value, dtype):
+    """Schema-guided plain form of an Arrow row or a kernel dict: structs
+    as field lists in schema order, maps as pairs in their stored order
+    (Arrow keeps it; ``collect()`` rebuilds maps through a JVM hash map)."""
+    if value is None:
+        return None
+    if isinstance(dtype, T.StructType):
+        return [_canon(value.get(f.name), f.dataType) for f in dtype.fields]
+    if isinstance(dtype, T.ArrayType):
+        return [_canon(v, dtype.elementType) for v in value]
+    if isinstance(dtype, T.MapType):
+        pairs = value.items() if isinstance(value, dict) else value
+        return [[k, _canon(v, dtype.valueType)] for k, v in pairs]
+    if isinstance(dtype, T.IntegerType):
+        return int(value)
+    return value
+
+
+def _rows_sha(rows) -> str:
+    text = json.dumps(sorted(rows), ensure_ascii=False)
+    return hashlib.sha256(text.encode("utf-8")).hexdigest()
+
+
+def test_arrow_boundary_matches_in_process_kernel(spark):
+    """The mapInArrow stage returns exactly what the in-process kernel
+    returns, null span lists/elements/fields and the mega-doc included."""
+    docs = _boundary_docs()
+    df = spark.createDataFrame(docs, DOCUMENTS)
+    got = extract_all(df, num_buckets=4).toArrow().to_pylist()
+    buckets = {r["doc_id"]: r["bucket"] for r in got}
+    got_rows = [_canon(r, EXTRACTED) for r in got]
+    want_rows = []
+    for doc_id, spans in docs:
+        res = extract_document(
+            doc_id, [] if spans is None else [s for s in spans if s is not None])
+        want_rows.append(_canon({**res, "bucket": buckets[doc_id]}, EXTRACTED))
+    assert len(got_rows) == len(docs)
+    assert _rows_sha(got_rows) == _rows_sha(want_rows)
+    # the frame really carries what the hash is meant to cover
+    by_id = {r["doc_id"]: r for r in got}
+    assert any(c["href"] for r in got for t in r["tables"]
+               for row in t["cells"] for c in row)
+    assert any(len(e["props"]) > 1 for r in got for e in r["entities"])
+    assert by_id[gen_document(MEGA_EVERY)["doc_id"]]["n_spans"] > 1000
+    assert by_id["null-list"]["n_spans"] == 0
+    assert [s["kind"] for s in by_id["media-only"]["out_spans"]] == ["media"] * 2
+
+
+_PYTHON_NODE = re.compile(
+    r"\b(\w*(?:MapIn|EvalPython|InPandas|InArrow)\w*)\b")
+
+
+def test_extraction_plan_has_one_arrow_python_stage(spark):
+    df = spark.createDataFrame(_boundary_docs()[:8], DOCUMENTS)
+    ext = extract_all(df, num_buckets=4)
+    ext.collect()
+    plan = ext._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert _PYTHON_NODE.findall(final) == ["MapInArrow"]
 
 
 def test_fusion_first_wins_and_url_containment(spark):

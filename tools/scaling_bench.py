@@ -165,6 +165,14 @@ RecordBatch.from_pylist of the kernel output measures 85 ms vs the 106
 ms pandas route), so mapInPandas stays; the 8->32 residual is the
 machine's memory-bandwidth ceiling, not Python-worker overhead.
 
+*2026-10-17:* that in-process profile cannot show PySpark's per-task
+cost. Through Spark on a 4-vCPU host an empty Python task cost about
+250 ms of worker CPU, mostly `importlib.invalidate_caches()` re-reading
+`pyspark.zip` through 17 zip importers, and Spark's pandas->Arrow output
+path cost about 1 CPU-s per 2,000 docs. The stage now runs as
+`mapInArrow` and drops those importers first (operators/extraction.py);
+see "Round-9 numbers" below.
+
 Raw JSON:
 
 ```json

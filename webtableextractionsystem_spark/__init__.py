@@ -3,13 +3,13 @@
 A from-scratch rebuild of the capabilities of
 ``renlongyajin/WebTableExtractionSystem`` (reference read-only at
 ``/root/reference``) on idiomatic Spark: DataFrame/SQL for all relational
-glue, Arrow-batched kernels (``mapInPandas``) for the per-document DOM
+glue, Arrow-batched kernels (``mapInArrow``) for the per-document DOM
 work, explicit salted partitioning for skew, and a checkpoint table for
 idempotent resume.
 
 Layout
 ------
-``kernel/``     pure-Python/pandas per-document extraction kernel (no Spark
+``kernel/``     pure-Python per-document extraction kernel (no Spark
                 dependency; unit-testable standalone).
 ``operators/``  Spark DataFrame operators: extraction stage, entity fusion,
                 dedup family, similarity search, text analysis.

@@ -25,14 +25,12 @@ Identity model: the reference derives the page entity name from the URL
 Batching: cell micro-typing runs as one memoized pass over all cells of
 a document's tables (celltype.classify_batch); table features are numpy
 matrix ops against the precomputed TypeTree distance matrix; the whole
-per-document kernel executes inside a single Arrow-batched mapInPandas
+per-document kernel executes inside a single Arrow-batched mapInArrow
 stage (no per-row Python visible to Spark).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 
 from .celltype import classify_batch
 from .dom import pre_treat

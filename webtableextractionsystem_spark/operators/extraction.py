@@ -14,19 +14,28 @@ Scale design (the 100 TB story):
   bucket key is also the checkpoint/lineage unit; (b) buckets >> cores so
   the scheduler rebalances stragglers; (c) Arrow batches capped at 256
   rows (session.py) so one batch can't hold many mega-docs at once.
-* **Zero per-row Python visible to Spark**: a single ``mapInPandas``
-  stage; everything else is DataFrame ops compiled by Catalyst.
+* **Zero per-row Python visible to Spark**: a single ``mapInArrow``
+  stage; everything else is DataFrame ops compiled by Catalyst. The
+  worker reads Arrow columns as Python lists and builds the output
+  RecordBatch straight from the kernel's dicts: no pandas on either side.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel.pipeline import extract_batch
 from ..schemas import EXTRACTED, ddl
 
 DEFAULT_BUCKETS = 256
+_ARROW_EXTRACTED = to_arrow_schema(EXTRACTED)
 
 
 def with_bucket(docs: DataFrame, num_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -34,6 +43,34 @@ def with_bucket(docs: DataFrame, num_buckets: int = DEFAULT_BUCKETS) -> DataFram
     return docs.withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
     )
+
+
+def drop_static_zip_importers(root: str | None = None) -> None:
+    """Forget the cached zip importers of archives outside the SparkFiles
+    root (``pyspark.zip`` and the py4j zip).
+
+    A reused PySpark worker calls ``importlib.invalidate_caches()`` before
+    every task; on CPython < 3.13 that makes each cached ``zipimporter``
+    re-read its archive's directory, about 200 ms per task for the ~17
+    importers over ``pyspark.zip``. Those archives do not change while a
+    worker lives, and a later import re-creates a dropped importer through
+    ``sys.path_hooks`` from ``zipimport._zip_directory_cache`` without a
+    re-read, so dropping them is safe; it lasts for the worker's life,
+    whatever UDF its later tasks run. Importers of files shipped with
+    ``addPyFile`` (under the root) stay, so a re-shipped package is still
+    re-read. CPython 3.13 made ``zipimporter.invalidate_caches()`` lazy;
+    there this is redundant but harmless.
+    """
+    if root is None:
+        from pyspark import SparkFiles
+
+        root = SparkFiles.getRootDirectory()
+    shipped = os.path.join(os.path.abspath(root), "")
+    cache = sys.path_importer_cache
+    for key, importer in list(cache.items()):
+        if (isinstance(importer, zipimport.zipimporter)
+                and not os.path.abspath(importer.archive).startswith(shipped)):
+            del cache[key]
 
 
 def extract_all(docs: DataFrame, num_buckets: int = DEFAULT_BUCKETS,
@@ -45,22 +82,21 @@ def extract_all(docs: DataFrame, num_buckets: int = DEFAULT_BUCKETS,
         docs = docs.repartition(num_buckets, "bucket")
 
     def run(batches):
-        for pdf in batches:
-            # Arrow hands each span over as a dict already; a null list or
-            # a null struct element must not kill the task
+        drop_static_zip_importers()
+        for batch in batches:
+            # Arrow hands each span over as a dict; a null list or a null
+            # struct element must not kill the task
             spans_lists = [
                 [] if spans is None else [s for s in spans if s is not None]
-                for spans in pdf["spans"]
+                for spans in batch.column("spans").to_pylist()
             ]
-            results = extract_batch(pdf["doc_id"].tolist(), spans_lists)
-            import pandas as pd
+            results = extract_batch(batch.column("doc_id").to_pylist(),
+                                    spans_lists)
+            for row, bucket in zip(results, batch.column("bucket").to_pylist()):
+                row["bucket"] = bucket
+            yield pa.RecordBatch.from_pylist(results, schema=_ARROW_EXTRACTED)
 
-            out = pd.DataFrame(results)
-            out["bucket"] = pdf["bucket"].to_numpy()
-            yield out[["doc_id", "bucket", "out_spans", "tables", "entities",
-                       "triples", "n_spans", "n_errors", "error"]]
-
-    return docs.mapInPandas(run, schema=ddl(EXTRACTED))
+    return docs.mapInArrow(run, schema=ddl(EXTRACTED))
 
 
 # ---------------------------------------------------------------------------

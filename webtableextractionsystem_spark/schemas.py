@@ -169,5 +169,5 @@ CHECKPOINT = T.StructType(
 
 
 def ddl(schema: T.StructType) -> str:
-    """Schema as a DDL string (for mapInPandas / applyInPandas)."""
+    """Schema as a DDL string (for mapInArrow / mapInPandas / applyInPandas)."""
     return schema.simpleString()[len("struct<") : -1]
