@@ -279,6 +279,64 @@ def test_fusion_null_props_in_run_does_not_null_fold(spark):
     assert out[0]["n_sources"] == 3
 
 
+def _skew_mentions(spark, n=20_000):
+    """Deterministic mentions: 55% of them one name whose 'http://a/1'
+    runs are broken by other urls, contained urls, url-less and NULL
+    urls; 6% 氏 names; 6% NULL and 3% empty bags; bags of 1-3 keys in
+    varying entry order, some with NULL values."""
+    def h(salt, m):
+        return f"pmod(xxhash64(id, {salt}), {m})"
+    return spark.range(n).selectExpr(
+        "format_string('d%05d', id div 5) AS doc_id",
+        "cast(id % 5 AS int) AS seq",
+        f"""CASE WHEN {h(1, 100)} < 55 THEN '甲乙'
+                 WHEN {h(1, 100)} < 61 THEN concat('钱', {h(2, 5)}, '氏')
+                 ELSE concat('名', {h(2, 400)}) END AS name""",
+        f"""CASE WHEN {h(3, 100)} < 70 THEN 'http://a/1'
+                 WHEN {h(3, 100)} < 78 THEN concat('http://b/', {h(4, 50)})
+                 WHEN {h(3, 100)} < 82 THEN 'http://a/1/sub'
+                 WHEN {h(3, 100)} < 85 THEN 'http://a'
+                 WHEN {h(3, 100)} < 89 THEN ''
+                 WHEN {h(3, 100)} < 92 THEN ' '
+                 WHEN {h(3, 100)} < 96 THEN NULL
+                 ELSE concat('http://c/', {h(4, 3)}) END AS url""",
+        f"""CASE WHEN {h(5, 100)} < 6 THEN NULL
+                 WHEN {h(5, 100)} < 9 THEN cast(map() AS map<string,string>)
+                 WHEN {h(6, 3)} = 0 THEN map(concat('k', {h(7, 4)}), concat('v', id))
+                 WHEN {h(6, 3)} = 1 THEN map(concat('k', {h(7, 4)}), concat('v', id),
+                                             concat('j', {h(8, 4)}), concat('w', id))
+                 ELSE map(concat('j', {h(8, 4)}), concat('w', id),
+                          concat('k', {h(7, 4)}), concat('v', id),
+                          'z', CASE WHEN {h(9, 2)} = 0 THEN NULL
+                                    ELSE concat('u', id) END) END AS props""",
+    )
+
+
+def test_fusion_skew_fixture_matches_pinned_output(spark, tmp_path):
+    """The sorted write_entities_json lines over the skew fixture, pinned
+    from the window pre-combine + per-name pandas merge that the fold
+    replaced."""
+    from webtableextractionsystem_spark.io_sinks import write_entities_json
+
+    fused = fuse_entities(_skew_mentions(spark))
+    write_entities_json(fused, str(tmp_path / "entities"))
+    lines = sorted(line for part in sorted((tmp_path / "entities").glob("part-*"))
+                   for line in part.read_text(encoding="utf-8").splitlines())
+    assert len(lines) == 1268
+    assert hashlib.sha256("\n".join(lines).encode()).hexdigest() == (
+        "ad5eb79500111bdff4f3e6ec9ad4a1932eb2e525b777f9bfe8bb1cf5cce6a5d1")
+    assert fused.agg(F.sum("n_sources")).first()[0] == 18022
+
+
+def test_fusion_plan_is_one_arrow_fold(spark):
+    fused = fuse_entities(_skew_mentions(spark, n=200))
+    fused.collect()
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert _PYTHON_NODE.findall(final) == ["MapInArrow"]
+    assert "Window" not in final
+
+
 def test_curation_funnel_cascade_order(spark, tmp_path):
     """Crafted corpus pinning every funnel branch AND the cascade
     precedence: a doc that is both low-quality and a duplicate reports

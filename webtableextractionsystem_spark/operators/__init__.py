@@ -1,7 +1,7 @@
 """Spark DataFrame operators.
 
 extraction.py  the Arrow-batched extraction stage + derived views
-fusion.py      entity fusion (A6) as deterministic window-ordered merge
+fusion.py      entity fusion (A6) as one sorted Arrow fold per partition
 dedup.py       exact / MinHash-LSH / SimHash / n-gram Jaccard dedup
 similarity.py  embedding search: brute-force, LSH-bucketed, IVF (k-means)
 textstats.py   language-ID, quality, token counts (whitespace + BPE-ish),

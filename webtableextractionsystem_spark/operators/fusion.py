@@ -20,160 +20,104 @@ Effective reference semantics reproduced:
 * property union keeps existing values (fusionNode: only absent keys
   are added).
 
-Scale: the arrival-order-dependent semantics force a sequential merge per
-name, but the Python loop runs over PRE-COMBINED RUNS, not raw mentions:
-consecutive mentions of the same (name, url) in (doc_id, seq) order are
-collapsed JVM-side first (window run-ids + explode/min_by first-wins
-property union). This is exactly semantics-preserving — every mention of
-a consecutive same-url run lands on the same target node, whichever of
-the four merge paths the first one takes, and the first-wins property
-union is associative along the run — so a viral name whose mentions
-mostly share one url (the skew case: one 80k-mention name) shrinks to a
-handful of Python-loop iterations while the output stays bit-identical.
-The groupBy(name) shuffle key is the join key of the semantic —
-unavoidable and minimal; AQE handles residual skew.
+Scale: one hash exchange on name plus a sort within partitions by
+(name, doc_id, seq) — the same exchange and sort ``groupBy(name)`` plans.
+A single ``mapInArrow`` fold then walks each partition once in arrival
+order and emits a name's nodes when the next name starts, so a task
+holds one name's nodes plus one Arrow batch, never one name's mentions:
+a viral name with hundreds of thousands of mentions costs memory in its
+distinct urls only.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-FUSED_SCHEMA = (
-    "name string, url string, props map<string,string>, n_sources int"
+from ..schemas import ENTITY
+from .extraction import drop_static_zip_importers
+
+FUSED = T.StructType(
+    list(ENTITY.fields) + [T.StructField("n_sources", T.IntegerType())]
 )
+_ARROW_FUSED = to_arrow_schema(FUSED)
 
 
-def _precombine_runs(entities: DataFrame) -> DataFrame:
-    """Collapse consecutive same-url mentions (per name, in (doc_id, seq)
-    order) into one row carrying the run's first-wins property union and
-    mention count. Entirely JVM-side: window run-ids, explode + min_by
-    for the ordered union, map_from_entries to rebuild the bag.
-
-    Safety argument (why runs can be collapsed without replaying the
-    sequential state machine): within a consecutive run no other mention
-    of the name intervenes, so the node list seen by every run member is
-    the state after the first member executed; by case analysis on the
-    first member's path (exact-merge / containment-merge / drop / create)
-    each subsequent member takes a path with the SAME target node, so the
-    run is equivalent to one mention with the union'd props and +len(run)
-    sources."""
-    base = entities.select("name", "url", "props", "doc_id", "seq")
-    w = Window.partitionBy("name").orderBy("doc_id", "seq")
-    # run boundary = url differs from the previous mention's (null-safe);
-    # the first row's lag is NULL, which eqNullSafe counts as a change
-    # unless url itself is NULL — run_id then starts at 0 instead of 1,
-    # which grouping doesn't care about
-    chg = F.when(
-        F.col("url").eqNullSafe(F.lag("url").over(w)), F.lit(0)
-    ).otherwise(F.lit(1))
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    runs = base.withColumn("run_id", F.sum(chg).over(wrun))
-
-    # ordered first-wins union per run as a JVM fold: sort the run's
-    # mentions by (doc_id, seq) (custom comparator — array_sort's natural
-    # struct ordering rejects map-typed fields), then fold left adding
-    # only keys absent from the accumulator. Measured ~14x faster than
-    # the explode -> min_by -> map_from_entries formulation at 640k
-    # mentions x 20 keys. Per-run memory is O(run length); a single run
-    # too large for an executor would need the explode/min_by shape, but
-    # such a run would already overflow the downstream per-name pandas
-    # group, so this is not the binding constraint.
-    def _cmp(a, b):
-        return (
-            F.when(a["doc_id"] < b["doc_id"], -1)
-            .when(a["doc_id"] > b["doc_id"], 1)
-            .when(a["seq"] < b["seq"], -1)
-            .when(a["seq"] > b["seq"], 1)
-            .otherwise(0)
-        )
-
-    def _first_wins(acc, x):
-        # coalesce: a NULL props bag must act as {} (the pandas stage's
-        # contract), not null out the whole fold via map_concat(acc, NULL)
-        props = F.coalesce(x["props"], F.expr("map()").cast(
-            "map<string,string>"))
-        return F.map_concat(
-            acc,
-            F.map_filter(props, lambda k, v: ~F.map_contains_key(acc, k)),
-        )
-
-    return runs.groupBy("name", "run_id").agg(
-        F.min(F.struct("doc_id", "seq")).alias("ord"),
-        F.first("url").alias("url"),  # url is constant within a run
-        F.count("*").cast("int").alias("n_mentions"),
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(F.struct("doc_id", "seq", "props")), _cmp
-            ),
-            F.expr("map()").cast("map<string,string>"),
-            _first_wins,
-        ).alias("props"),
-    ).select(
-        "name",
-        F.col("ord.doc_id").alias("doc_id"),
-        F.col("ord.seq").alias("seq"),
-        "url",
-        "props",
-        "n_mentions",
-    )
+def _add(nodes: list, by_url: dict, url: str | None, bag) -> None:
+    """One mention of the current name. ``nodes`` holds its nodes in
+    creation order, each ``[url|None, props, n]``; ``by_url`` indexes
+    them by url, which is exact: a url-bearing node is only created when
+    no node has its url, and only ``nodes[0]`` can be url-less."""
+    url = url or ""
+    if url == "" or url.isspace():
+        url, node = None, nodes[0] if nodes else None
+    else:
+        node = by_url.get(url)
+        if node is None and nodes:
+            first = nodes[0][0]
+            if first is None:
+                return  # reference TypeError-swallow: entity dropped
+            if first in url or url in first:
+                node = nodes[0]
+    if node is None:
+        node = by_url[url] = [url, {}, 0]
+        nodes.append(node)
+    props = node[1]
+    for k, v in bag:
+        if k not in props:
+            props[k] = v
+    node[2] += 1
 
 
-def _fuse_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values(["doc_id", "seq"], kind="mergesort")
-    nodes: list[dict] = []  # {"url": str|None, "props": dict, "n": int}
-    for row in pdf.itertuples(index=False):
-        url = row.url or ""
-        props = dict(row.props) if row.props is not None else {}
-        n_mentions = int(row.n_mentions)
-        if url == "" or url.isspace():
-            if nodes:
-                _merge(nodes[0], props, n_mentions)
-            else:
-                nodes.append({"url": None, "props": props, "n": n_mentions})
-            continue
-        exact = next((n for n in nodes if n["url"] == url), None)
-        if exact is not None:
-            _merge(exact, props, n_mentions)
-            continue
-        if nodes:
-            first = nodes[0]
-            if first["url"] is None:
-                continue  # reference TypeError-swallow: entity dropped
-            if first["url"] in url or url in first["url"]:
-                _merge(first, props, n_mentions)
-                continue
-        nodes.append({"url": url, "props": props, "n": n_mentions})
-
-    if not nodes:
-        return pd.DataFrame(
-            {"name": [], "url": [], "props": [], "n_sources": []}
-        ).astype({"name": object, "url": object, "props": object,
-                  "n_sources": "int32"})
-    name = pdf["name"].iloc[0]
-    return pd.DataFrame(
-        {
-            "name": [name] * len(nodes),
-            "url": [n["url"] or "" for n in nodes],
-            "props": [n["props"] for n in nodes],
-            "n_sources": pd.array([n["n"] for n in nodes], dtype="int32"),
-        }
-    )
+def _rows(name: str, nodes: list) -> list[dict]:
+    return [{"name": name, "url": url or "", "props": props, "n_sources": n}
+            for url, props, n in nodes]
 
 
-def _merge(node: dict, props: dict, n_mentions: int = 1) -> None:
-    for k, v in props.items():
-        if k not in node["props"]:
-            node["props"][k] = v
-    node["n"] += n_mentions
+def _pylist(arr: pa.Array) -> list:
+    return arr.to_numpy(zero_copy_only=False).tolist()
+
+
+def fuse_batches(batches):
+    """The fold over (name, url, props) batches sorted by (name, doc_id,
+    seq): yields the fused nodes of every name completed so far, one
+    RecordBatch per input batch that completes a name."""
+    drop_static_zip_importers()
+    name, nodes, by_url = None, [], {}
+    for batch in batches:
+        names = _pylist(batch.column("name"))
+        urls = _pylist(batch.column("url"))
+        props = batch.column("props")
+        valid = _pylist(props.is_valid())
+        # offsets index the map's unsliced keys/items, also for a slice
+        offs = props.offsets.to_numpy().tolist()
+        lo, hi = offs[0], offs[-1]
+        keys = _pylist(props.keys.slice(lo, hi - lo))
+        items = _pylist(props.items.slice(lo, hi - lo))
+        done: list[dict] = []
+        for i, mention_name in enumerate(names):
+            if mention_name != name:
+                done += _rows(name, nodes)
+                name, nodes, by_url = mention_name, [], {}
+            a, b = offs[i] - lo, offs[i + 1] - lo
+            _add(nodes, by_url, urls[i],
+                 zip(keys[a:b], items[a:b]) if valid[i] else ())
+        if done:
+            yield pa.RecordBatch.from_pylist(done, schema=_ARROW_FUSED)
+    if nodes:
+        yield pa.RecordBatch.from_pylist(_rows(name, nodes), schema=_ARROW_FUSED)
 
 
 def fuse_entities(entities: DataFrame) -> DataFrame:
     """entities(doc_id, seq, name, url, props) -> fused nodes."""
-    alive = entities.where(~F.col("name").endswith("氏"))
     return (
-        _precombine_runs(alive)
-        .groupBy("name")
-        .applyInPandas(_fuse_group, schema=FUSED_SCHEMA)
+        entities.where(~F.col("name").endswith("氏"))
+        .select("name", "url", "props", "doc_id", "seq")
+        .repartition("name")
+        .sortWithinPartitions("name", "doc_id", "seq")
+        .select("name", "url", "props")
+        .mapInArrow(fuse_batches, FUSED)
     )
