@@ -12,7 +12,7 @@ import sys
 import time
 
 import pyarrow as pa
-import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from webtableextractionsystem_spark.operators import fusion
 
@@ -22,12 +22,7 @@ IN_SCHEMA = pa.schema([
     ("props", pa.map_(pa.string(), pa.string())),
 ])
 
-
-@pytest.fixture(autouse=True)
-def no_spark_files(monkeypatch):
-    # the importer drop asks SparkFiles for its root, which needs a worker
-    # or a live SparkContext
-    monkeypatch.setattr(fusion, "drop_static_zip_importers", lambda: None)
+FUSED = to_arrow_schema(fusion.FUSED)
 
 
 def _batch(rows):
@@ -37,7 +32,9 @@ def _batch(rows):
 
 
 def _fold(batches):
-    return [b.to_pylist() for b in fusion.fuse_batches(iter(batches))]
+    # the fold yields row lists; arrow_map builds each into one batch
+    return [pa.RecordBatch.from_pylist(rows, schema=FUSED).to_pylist()
+            for rows in fusion.fuse_batches(iter(batches))]
 
 
 def test_fold_merge_paths_across_batches():
@@ -172,7 +169,7 @@ def test_fold_scales_linearly_in_distinct_urls():
         gc.disable()
         try:
             t0 = time.perf_counter()
-            nodes = sum(b.num_rows for b in fusion.fuse_batches(iter(inputs[n])))
+            nodes = sum(len(rows) for rows in fusion.fuse_batches(iter(inputs[n])))
             elapsed = time.perf_counter() - t0
         finally:
             gc.enable()

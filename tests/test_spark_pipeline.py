@@ -177,6 +177,32 @@ def test_extraction_plan_has_one_arrow_python_stage(spark):
     assert _PYTHON_NODE.findall(final) == ["MapInArrow"]
 
 
+def test_datagen_and_media_stages_cross_only_through_map_in_arrow(spark):
+    """Generation, the synth media tables and the feature/resize stages
+    all go through arrow_map: every Python node they plan is MapInArrow."""
+    from webtableextractionsystem_spark.operators import multimodal as MM
+    from webtableextractionsystem_spark.schemas import SPANS_OUT
+
+    spans = spark.createDataFrame(
+        [("d", i, "media", "", f"img://d/{i}", i) for i in range(4)], SPANS_OUT)
+    media = MM.synth_media_for_spans(spans)
+    stages = {
+        "gen_documents_df": gen_documents_df(spark, 20, partitions=2),
+        "synth_media_for_spans": media,
+        "image_features": MM.image_features(media),
+        "resize_images": MM.resize_images(media),
+        "audio_features": MM.audio_features(MM.synth_audio_for_spans(spans)),
+        "video_features": MM.video_features(MM.synth_video_for_spans(spans)),
+        "pdf_features": MM.pdf_features(MM.synth_pdfs_for_spans(spans)),
+    }
+    for name, df in stages.items():
+        assert df.count() > 0, name
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        nodes = _PYTHON_NODE.findall(plan.split("== Initial Plan ==")[0])
+        assert nodes and set(nodes) == {"MapInArrow"}, (name, nodes)
+
+
 def test_fusion_first_wins_and_url_containment(spark):
     rows = [
         ("d1", 0, "甲乙", "http://a/1", {"k": "v1"}),

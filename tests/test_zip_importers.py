@@ -66,3 +66,16 @@ def test_stage_modules_do_not_import_pandas():
     )
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     subprocess.run([sys.executable, "-c", code], cwd=root, check=True)
+
+
+def test_media_and_datagen_modules_do_not_import_pandas():
+    code = (
+        "import sys\n"
+        "from webtableextractionsystem_spark.operators import multimodal\n"
+        "from webtableextractionsystem_spark import datagen\n"
+        "assert 'pandas' not in sys.modules, 'import'\n"
+        "datagen.gen_document(211)\n"
+        "assert 'pandas' not in sys.modules, 'gen_document'\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=root, check=True)

@@ -54,8 +54,8 @@ def main() -> None:
     SF = "/root/testdata/sf0.01"
 
     sections = {
-        "extraction pipeline (generator MapInPandas -> salted repartition "
-        "-> single MapInArrow -> inline view)": spans_view(
+        "extraction pipeline (generator MapInArrow -> salted repartition "
+        "-> extraction MapInArrow -> inline view)": spans_view(
             extract_all(gen_documents_df(spark, 100), 64)),
         "q_rel_pricing_summary — filter pushdown + column pruning + "
         "partial agg": REL.pricing_summary(spark, SF),
@@ -233,7 +233,7 @@ def main() -> None:
         "(ReadSchema), small sides broadcast (BroadcastHashJoin), wide",
         "tables aggregate map-side before the exchange, and Python appears",
         "in exactly one MapInArrow stage of the extraction pipeline (the",
-        "MapInPandas under it in the audit is the synthetic-document",
+        "MapInArrow under it in the audit is the synthetic-document",
         "generator, not part of the pipeline).",
         "",
     ]

@@ -4,9 +4,11 @@ The driver instruction requires building over a table of exactly the
 input_hint shape, synthesized deterministically at small scale — no
 external data, no wall clock. Every document is a pure function of its
 integer index (seeded ``random.Random``), so generation is reproducible
-AND distributable: ``gen_documents_df`` builds docs on executors via
-``mapInPandas`` over ``spark.range`` — no driver-side materialization, no
-collect; at 10^12 docs the same code simply gets a bigger range.
+AND distributable: ``gen_documents_df`` builds docs on executors, one
+``gen_document(id)`` per ``spark.range`` row through the package's Arrow
+boundary (``operators.extraction.arrow_map``) — no driver-side
+materialization, no collect; at 10^12 docs the same code simply gets a
+bigger range.
 
 Skew model (H11): one doc in ``MEGA_EVERY`` is a mega-doc with 50-200
 copies of the H2 relation table — the skew tail that salted partitioning
@@ -16,8 +18,6 @@ copies of the H2 relation table — the skew tail that salted partitioning
 from __future__ import annotations
 
 import random
-
-import pandas as pd
 
 from . import fixtures as FX
 
@@ -153,7 +153,11 @@ def gen_document(i: int) -> dict:
     return {"doc_id": doc_id, "spans": spans}
 
 
-def gen_documents_pdf(indices) -> pd.DataFrame:
+def gen_documents_pdf(indices):
+    """The documents of ``indices`` as a pandas DataFrame (driver-side
+    corpus writers; the Spark path is ``gen_documents_df``)."""
+    import pandas as pd
+
     rows = [gen_document(int(i)) for i in indices]
     return pd.DataFrame(
         {"doc_id": [r["doc_id"] for r in rows],
@@ -179,17 +183,15 @@ def sf_of_dir(sf_dir: str) -> float:
 
 
 def gen_documents_df(spark, n_docs: int, partitions: int | None = None):
-    """Distributed deterministic generation: spark.range -> mapInPandas."""
-    from .schemas import DOCUMENTS, ddl
+    """Distributed deterministic generation: spark.range -> one
+    ``gen_document(id)`` per row through ``arrow_map``."""
+    from .operators.extraction import arrow_map, per_batch
+    from .schemas import DOCUMENTS
 
     if partitions is None:
         partitions = max(8, spark.sparkContext.defaultParallelism)
-
-    def build(batches):
-        for pdf in batches:
-            yield gen_documents_pdf(pdf["id"].to_numpy())
-
-    return (
-        spark.range(0, n_docs, numPartitions=partitions)
-        .mapInPandas(build, schema=ddl(DOCUMENTS))
-    )
+    return arrow_map(
+        spark.range(0, n_docs, numPartitions=partitions),
+        per_batch(lambda batch: [gen_document(i) for i in
+                                 batch.column("id").to_pylist()]),
+        DOCUMENTS)

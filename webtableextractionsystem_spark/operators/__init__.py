@@ -8,5 +8,6 @@ textstats.py   language-ID, quality, token counts (whitespace + BPE-ish),
                md5 + rolling-hash fingerprints
 relational.py  joins/windows/anti-join/rollup/top-n/unions/sessionization
 urlfilters.py  F1/F2 URL relevance predicates
-multimodal.py  binary media columns: schema + batched (stubbed) decode
+multimodal.py  binary media columns: schema, real codecs, per-payload
+               feature/resize stages
 """

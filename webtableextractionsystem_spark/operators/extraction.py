@@ -18,6 +18,10 @@ Scale design (the 100 TB story):
   stage; everything else is DataFrame ops compiled by Catalyst. The
   worker reads Arrow columns as Python lists and builds the output
   RecordBatch straight from the kernel's dicts: no pandas on either side.
+
+``arrow_map`` is that boundary written once; every map-style Python stage
+of the package (extraction, fusion, datagen, the multimodal stages) runs
+through it.
 """
 
 from __future__ import annotations
@@ -29,13 +33,13 @@ import zipimport
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel.pipeline import extract_batch
-from ..schemas import EXTRACTED, ddl
+from ..schemas import EXTRACTED
 
 DEFAULT_BUCKETS = 256
-_ARROW_EXTRACTED = to_arrow_schema(EXTRACTED)
 
 
 def with_bucket(docs: DataFrame, num_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -73,6 +77,29 @@ def drop_static_zip_importers(root: str | None = None) -> None:
             del cache[key]
 
 
+def arrow_map(df: DataFrame, fold, schema: T.StructType) -> DataFrame:
+    """The package's one Python boundary for map-style stages.
+
+    ``fold(batches)`` reads an iterator of Arrow RecordBatches and yields
+    lists of row dicts; each list becomes one RecordBatch of ``schema``.
+    The Arrow schema is converted once, on the driver, and every task
+    drops the static zip importers before its first batch."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        drop_static_zip_importers()
+        for rows in fold(batches):
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.mapInArrow(run, schema)
+
+
+def per_batch(fn):
+    """``fold`` for stages that do not fold across batches: ``fn(batch)``
+    returns that batch's output rows."""
+    return lambda batches: map(fn, batches)
+
+
 def extract_all(docs: DataFrame, num_buckets: int = DEFAULT_BUCKETS,
                 repartition: bool = True) -> DataFrame:
     """documents(doc_id, spans[, bucket]) -> EXTRACTED combined rows."""
@@ -81,22 +108,20 @@ def extract_all(docs: DataFrame, num_buckets: int = DEFAULT_BUCKETS,
     if repartition:
         docs = docs.repartition(num_buckets, "bucket")
 
-    def run(batches):
-        drop_static_zip_importers()
-        for batch in batches:
-            # Arrow hands each span over as a dict; a null list or a null
-            # struct element must not kill the task
-            spans_lists = [
-                [] if spans is None else [s for s in spans if s is not None]
-                for spans in batch.column("spans").to_pylist()
-            ]
-            results = extract_batch(batch.column("doc_id").to_pylist(),
-                                    spans_lists)
-            for row, bucket in zip(results, batch.column("bucket").to_pylist()):
-                row["bucket"] = bucket
-            yield pa.RecordBatch.from_pylist(results, schema=_ARROW_EXTRACTED)
+    def run(batch):
+        # Arrow hands each span over as a dict; a null list or a null
+        # struct element must not kill the task
+        spans_lists = [
+            [] if spans is None else [s for s in spans if s is not None]
+            for spans in batch.column("spans").to_pylist()
+        ]
+        results = extract_batch(batch.column("doc_id").to_pylist(),
+                                spans_lists)
+        for row, bucket in zip(results, batch.column("bucket").to_pylist()):
+            row["bucket"] = bucket
+        return results
 
-    return docs.mapInArrow(run, schema=ddl(EXTRACTED))
+    return arrow_map(docs, per_batch(run), EXTRACTED)
 
 
 # ---------------------------------------------------------------------------

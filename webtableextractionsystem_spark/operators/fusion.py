@@ -35,15 +35,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import ENTITY
-from .extraction import drop_static_zip_importers
+from .extraction import arrow_map
 
 FUSED = T.StructType(
     list(ENTITY.fields) + [T.StructField("n_sources", T.IntegerType())]
 )
-_ARROW_FUSED = to_arrow_schema(FUSED)
 
 
 def _add(nodes: list, by_url: dict, url: str | None, bag) -> None:
@@ -83,9 +81,8 @@ def _pylist(arr: pa.Array) -> list:
 
 def fuse_batches(batches):
     """The fold over (name, url, props) batches sorted by (name, doc_id,
-    seq): yields the fused nodes of every name completed so far, one
-    RecordBatch per input batch that completes a name."""
-    drop_static_zip_importers()
+    seq): yields the fused node rows of every name completed so far, one
+    list per input batch that completes a name."""
     name, nodes, by_url = None, [], {}
     for batch in batches:
         names = _pylist(batch.column("name"))
@@ -106,18 +103,17 @@ def fuse_batches(batches):
             _add(nodes, by_url, urls[i],
                  zip(keys[a:b], items[a:b]) if valid[i] else ())
         if done:
-            yield pa.RecordBatch.from_pylist(done, schema=_ARROW_FUSED)
+            yield done
     if nodes:
-        yield pa.RecordBatch.from_pylist(_rows(name, nodes), schema=_ARROW_FUSED)
+        yield _rows(name, nodes)
 
 
 def fuse_entities(entities: DataFrame) -> DataFrame:
     """entities(doc_id, seq, name, url, props) -> fused nodes."""
-    return (
+    return arrow_map(
         entities.where(~F.col("name").endswith("氏"))
         .select("name", "url", "props", "doc_id", "seq")
         .repartition("name")
         .sortWithinPartitions("name", "doc_id", "seq")
-        .select("name", "url", "props")
-        .mapInArrow(fuse_batches, FUSED)
-    )
+        .select("name", "url", "props"),
+        fuse_batches, FUSED)

@@ -26,12 +26,9 @@ from __future__ import annotations
 
 import numpy as np
 
-_GIF_MAGICS = (b"GIF87a", b"GIF89a")
+from .pdf import _MAX_PIXELS
 
-# Cap on the background-canvas allocation (64M pixels = 192 MB RGB).
-# The logical-screen dims are attacker-controlled header fields that,
-# unlike frame pixels, need no LZW data behind them.
-_MAX_CANVAS_PIXELS = 1 << 26
+_GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
 
 class _BitReaderLSB:
@@ -174,8 +171,10 @@ def _decode_gif_impl(payload: bytes) -> np.ndarray:
                 raise ValueError("GIF image has no color table")
             if w <= 0 or h <= 0:
                 raise ValueError("bad GIF image dimensions")
-            if sw * sh > _MAX_CANVAS_PIXELS or w * h > _MAX_CANVAS_PIXELS:
-                # bound BOTH the logical screen and the frame dims here,
+            if sw * sh > _MAX_PIXELS or w * h > _MAX_PIXELS:
+                # bound BOTH the logical screen (the background canvas,
+                # 64M pixels = 192 MB RGB at the bound, needs no LZW data
+                # behind its header dims) and the frame dims here,
                 # BEFORE the LZW decode: dictionary growth amplifies
                 # ~150 KB of crafted codes into a 65535x65535 index
                 # array, and pal[rows] would allocate the 12.8 GB RGB
@@ -183,7 +182,7 @@ def _decode_gif_impl(payload: bytes) -> np.ndarray:
                 # not at the canvas composite
                 raise ValueError(
                     f"GIF dimensions {sw}x{sh} (frame {w}x{h}) exceed "
-                    f"the {_MAX_CANVAS_PIXELS}-pixel decode bound")
+                    f"the {_MAX_PIXELS}-pixel decode bound")
             min_code = payload[pos]
             if not 1 <= min_code <= 8:
                 raise ValueError(f"bad GIF LZW min code size {min_code}")

@@ -28,13 +28,15 @@ DC-only blocks).
 
 DCT as an 8x8 matrix sandwich (T @ B @ T.T) over numpy float64; entropy
 coding is bit-level Python — fine for the thumbnail-scale media the
-pipeline decodes, and it runs inside the same bounded mapInPandas
-batches as every other codec.
+pipeline decodes, and it runs inside the same bounded Arrow batches
+(``_per_payload`` in multimodal.py) as every other codec.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from .pdf import _MAX_PIXELS
 
 # §A.3.6 zigzag scan order: ZIGZAG[i] = raster index of the i-th coef
 ZIGZAG = np.array([
@@ -46,10 +48,6 @@ ZIGZAG = np.array([
 UNZIGZAG = np.argsort(ZIGZAG)
 
 # Annex K.1/K.2 quantization tables (quality-50 bases)
-# Decode-side bound on declared frame pixels (64M px ~ 1.5 GB of f64
-# planes) — header dims are untrusted input.
-_MAX_PIXELS = 1 << 26
-
 QUANT_LUM = np.array([
     16, 11, 10, 16, 24, 40, 51, 61,
     12, 12, 14, 19, 26, 58, 60, 55,
@@ -513,8 +511,8 @@ def _decode_jpeg_impl(payload: bytes) -> np.ndarray:
                 # fh/fw are attacker-controlled header fields needing no
                 # entropy data behind them; without a bound a <200-byte
                 # payload declaring 65535x65535 forces ~50 GB of plane
-                # allocations before one Huffman symbol is read (same
-                # threat class as gif._MAX_CANVAS_PIXELS)
+                # allocations before one Huffman symbol is read (the
+                # pdf._MAX_PIXELS bound every image codec shares)
                 raise ValueError(
                     f"JPEG frame {fw}x{fh} exceeds the "
                     f"{_MAX_PIXELS}-pixel decode bound")

@@ -13,8 +13,10 @@ bytes live in their own table keyed by media_ref:
 Spark-side design (all real and tested):
 
 * payloads are opaque ``binary`` columns — Spark never interprets them;
-* every media op is ``mapInPandas`` over Arrow batches (bytes move as
-  Arrow buffers, zero per-row Python visible to Spark);
+* every media op crosses into Python through the package's one Arrow
+  boundary, ``operators.extraction.arrow_map`` (``mapInArrow``): bytes
+  move as Arrow buffers, each stage is a per-row function returning a
+  dict, and no pandas is involved on either side;
 * batch size is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
   so a batch of large payloads can't blow worker memory;
 * ops are partition-local (narrow) — no shuffle; co-partitioning with the
@@ -42,10 +44,12 @@ import hashlib
 import zlib
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .extraction import arrow_map, per_batch
+from .pdf import _MAX_PIXELS, _png_unfilter
 
 MEDIA_META = T.StructType([
     T.StructField("width", T.IntegerType()),
@@ -67,11 +71,27 @@ N_IMG_FEATURES = 16
 
 def _synth_from_media_refs(spans_out: DataFrame, gen) -> DataFrame:
     """The span-filtering contract shared by every synth_*_for_spans
-    generator: one distinct media_ref per media span, fanned through
-    the per-ref mapInPandas ``gen`` into a MEDIA-schema table."""
+    generator: one distinct media_ref per media span, and one MEDIA row
+    per ref from ``gen(ref)``, which returns its kind, payload and meta."""
     refs = spans_out.where(F.col("kind") == "media") \
         .select("media_ref").distinct()
-    return refs.mapInPandas(gen, schema=MEDIA)
+    return arrow_map(refs, per_batch(lambda batch: [
+        {"media_ref": ref, **gen(ref)}
+        for ref in batch.column("media_ref").to_pylist()]), MEDIA)
+
+
+def _per_payload(media: DataFrame, fn, ddl: str) -> DataFrame:
+    """The shape of every feature/resize stage: narrow (no shuffle), one
+    output row per media row, ``{"media_ref": ref, **fn(payload)}``, in
+    the schema the DDL string ``ddl`` declares."""
+
+    def rows(batch):
+        return [{"media_ref": ref, **fn(payload)} for ref, payload in zip(
+            batch.column("media_ref").to_pylist(),
+            batch.column("payload").to_pylist())]
+
+    return arrow_map(media.select("media_ref", "payload"), per_batch(rows),
+                     T.StructType.fromDDL(ddl))
 
 
 def synth_media_for_spans(spans_out: DataFrame) -> DataFrame:
@@ -86,83 +106,78 @@ def synth_media_for_spans(spans_out: DataFrame) -> DataFrame:
     md5(media_ref). Stands in for the real object store; every payload
     decodes through the real codec path (``decode_image(fake=False)``)."""
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                h = hashlib.md5(ref.encode()).digest()
-                rng = np.random.default_rng(int.from_bytes(h[:8], "little"))
-                w = 4 + h[1] % 13
-                ht = 4 + h[2] % 13
-                fmt = h[0] % 9
-                img = rng.integers(0, 256, size=(ht, w, 3), dtype=np.uint8)
-                if fmt == 0:
-                    payload, mime = encode_ppm(img), "image/x-portable-pixmap"
-                elif fmt == 1:
-                    payload, mime = encode_bmp(img), "image/bmp"
-                elif fmt == 2:
-                    payload = encode_png(img, filter_type=h[3] % 5,
-                                         interlace=bool(h[5] % 2))
-                    mime = "image/png"
-                elif fmt == 3:
-                    rgba = np.dstack([img, rng.integers(
-                        0, 256, size=(ht, w), dtype=np.uint8)])
-                    payload = encode_png(rgba, filter_type=h[3] % 5)
-                    mime = "image/png"
-                elif fmt == 4:
-                    from .jpeg import encode_jpeg
+    def gen(ref: str) -> dict:
+        h = hashlib.md5(ref.encode()).digest()
+        rng = np.random.default_rng(int.from_bytes(h[:8], "little"))
+        w = 4 + h[1] % 13
+        ht = 4 + h[2] % 13
+        fmt = h[0] % 9
+        img = rng.integers(0, 256, size=(ht, w, 3), dtype=np.uint8)
+        if fmt == 0:
+            payload, mime = encode_ppm(img), "image/x-portable-pixmap"
+        elif fmt == 1:
+            payload, mime = encode_bmp(img), "image/bmp"
+        elif fmt == 2:
+            payload = encode_png(img, filter_type=h[3] % 5,
+                                 interlace=bool(h[5] % 2))
+            mime = "image/png"
+        elif fmt == 3:
+            rgba = np.dstack([img, rng.integers(
+                0, 256, size=(ht, w), dtype=np.uint8)])
+            payload = encode_png(rgba, filter_type=h[3] % 5)
+            mime = "image/png"
+        elif fmt == 4:
+            from .jpeg import encode_jpeg
 
-                    payload = encode_jpeg(img, quality=75 + h[3] % 21)
-                    mime = "image/jpeg"
-                elif fmt == 5:
-                    from .gif import encode_gif
+            payload = encode_jpeg(img, quality=75 + h[3] % 21)
+            mime = "image/jpeg"
+        elif fmt == 5:
+            from .gif import encode_gif
 
-                    # <=16x16 synth images always fit a 256-color palette
-                    payload = encode_gif(img, interlace=bool(h[3] % 2))
-                    mime = "image/gif"
-                elif fmt == 6:
-                    # paletted PNG: draw pixels FROM a small palette so
-                    # sub-byte depths are exercised too
-                    depth = (1, 2, 4, 8)[h[3] % 4]
-                    pal = rng.integers(0, 256, size=(1 << depth, 3),
-                                       dtype=np.uint8)
-                    img = pal[rng.integers(0, 1 << depth, size=(ht, w))]
-                    payload = encode_png_palette(
-                        img, depth, filter_type=h[4] % 5,
-                        interlace=bool(h[5] % 2))
-                    mime = "image/png"
-                elif fmt == 7:
-                    from .jpeg import encode_jpeg
+            # <=16x16 synth images always fit a 256-color palette
+            payload = encode_gif(img, interlace=bool(h[3] % 2))
+            mime = "image/gif"
+        elif fmt == 6:
+            # paletted PNG: draw pixels FROM a small palette so
+            # sub-byte depths are exercised too
+            depth = (1, 2, 4, 8)[h[3] % 4]
+            pal = rng.integers(0, 256, size=(1 << depth, 3),
+                               dtype=np.uint8)
+            img = pal[rng.integers(0, 1 << depth, size=(ht, w))]
+            payload = encode_png_palette(
+                img, depth, filter_type=h[4] % 5,
+                interlace=bool(h[5] % 2))
+            mime = "image/png"
+        elif fmt == 7:
+            from .jpeg import encode_jpeg
 
-                    # half of these are progressive (SOF2) — decode is
-                    # pinned bit-identical to baseline, so the oracle
-                    # values don't move but the driver gate now runs
-                    # the Annex G scan machinery end-to-end
-                    payload = encode_jpeg(
-                        img, quality=75 + h[3] % 21,
-                        subsampling="420" if h[4] % 2 else "422",
-                        progressive=bool(h[5] % 2))
-                    mime = "image/jpeg"
-                else:
-                    from .tiff import encode_tiff
+            # half of these are progressive (SOF2) — decode is
+            # pinned bit-identical to baseline, so the oracle
+            # values don't move but the driver gate now runs
+            # the Annex G scan machinery end-to-end
+            payload = encode_jpeg(
+                img, quality=75 + h[3] % 21,
+                subsampling="420" if h[4] % 2 else "422",
+                progressive=bool(h[5] % 2))
+            mime = "image/jpeg"
+        else:
+            from .tiff import encode_tiff
 
-                    comp = ("none", "lzw", "packbits")[h[3] % 3]
-                    payload = encode_tiff(
-                        img, compression=comp,
-                        predictor=2 if (comp != "none" and h[4] % 2)
-                        else 1,
-                        big_endian=bool(h[5] % 2),
-                        rows_per_strip=1 + h[6] % 4)
-                    mime = "image/tiff"
-                rows.append({
-                    "media_ref": ref,
-                    "kind": "image",
-                    "payload": payload,
-                    "meta": {"width": w, "height": ht,
-                             "n_frames": 1, "sample_rate": 0,
-                             "mime": mime},
-                })
-            yield pd.DataFrame(rows)
+            comp = ("none", "lzw", "packbits")[h[3] % 3]
+            payload = encode_tiff(
+                img, compression=comp,
+                predictor=2 if (comp != "none" and h[4] % 2)
+                else 1,
+                big_endian=bool(h[5] % 2),
+                rows_per_strip=1 + h[6] % 4)
+            mime = "image/tiff"
+        return {
+            "kind": "image",
+            "payload": payload,
+            "meta": {"width": w, "height": ht,
+                     "n_frames": 1, "sample_rate": 0,
+                     "mime": mime},
+        }
 
     return _synth_from_media_refs(spans_out, gen)
 
@@ -272,62 +287,8 @@ def encode_bmp(img: np.ndarray) -> bytes:
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_MAX_PIXELS = 1 << 26  # same decode bound as jpeg/gif (untrusted dims)
 # PNG color type -> samples per pixel (8-bit depth only; no palette)
 _PNG_CHANNELS = {0: 1, 2: 3, 6: 4}
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    """PNG Paeth predictor (RFC 2083 §6.6): nearest of left/up/up-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
-def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
-    """Reverse PNG scanline filtering -> (h, stride) uint8.
-
-    ``raw`` is the inflated IDAT stream: h scanlines, each a 1-byte
-    filter type + ``stride`` filtered bytes. None/Sub/Up are vectorized
-    (Sub is a per-lane cumulative sum mod 256); Average and Paeth keep
-    the sequential left-dependency, so those rows loop per byte — fine
-    for the thumbnail-sized media this pipeline decodes, and the loop is
-    bounded by stride, never the whole image."""
-    if len(raw) != h * (1 + stride):
-        raise ValueError("truncated PNG pixel data")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int64)
-    for y in range(h):
-        base = y * (1 + stride)
-        ftype = raw[base]
-        row = np.frombuffer(raw, dtype=np.uint8, count=stride,
-                            offset=base + 1).astype(np.int64)
-        if ftype == 0:  # None
-            rec = row
-        elif ftype == 1:  # Sub: recon[x] = filt[x] + recon[x-bpp]
-            rec = np.cumsum(row.reshape(-1, bpp), axis=0).reshape(stride) & 0xFF
-        elif ftype == 2:  # Up
-            rec = (row + prev) & 0xFF
-        elif ftype == 3:  # Average
-            rec = row
-            for x in range(stride):
-                left = int(rec[x - bpp]) if x >= bpp else 0
-                rec[x] = (rec[x] + ((left + int(prev[x])) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            rec = row
-            for x in range(stride):
-                left = int(rec[x - bpp]) if x >= bpp else 0
-                upleft = int(prev[x - bpp]) if x >= bpp else 0
-                rec[x] = (rec[x] + _paeth(left, int(prev[x]), upleft)) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter type {ftype}")
-        out[y] = rec.astype(np.uint8)
-        prev = rec
-    return out
 
 
 # Adam7 pass grid: (x0, y0, dx, dy) per pass (PNG spec §8.2)
@@ -402,12 +363,12 @@ def _decode_png(payload: bytes) -> np.ndarray:
     ch = 1 if paletted else _PNG_CHANNELS[color]
     bpp = 1 if paletted else ch
     # IHDR dims are untrusted: bound BEFORE any canvas allocation or
-    # inflate (same threat class and constant as jpeg._MAX_PIXELS /
-    # gif._MAX_CANVAS_PIXELS — a <100-byte payload can declare 4G px)
-    if w * h > _PNG_MAX_PIXELS:
+    # inflate (the bound every image codec shares — a <100-byte payload
+    # can declare 4G px)
+    if w * h > _MAX_PIXELS:
         raise ValueError(
             f"PNG dimensions {w}x{h} exceed the "
-            f"{_PNG_MAX_PIXELS}-pixel decode bound")
+            f"{_MAX_PIXELS}-pixel decode bound")
 
     def stride_of(width: int) -> int:
         return (width * depth + 7) // 8 if paletted else width * ch
@@ -641,67 +602,44 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
 
 
 def image_features(media: DataFrame, fake: bool = False) -> DataFrame:
-    """(media_ref, features array<float>, width, height) via one batched
-    mapInPandas pass: decode -> per-channel stats -> fixed-dim vector.
+    """(media_ref, features array<float>, width, height), one row per
+    media row: decode -> per-channel stats -> fixed-dim vector.
 
     ``fake`` defaults to False like decode_image: real payloads decode
     for real, and an undecodable payload raises instead of silently
     substituting md5-garbage pixels — tests opt in to fake=True."""
 
-    def run(batches):
-        for pdf in batches:
-            feats, widths, heights = [], [], []
-            for payload in pdf["payload"]:
-                img = decode_image(bytes(payload), fake=fake)
-                v = np.zeros(N_IMG_FEATURES, dtype=np.float32)
-                v[0:3] = img.mean(axis=(0, 1)) / 255.0
-                v[3:6] = img.std(axis=(0, 1)) / 255.0
-                v[6] = img.shape[0] / 64.0
-                v[7] = img.shape[1] / 64.0
-                hist, _ = np.histogram(img[..., 0], bins=8, range=(0, 256))
-                v[8:16] = hist / max(1, img.shape[0] * img.shape[1])
-                feats.append(v.tolist())
-                widths.append(img.shape[1])
-                heights.append(img.shape[0])
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "features": feats,
-                "width": pd.array(widths, dtype="int32"),
-                "height": pd.array(heights, dtype="int32"),
-            })
+    def features(payload: bytes) -> dict:
+        img = decode_image(payload, fake=fake)
+        v = np.zeros(N_IMG_FEATURES, dtype=np.float32)
+        v[0:3] = img.mean(axis=(0, 1)) / 255.0
+        v[3:6] = img.std(axis=(0, 1)) / 255.0
+        v[6] = img.shape[0] / 64.0
+        v[7] = img.shape[1] / 64.0
+        hist, _ = np.histogram(img[..., 0], bins=8, range=(0, 256))
+        v[8:16] = hist / max(1, img.shape[0] * img.shape[1])
+        return {"features": v.tolist(), "width": img.shape[1],
+                "height": img.shape[0]}
 
-    return media.mapInPandas(
-        run,
-        schema=("media_ref string, features array<float>, "
-                "width int, height int"),
-    )
+    return _per_payload(media, features, "media_ref string, "
+                        "features array<float>, width int, height int")
 
 
 def resize_images(media: DataFrame, target: int = 8,
                   fake: bool = False) -> DataFrame:
-    """Batched resize (nearest-neighbor) returning new payloads —
-    exercises binary-in/binary-out Arrow round-tripping. ``fake``
-    defaults to False like decode_image (see image_features)."""
+    """Nearest-neighbor resize returning new payloads — exercises
+    binary-in/binary-out Arrow round-tripping. ``fake`` defaults to
+    False like decode_image (see image_features)."""
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                img = decode_image(bytes(payload), fake=fake)
-                idx = (np.linspace(0, img.shape[0] - 1, target).astype(int),
-                       np.linspace(0, img.shape[1] - 1, target).astype(int))
-                small = img[np.ix_(idx[0], idx[1])]
-                out.append(small.tobytes())
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "payload": out,
-                "width": pd.array([target] * len(out), dtype="int32"),
-                "height": pd.array([target] * len(out), dtype="int32"),
-            })
+    def resize(payload: bytes) -> dict:
+        img = decode_image(payload, fake=fake)
+        idx = (np.linspace(0, img.shape[0] - 1, target).astype(int),
+               np.linspace(0, img.shape[1] - 1, target).astype(int))
+        return {"payload": img[np.ix_(idx[0], idx[1])].tobytes(),
+                "width": target, "height": target}
 
-    return media.mapInPandas(
-        run, schema="media_ref string, payload binary, width int, height int"
-    )
+    return _per_payload(media, resize, "media_ref string, payload binary, "
+                        "width int, height int")
 
 
 def frame_sample(media: DataFrame, every_n: int = 2,
@@ -1071,63 +1009,48 @@ def synth_audio_for_spans(spans_out: DataFrame) -> DataFrame:
     block-compressed IMA ADPCM (format tag 0x11) — the audio twin of
     synth_media_for_spans."""
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                h = hashlib.md5(ref.encode()).digest()
-                rng = np.random.default_rng(int.from_bytes(h[:8], "little"))
-                n = 64 + h[1] * 4
-                ch = 1 + h[2] % 2
-                rate = (8000, 16000, 22050)[h[3] % 3]
-                t = np.arange(n)[:, None]
-                freq = 1 + h[4] % 40
-                sig = (3000 * np.sin(2 * np.pi * freq * t / rate)
-                       + rng.integers(-500, 500, size=(n, ch)))
-                codec = ("pcm16", "ulaw", "alaw", "adpcm")[h[5] % 4]
-                payload = encode_wav(sig.astype(np.int16), rate,
-                                     codec=codec)
-                rows.append({
-                    "media_ref": ref, "kind": "audio", "payload": payload,
-                    "meta": {"width": 0, "height": 0, "n_frames": n,
-                             "sample_rate": rate, "mime": "audio/wav"},
-                })
-            yield pd.DataFrame(rows)
+    def gen(ref: str) -> dict:
+        h = hashlib.md5(ref.encode()).digest()
+        rng = np.random.default_rng(int.from_bytes(h[:8], "little"))
+        n = 64 + h[1] * 4
+        ch = 1 + h[2] % 2
+        rate = (8000, 16000, 22050)[h[3] % 3]
+        t = np.arange(n)[:, None]
+        freq = 1 + h[4] % 40
+        sig = (3000 * np.sin(2 * np.pi * freq * t / rate)
+               + rng.integers(-500, 500, size=(n, ch)))
+        codec = ("pcm16", "ulaw", "alaw", "adpcm")[h[5] % 4]
+        payload = encode_wav(sig.astype(np.int16), rate,
+                             codec=codec)
+        return {
+            "kind": "audio", "payload": payload,
+            "meta": {"width": 0, "height": 0, "n_frames": n,
+                     "sample_rate": rate, "mime": "audio/wav"},
+        }
 
     return _synth_from_media_refs(spans_out, gen)
 
 
 def audio_features(media: DataFrame) -> DataFrame:
     """(media_ref, n_samples, n_channels, sample_rate, duration_ms,
-    rms, zero_crossings) via one batched mapInPandas pass over the REAL
-    WAV decode — integer outputs only, so the pinned oracle is
-    float-free. Narrow (no shuffle), bounded Arrow batches, the same
-    partition-local shape as image_features."""
+    rms, zero_crossings) over the REAL WAV decode — integer outputs
+    only, so the pinned oracle is float-free. Narrow (no shuffle),
+    bounded Arrow batches, the same per-payload shape as
+    image_features."""
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "n_samples", "n_channels",
-                                   "sample_rate", "duration_ms", "rms",
-                                   "zero_crossings")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                data, rate = decode_audio(bytes(payload))
-                mono = data.mean(axis=1)
-                out["media_ref"].append(ref)
-                out["n_samples"].append(data.shape[0])
-                out["n_channels"].append(data.shape[1])
-                out["sample_rate"].append(rate)
-                out["duration_ms"].append(data.shape[0] * 1000 // rate)
-                out["rms"].append(int(np.sqrt(np.mean(mono ** 2))))
-                out["zero_crossings"].append(
-                    int(np.count_nonzero(np.diff(np.signbit(mono)))))
-            yield pd.DataFrame(out)
+    def features(payload: bytes) -> dict:
+        data, rate = decode_audio(payload)
+        mono = data.mean(axis=1)
+        return {"n_samples": data.shape[0], "n_channels": data.shape[1],
+                "sample_rate": rate,
+                "duration_ms": data.shape[0] * 1000 // rate,
+                "rms": int(np.sqrt(np.mean(mono ** 2))),
+                "zero_crossings": int(np.count_nonzero(
+                    np.diff(np.signbit(mono))))}
 
-    return media.mapInPandas(
-        run,
-        schema=("media_ref string, n_samples int, n_channels int, "
-                "sample_rate int, duration_ms int, rms int, "
-                "zero_crossings int"),
-    )
+    return _per_payload(media, features, "media_ref string, n_samples int, "
+                        "n_channels int, sample_rate int, duration_ms int, "
+                        "rms int, zero_crossings int")
 
 
 # ---------------------------------------------------------------------------
@@ -1140,72 +1063,55 @@ def synth_video_for_spans(spans_out: DataFrame) -> DataFrame:
     the video twin of synth_media_for_spans / synth_audio_for_spans."""
     from .video import encode_avi_mjpeg
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                h = hashlib.md5(ref.encode()).digest()
-                n_frames = 2 + h[1] % 4
-                w = 8 + 8 * (h[2] % 2)
-                ht = 8 + 8 * (h[3] % 2)
-                fps = (5, 10, 25)[h[4] % 3]
-                base = np.linspace(0, 200, w)[None, :, None]
-                frames = []
-                for i in range(n_frames):
-                    f = np.clip(base + 10 * i + h[5] % 40, 0, 255)
-                    frames.append(np.broadcast_to(
-                        f, (ht, w, 3)).astype(np.uint8))
-                payload = encode_avi_mjpeg(frames, fps=fps,
-                                           quality=80 + h[6] % 16)
-                rows.append({
-                    "media_ref": ref, "kind": "video", "payload": payload,
-                    "meta": {"width": w, "height": ht, "n_frames": n_frames,
-                             "sample_rate": fps, "mime": "video/x-msvideo"},
-                })
-            yield pd.DataFrame(rows)
+    def gen(ref: str) -> dict:
+        h = hashlib.md5(ref.encode()).digest()
+        n_frames = 2 + h[1] % 4
+        w = 8 + 8 * (h[2] % 2)
+        ht = 8 + 8 * (h[3] % 2)
+        fps = (5, 10, 25)[h[4] % 3]
+        base = np.linspace(0, 200, w)[None, :, None]
+        frames = []
+        for i in range(n_frames):
+            f = np.clip(base + 10 * i + h[5] % 40, 0, 255)
+            frames.append(np.broadcast_to(
+                f, (ht, w, 3)).astype(np.uint8))
+        payload = encode_avi_mjpeg(frames, fps=fps,
+                                   quality=80 + h[6] % 16)
+        return {
+            "kind": "video", "payload": payload,
+            "meta": {"width": w, "height": ht, "n_frames": n_frames,
+                     "sample_rate": fps, "mime": "video/x-msvideo"},
+        }
 
     return _synth_from_media_refs(spans_out, gen)
 
 
 def video_features(media: DataFrame) -> DataFrame:
     """(media_ref, n_frames, width, height, us_per_frame, mean_luma,
-    motion) via one batched mapInPandas pass over the REAL MJPEG decode:
-    mean_luma is the integer mean of the BT.601 luma over all frames,
-    motion the integer mean absolute inter-frame luma difference.
-    Integer outputs only, so the pinned oracle is float-free; narrow
-    (no shuffle), bounded batches — the same partition-local shape as
-    image/audio_features. Coarse frame SAMPLING belongs at the container
-    walk (decode only every nth '00dc' chunk) — the metadata-level
-    ``frame_sample`` op models that plan shape; this feature pass
-    deliberately reads every frame."""
+    motion) over the REAL MJPEG decode: mean_luma is the integer mean of
+    the BT.601 luma over all frames, motion the integer mean absolute
+    inter-frame luma difference. Integer outputs only, so the pinned
+    oracle is float-free; narrow (no shuffle), bounded batches — the
+    same per-payload shape as image/audio_features. Coarse frame
+    SAMPLING belongs at the container walk (decode only every nth
+    '00dc' chunk) — the metadata-level ``frame_sample`` op models that
+    plan shape; this feature pass deliberately reads every frame."""
     from .video import decode_video
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "n_frames", "width",
-                                   "height", "us_per_frame", "mean_luma",
-                                   "motion")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                frames, uspf = decode_video(bytes(payload))
-                sampled = frames.astype(np.float64)
-                luma = (0.299 * sampled[..., 0] + 0.587 * sampled[..., 1]
-                        + 0.114 * sampled[..., 2])
-                motion = (int(np.mean(np.abs(np.diff(luma, axis=0))))
-                          if luma.shape[0] > 1 else 0)
-                out["media_ref"].append(ref)
-                out["n_frames"].append(frames.shape[0])
-                out["width"].append(frames.shape[2])
-                out["height"].append(frames.shape[1])
-                out["us_per_frame"].append(uspf)
-                out["mean_luma"].append(int(np.mean(luma)))
-                out["motion"].append(motion)
-            yield pd.DataFrame(out)
+    def features(payload: bytes) -> dict:
+        frames, uspf = decode_video(payload)
+        sampled = frames.astype(np.float64)
+        luma = (0.299 * sampled[..., 0] + 0.587 * sampled[..., 1]
+                + 0.114 * sampled[..., 2])
+        motion = (int(np.mean(np.abs(np.diff(luma, axis=0))))
+                  if luma.shape[0] > 1 else 0)
+        return {"n_frames": frames.shape[0], "width": frames.shape[2],
+                "height": frames.shape[1], "us_per_frame": uspf,
+                "mean_luma": int(np.mean(luma)), "motion": motion}
 
-    return media.mapInPandas(
-        run,
-        schema=("media_ref string, n_frames int, width int, height int, "
-                "us_per_frame int, mean_luma int, motion int"),
-    )
+    return _per_payload(media, features, "media_ref string, n_frames int, "
+                        "width int, height int, us_per_frame int, "
+                        "mean_luma int, motion int")
 
 
 # ---------------------------------------------------------------------------
@@ -1241,63 +1147,59 @@ def synth_pdfs_for_spans(spans_out: DataFrame) -> DataFrame:
     _WORDS = ("table", "spark", "corpus", "extract", "span", "layout",
               "query", "join", "column", "page", "表格抽取", "属性关系")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                h = hashlib.md5(ref.encode()).digest()
-                rng = np.random.default_rng(int.from_bytes(h[:8], "little"))
-                n_pages = 1 + h[1] % 3
-                two_col = bool(h[2] % 2)
-                pages = []
-                for p in range(n_pages):
-                    n_lines = 2 + int(rng.integers(0, 4))
-                    runs = []
-                    for i in range(n_lines):
-                        words = " ".join(
-                            _WORDS[int(w)] for w in
-                            rng.integers(0, len(_WORDS), size=3))
-                        x = 320.0 if (two_col and i % 2) else 72.0
-                        y = 720.0 - 16.0 * (i // 2 if two_col else i)
-                        runs.append((x, y, 10 + int(rng.integers(0, 4)),
-                                     f"p{p} {words}"))
-                    rng.shuffle(runs)  # content order != reading order
-                    pages.append(runs)
-                images = None
-                transport = None
-                if h[6] % 2:
-                    # 1-2 embedded JPEGs, always on page 0 (every PDF
-                    # has one); dims/pixels/quality/progressive all
-                    # md5-seeded like the standalone image corpus
-                    n_imgs = 1 + h[7] % 2
-                    page_imgs = []
-                    for j in range(n_imgs):
-                        iw = 4 + int(rng.integers(0, 13))
-                        ih = 4 + int(rng.integers(0, 13))
-                        img = rng.integers(0, 256, size=(ih, iw, 3),
-                                           dtype=np.uint8)
-                        jp = encode_jpeg(img,
-                                         quality=75 + int(rng.integers(0, 21)),
-                                         progressive=bool((h[8] + j) % 2))
-                        page_imgs.append(
-                            (jp, iw, ih, 72.0 + 40.0 * j, 80.0))
-                    images = [page_imgs] + [[] for _ in range(n_pages - 1)]
-                    transport = (None, "ASCII85Decode",
-                                 "FlateDecode")[h[9] % 3]
-                # stream_filter drives the content streams; compress
-                # still toggles the modern ObjStm's Flate so both its
-                # states stay exercised
-                payload = encode_pdf(
-                    pages, compress=bool(h[5] % 2), modern=bool(h[4] % 2),
-                    stream_filter=_FILTER_CYCLE[h[3] % len(_FILTER_CYCLE)],
-                    images=images, image_transport=transport)
-                rows.append({
-                    "media_ref": ref, "kind": "pdf", "payload": payload,
-                    "meta": {"width": 612, "height": 792,
-                             "n_frames": n_pages, "sample_rate": 0,
-                             "mime": "application/pdf"},
-                })
-            yield pd.DataFrame(rows)
+    def gen(ref: str) -> dict:
+        h = hashlib.md5(ref.encode()).digest()
+        rng = np.random.default_rng(int.from_bytes(h[:8], "little"))
+        n_pages = 1 + h[1] % 3
+        two_col = bool(h[2] % 2)
+        pages = []
+        for p in range(n_pages):
+            n_lines = 2 + int(rng.integers(0, 4))
+            runs = []
+            for i in range(n_lines):
+                words = " ".join(
+                    _WORDS[int(w)] for w in
+                    rng.integers(0, len(_WORDS), size=3))
+                x = 320.0 if (two_col and i % 2) else 72.0
+                y = 720.0 - 16.0 * (i // 2 if two_col else i)
+                runs.append((x, y, 10 + int(rng.integers(0, 4)),
+                             f"p{p} {words}"))
+            rng.shuffle(runs)  # content order != reading order
+            pages.append(runs)
+        images = None
+        transport = None
+        if h[6] % 2:
+            # 1-2 embedded JPEGs, always on page 0 (every PDF
+            # has one); dims/pixels/quality/progressive all
+            # md5-seeded like the standalone image corpus
+            n_imgs = 1 + h[7] % 2
+            page_imgs = []
+            for j in range(n_imgs):
+                iw = 4 + int(rng.integers(0, 13))
+                ih = 4 + int(rng.integers(0, 13))
+                img = rng.integers(0, 256, size=(ih, iw, 3),
+                                   dtype=np.uint8)
+                jp = encode_jpeg(img,
+                                 quality=75 + int(rng.integers(0, 21)),
+                                 progressive=bool((h[8] + j) % 2))
+                page_imgs.append(
+                    (jp, iw, ih, 72.0 + 40.0 * j, 80.0))
+            images = [page_imgs] + [[] for _ in range(n_pages - 1)]
+            transport = (None, "ASCII85Decode",
+                         "FlateDecode")[h[9] % 3]
+        # stream_filter drives the content streams; compress
+        # still toggles the modern ObjStm's Flate so both its
+        # states stay exercised
+        payload = encode_pdf(
+            pages, compress=bool(h[5] % 2), modern=bool(h[4] % 2),
+            stream_filter=_FILTER_CYCLE[h[3] % len(_FILTER_CYCLE)],
+            images=images, image_transport=transport)
+        return {
+            "kind": "pdf", "payload": payload,
+            "meta": {"width": 612, "height": 792,
+                     "n_frames": n_pages, "sample_rate": 0,
+                     "mime": "application/pdf"},
+        }
 
     return _synth_from_media_refs(spans_out, gen)
 
@@ -1311,9 +1213,8 @@ def pdf_features(media: DataFrame) -> DataFrame:
     row; img_px_md5 digests the DECODED RGB pixels of every embedded
     image XObject (page order, then resource-name order — through the
     real DCTDecode->jpeg.py path), so a JPEG or transport-cascade
-    regression fails it too ('' when the PDF embeds no images). Narrow
-    mapInPandas, same partition-local shape as the other codec
-    features."""
+    regression fails it too ('' when the PDF embeds no images). Narrow,
+    the same per-payload shape as the other codec features."""
     from .pdf import (
         decode_pdf,
         extract_pdf_images,
@@ -1321,39 +1222,22 @@ def pdf_features(media: DataFrame) -> DataFrame:
         parse_pdf,
     )
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "n_pages", "n_runs",
-                                   "n_chars", "text_md5", "n_images",
-                                   "img_px_md5")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                doc = parse_pdf(bytes(payload))  # parse ONCE
-                pages = decode_pdf(doc)
-                text = layout_pages(pages)
-                joined = "\x0c".join(text)
-                img_pages = extract_pdf_images(doc)
-                n_images = sum(len(p) for p in img_pages)
-                if n_images:
-                    d = hashlib.md5()
-                    for p in img_pages:
-                        for _name, arr in p:
-                            d.update(arr.tobytes())
-                    px_md5 = d.hexdigest()
-                else:
-                    px_md5 = ""
-                out["media_ref"].append(ref)
-                out["n_pages"].append(len(pages))
-                out["n_runs"].append(sum(len(p) for p in pages))
-                out["n_chars"].append(len(joined))
-                out["text_md5"].append(
-                    hashlib.md5(joined.encode()).hexdigest())
-                out["n_images"].append(n_images)
-                out["img_px_md5"].append(px_md5)
-            yield pd.DataFrame(out)
+    def features(payload: bytes) -> dict:
+        doc = parse_pdf(payload)  # parse ONCE
+        pages = decode_pdf(doc)
+        joined = "\x0c".join(layout_pages(pages))
+        img_pages = extract_pdf_images(doc)
+        n_images = sum(len(p) for p in img_pages)
+        d = hashlib.md5()
+        for p in img_pages:
+            for _name, arr in p:
+                d.update(arr.tobytes())
+        return {"n_pages": len(pages), "n_runs": sum(len(p) for p in pages),
+                "n_chars": len(joined),
+                "text_md5": hashlib.md5(joined.encode()).hexdigest(),
+                "n_images": n_images,
+                "img_px_md5": d.hexdigest() if n_images else ""}
 
-    return media.mapInPandas(
-        run,
-        schema=("media_ref string, n_pages int, n_runs int, "
-                "n_chars int, text_md5 string, n_images int, "
-                "img_px_md5 string"),
-    )
+    return _per_payload(media, features, "media_ref string, n_pages int, "
+                        "n_runs int, n_chars int, text_md5 string, "
+                        "n_images int, img_px_md5 string")

@@ -1,4 +1,4 @@
-"""PDF text + layout extraction in pure stdlib — the north rule's
+"""PDF text + layout extraction in pure stdlib + numpy — the north rule's
 "PDF/layout parse" clause, built like the other codecs (jpeg.py,
 multimodal.py): a real spec-driven decoder with honest ValueError
 boundaries, a paired encoder so round-trips are testable without
@@ -47,8 +47,13 @@ import base64
 import re
 import zlib
 
+import numpy as np
+
 _MAX_STREAM_BYTES = 1 << 26   # inflate cap per content stream (DoS bound)
-_MAX_PIXELS = 1 << 26         # per embedded image (matches jpeg.py's cap)
+# decode bound on untrusted image dimensions, shared by every image codec
+# (PNG, JPEG, GIF, TIFF and PDF image XObjects): a header of a few bytes
+# can declare 4G pixels, so each codec checks it before any allocation
+_MAX_PIXELS = 1 << 26
 _MAX_XREF_CHAIN = 64          # /Prev chain bound (cycle/DoS)
 _MAX_OBJECTS = 1 << 20        # xref entry bound
 
@@ -578,13 +583,63 @@ def _parse_from(lx: _Lexer, tok):
 # document structure
 # ---------------------------------------------------------------------------
 
+def _undiff(rows: np.ndarray, bpp: int) -> np.ndarray:
+    """Horizontal-differencing decode of (h, stride) uint8 rows, shared
+    by TIFF Predictor 2, PDF Predictor 2 and the PNG Sub filter: each
+    byte is stored as the delta from the byte ``bpp`` to its left, so
+    decoding is a per-row cumulative sum mod 256 over each byte lane."""
+    h, stride = rows.shape
+    return np.cumsum(rows.reshape(h, stride // bpp, bpp), axis=1,
+                     dtype=np.uint8).reshape(h, stride)
+
+
+def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
+    """Reverse PNG row filtering -> (h, stride) uint8, for PNG scanlines
+    and PDF's PNG predictors (>= 10) alike.
+
+    ``raw`` holds h rows, each a 1-byte filter type + ``stride`` filtered
+    bytes. None/Sub/Up are vectorized; Average and Paeth keep the
+    sequential left-dependency, so those rows loop per byte — bounded by
+    stride, never the whole image."""
+    if len(raw) != h * (1 + stride):
+        raise ValueError("truncated PNG pixel data")
+    rows = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + stride)
+    out = np.zeros((h, stride), dtype=np.uint8)
+    prev = np.zeros(stride, dtype=np.uint8)
+    for y, ftype in enumerate(rows[:, 0].tolist()):
+        row = rows[y, 1:]
+        if ftype == 0:  # None
+            out[y] = row
+        elif ftype == 1:  # Sub: recon[x] = filt[x] + recon[x-bpp]
+            out[y] = _undiff(row[None], bpp)[0]
+        elif ftype == 2:  # Up
+            out[y] = row + prev
+        elif ftype in (3, 4):  # Average, Paeth
+            rec, up = bytearray(row.tobytes()), prev.tobytes()
+            for x in range(stride):
+                a = rec[x - bpp] if x >= bpp else 0
+                b = up[x]
+                if ftype == 3:
+                    pr = (a + b) >> 1
+                else:  # RFC 2083 §6.6: nearest of left/up/up-left
+                    c = up[x - bpp] if x >= bpp else 0
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pr = a if pa <= pb and pa <= pc else b if pb <= pc else c
+                rec[x] = (rec[x] + pr) & 0xFF
+            out[y] = np.frombuffer(rec, dtype=np.uint8)
+        else:
+            raise ValueError(f"bad PNG filter type {ftype}")
+        prev = out[y]
+    return out
+
+
 def _apply_predictor(raw: bytes, parms) -> bytes:
     """§7.4.4.4 LZW/Flate predictors: 1 = none, 2 = TIFF horizontal
-    differencing (8-bit components only — each sample is stored as the
-    delta from the sample one pixel left, so decoding is a per-row
-    cumulative sum mod 256), >=10 = PNG row filters (each row led by a
-    filter-type byte — the same five filters as PNG scanlines,
-    implemented here in pure Python since xref streams are tiny)."""
+    differencing (8-bit components only; rows are exactly ``stride``
+    bytes of left-neighbour deltas), >=10 = PNG row filters (each row
+    led by a filter-type byte — the same five filters as PNG
+    scanlines)."""
     def _int(v) -> bool:
         # bool subclasses int: '/Predictor true' must raise, not be
         # silently treated as True == 1 (no predictor)
@@ -604,55 +659,17 @@ def _apply_predictor(raw: bytes, parms) -> bytes:
     if not _int(cols) or cols <= 0 or bpc != 8 \
             or not _int(colors) or colors <= 0:
         raise ValueError("bad PDF predictor parameters")
-    bpp = colors
-    stride = cols * bpp
-    if pred == 2:
-        # TIFF predictor: no per-row filter-type byte; rows are exactly
-        # `stride` bytes of left-neighbour deltas
-        if len(raw) % stride:
-            raise ValueError("PDF predicted stream length mismatch")
-        out = bytearray(raw)
-        for base in range(0, len(out), stride):
-            for x in range(bpp, stride):
-                out[base + x] = (out[base + x] + out[base + x - bpp]) \
-                    & 0xFF
-        return bytes(out)
-    if pred < 10:
+    if pred != 2 and pred < 10:
         raise ValueError(f"bad PDF predictor {pred}")
-    if len(raw) % (stride + 1):
+    stride = cols * colors
+    row_len = stride if pred == 2 else stride + 1
+    if len(raw) % row_len:
         raise ValueError("PDF predicted stream length mismatch")
-    out = bytearray()
-    prev = bytearray(stride)
-    for r in range(len(raw) // (stride + 1)):
-        base = r * (stride + 1)
-        ft = raw[base]
-        row = bytearray(raw[base + 1:base + 1 + stride])
-        if ft == 0:
-            pass
-        elif ft == 1:  # Sub
-            for x in range(bpp, stride):
-                row[x] = (row[x] + row[x - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for x in range(stride):
-                row[x] = (row[x] + prev[x]) & 0xFF
-        elif ft == 3:  # Average
-            for x in range(stride):
-                left = row[x - bpp] if x >= bpp else 0
-                row[x] = (row[x] + ((left + prev[x]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for x in range(stride):
-                a = row[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[x] = (row[x] + pr) & 0xFF
-        else:
-            raise ValueError(f"bad PDF predictor filter type {ft}")
-        out += row
-        prev = row
-    return bytes(out)
+    h = len(raw) // row_len
+    if pred == 2:
+        rows = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
+        return _undiff(rows, colors).tobytes()
+    return _png_unfilter(raw, h, stride, colors).tobytes()
 
 
 # ---------------------------------------------------------------------------
@@ -776,7 +793,11 @@ def _run_length_decode(raw: bytes) -> bytes:
     raise ValueError("PDF RunLength stream missing EOD")
 
 
-def _run_length_encode(data: bytes) -> bytes:
+def _packbits_encode(data: bytes) -> bytes:
+    """PackBits (TIFF §9), the coding PDF's RunLengthDecode shares: runs
+    of 2-128 equal bytes as (257 - n, byte), everything else as literals
+    of up to 128 bytes led by n - 1. No EOD marker: a TIFF strip ends at
+    its decoded length, and ``_run_length_encode`` appends PDF's."""
     out = bytearray()
     i, n = 0, len(data)
     while i < n:
@@ -795,8 +816,12 @@ def _run_length_encode(data: bytes) -> bytes:
         out.append(j - i)
         out += data[i:j + 1]
         i = j + 1
-    out.append(128)
     return bytes(out)
+
+
+def _run_length_encode(data: bytes) -> bytes:
+    """§7.4.5 RunLengthDecode's encoder: PackBits plus the 128 EOD."""
+    return _packbits_encode(data) + b"\x80"
 
 
 _LZW_CLEAR, _LZW_EOD, _LZW_FIRST = 256, 257, 258
@@ -1730,8 +1755,6 @@ def extract_pdf_images(payload: bytes):
     /Width//Height so a forged header can't mislabel pixel data.
     Accepts bytes or a parse_pdf result (share one parse with
     decode_pdf — see parse_pdf)."""
-    import numpy as np
-
     from .jpeg import decode_jpeg
 
     doc = payload if isinstance(payload, _Doc) else parse_pdf(payload)

@@ -29,9 +29,15 @@ import struct
 
 import numpy as np
 
-from .pdf import _MAX_STREAM_BYTES, _lzw_decode, _lzw_encode
+from .pdf import (
+    _MAX_PIXELS,
+    _MAX_STREAM_BYTES,
+    _lzw_decode,
+    _lzw_encode,
+    _packbits_encode,
+    _undiff,
+)
 
-_MAX_PIXELS = 1 << 26
 _MAX_STRIPS = 1 << 16
 
 # tag ids (TIFF6 §3-§14)
@@ -77,28 +83,6 @@ def _packbits_decode(raw: bytes, expect: int) -> bytes:
             raise ValueError("TIFF strip exceeds the inflate bound")
     if len(out) != expect:
         raise ValueError("TIFF PackBits strip overruns its row count")
-    return bytes(out)
-
-
-def _packbits_encode(data: bytes) -> bytes:
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        j = i
-        while j + 1 < n and data[j + 1] == data[i] and j - i < 127:
-            j += 1
-        if j > i:
-            out.append(257 - (j - i + 1))
-            out.append(data[i])
-            i = j + 1
-            continue
-        j = i
-        while (j + 1 < n and j - i < 127
-               and not (j + 2 < n and data[j + 1] == data[j + 2])):
-            j += 1
-        out.append(j - i)
-        out += data[i:j + 1]
-        i = j + 1
     return bytes(out)
 
 
@@ -239,9 +223,8 @@ def _decode_tiff_impl(payload: bytes) -> np.ndarray:
             raise ValueError("TIFF strip length disagrees with its "
                              "row count")
         if pred == 2:
-            arr = np.frombuffer(data, dtype=np.uint8) \
-                .reshape(strip_rows, w, spp)
-            data = np.cumsum(arr, axis=1, dtype=np.uint8).tobytes()
+            data = _undiff(np.frombuffer(data, dtype=np.uint8)
+                           .reshape(strip_rows, w * spp), spp).tobytes()
         rows += data
 
     img = np.frombuffer(bytes(rows), dtype=np.uint8).reshape(h, w, spp)

@@ -135,7 +135,9 @@ TRIPLES = T.StructType(
 
 EXTRACTED = T.StructType(
     [
-        T.StructField("doc_id", T.StringType(), False),
+        # nullable: the stage passes its input's doc_id through, and a
+        # parquet or stream source reads every column as nullable
+        T.StructField("doc_id", T.StringType()),
         T.StructField("bucket", T.IntegerType()),
         T.StructField("out_spans", T.ArrayType(OUT_SPAN)),
         T.StructField("tables", T.ArrayType(TABLE_OUT)),
@@ -167,7 +169,3 @@ CHECKPOINT = T.StructType(
     ]
 )
 
-
-def ddl(schema: T.StructType) -> str:
-    """Schema as a DDL string (for mapInArrow / mapInPandas / applyInPandas)."""
-    return schema.simpleString()[len("struct<") : -1]
