@@ -2899,13 +2899,15 @@ def test_pdf_lzw_earlychange_parm_hand_built():
         pass
 
 
-def test_streaming_quantile_hist_equals_batch(spark, tmp_path):
+def test_streaming_quantile_hist_equals_batch(spark, tmp_path, monkeypatch):
     """The streamed quantile histogram == the batch lattice over the
     same corpus, across an availableNow restart, and the online
     estimates (qsketch_estimates over state) == the batch
     quantile_sketch fold — both sides share the bucket and estimate
     expressions, so the only thing under test is the update-mode
-    mergeable accumulation and the versioned state layer."""
+    mergeable accumulation and the versioned state layer. A file://
+    output root gives the same result as a plain path and leaves no
+    relative 'file:' directory in the working directory."""
     from pyspark.sql import functions as F
 
     from webtableextractionsystem_spark.operators.textstats import (
@@ -2913,6 +2915,7 @@ def test_streaming_quantile_hist_equals_batch(spark, tmp_path):
         qsketch_estimates,
     )
     from webtableextractionsystem_spark.streaming.incremental import (
+        read_latest_version,
         read_streaming_quantiles,
         streaming_quantile_hist,
     )
@@ -2925,42 +2928,44 @@ def test_streaming_quantile_hist_equals_batch(spark, tmp_path):
              for i in range(40)]
     wave2 = [(100 + i, "x", "en", f"s{i % 3}", [9, 33, 1023][i % 3])
              for i in range(30)]
-    in_dir, out_dir, ck_dir = (str(tmp_path / d) for d in
-                               ("in", "out", "ck"))
-    spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
-        .parquet(in_dir)
-    streaming_quantile_hist(spark, in_dir, out_dir, ck_dir)
-    spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
-        .parquet(in_dir)
-    streaming_quantile_hist(spark, in_dir, out_dir, ck_dir)
-
-    from webtableextractionsystem_spark.streaming.incremental import (
-        read_latest_version,
-    )
-
-    got = {(r["source"], r["bucket"]): r["cnt"]
-           for r in read_latest_version(spark, f"{out_dir}/v").collect()}
     all_docs = spark.createDataFrame(wave1 + wave2, SCHEMA)
     want = {(r["source"], r["bucket"]): r["cnt"]
             for r in qsketch_buckets(all_docs)
             .groupBy("source", "bucket").agg(F.count("*").alias("cnt"))
             .collect()}
-    assert got == want and len(got) > 5
-    # and the online estimates equal the batch fold over the same docs
-    online = {r["source"]: tuple(r)[1:] for r in
-              read_streaming_quantiles(spark, out_dir).collect()}
     batch = {r["source"]: tuple(r)[1:] for r in
              qsketch_estimates(
                  qsketch_buckets(all_docs).groupBy("source", "bucket")
                  .agg(F.count("*").alias("cnt"))).collect()}
-    assert online == batch and len(online) == 3
+    monkeypatch.chdir(tmp_path)
+    for scheme in ("", "file://"):
+        run = tmp_path / ("uri" if scheme else "path")
+        in_dir, ck_dir = str(run / "in"), str(run / "ck")
+        out_dir = scheme + str(run / "out")
+        spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
+            .parquet(in_dir)
+        streaming_quantile_hist(spark, in_dir, out_dir, ck_dir)
+        spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
+            .parquet(in_dir)
+        streaming_quantile_hist(spark, in_dir, out_dir, ck_dir)
+
+        got = {(r["source"], r["bucket"]): r["cnt"] for r in
+               read_latest_version(spark, f"{out_dir}/v").collect()}
+        assert got == want and len(got) > 5
+        # and the online estimates equal the batch fold over the same docs
+        online = {r["source"]: tuple(r)[1:] for r in
+                  read_streaming_quantiles(spark, out_dir).collect()}
+        assert online == batch and len(online) == 3
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("file:")]
 
 
-def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
+def test_streaming_cms_equals_batch_sketch(spark, tmp_path, monkeypatch):
     """The streamed Count-Min sketch == the batch sketch build over the
     same corpus, across an availableNow restart: update-mode aggregation
     into the fixed DxW domain IS the mergeable-sketch union, and the
-    per-batch merge keeps cells untouched by the current batch."""
+    per-batch merge keeps cells untouched by the current batch. A
+    file:// output root gives the same sketch as a plain path and
+    leaves no relative 'file:' directory in the working directory."""
     from pyspark.sql import functions as F
 
     from webtableextractionsystem_spark.operators.textstats import (
@@ -2978,17 +2983,6 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
              for i in range(40)]
     wave2 = [(100 + i, f"beta delta tok{i % 5} beta beta", "en", "s", 0)
              for i in range(30)]
-    in_dir, out_dir, ck_dir = (str(tmp_path / d) for d in
-                               ("in", "out", "ck"))
-    spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
-        .parquet(in_dir)
-    streaming_cms(spark, in_dir, out_dir, ck_dir)
-    spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
-        .parquet(in_dir)
-    streaming_cms(spark, in_dir, out_dir, ck_dir)
-
-    got = {(r["d"], r["c"]): r["n"]
-           for r in read_streaming_cms(spark, out_dir).collect()}
     batch = (
         spark.createDataFrame(wave1 + wave2, SCHEMA)
         .select(F.explode(_tokens()).alias("token"))
@@ -2997,8 +2991,23 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
         .agg(F.count("*").alias("n"))
     )
     want = {(r["d"], r["c"]): r["n"] for r in batch.collect()}
-    assert got == want
-    assert len(got) > 0 and sum(got.values()) == 70 * 5 * 4  # 5 toks x D
+    monkeypatch.chdir(tmp_path)
+    for scheme in ("", "file://"):
+        run = tmp_path / ("uri" if scheme else "path")
+        in_dir, ck_dir = str(run / "in"), str(run / "ck")
+        out_dir = scheme + str(run / "out")
+        spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
+            .parquet(in_dir)
+        streaming_cms(spark, in_dir, out_dir, ck_dir)
+        spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
+            .parquet(in_dir)
+        streaming_cms(spark, in_dir, out_dir, ck_dir)
+
+        got = {(r["d"], r["c"]): r["n"]
+               for r in read_streaming_cms(spark, out_dir).collect()}
+        assert got == want
+        assert len(got) > 0 and sum(got.values()) == 70 * 5 * 4  # 5 toks x D
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("file:")]
 
 
 # ---------------------------------------------------------------------------

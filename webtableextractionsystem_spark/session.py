@@ -8,32 +8,49 @@ cluster AQE coalescing makes the initial number far less sensitive).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import zipfile
 
 from pyspark.sql import SparkSession
 
 
-def package_zip(path: str = "/tmp/wtes_spark_pkg.zip") -> str:
+def package_zip(path: str | None = None) -> str:
     """Zip this package for shipping to executors — the programmatic
-    equivalent of ``spark-submit --py-files`` (north rule). Rebuilt only
-    when sources are newer than the existing zip."""
+    equivalent of ``spark-submit --py-files`` (north rule). The zip
+    records the sha256 of the package's sorted (relpath, bytes) sources
+    as its comment and is reused only when that digest matches, so a
+    zip built from another checkout is never shipped, whatever the file
+    mtimes say; the default file name carries the digest too, so two
+    checkouts on one host do not rebuild one file back and forth."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    sources = []
+    sources = {}
     for dirpath, _, files in os.walk(pkg_dir):
         if "__pycache__" in dirpath:
             continue
-        sources.extend(os.path.join(dirpath, f) for f in files
-                       if f.endswith(".py"))
+        for f in files:
+            if f.endswith(".py"):
+                src = os.path.join(dirpath, f)
+                with open(src, "rb") as fh:
+                    sources[os.path.relpath(src, root)] = fh.read()
+    h = hashlib.sha256()
+    for rel in sorted(sources):
+        # length-prefixed, so no two source sets share a byte stream
+        h.update(f"{len(rel)}:{rel}{len(sources[rel])}:".encode())
+        h.update(sources[rel])
+    digest = h.hexdigest()
+    if path is None:
+        path = f"/tmp/wtes_spark_pkg-{digest[:16]}.zip"
     if os.path.exists(path):
-        newest = max(os.path.getmtime(s) for s in sources)
-        if os.path.getmtime(path) >= newest:
-            return path
-    tmp = path + ".tmp"
+        with zipfile.ZipFile(path) as zf:
+            if zf.comment == digest.encode():
+                return path
+    tmp = f"{path}.{os.getpid()}.tmp"
     with zipfile.ZipFile(tmp, "w") as zf:
-        for src in sources:
-            zf.write(src, os.path.relpath(src, root))
+        for rel in sorted(sources):
+            zf.writestr(rel, sources[rel])
+        zf.comment = digest.encode()
     os.replace(tmp, path)
     return path
 

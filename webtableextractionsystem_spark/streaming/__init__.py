@@ -9,4 +9,11 @@ variant for genuinely incremental ingest: file-source streams with
 stage, with Spark's streaming checkpoint giving exactly-once file
 tracking — the correct version of the reference's fetch-then-DELETE
 discipline.
+
+Each streaming entry point reuses its batch twin's expression; the
+plumbing they share lives once in ``incremental.py``:
+``run_available_now`` (the package's only ``writeStream``),
+``batch_dirs`` (the replay-idempotent ``batch=<id>`` overwrite sink)
+and ``hadoop_fs`` (the only driver-side filesystem access, so output
+and state roots may be plain paths or any URI Spark can write).
 """

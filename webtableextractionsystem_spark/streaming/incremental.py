@@ -17,6 +17,8 @@ monitoring counters would look like done right).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,15 +26,49 @@ from ..operators.extraction import extract_all
 from ..schemas import DOCUMENTS
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the session's Hadoop
+    configuration — the one driver-side filesystem access in
+    ``streaming/``, so state and output roots resolve exactly as Spark's
+    readers and writers resolve them: plain paths, ``file://`` and
+    cluster URIs (hdfs://, s3a://) alike."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def run_available_now(stream: DataFrame, stream_ckpt_dir: str, sink,
+                      mode: str = "append") -> None:
+    """Run ``stream`` over every currently-available input, then stop
+    (Trigger.AvailableNow — the streaming checkpoint records what is
+    done, so repeated calls are incremental). ``sink`` is a foreachBatch
+    function ``(batch_df, batch_id)`` or a parquet output directory."""
+    writer = (stream.writeStream.outputMode(mode)
+              .option("checkpointLocation", stream_ckpt_dir))
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def batch_dirs(output_dir: str, build=lambda df: df):
+    """foreachBatch sink writing ``build(batch)`` to
+    ``output_dir/batch=<id>`` with OVERWRITE. Exactly-once: a crash
+    between the sink write and the checkpoint commit replays the batch
+    under the same id, which rewrites identical files — a bare append
+    would duplicate every replayed row."""
+    def write(batch: DataFrame, batch_id: int) -> None:
+        build(batch).write.mode("overwrite").parquet(
+            f"{output_dir}/batch={batch_id}")
+    return write
+
+
 def _refuse_legacy_flat_layout(spark: SparkSession, output_dir: str) -> None:
     """A pre-existing output_dir written by the old flat-append sink
     holds bare *.parquet files at the root; resuming the batch=<id>
     layout on top of them would mix files and partition dirs (broken
-    partition discovery + a schema change adding 'batch'). Goes through
-    the Hadoop FileSystem so URI-schemed outputs are covered too."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(output_dir)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    partition discovery + a schema change adding 'batch')."""
+    fs, path = hadoop_fs(spark, output_dir)
     if not fs.exists(path):
         return
     for st in fs.listStatus(path):
@@ -51,7 +87,7 @@ def incremental_extract(spark: SparkSession, input_dir: str, output_dir: str,
     (Trigger.AvailableNow — repeated invocations are incremental).
 
     Output layout: batch=<id> partition directories with per-batch
-    OVERWRITE (replay-idempotent). This layout is BREAKING for output
+    OVERWRITE (``batch_dirs``). This layout is BREAKING for output
     dirs written by the pre-partitioned (flat append) version: mixing
     flat parquet files with partition dirs at one root breaks Spark's
     partition discovery and changes the read schema, so a legacy flat
@@ -63,26 +99,9 @@ def incremental_extract(spark: SparkSession, input_dir: str, output_dir: str,
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = extract_all(batch_df, num_buckets=num_buckets,
-                                repartition=False)
-        # deterministic per-batch partition with OVERWRITE (same
-        # exactly-once shape as the sessionize sink): a crash between
-        # the sink write and the checkpoint commit replays the batch,
-        # which must rewrite identical files — a bare append would
-        # duplicate every replayed row
-        extracted.write.mode("overwrite").parquet(
-            f"{output_dir}/batch={batch_id}")
-
-    (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", stream_ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream, stream_ckpt_dir, batch_dirs(
+        output_dir, lambda batch: extract_all(
+            batch, num_buckets=num_buckets, repartition=False)))
 
 
 def windowed_event_counts(spark: SparkSession, events_dir: str,
@@ -101,16 +120,7 @@ def windowed_event_counts(spark: SparkSession, events_dir: str,
                 F.col("w.end").alias("window_end"),
                 "event_type", "n", "sum_value")
     )
-    (
-        agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", stream_ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(agg, stream_ckpt_dir, output_dir)
 
 
 # the ONE events-table shape: parquet stores NTZ wall-clock micros, so
@@ -174,38 +184,27 @@ def attribution_join(spark: SparkSession, events_dir: str, output_dir: str,
         "click_id", "purchase_id", "click_ts", "purchase_ts",
         "purchase_value",
     )
-    (
-        joined.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", stream_ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(joined, stream_ckpt_dir, output_dir)
 
 
-def _versioned_merge_write(spark: SparkSession, root: str, batch_id: int,
-                           batch: DataFrame, keys: list[str]) -> None:
+def _versioned_merge_write(spark: SparkSession, root: str, keys: list[str],
+                           batch: DataFrame, batch_id: int) -> None:
     """The ONE home of the crash-safe versioned upsert (used by
-    streaming_anomalies and streaming_cms): merge the batch into the
-    newest COMMITTED prior version, write v=<batch_id> (own-version
-    overwrite only — replay rewrites it identically, prior state is
-    never touched in place), prune all but the previous version.
+    streaming_anomalies and, as their foreachBatch sink, streaming_cms
+    and streaming_quantile_hist, whose update-mode batches carry the
+    CUMULATIVE counter of every changed cell): merge the batch into the
+    newest COMMITTED prior version, keeping the keys the batch did not
+    touch, write v=<batch_id> (own-version overwrite only — replay
+    rewrites it identically, prior state is never touched in place),
+    prune all but the previous version.
 
-    Contract notes: the version ledger uses driver-local filesystem
-    calls, so state roots must be LOCAL paths (a URI-schemed root
-    would need the Hadoop FileSystem API — see stateful.py's
-    shingle-root bootstrap for the pattern); and the keep-two prune
+    Contract notes: the version ledger and the prune go through
+    ``hadoop_fs``, so ``root`` may be any path or URI Spark itself can
+    write (plain, file://, hdfs://, s3a://); and the keep-two prune
     gives an external read_latest_version caller one-batch grace — a
     reader racing a live stream should collect promptly or retry on a
     pruned-version read failure."""
-    import os
-    import shutil
-
-    os.makedirs(root, exist_ok=True)
-    prior = [v for v in _committed_versions(root) if v < batch_id]
+    prior = [v for v in _committed_versions(spark, root) if v < batch_id]
     if prior:
         old = spark.read.parquet(f"{root}/v={prior[-1]}")
         merged = old.join(batch, keys, "left_anti").unionByName(batch)
@@ -213,32 +212,33 @@ def _versioned_merge_write(spark: SparkSession, root: str, batch_id: int,
         merged = batch
     merged.write.mode("overwrite").parquet(f"{root}/v={batch_id}")
     for v in prior[:-1]:  # keep the previous version as the fallback
-        shutil.rmtree(f"{root}/v={v}", ignore_errors=True)
+        fs, path = hadoop_fs(spark, f"{root}/v={v}")
+        fs.delete(path, True)
 
 
-def _committed_versions(root: str) -> list[int]:
+def _committed_versions(spark: SparkSession, root: str) -> list[int]:
     """Version ids under ``root`` whose write COMMITTED (_SUCCESS
     marker present) — a torn v=N from a mid-write crash must be
     invisible to readers and to the next merge, or the versioning
     scheme protects nothing."""
-    import os
-
-    if not os.path.isdir(root):
+    fs, path = hadoop_fs(spark, root)
+    if not fs.exists(path):
         # a reader before any stream run must reach the callers'
-        # documented 'no committed versions' ValueError, not
-        # FileNotFoundError from the listing
+        # documented 'no committed versions' ValueError, not a
+        # FileNotFoundException from the listing
         return []
     out = []
-    for d in os.listdir(root):
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit() \
-                and os.path.exists(f"{root}/{d}/_SUCCESS"):
-            out.append(int(d.split("=", 1)[1]))
+    for st in fs.listStatus(path):
+        name = st.getPath().getName()
+        if name.startswith("v=") and name[2:].isdigit() \
+                and fs.exists(st.getPath().suffix("/_SUCCESS")):
+            out.append(int(name[2:]))
     return sorted(out)
 
 
 def read_latest_version(spark: SparkSession, root: str) -> DataFrame:
     """Newest COMMITTED version of a versioned state table."""
-    versions = _committed_versions(root)
+    versions = _committed_versions(spark, root)
     if not versions:
         raise ValueError(f"no committed versions under {root}")
     return spark.read.parquet(f"{root}/v={versions[-1]}")
@@ -298,22 +298,14 @@ def streaming_anomalies(spark: SparkSession, events_dir: str,
             F.expr("unix_timestamp(w.start) div 3600").alias("hour_idx"),
             F.col("n"),
         )
-        _versioned_merge_write(spark, hourly_root, batch_id, changed,
-                               ["hour_idx"])
+        _versioned_merge_write(spark, hourly_root, ["hour_idx"], changed,
+                               batch_id)
         # flags from the just-committed version (tiny table; reading it
         # back avoids holding a cache hostage to the write's success)
         anomaly_flags(read_latest_version(spark, hourly_root)) \
             .write.mode("overwrite").parquet(output_dir)
 
-    (
-        stream.writeStream
-        .outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", stream_ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream, stream_ckpt_dir, upsert, mode="update")
 
 
 def streaming_cms(spark: SparkSession, docs_dir: str,
@@ -342,8 +334,9 @@ def streaming_cms(spark: SparkSession, docs_dir: str,
         .groupBy(F.col("h.d").alias("d"), F.col("h.c").alias("c"))
         .agg(F.count("*").alias("n"))
     )
-    _run_update_sketch(spark, sketch, output_dir, stream_ckpt_dir,
-                       ["d", "c"])
+    run_available_now(sketch, stream_ckpt_dir, functools.partial(
+        _versioned_merge_write, spark, f"{output_dir}/v", ["d", "c"]),
+        mode="update")
 
 
 # the testdata documents-table schema (one home: the streaming sketch
@@ -354,28 +347,6 @@ DOCS_TABLE_SCHEMA = ("doc_id long, text string, lang string, "
 
 def _docs_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
     return spark.readStream.schema(DOCS_TABLE_SCHEMA).parquet(docs_dir)
-
-
-def _run_update_sketch(spark: SparkSession, sketch: DataFrame,
-                       output_dir: str, stream_ckpt_dir: str,
-                       keys: list[str]) -> None:
-    """Shared scaffolding for mergeable-sketch maintainers: update-mode
-    aggregation (emits the CUMULATIVE counter for every cell changed by
-    the batch) into the versioned merge layer, which keeps unchanged
-    cells and the torn-overwrite protection."""
-    def write_sketch(batch, batch_id: int) -> None:
-        _versioned_merge_write(spark, f"{output_dir}/v", batch_id,
-                               batch, keys)
-
-    (
-        sketch.writeStream
-        .outputMode("update")
-        .foreachBatch(write_sketch)
-        .option("checkpointLocation", stream_ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def read_streaming_cms(spark: SparkSession, output_dir: str):
@@ -405,8 +376,9 @@ def streaming_quantile_hist(spark: SparkSession, docs_dir: str,
 
     hist = (qsketch_buckets(_docs_stream(spark, docs_dir))
             .groupBy("source", "bucket").agg(F.count("*").alias("cnt")))
-    _run_update_sketch(spark, hist, output_dir, stream_ckpt_dir,
-                       ["source", "bucket"])
+    run_available_now(hist, stream_ckpt_dir, functools.partial(
+        _versioned_merge_write, spark, f"{output_dir}/v",
+        ["source", "bucket"]), mode="update")
 
 
 def read_streaming_quantiles(spark: SparkSession, output_dir: str):

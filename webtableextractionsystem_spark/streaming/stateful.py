@@ -26,7 +26,6 @@ here.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -35,6 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schemas import DOCUMENTS
+from .incremental import (
+    batch_dirs,
+    events_stream,
+    hadoop_fs,
+    run_available_now,
+)
 
 OUTPUT_SCHEMA = "fp string, doc_id string"
 # long, not int: the docstring sizes state for a forever-kept corpus,
@@ -43,15 +48,20 @@ OUTPUT_SCHEMA = "fp string, doc_id string"
 STATE_SCHEMA = "n_seen long"
 
 
+def _sorted_doc_ids(pdfs: Iterator[pd.DataFrame]) -> list:
+    """Every doc_id of a state group's microbatch rows, ascending — the
+    deterministic arrival order of the state kernels. ALL Arrow chunks
+    are drained first: a group can span chunk boundaries, and deciding
+    on the first chunk alone would make which document survives or
+    owns a bucket depend on arrow batch sizing / scan order."""
+    return sorted(d for pdf in pdfs for d in pdf["doc_id"])
+
+
 def _dedup_fn(key: Tuple[str], pdfs: Iterator[pd.DataFrame],
               state: GroupState) -> Iterator[pd.DataFrame]:
     (fp,) = key
     n_seen = state.get[0] if state.exists else 0
-    # drain ALL Arrow chunks before picking the survivor (same rule as
-    # _neardup_fn): a group can span chunk boundaries, and taking the
-    # first chunk's minimum would make which duplicate survives depend
-    # on arrow batch sizing / scan order
-    doc_ids = sorted(pdf_doc for pdf in pdfs for pdf_doc in pdf["doc_id"])
+    doc_ids = _sorted_doc_ids(pdfs)
     emit = [(fp, doc_ids[0])] if n_seen == 0 and doc_ids else []
     state.update((n_seen + len(doc_ids),))
     if emit:
@@ -98,16 +108,7 @@ def streaming_dedup(spark: SparkSession, input_dir: str, output_dir: str,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    (
-        dedup.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", stream_ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(dedup, stream_ckpt_dir, output_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -134,12 +135,7 @@ def _neardup_fn(key: Tuple[int, str], pdfs: Iterator[pd.DataFrame],
                 state: GroupState) -> Iterator[pd.DataFrame]:
     band, band_key = key
     owner = state.get[0] if state.exists else None
-    # drain ALL Arrow chunks before picking the owner: a group can span
-    # chunk boundaries, and taking the first chunk's minimum would make
-    # owner assignment depend on arrow batch sizing / scan order. Within
-    # one microbatch the deterministic "first arrival" is min(doc_id).
-    doc_ids = sorted(
-        int(d) for pdf in pdfs for d in pdf["doc_id"])
+    doc_ids = [int(d) for d in _sorted_doc_ids(pdfs)]
     if owner is None and doc_ids:
         owner = doc_ids[0]
     state.update((owner,))
@@ -171,16 +167,7 @@ def streaming_neardup(spark: SparkSession, input_dir: str, output_dir: str,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    (
-        flagged.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", stream_ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(flagged, stream_ckpt_dir, output_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -215,14 +202,13 @@ def _members_fn(key: Tuple[int, str], pdfs: Iterator[pd.DataFrame],
     member for each new arrival, then append the arrival. Every emission
     for a pair happens in the later doc's microbatch, so a per-batch
     distinct dedups multi-band collisions. Within one microbatch the
-    deterministic arrival order is ascending doc_id (same convention as
-    _neardup_fn). State growth: one long per member per bucket — a
-    degenerate band key shared corpus-wide concentrates its members in
-    one key's state, the same rows a batch self-join would materialize
-    for that key."""
+    arrival order is ``_sorted_doc_ids``. State growth: one long per
+    member per bucket — a degenerate band key shared corpus-wide
+    concentrates its members in one key's state, the same rows a batch
+    self-join would materialize for that key."""
     members = list(state.get[0]) if state.exists else []
     seen = set(members)
-    new_ids = sorted({int(d) for pdf in pdfs for d in pdf["doc_id"]})
+    new_ids = sorted({int(d) for d in _sorted_doc_ids(pdfs)})
     emit = []
     for d in new_ids:
         if d in seen:
@@ -275,9 +261,8 @@ def streaming_neardup_verified(spark: SparkSession, input_dir: str,
     equivalence the restart-survival test pins.
 
     Exactly-once: verified pairs and per-batch metrics for batch B go to
-    ``batch=B`` partitions with overwrite (stage writes likewise), so a
-    microbatch replay after a crash rewrites identical rows instead of
-    double-appending; the pair state store rolls back with the streaming
+    ``batch=B`` partitions with overwrite (``batch_dirs``; stage writes
+    likewise), and the pair state store rolls back with the streaming
     checkpoint. Per-batch metrics (north-rule lineage discipline) land
     in ``state_dir/metrics/batch=<id>`` recording n_pairs, n_cand_docs,
     n_state_rows_fetched, n_dbuckets_read — fetched == cand_docs is the
@@ -314,16 +299,9 @@ def streaming_neardup_verified(spark: SparkSession, input_dir: str,
             .parquet(f"{shingle_root}/batch={batch_id}")
         )
 
-    (
-        spark.readStream.schema("doc_id long, text string")
+    texts = spark.readStream.schema("doc_id long, text string") \
         .parquet(input_dir)
-        .writeStream
-        .foreachBatch(stage_batch)
-        .option("checkpointLocation", f"{stream_ckpt_dir}/stage")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(texts, f"{stream_ckpt_dir}/stage", stage_batch)
 
     def verify_batch(pairs_batch, batch_id: int) -> None:
         # pairs stay a DataFrame end-to-end — a degenerate shared band
@@ -367,14 +345,12 @@ def streaming_neardup_verified(spark: SparkSession, input_dir: str,
             # the SAME verify expression as the batch pipeline (shared
             # helper — equivalence by construction)
             verified = jaccard_verified(cand, sh)
-        verified.write.mode("overwrite").parquet(
-            f"{output_dir}/batch={batch_id}")
-        spark.createDataFrame(
+        batch_dirs(output_dir)(verified, batch_id)
+        batch_dirs(metrics_root)(spark.createDataFrame(
             [(n_pairs, n_cand, n_fetched, n_dbuckets)],
             "n_pairs long, n_cand_docs long, n_state_rows_fetched long, "
             "n_dbuckets_read long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{metrics_root}/batch={batch_id}")
+        ).coalesce(1), batch_id)
         cand.unpersist()
         if n_pairs:
             docs.unpersist()
@@ -386,17 +362,9 @@ def streaming_neardup_verified(spark: SparkSession, input_dir: str,
     # construction rather than by racing two input_dir snapshots.
     # An empty input_dir stages nothing, so make sure the root exists —
     # a first call over no data must be a clean no-op, not a
-    # path-does-not-exist failure at stream start. os.makedirs only
-    # works for driver-local paths; for URI-schemed state dirs
-    # (hdfs://, s3a://) go through the Hadoop FileSystem so the no-op
-    # first call works on any supported filesystem.
-    if "://" in shingle_root:
-        jvm = spark._jvm
-        jsc = spark._jsc
-        path = jvm.org.apache.hadoop.fs.Path(shingle_root)
-        path.getFileSystem(jsc.hadoopConfiguration()).mkdirs(path)
-    else:
-        os.makedirs(shingle_root, exist_ok=True)
+    # path-does-not-exist failure at stream start.
+    fs, path = hadoop_fs(spark, shingle_root)
+    fs.mkdirs(path)
     stream = spark.readStream.schema(
         "doc_id long, sh array<string>").parquet(shingle_root)
     banded = banded_keys(row_minhash(stream, shingles=F.col("sh")))
@@ -407,14 +375,7 @@ def streaming_neardup_verified(spark: SparkSession, input_dir: str,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    (
-        pairs.writeStream
-        .foreachBatch(verify_batch)
-        .option("checkpointLocation", f"{stream_ckpt_dir}/pairs")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(pairs, f"{stream_ckpt_dir}/pairs", verify_batch)
 
 
 # ---------------------------------------------------------------------------
@@ -549,8 +510,7 @@ def streaming_sessionize(spark: SparkSession, events_dir: str,
     cannot be retracted.
 
     Exactly-once: each microbatch's closed sessions land in a
-    ``batch=<id>`` partition with overwrite, so crash-replay rewrites
-    identical rows (cf. streaming_neardup_verified).
+    ``batch=<id>`` partition with overwrite (``batch_dirs``).
 
     Scale: state is (4 longs) x users, hash-partitioned by user_id in
     the state store; per-batch work is one shuffle of the batch's
@@ -564,8 +524,6 @@ def streaming_sessionize(spark: SparkSession, events_dir: str,
     otherwise identical)."""
     import functools
 
-    from .incremental import events_stream
-
     stream = (
         events_stream(spark, events_dir)
         .withWatermark("ts", watermark)
@@ -578,16 +536,4 @@ def streaming_sessionize(spark: SparkSession, events_dir: str,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-    def write_batch(batch, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            f"{output_dir}/batch={batch_id}")
-
-    (
-        sessions.writeStream
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", stream_ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(sessions, stream_ckpt_dir, batch_dirs(output_dir))
