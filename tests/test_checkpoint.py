@@ -1,6 +1,8 @@
 """Checkpoint/resume semantics (SURVEY.md §3.4): idempotent re-run, resume
 after partial completion, per-bucket lineage metrics."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,19 +19,24 @@ def docs(spark):
     return gen_documents_df(spark, N_DOCS, partitions=4)
 
 
-def test_run_then_idempotent_rerun(spark, docs, tmp_path):
-    runner = CheckpointRunner(spark, str(tmp_path), num_buckets=8)
-    m1 = runner.run(docs)
-    assert m1["docs"] == N_DOCS
-    assert m1["buckets"] == 8
-    total1 = runner.extracted().count()
-    spans1 = runner.extracted().agg(F.sum("n_spans")).first()[0]
+def test_run_then_idempotent_rerun(spark, docs, tmp_path, monkeypatch):
+    """Plain and file:// base dirs alike: the warm re-run sees the
+    checkpoint, and no sidecar leaks into a relative file: directory."""
+    monkeypatch.chdir(tmp_path)
+    for base_dir in (str(tmp_path / "plain"), (tmp_path / "uri").as_uri()):
+        runner = CheckpointRunner(spark, base_dir, num_buckets=8)
+        m1 = runner.run(docs)
+        assert m1["docs"] == N_DOCS
+        assert m1["buckets"] == 8
+        total1 = runner.extracted().count()
+        spans1 = runner.extracted().agg(F.sum("n_spans")).first()[0]
 
-    # warm re-run: nothing pending -> no new docs, output unchanged
-    m2 = runner.run(docs)
-    assert m2["docs"] == 0
-    assert runner.extracted().count() == total1
-    assert runner.extracted().agg(F.sum("n_spans")).first()[0] == spans1
+        # warm re-run: nothing pending -> no new docs, output unchanged
+        m2 = runner.run(docs)
+        assert m2["docs"] == 0
+        assert runner.extracted().count() == total1
+        assert runner.extracted().agg(F.sum("n_spans")).first()[0] == spans1
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("file:")]
 
 
 def test_resume_after_partial_completion(spark, docs, tmp_path):
@@ -89,15 +96,18 @@ def test_checkpoint_schema_and_lineage(spark, docs, tmp_path):
 
 def test_pre_metadata_checkpoint_refuses_resume(spark, docs, tmp_path):
     """A checkpoint dir that predates the _NUM_BUCKETS sidecar must not be
-    silently backfilled with the caller's value (code-review pin)."""
-    import os
-
+    silently backfilled with the caller's value (code-review pin); a
+    hand-written sidecar then resumes it."""
     runner = CheckpointRunner(spark, str(tmp_path), num_buckets=8)
     runner.run(docs)
     os.remove(runner.meta_path)  # simulate the pre-metadata layout
     again = CheckpointRunner(spark, str(tmp_path), num_buckets=8)
     with pytest.raises(ValueError, match="no recorded num_buckets"):
         again.run(docs)
+    # the operator writes the sidecar by hand, as the refusal asks
+    with open(runner.meta_path, "w") as f:
+        f.write("8\n")
+    assert again.run(docs)["docs"] == 0
 
 
 def _next_job_id(spark) -> int:

@@ -167,8 +167,9 @@ def test_docx_span_merges_roundtrip():
 
 
 def test_docx_catalyst_matches_kernel(spark):
-    """The pure-Catalyst tables_docx must emit byte-identical XML to the
-    kernel render for real pipeline output."""
+    """tables_docx's cells -> (contents, spans) adapter must hand the
+    kernel renderer each table's contents and anchor extents: its XML
+    equals a direct render_table_docx call for real pipeline output."""
     from webtableextractionsystem_spark.datagen import gen_documents_df
     from webtableextractionsystem_spark.io_sinks import tables_docx
     from webtableextractionsystem_spark.kernel.html_tables import (
@@ -192,45 +193,56 @@ def test_docx_catalyst_matches_kernel(spark):
         assert got[(r["doc_id"], r["table_idx"])] == want
 
 
+_EXTRACTED_KG = (
+    "doc_id string, "
+    "entities array<struct<name:string,url:string,"
+    "props:map<string,string>>>, "
+    "triples array<struct<subj_name:string,subj_url:string,rel:string,"
+    "obj_name:string,obj_url:string>>")
+
+
 def test_er_graph_json_dedup_and_link_remap(spark):
     """S15 graph semantics: node dedup url-first then name, link endpoint
     names remapped through the url->name dict (writeER2Chart,
-    tableExtractor.py:566-608)."""
+    tableExtractor.py:566-608). NULL props act as {}, a NULL url as "",
+    and a document with neither entities nor triples emits no row."""
     import json
 
     from webtableextractionsystem_spark.io_sinks import er_graph_json
 
-    ents = spark.createDataFrame(
+    rows = spark.createDataFrame(
         [
-            ("d1", 0, "甲某", "http://a/1", {"k": "v"}),
-            ("d1", 1, "甲某别名", "http://a/1", {}),   # same url -> skipped
-            ("d1", 2, "甲某", "http://b/2", {}),       # same name -> skipped
-            ("d1", 3, "乙某", "", {"p": "q"}),
+            ("d1",
+             [("甲某", "http://a/1", {"k": "v"}),
+              ("甲某别名", "http://a/1", {}),   # same url -> skipped
+              ("甲某", "http://b/2", {}),       # same name -> skipped
+              ("乙某", "", {"p": "q"}),
+              ("丙某", "http://c/3", None)],    # NULL props -> empty value
+             [("主人公", "http://a/1", "兄弟", "乙某", ""),
+              ("丙某", None, "朋友", "乙某", "")]),  # NULL url -> no remap
+            ("d2", [], []),
+            ("d3", None, None),
         ],
-        "doc_id string, seq int, name string, url string, "
-        "props map<string,string>",
+        _EXTRACTED_KG,
     )
-    trs = spark.createDataFrame(
-        [("d1", 0, "主人公", "http://a/1", "兄弟", "乙某", "")],
-        "doc_id string, seq int, subj_name string, subj_url string, "
-        "rel string, obj_name string, obj_url string",
-    )
-    out = er_graph_json(ents, trs).collect()
+    out = er_graph_json(rows).collect()
     assert len(out) == 1
     g = json.loads(out[0]["graph"])
-    assert [n["name"] for n in g["nodes"]] == ["甲某", "乙某"]
+    assert [n["name"] for n in g["nodes"]] == ["甲某", "乙某", "丙某"]
     assert g["nodes"][0]["value"] == ["k:v\n"]
+    assert g["nodes"][2]["value"] == [""]
     # subj url http://a/1 belongs to 甲某 -> link source remapped
-    assert g["links"] == [{"source": "甲某", "target": "乙某",
-                           "value": "兄弟"}]
+    assert g["links"] == [
+        {"source": "甲某", "target": "乙某", "value": "兄弟"},
+        {"source": "丙某", "target": "乙某", "value": "朋友"},
+    ]
 
 
 def test_er_graph_json_mega_doc_bound(spark):
-    """Pin the per-doc Python group's worst case: an H11-scale mega-doc
-    (thousands of mentions in ONE doc_id group) must build a correct
-    graph — first-wins node dedup across the whole run, every link
-    remapped — in one applyInPandas group without distress. This is the
-    documented per-group size bound of er_graph_json."""
+    """Pin the per-document worst case: an H11-scale mega-doc (thousands
+    of mentions in ONE combined row) must build a correct graph —
+    first-wins node dedup across the whole run, every link remapped —
+    in a single per-row call."""
     import json
 
     from pyspark.sql import functions as F
@@ -238,25 +250,28 @@ def test_er_graph_json_mega_doc_bound(spark):
     from webtableextractionsystem_spark.io_sinks import er_graph_json
 
     n = 4000
+
+    def seq(k, fn):
+        return F.transform(F.sequence(F.lit(0), F.lit(k - 1)), fn)
+
     # 4000 entity mentions over 50 distinct urls (heavy dedup), plus
     # 2000 links whose endpoints all need remapping
-    ents = spark.range(n).select(
+    rows = spark.range(1).select(
         F.lit("mega").alias("doc_id"),
-        F.col("id").cast("int").alias("seq"),
-        F.concat(F.lit("名"), (F.col("id") % 50)).alias("name"),
-        F.concat(F.lit("http://u/"), (F.col("id") % 50)).alias("url"),
-        F.create_map(F.lit("k"), F.lit("v")).alias("props"),
+        seq(n, lambda i: F.struct(
+            F.concat(F.lit("名"), i % 50).alias("name"),
+            F.concat(F.lit("http://u/"), i % 50).alias("url"),
+            F.create_map(F.lit("k"), F.lit("v")).alias("props"),
+        )).alias("entities"),
+        seq(n // 2, lambda i: F.struct(
+            F.concat(F.lit("别名"), i % 50).alias("subj_name"),
+            F.concat(F.lit("http://u/"), i % 50).alias("subj_url"),
+            F.lit("关系").alias("rel"),
+            F.concat(F.lit("名"), (i + 1) % 50).alias("obj_name"),
+            F.lit("").alias("obj_url"),
+        )).alias("triples"),
     )
-    trs = spark.range(n // 2).select(
-        F.lit("mega").alias("doc_id"),
-        F.col("id").cast("int").alias("seq"),
-        F.concat(F.lit("别名"), (F.col("id") % 50)).alias("subj_name"),
-        F.concat(F.lit("http://u/"), (F.col("id") % 50)).alias("subj_url"),
-        F.lit("关系").alias("rel"),
-        F.concat(F.lit("名"), ((F.col("id") + 1) % 50)).alias("obj_name"),
-        F.lit("").alias("obj_url"),
-    )
-    out = er_graph_json(ents, trs).collect()
+    out = er_graph_json(rows).collect()
     assert len(out) == 1
     g = json.loads(out[0]["graph"])
     # 50 distinct urls -> exactly 50 nodes survive first-wins dedup
@@ -264,6 +279,38 @@ def test_er_graph_json_mega_doc_bound(spark):
     assert len(g["links"]) == n // 2
     # every link source remapped from 别名X to the url owner 名X
     assert all(lk["source"].startswith("名") for lk in g["links"])
+
+
+def test_derived_sinks_plan_is_one_arrow_map(spark, tmp_path):
+    """Both derived sinks are per-row maps over the stored extraction:
+    MapInArrow is their only Python node, and the relation graph
+    neither shuffles nor regroups."""
+    import re
+
+    from webtableextractionsystem_spark.datagen import gen_documents_df
+    from webtableextractionsystem_spark.io_sinks import (
+        er_graph_json,
+        tables_docx,
+    )
+    from webtableextractionsystem_spark.operators.extraction import (
+        extract_all,
+        tables_view,
+    )
+
+    python_node = re.compile(
+        r"\b(\w*(?:MapIn|EvalPython|InPandas|InArrow)\w*)\b")
+    path = str(tmp_path / "extracted")
+    extract_all(gen_documents_df(spark, 20), 4).write.parquet(path)
+    extracted = spark.read.parquet(path)
+    for name, df in (("er_graph_json", er_graph_json(extracted)),
+                     ("tables_docx", tables_docx(tables_view(extracted)))):
+        assert df.count() > 0, name
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert python_node.findall(final) == ["MapInArrow"], (name, final)
+        if name == "er_graph_json":
+            assert "Exchange" not in final
 
 
 def test_seed_frontier_scan(spark, tmp_path):

@@ -29,12 +29,14 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from contextlib import closing
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.extraction import bucket_metrics, extract_all, with_bucket
 from .schemas import CHECKPOINT
+from .session import hadoop_fs
 
 STAGE_EXTRACT = "extract"
 
@@ -53,17 +55,20 @@ class CheckpointRunner:
         """Fail fast when resuming with a different num_buckets: bucket ids
         are pmod(xxhash64(doc_id), num_buckets), so a mismatch silently
         misaligns completed bucket ids with the new assignment — documents
-        would be skipped while the run reports success."""
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as f:
-                recorded = int(f.read().strip())
+        would be skipped while the run reports success. The sidecar goes
+        through ``hadoop_fs``, as Spark's own reads and writes of the
+        base_dir do, so a URI base_dir keeps it beside the data."""
+        fs, meta = hadoop_fs(self.spark, self.meta_path)
+        if fs.exists(meta):
+            with closing(fs.open(meta)) as stream:
+                recorded = int(bytes(stream.readAllBytes()).decode().strip())
             if recorded != self.num_buckets:
                 raise ValueError(
                     f"checkpoint at {self.base_dir} was written with "
                     f"num_buckets={recorded}; refusing to resume with "
                     f"num_buckets={self.num_buckets}"
                 )
-        elif os.path.isdir(self.ckpt_dir):
+        elif self._has_checkpoint():
             # a checkpoint exists but predates the meta file: backfilling
             # the CURRENT num_buckets would legitimize exactly the
             # misalignment this guard exists to prevent — refuse and make
@@ -75,9 +80,20 @@ class CheckpointRunner:
                 f"resuming"
             )
         else:
-            os.makedirs(self.base_dir, exist_ok=True)
-            with open(self.meta_path, "w") as f:
-                f.write(str(self.num_buckets))
+            # no checksum file: the sidecar is operator-editable (see the
+            # refusal above), and a stale local .crc would fail the read
+            # of a hand edit. An uncached FileSystem, so switching the
+            # checksum off touches no other user of the shared one.
+            with closing(fs.newInstance(
+                    meta.toUri(),
+                    self.spark._jsc.hadoopConfiguration())) as raw:
+                raw.setWriteChecksum(False)
+                with closing(raw.create(meta, True)) as out:
+                    out.write(str(self.num_buckets).encode())
+
+    def _has_checkpoint(self) -> bool:
+        fs, path = hadoop_fs(self.spark, self.ckpt_dir)
+        return fs.exists(path)
 
     # -- run ----------------------------------------------------------------
 
@@ -88,7 +104,7 @@ class CheckpointRunner:
         silently treated as "nothing done" (which would trigger an
         unexplained full recompute of a 100TB input). Cluster: swap for a
         catalog table / Iceberg existence probe."""
-        if not os.path.isdir(self.ckpt_dir):
+        if not self._has_checkpoint():
             return []
         return [r.bucket for r in (
             self.spark.read.parquet(self.ckpt_dir)

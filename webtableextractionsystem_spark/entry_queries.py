@@ -177,9 +177,8 @@ def x_er_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S15 relation-graph JSON sink over the extraction corpus, digested."""
     from .io_sinks import er_graph_json
 
-    graphs = er_graph_json(
-        entities_view(_extracted(spark)), triples_view(_extracted(spark)))
-    return _ordered_digest(graphs, ["doc_id"], "graph")
+    return _ordered_digest(er_graph_json(_extracted(spark)), ["doc_id"],
+                           "graph")
 
 
 def x_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""File sources/sinks (S10-S12, S16-S17 as table appends).
+"""File sources/sinks (S10-S13, S15, S16-S17 as table appends).
 
 The reference persists per-page pickles, JSON lexicons/outputs, and a
 flat triple CSV (/root/reference/src/IO/fileInteraction/FileIO.py). The
@@ -13,12 +13,23 @@ interchange formats users of the reference expect:
 * ``write_bucketed_table`` — hash-bucketed managed tables for
   shuffle-free joins; plain parquet partitioned by bucket is the pickle
   replacement and needs no helper.
+* ``tables_docx`` (S13) and ``er_graph_json`` (S15) — the derived
+  per-table Word XML and per-document relation graph. Each is a per-row
+  ``operators.extraction.arrow_map`` over one Spark-free function
+  (the kernel's ``render_table_docx``, and ``er_graph``): no shuffle,
+  no group, no pandas.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .kernel.html_tables import render_table_docx
+from .operators.extraction import arrow_map, per_batch
 
 
 def write_triples_csv(triples: DataFrame, path: str,
@@ -112,181 +123,79 @@ def write_bucketed_table(df: DataFrame, table: str, key: str,
 
 
 # ---------------------------------------------------------------------------
-# S15: ECharts relation-graph sink — data layer
+# S15 / S13: derived sinks — per-row Arrow maps over Spark-free functions
 # ---------------------------------------------------------------------------
 
-def er_graph_json(entities: DataFrame, triples: DataFrame) -> DataFrame:
-    """Per-document relation-graph JSON: the nodes/links data the
+def er_graph(entities: list, triples: list) -> str:
+    """One document's relation-graph JSON: the nodes/links data the
     reference feeds pyecharts (writeER2Chart,
     /root/reference/src/tableExtract/tableExtractor.py:540-643). The
     HTML/JS shell is a rendering detail; this emits the same graph —
     node dedup by url-then-name (first-wins, sequential in extraction
     order, :566-582), node value = "k:v" lines (:558-562), link
     endpoint names remapped through the url->name dict (:600-608).
-    One JSON row per doc_id.
-
-    Scale bound (same discipline as fusion.py): the sequential
-    url-then-name dedup is arrival-order dependent, so it must run
-    per-doc — one applyInPandas group per doc_id. The group size is
-    bounded by a single PAGE's entity/triple count, NOT the corpus: the
-    worst generated case is the H11 mega-doc (hundreds of tables ->
-    low-thousands of mentions per doc, pinned by the mega-doc graph
-    test), and a page bigger than that fails the reference too (its
-    dedup is the same per-page loop). groupBy(doc_id) is the minimal
-    shuffle key of the semantic; a mega-doc group is one in-memory
-    pandas frame of that bounded size, and AQE spreads residual
-    group-size skew across executors."""
-    import json
-
-    import pandas as pd
-
-    def build_full(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id = pdf["doc_id"].iloc[0]
-        url2name: dict[str, str] = {}
-        names = set()
-        nodes = []
-        for r in pdf[pdf["kind"] == "e"].sort_values("seq").itertuples():
-            url = r.a_url or ""
-            if url.strip() and url in url2name:
-                continue
-            if r.a_name in names:
-                continue
-            names.add(r.a_name)
-            props = dict(r.props) if r.props is not None else {}
-            value = "".join(f"{k}:{v}\n" for k, v in props.items())
-            nodes.append({"name": r.a_name, "symbol_size": 30,
-                          "value": [value]})
-            url2name[url] = r.a_name
-        links = []
-        for r in pdf[pdf["kind"] == "t"].sort_values("seq").itertuples():
-            n1, u1 = str(r.a_name), str(r.a_url or "")
-            n2, u2 = str(r.b_name), str(r.b_url or "")
-            if u1.strip() and u1 in url2name:
-                n1 = url2name[u1]
-            if u2.strip() and u2 in url2name:
-                n2 = url2name[u2]
-            links.append({"source": n1, "target": n2, "value": r.rel})
-            url2name[u1] = n1
-            url2name[u2] = n2
-        return pd.DataFrame({"doc_id": [doc_id], "graph": [json.dumps(
-            {"nodes": nodes, "links": links}, ensure_ascii=False)]})
-
-    ents2 = entities.select(
-        "doc_id", "seq", F.lit("e").alias("kind"),
-        F.col("name").alias("a_name"), F.col("url").alias("a_url"),
-        "props",
-        F.lit(None).cast("string").alias("b_name"),
-        F.lit(None).cast("string").alias("b_url"),
-        F.lit(None).cast("string").alias("rel"),
-    )
-    trs2 = triples.select(
-        "doc_id",
-        (F.col("seq") + 1_000_000).alias("seq"),  # links after nodes
-        F.lit("t").alias("kind"),
-        F.col("subj_name").alias("a_name"), F.col("subj_url").alias("a_url"),
-        F.create_map().cast("map<string,string>").alias("props"),
-        F.col("obj_name").alias("b_name"), F.col("obj_url").alias("b_url"),
-        "rel",
-    )
-    return (
-        ents2.unionByName(trs2)
-        .groupBy("doc_id")
-        .applyInPandas(build_full, schema="doc_id string, graph string")
-    )
+    ``entities``/``triples`` are the combined row's ENTITY/TRIPLE
+    dicts in extraction order; all nodes are built before any link."""
+    url2name: dict[str, str] = {}
+    names = set()
+    nodes = []
+    for e in entities:
+        name, url = e["name"], e["url"] or ""
+        if url.strip() and url in url2name:
+            continue
+        if name in names:
+            continue
+        names.add(name)
+        props = dict(e["props"] or {})
+        value = "".join(f"{k}:{v}\n" for k, v in props.items())
+        nodes.append({"name": name, "symbol_size": 30, "value": [value]})
+        url2name[url] = name
+    links = []
+    for t in triples:
+        n1, u1 = str(t["subj_name"]), str(t["subj_url"] or "")
+        n2, u2 = str(t["obj_name"]), str(t["obj_url"] or "")
+        if u1.strip() and u1 in url2name:
+            n1 = url2name[u1]
+        if u2.strip() and u2 in url2name:
+            n2 = url2name[u2]
+        links.append({"source": n1, "target": n2, "value": t["rel"]})
+        url2name[u1] = n1
+        url2name[u2] = n2
+    return json.dumps({"nodes": nodes, "links": links}, ensure_ascii=False)
 
 
-# ---------------------------------------------------------------------------
-# S13: Word-document table sink — data layer (pure Catalyst)
-# ---------------------------------------------------------------------------
+def er_graph_json(extracted: DataFrame) -> DataFrame:
+    """(doc_id, graph) — one relation-graph JSON row per document that
+    has an entity or a triple. The combined extraction row already holds
+    the document's entities and triples in extraction order, so each row
+    maps on its own through ``er_graph``: no shuffle, no regroup."""
+    def run(batch):
+        return [{"doc_id": r["doc_id"], "graph": er_graph(
+            r["entities"] or [], r["triples"] or [])}
+            for r in batch.to_pylist()]
+
+    rows = extracted.select("doc_id", "entities", "triples").where(
+        (F.size("entities") > 0) | (F.size("triples") > 0))
+    return arrow_map(rows, per_batch(run),
+                     T.StructType.fromDDL("doc_id string, graph string"))
+
 
 def tables_docx(tables: DataFrame) -> DataFrame:
-    """(doc_id, table_idx, docx) — each normalized table rendered as the
-    WordprocessingML the reference's writeTable2Doc produces through
-    python-docx (caption row merged full-width, then the grid with every
-    anchor cell's rowspan/colspan extent re-merged as <w:gridSpan> /
-    <w:vMerge>; table.py:629-640). Pure Catalyst string building over
-    the cells' anchor extents (normalize_grid leaves covered copies 1x1,
-    so a slot is covered iff some OTHER anchor's extent contains it);
-    kernel twin render_table_docx is the unit-test surface and the two
-    are asserted equal."""
-    def esc(col):
-        c = F.regexp_replace(col, "&", "&amp;")
-        c = F.regexp_replace(c, "<", "&lt;")
-        return F.regexp_replace(c, ">", "&gt;")
+    """(doc_id, table_idx, docx) — each normalized table rendered by the
+    kernel's ``render_table_docx`` as the WordprocessingML the
+    reference's writeTable2Doc produces through python-docx (table.py:
+    609-647): the cells' contents plus their (rowspan, colspan) anchor
+    extents, one table per row."""
+    def docx(r):
+        cells = r["cells"] or []
+        return render_table_docx(
+            r["caption"], [[c["content"] for c in row] for row in cells],
+            [[(c["rowspan"], c["colspan"]) for c in row] for row in cells])
 
-    def tcpr(gridspan, vmerge):
-        # vmerge: string column 'restart' / 'cont' / '' (none)
-        has = (gridspan > 1) | (vmerge != "")
-        return F.when(
-            has,
-            F.concat(
-                F.lit("<w:tcPr>"),
-                F.when(gridspan > 1,
-                       F.concat(F.lit('<w:gridSpan w:val="'),
-                                gridspan.cast("string"), F.lit('"/>')))
-                .otherwise(F.lit("")),
-                F.when(vmerge == "restart",
-                       F.lit('<w:vMerge w:val="restart"/>'))
-                .when(vmerge == "cont", F.lit("<w:vMerge/>"))
-                .otherwise(F.lit("")),
-                F.lit("</w:tcPr>"),
-            ),
-        ).otherwise(F.lit(""))
+    def run(batch):
+        return [{"doc_id": r["doc_id"], "table_idx": r["table_idx"],
+                 "docx": docx(r)} for r in batch.to_pylist()]
 
-    def tc(text_col, gridspan=None, vmerge=None):
-        gridspan = F.lit(1) if gridspan is None else gridspan
-        vmerge = F.lit("") if vmerge is None else vmerge
-        body = F.when(vmerge == "cont", F.lit("<w:p/>")).otherwise(
-            F.concat(F.lit("<w:p><w:r><w:t>"), esc(text_col),
-                     F.lit("</w:t></w:r></w:p>")))
-        return F.concat(F.lit("<w:tc>"), tcpr(gridspan, vmerge), body,
-                        F.lit("</w:tc>"))
-
-    def tr(cells_col):
-        return F.concat(F.lit("<w:tr>"), F.array_join(cells_col, ""),
-                        F.lit("</w:tr>"))
-
-    n_rows = F.size("cells")
-    n_cols = F.coalesce(F.size(F.element_at("cells", 1)), F.lit(0))
-    anchors = F.filter(
-        F.flatten(F.col("cells")),
-        lambda a: (a["rowspan"] > 1) | (a["colspan"] > 1))
-
-    def cell_xml(c):
-        cov = F.filter(
-            anchors,
-            lambda a: (a["abs_row"] <= c["abs_row"])
-            & (c["abs_row"] < a["abs_row"] + a["rowspan"])
-            & (a["abs_col"] <= c["abs_col"])
-            & (c["abs_col"] < a["abs_col"] + a["colspan"])
-            & ~((a["abs_row"] == c["abs_row"])
-                & (a["abs_col"] == c["abs_col"])),
-        )
-        a = F.element_at(cov, 1)
-        rs = F.least(c["rowspan"], n_rows - c["abs_row"])  # clamp stale
-        cs = F.greatest(F.least(c["colspan"], n_cols - c["abs_col"]),
-                        F.lit(1))
-        plain = tc(c["content"], cs,
-                   F.when(rs > 1, F.lit("restart")).otherwise(F.lit("")))
-        cont = tc(F.lit(""),
-                  F.least(a["colspan"], n_cols - a["abs_col"]),
-                  F.lit("cont"))
-        return (
-            F.when(F.size(cov) == 0, plain)
-            # horizontally covered on the anchor row, or interior of a
-            # 2-D extent: the tc is removed entirely
-            .when(a["abs_row"] == c["abs_row"], F.lit(""))
-            .when(a["abs_col"] == c["abs_col"], cont)
-            .otherwise(F.lit(""))
-        )
-
-    body = F.array_join(
-        F.transform("cells", lambda row: tr(F.transform(row, cell_xml))),
-        "",
-    )
-    caption_tc = tc(F.col("caption"),
-                    F.when(n_cols > 1, n_cols).otherwise(F.lit(1)))
-    docx = F.concat(
-        F.lit("<w:tbl>"), tr(F.array(caption_tc)), body, F.lit("</w:tbl>"),
-    )
-    return tables.select("doc_id", "table_idx", docx.alias("docx"))
+    rows = tables.select("doc_id", "table_idx", "caption", "cells")
+    return arrow_map(rows, per_batch(run), T.StructType.fromDDL(
+        "doc_id string, table_idx int, docx string"))

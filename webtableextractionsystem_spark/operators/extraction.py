@@ -20,8 +20,8 @@ Scale design (the 100 TB story):
   RecordBatch straight from the kernel's dicts: no pandas on either side.
 
 ``arrow_map`` is that boundary written once; every map-style Python stage
-of the package (extraction, fusion, datagen, the multimodal stages) runs
-through it.
+of the package (extraction, fusion, datagen, the multimodal stages and
+the io_sinks docx and relation-graph sinks) runs through it.
 """
 
 from __future__ import annotations

@@ -55,6 +55,16 @@ def package_zip(path: str | None = None) -> str:
     return path
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the session's Hadoop
+    configuration — the package's one driver-side filesystem access, so
+    state, checkpoint and output roots resolve exactly as Spark's
+    readers and writers resolve them: plain paths, ``file://`` and
+    cluster URIs (hdfs://, s3a://) alike."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def get_spark(app_name: str = "wtes-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:

@@ -12,8 +12,9 @@ discipline.
 
 Each streaming entry point reuses its batch twin's expression; the
 plumbing they share lives once in ``incremental.py``:
-``run_available_now`` (the package's only ``writeStream``),
-``batch_dirs`` (the replay-idempotent ``batch=<id>`` overwrite sink)
-and ``hadoop_fs`` (the only driver-side filesystem access, so output
-and state roots may be plain paths or any URI Spark can write).
+``run_available_now`` (the package's only ``writeStream``)
+and ``batch_dirs`` (the replay-idempotent ``batch=<id>`` overwrite
+sink). Driver-side filesystem calls go through ``session.hadoop_fs``,
+so output and state roots may be plain paths or any URI Spark can
+write.
 """

@@ -24,16 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators.extraction import extract_all
 from ..schemas import DOCUMENTS
-
-
-def hadoop_fs(spark: SparkSession, path: str):
-    """``(FileSystem, Path)`` for ``path`` through the session's Hadoop
-    configuration — the one driver-side filesystem access in
-    ``streaming/``, so state and output roots resolve exactly as Spark's
-    readers and writers resolve them: plain paths, ``file://`` and
-    cluster URIs (hdfs://, s3a://) alike."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+from ..session import hadoop_fs
 
 
 def run_available_now(stream: DataFrame, stream_ckpt_dir: str, sink,

@@ -34,12 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schemas import DOCUMENTS
-from .incremental import (
-    batch_dirs,
-    events_stream,
-    hadoop_fs,
-    run_available_now,
-)
+from ..session import hadoop_fs
+from .incremental import batch_dirs, events_stream, run_available_now
 
 OUTPUT_SCHEMA = "fp string, doc_id string"
 # long, not int: the docstring sizes state for a forever-kept corpus,
