@@ -21,12 +21,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def _bootstrap(spark: SparkSession) -> None:
     """Ship the package to executors when the driver didn't use
     session.get_spark (the driver harness builds its own session)."""
-    from webtableextractionsystem_spark.session import package_zip
+    from webtableextractionsystem_spark.session import ship_package
 
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added in this session
+    ship_package(spark)
     # timestamp-formatting oracles assume UTC; a harness-built session on
     # a non-UTC host would otherwise format event times in local time
     spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -482,8 +482,8 @@ def test_row_minhash_matches_aggregate_form(spark):
     agg = {r["doc_id"]: tuple(r[f"mh{s}"] for s in range(DD.N_SEEDS))
            for r in DD.minhash_signatures(spark, sf).collect()}
     row = {r["doc_id"]: tuple(r[f"mh{s}"] for s in range(DD.N_SEEDS))
-           for r in DD.row_minhash(
-               DD.load_documents(spark, sf)).select(
+           for r in DD.row_minhash(DD.tokenized(
+               DD.load_documents(spark, sf), "doc_id")).select(
                "doc_id", *[f"mh{s}" for s in range(DD.N_SEEDS)]).collect()}
     assert agg == row
 
@@ -2970,7 +2970,7 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path, monkeypatch):
 
     from webtableextractionsystem_spark.operators.textstats import (
         _cms_hash_structs,
-        _tokens,
+        tokenized,
     )
     from webtableextractionsystem_spark.streaming.incremental import (
         read_streaming_cms,
@@ -2984,8 +2984,8 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path, monkeypatch):
     wave2 = [(100 + i, f"beta delta tok{i % 5} beta beta", "en", "s", 0)
              for i in range(30)]
     batch = (
-        spark.createDataFrame(wave1 + wave2, SCHEMA)
-        .select(F.explode(_tokens()).alias("token"))
+        tokenized(spark.createDataFrame(wave1 + wave2, SCHEMA))
+        .select(F.explode("toks").alias("token"))
         .select(F.explode(_cms_hash_structs()).alias("h"))
         .groupBy(F.col("h.d").alias("d"), F.col("h.c").alias("c"))
         .agg(F.count("*").alias("n"))

@@ -1,5 +1,6 @@
-"""The shipped package zip, without Spark: a zip built from one tree is
-never reused for another tree, whatever the file mtimes."""
+"""The shipped package zip: a zip built from one tree is never reused
+for another tree, whatever the file mtimes, and a SparkContext ships
+it once."""
 
 import importlib.util
 import os
@@ -38,3 +39,19 @@ def test_package_zip_rebuilds_for_a_tree_with_older_files(tmp_path):
             got = zf.read("webtableextractionsystem_spark/__init__.py")
         with open(os.path.join(pkg, "__init__.py"), "rb") as f:
             assert got == f.read()
+
+
+def test_package_shipped_once_per_context(spark):
+    """get_spark on the live session and __spark_entry__._bootstrap
+    reuse the zip the context already ships instead of adding it
+    again."""
+    import __spark_entry__
+    from webtableextractionsystem_spark.session import get_spark
+
+    for _ in range(2):
+        assert get_spark(app_name="tests", cores=4,
+                         shuffle_partitions=8) is spark
+    __spark_entry__._bootstrap(spark)
+    shipped = [f for f in spark.sparkContext._python_includes
+               if f.startswith("wtes_spark_pkg-")]
+    assert len(shipped) == 1, shipped

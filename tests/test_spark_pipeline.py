@@ -749,7 +749,7 @@ def test_documents_text_nonnull_precondition(spark):
 
 def test_tokenizer_vertical_tab_cross_engine(spark):
     """Java's \\s includes vertical tab (\\x0B); RE2's (every DuckDB
-    oracle) does not — so _tokens() splits on the explicit class
+    oracle) does not — so tokenized() splits on the explicit class
     [ \\t\\n\\f\\r]+ instead of \\s+. This probe pins the agreement on
     the one character the two engines disagreed about: both must see
     'a\\x0Bb c' as TWO tokens, with 'a\\x0Bb' intact."""

@@ -6,8 +6,12 @@ defaultParallelism: the one-file testdata keeps its round-robin
 Exchange, a multi-file corpus of at least defaultParallelism files
 gets none, and the answers agree across the two layouts. The store
 owns every relation it hands out, so clear_session_caches() leaves no
-cached block and no staged table behind.
+cached block and no staged table behind. The token array
+(textstats.tokenized) is split once per documents scan and never
+inside a higher-order function's lambda.
 """
+
+import re
 
 import pytest
 
@@ -97,3 +101,61 @@ def test_clear_session_caches_releases_every_entry(spark):
     assert not _staged_tables(spark)
     # the next call rebuilds from scratch
     assert TS.bm25_topk(spark, SF).count() > 0
+
+
+# the document tokenizer as an optimized plan prints it
+_DOC_SPLIT = "split(trim(text#"
+
+
+def _split_sites(plan: str) -> list[bool]:
+    """For every document-tokenizer split in a plan string, whether it
+    sits inside a lambdafunction(...) argument."""
+    sites = []
+    for line in plan.splitlines():
+        stack = []
+        for m in re.finditer(r"(\w*)\(|\)", line):
+            if m.group(0) == ")":
+                if stack:
+                    stack.pop()
+                continue
+            if line.startswith(_DOC_SPLIT, m.start()):
+                sites.append("lambdafunction" in stack)
+            stack.append(m.group(1))
+    return sites
+
+
+def _doc_scans(plan: str) -> int:
+    """Scans that read the documents' text: logical relations, and the
+    file scans of cached plans printed inside an InMemoryRelation."""
+    return sum(1 for line in plan.splitlines()
+               if ("Relation [" in line or "FileScan parquet" in line)
+               and "text#" in line)
+
+
+def test_tokenizer_split_once_per_scan_never_in_lambda(spark, tmp_path):
+    """Every q_doc_* entry that tokenizes reads one materialized token
+    array: in its optimized plan the split of trim(text) appears at
+    most once per documents scan, and never inside a lambda (where an
+    interpreted higher-order function would re-run it per element)."""
+    from webtableextractionsystem_spark import entry_queries
+
+    sf_dir = str(tmp_path)
+    (TS.load_documents(spark, "/root/testdata/sf0.001").limit(60)
+     .write.parquet(f"{sf_dir}/documents.parquet"))
+    qs = entry_queries.queries()
+    tokenizing = []
+    try:
+        for name in sorted(n for n in qs if n.startswith("q_doc_")):
+            plan = qs[name](spark, sf_dir)._jdf.queryExecution() \
+                .optimizedPlan().toString()
+            sites = _split_sites(plan)
+            if not sites:
+                continue
+            tokenizing.append(name)
+            assert not any(sites), f"{name}: split inside a lambda\n{plan}"
+            assert len(sites) <= _doc_scans(plan), \
+                f"{name}: {len(sites)} splits over " \
+                f"{_doc_scans(plan)} scans\n{plan}"
+    finally:
+        _cache.clear_session_caches()
+    assert len(tokenizing) >= 30, tokenizing

@@ -50,7 +50,14 @@ def main() -> None:
     )
     from webtableextractionsystem_spark.session import get_spark
 
-    spark = get_spark(app_name="plan-audit", cores=8)
+    # one task at a time: AQE re-plans a join when the first of its
+    # input stages finishes, so with concurrent tasks the stage that
+    # wins the race picks the broadcast side, and the executed plans of
+    # the eagerly persisted relations printed below (PageRank's edges)
+    # changed between runs. Serial tasks finish stages in submission
+    # order; defaultParallelism, and so every plan's shape, stays 8.
+    spark = get_spark(app_name="plan-audit", cores=8,
+                      extra_conf={"spark.task.cpus": "8"})
     SF = "/root/testdata/sf0.01"
 
     sections = {

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._cache import session_peek, session_persisted, session_staged
-from .textstats import _tokens, load_documents, spread
+from .textstats import _md5_u32, _ngrams, load_documents, spread, tokenized
 
 SHINGLE_K = 3
 N_SEEDS = 8          # minhash permutations
@@ -43,27 +43,9 @@ BAND_ROWS = 2        # seeds per LSH band -> 4 bands
 JACCARD_MAX_ID = 200  # bounded id range for the oracle-checked pair query
 
 
-def _shingles(k: int = SHINGLE_K, toks=None):
-    """``toks``: pass a MATERIALIZED token-array column (an attribute)
-    on any hot path. Higher-order functions are interpreted
-    (CodegenFallback, no common-subexpression elimination), so the
-    lambda body's ``slice(toks, i, k)`` re-evaluates its ``toks`` child
-    PER GRAM POSITION — with the inline split expression that is one
-    full regex tokenization per gram per row (measured ~5x slower at
-    sf1.0: 29.6 s -> 6.3 s for the 8-gram explode, before scan
-    parallelization)."""
-    if toks is None:
-        toks = _tokens()
-    n = F.size(toks)
-    return F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - k + 1),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def _shingles(toks, k: int = SHINGLE_K):
+    """The DISTINCT k-gram set of a ``toks`` column."""
+    return F.array_distinct(_ngrams(toks, k))
 
 
 def _shingles_sql(k: int = SHINGLE_K) -> str:
@@ -80,15 +62,12 @@ def _shingles_sql(k: int = SHINGLE_K) -> str:
 # collides; full-text exact dedup is the same query with the full md5)
 # ---------------------------------------------------------------------------
 
-def _prefix_fp(toks=None):
-    """First-5-token fingerprint — the SINGLE home shared by
-    exact_dedup, the curation funnel, and the Bloom keys (Spark side;
-    _PREFIX_FP_SQL is the DuckDB twin). A one-sided width/separator
-    edit would silently decouple the three while each still matched
-    its own oracle (review finding). ``toks``: optional materialized
-    token-array column (hot paths)."""
-    if toks is None:
-        toks = _tokens()
+def _prefix_fp(toks):
+    """First-5-token fingerprint of a ``toks`` column — the SINGLE home
+    shared by exact_dedup, the curation funnel, and the Bloom keys
+    (Spark side; _PREFIX_FP_SQL is the DuckDB twin). A one-sided
+    width/separator edit would silently decouple the three while each
+    still matched its own oracle (review finding)."""
     return F.md5(F.concat_ws(" ", F.slice(toks, 1, 5)))
 
 
@@ -97,11 +76,10 @@ _PREFIX_FP_SQL = ("md5(array_to_string(regexp_split_to_array(trim(text), "
 
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fp = _prefix_fp()
     w = Window.partitionBy("fp")
     return (
-        load_documents(spark, sf_dir)
-        .select("doc_id", fp.alias("fp"))
+        tokenized(load_documents(spark, sf_dir), "doc_id")
+        .select("doc_id", _prefix_fp(F.col("toks")).alias("fp"))
         .withColumn("canonical_id", F.min("doc_id").over(w))
         .withColumn("is_dup", F.col("doc_id") != F.col("canonical_id"))
     )
@@ -132,31 +110,24 @@ SEED_PARAMS = [(2 * s + 3, 1000003 * (s + 1) % MINHASH_P)
                for s in range(N_SEEDS)]
 
 
-def row_minhash(docs: DataFrame, shingles=None) -> DataFrame:
-    """Per-ROW minhash signature: a single higher-order fold carries all
-    N_SEEDS running minima across the shingle hash array — one md5 per
-    shingle (the fold input is evaluated once per row), no explode, no
-    aggregation, no shuffle. Same algebra (and same values,
-    differential-tested) as the explode form this replaced; being
-    aggregation-free it is also legal before stateful streaming
-    operators. Docs too short to shingle get NULL signatures (the
-    MINHASH_P sentinel can never be a real minimum — every permuted
-    hash is strictly below the modulus).
+def row_minhash(docs: DataFrame) -> DataFrame:
+    """``shingle_minhash`` over the shingles of the docs' ``toks``
+    column (see textstats.tokenized)."""
+    return shingle_minhash(docs, _shingles(F.col("toks")))
 
-    ``shingles``: optional array<string> Column of PRE-COMPUTED shingles
-    (e.g. a staged signature table); default derives them from ``text``
-    through an internally materialized token array (``_shingles``'s
-    per-position re-evaluation hazard — the interim ``_rmh_toks``
-    projection makes the gram lambda read an attribute, and is dropped
-    from the output).
+
+def shingle_minhash(docs: DataFrame, shingles) -> DataFrame:
+    """Per-ROW minhash signature of an array<string> ``shingles``
+    column: a single higher-order fold carries all N_SEEDS running
+    minima across the shingle hash array — one md5 per shingle (the
+    fold input is evaluated once per row), no explode, no aggregation,
+    no shuffle. Same algebra (and same values, differential-tested) as
+    the explode form this replaced; being aggregation-free it is also
+    legal before stateful streaming operators. Docs too short to
+    shingle get NULL signatures (the MINHASH_P sentinel can never be a
+    real minimum — every permuted hash is strictly below the modulus).
     """
-    if shingles is None:
-        docs = docs.withColumn("_rmh_toks", _tokens())
-        shingles = _shingles(toks=F.col("_rmh_toks"))
-    hs = F.transform(
-        shingles,
-        lambda sh: F.conv(F.substring(F.md5(sh), 1, 8), 16, 10).cast("long"),
-    )
+    hs = F.transform(shingles, lambda sh: _md5_u32(sh))
     a_arr = F.array(*[F.lit(a).cast("long") for a, _ in SEED_PARAMS])
     b_arr = F.array(*[F.lit(b).cast("long") for _, b in SEED_PARAMS])
     minima = F.aggregate(
@@ -178,7 +149,7 @@ def row_minhash(docs: DataFrame, shingles=None) -> DataFrame:
             F.when(F.element_at("_mh", s + 1) < MINHASH_P,
                    F.element_at("_mh", s + 1)),
         )
-    return out.drop("_mh", "_rmh_toks")
+    return out.drop("_mh")
 
 
 def band_structs():
@@ -204,17 +175,13 @@ def band_structs():
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_documents(spark, sf_dir))
-    exploded = docs.select(
-        "doc_id", _tokens().alias("_toks")
+    exploded = tokenized(
+        spread(load_documents(spark, sf_dir)), "doc_id"
     ).select(
-        "doc_id", F.explode_outer(_shingles(toks=F.col("_toks"))).alias("sh")
+        "doc_id", F.explode_outer(_shingles(F.col("toks"))).alias("sh")
     ).select(
         "doc_id",
-        F.when(
-            F.col("sh").isNotNull(),
-            F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long"),
-        ).alias("h"),
+        F.when(F.col("sh").isNotNull(), _md5_u32(F.col("sh"))).alias("h"),
     )
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % MINHASH_P)
@@ -377,8 +344,10 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-text docs are filtered exactly like the explode form dropped
     them (explode of a NULL token array emits nothing) — the DuckDB
     oracle's unnest does the same, so the engines stay row-identical."""
-    docs = load_documents(spark, sf_dir).where(F.col("text").isNotNull())
-    toks = _tokens()
+    docs = tokenized(
+        load_documents(spark, sf_dir).where(F.col("text").isNotNull()),
+        "doc_id")
+    toks = F.col("toks")
     # inner transform materializes ONE md5 per token; higher-order-function
     # lambdas are interpreted without codegen subexpression elimination,
     # so computing md5 separately for each half would hash twice
@@ -511,10 +480,10 @@ WHERE a.doc_id < b.doc_id
 # ---------------------------------------------------------------------------
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_documents(spark, sf_dir) \
-        .where(F.col("doc_id") < JACCARD_MAX_ID) \
-        .select("doc_id", _tokens().alias("_toks")) \
-        .select("doc_id", _shingles(toks=F.col("_toks")).alias("sh"))
+    docs = tokenized(
+        load_documents(spark, sf_dir).where(F.col("doc_id") < JACCARD_MAX_ID),
+        "doc_id",
+    ).select("doc_id", _shingles(F.col("toks")).alias("sh"))
     a = docs.alias("a")
     b = docs.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
@@ -588,9 +557,8 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs -> n-gram Jaccard verification on survivors
     only. The shared front end of neardup_canonical and
     neardup_components."""
-    docs = load_documents(spark, sf_dir).select(
-        "doc_id", _tokens().alias("_toks")
-    ).select("doc_id", _shingles(toks=F.col("_toks")).alias("sh"))
+    docs = tokenized(load_documents(spark, sf_dir), "doc_id") \
+        .select("doc_id", _shingles(F.col("toks")).alias("sh"))
     return jaccard_verified(lsh_candidate_pairs(spark, sf_dir), docs)
 
 
@@ -869,10 +837,8 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the persist buys this operator nothing."""
     docs = load_documents(spark, sf_dir)
     bench = (
-        docs.where(F.col("doc_id") < DECON_BENCH_MAX_ID)
-        .select(_tokens().alias("_toks"))
-        .select(F.explode(_shingles(DECON_K, toks=F.col("_toks")))
-                .alias("g"))
+        tokenized(docs.where(F.col("doc_id") < DECON_BENCH_MAX_ID))
+        .select(F.explode(_shingles(F.col("toks"), DECON_K)).alias("g"))
         .select(F.md5("g").alias("h"))
         .distinct()
     )
@@ -951,19 +917,14 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage-codegen unit that takes ~8.5 s of janino compile
     (superlinear in unit size) vs ~2.7 s split, and caching sh/g8
     arrays would multiply the cache footprint for columns each branch
-    can recompute from the cached token array cheaply. Round 8: the
-    persisted relation carries the TOKEN ARRAY alongside text — every
-    branch (shingles, 8-gram hashes, quality, prefix fp) previously
-    re-tokenized text inline inside interpreted HOF lambdas, which
-    re-evaluate the split per gram position (the _shingles hazard —
-    this one relation paid it in four branches); text stays cached
-    too because the CJK language probe needs raw bytes. Semantics are unchanged
-    and the oracle still composes the five standalone SQL bodies, so
-    the driver gate checks this single-scan plan against the five-scan
-    composition (row_minhash is differential-tested equal to the
-    explode/agg signature form the standalone near-dup query uses;
-    ``contaminated`` is an EXISTS — semi-join distinct — which equals
-    n_hits > 0).
+    can recompute from the cached token array cheaply. The persisted
+    relation carries the token array (textstats.tokenized) alongside
+    text, which the CJK language probe needs as raw bytes. The oracle
+    still composes the five standalone SQL bodies, so the driver gate
+    checks this single-scan plan against the five-scan composition
+    (row_minhash is differential-tested equal to the explode/agg
+    signature form the standalone near-dup query uses; ``contaminated``
+    is an EXISTS — semi-join distinct — which equals n_hits > 0).
 
     Note: with the current thresholds the 'language' reason is
     structurally subsumed by 'quality' (quality needs >=10% stopwords,
@@ -977,7 +938,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # QUALITY_SQL/LANG_ID_SQL/EXACT_DEDUP_SQL bodies, so inline copies
     # here could drift one-sidedly (review finding)
     toks = F.col("toks")
-    n_tokens, _stop_hits, quality_ok = _quality_cols(toks)
+    _, _, quality_ok = _quality_cols(toks)
     # the ONE source read: persisted narrow signature relation; every
     # branch below projects from this cache with column pruning
     # (lazy persist held by the session store — see
@@ -989,10 +950,9 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # finding). Built inside the lambda, so a store hit plans no scan.
     sig = session_persisted(
         spark, ("funnel_signatures", sf_dir),
-        lambda: row_minhash(
-            spread(load_documents(spark, sf_dir).select("doc_id", "text"))
-            .withColumn("toks", _tokens()),
-            shingles=_shingles(toks=toks)),
+        lambda: row_minhash(tokenized(
+            spread(load_documents(spark, sf_dir).select("doc_id", "text")),
+            "doc_id", "text")),
         lazy=True)
     base = sig.select(
         "doc_id",
@@ -1002,8 +962,8 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("mh0").isNotNull(), band_structs())
         .otherwise(F.array().cast(
             "array<struct<band:int,band_key:string>>")).alias("bands"),
-        _shingles(toks=toks).alias("sh"),
-        F.transform(_shingles(DECON_K, toks=toks), F.md5).alias("g8"),
+        _shingles(toks).alias("sh"),
+        F.transform(_shingles(toks, DECON_K), F.md5).alias("g8"),
     )
     # exact dedup: the one window shuffle
     w = Window.partitionBy("fp")
@@ -1093,12 +1053,8 @@ def _bloom_bits(key):
     """The K bit positions for ``key`` — like the CMS sketch, build and
     probe MUST hash identically, so the expression lives in one place:
     bit_i = int(md5(i || '_' || key)[:8], 16) % BLOOM_BITS."""
-    return F.array(*[
-        (F.conv(F.substring(
-            F.md5(F.concat_ws("_", F.lit(str(i)), key)), 1, 8),
-            16, 10).cast("long") % BLOOM_BITS)
-        for i in range(BLOOM_K)
-    ])
+    return F.array(*[_md5_u32(key, str(i)) % BLOOM_BITS
+                     for i in range(BLOOM_K)])
 
 
 def _bloom_bits_sql(key_expr: str) -> str:
@@ -1134,13 +1090,12 @@ def bloom_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not a LocalTableScan of pre-collected literals) while repeated
     # calls (gate, bench, plan audit) reuse one resident copy instead of
     # accumulating persists or recomputing from scratch each time.
-    fp = _prefix_fp()
     keys = session_persisted(
         spark, ("bloom_keys", sf_dir),
         # spread the one-file scan: the md5 fingerprint projection and
         # the partial-distinct otherwise run on a single core
-        lambda: spread(load_documents(spark, sf_dir))
-        .select(fp.alias("key")).distinct())
+        lambda: tokenized(spread(load_documents(spark, sf_dir)))
+        .select(_prefix_fp(F.col("toks")).alias("key")).distinct())
     bits = session_persisted(
         spark, ("bloom_bits", sf_dir),
         lambda: keys.select(
@@ -1378,14 +1333,10 @@ def _grams_lazy(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     round-robin exchange and the Generate into the parquet scan —
     plan-checked in plans/r08). Spread first: the sf-dir parquet
     is one file -> one scan partition, and the gram build is the
-    expensive pass; the token array is materialized behind the
-    projection so the gram lambda reads an attribute (_shingles
-    docstring)."""
-    return spread(load_documents(spark, sf_dir)).select(
-        "doc_id", _tokens().alias("_toks")
-    ).select(
+    expensive pass."""
+    return tokenized(spread(load_documents(spark, sf_dir)), "doc_id").select(
         "doc_id",
-        F.explode_outer(_shingles(k, toks=F.col("_toks"))).alias("g"),
+        F.explode_outer(_shingles(F.col("toks"), k)).alias("g"),
     ).select("doc_id", F.md5("g").alias("h"))
 
 
@@ -1462,9 +1413,10 @@ def ngram_clean(spark: SparkSession, sf_dir: str,
         # spread: if AQE broadcasts doc_dups, the row-local
         # coverage/filter pass below would otherwise inherit the
         # one-file scan's single partition
-        spread(load_documents(spark, sf_dir).select("doc_id", "text"))
-        .join(doc_dups, "doc_id", "left")
-        .withColumn("toks", _tokens())
+        tokenized(
+            spread(load_documents(spark, sf_dir).select("doc_id", "text"))
+            .join(doc_dups, "doc_id", "left"),
+            "doc_id", "dup_hashes")
         .withColumn("n", F.size("toks"))
         .withColumn("dup", F.coalesce(
             F.col("dup_hashes"), F.array().cast("array<string>")))
@@ -1603,24 +1555,12 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output pins the fingerprint SET (md5 over the sorted values), not
     just its size.
 
-    The token array, the gram-hash array and the selected set are each
-    MATERIALIZED behind a projection (round 8): interpreted HOF lambdas
-    re-evaluate outer expression children per element, so the inline
-    form re-tokenized per gram position and re-hashed the whole gram
-    array once per W-window (the _shingles hazard, squared)."""
-    toks = _tokens()
-    n = F.size(F.col("_toks"))
-    grams = F.when(
-        n >= WINNOW_K,
-        F.transform(
-            F.sequence(F.lit(1), n - (WINNOW_K - 1)),
-            lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, WINNOW_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    hashes = F.transform(
-        grams,
-        lambda g: F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long"),
-    )
+    The gram-hash array and the selected set are each MATERIALIZED
+    behind a projection, like the token array (textstats.tokenized):
+    the window-minimum lambda reads the hash array once per W-window,
+    so inline it would re-hash the whole gram array per window."""
+    hashes = F.transform(_ngrams(F.col("toks"), WINNOW_K),
+                         lambda g: _md5_u32(g))
     nh = F.size(F.col("_hs"))
     mins = (
         F.when(nh == 0, F.array().cast("array<long>"))
@@ -1634,8 +1574,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest = F.md5(F.concat_ws(
         ",", F.transform(F.col("_sel"), lambda v: v.cast("string"))))
     return (
-        load_documents(spark, sf_dir)
-        .select("doc_id", toks.alias("_toks"))
+        tokenized(load_documents(spark, sf_dir), "doc_id")
         .select("doc_id", hashes.alias("_hs"))
         .select("doc_id", nh.cast("int").alias("n_grams"),
                 selected.alias("_sel"))

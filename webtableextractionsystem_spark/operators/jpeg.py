@@ -45,7 +45,6 @@ ZIGZAG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ])
-UNZIGZAG = np.argsort(ZIGZAG)
 
 # Annex K.1/K.2 quantization tables (quality-50 bases)
 QUANT_LUM = np.array([

@@ -41,13 +41,75 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(n) if df.rdd.getNumPartitions() < n else df
 
 
-def _tokens():
-    # explicit class, NOT \s+: Java's \s includes vertical tab (\x0B)
-    # but RE2's (every DuckDB oracle) does not — a corpus document
-    # containing \x0B would silently diverge n_tokens and every
-    # token-derived column between the engines (review finding; the
-    # cross-engine probe test pins the agreement)
-    return F.split(F.trim(F.col("text")), r"[ \t\n\f\r]+")
+# the whitespace class every tokenizer, normalizer and BPE pattern
+# spells out — NOT \s: Java's \s includes vertical tab (\x0B) but
+# RE2's (every DuckDB oracle) does not, so a corpus document containing
+# \x0B would silently diverge every token-derived column between the
+# engines (the cross-engine probe test pins the agreement)
+_WS = r" \t\n\f\r"
+_WS_RUN = f"[{_WS}]+"
+
+
+def tokenized(df: DataFrame, *cols) -> DataFrame:
+    """``df.select(*cols, toks)`` — the ONE home of the whitespace
+    tokenizer: ``toks`` is the array<string> split of trimmed ``text``.
+
+    Every token consumer reads this materialized attribute, never an
+    inline split. Higher-order functions are interpreted
+    (CodegenFallback, no common-subexpression elimination), so a lambda
+    body that references the split expression — a k-gram's
+    ``slice(toks, i, k)``, simhash's majority vote — re-evaluates the
+    whole regex tokenization PER ELEMENT (measured 5-9x slower at sf1.0
+    for the gram builders), and a projection that references it twice
+    splits twice. CollapseProject keeps this projection separate
+    whenever ``toks`` is read more than once, so the split runs once
+    per row."""
+    return df.select(*cols, F.split(F.trim(F.col("text")), _WS_RUN)
+                     .alias("toks"))
+
+
+def token_rows(df: DataFrame, *cols: str) -> DataFrame:
+    """``(*cols, token)``: one row per token of ``tokenized(df, *cols)``.
+    The same rows as a plain explode — split never yields an empty
+    array or a NULL element, so explode_outer differs only on NULL
+    text, whose NULL token the filter drops. A plain explode of the
+    ``toks`` attribute would make the optimizer infer
+    ``isnotnull(toks) AND size(toks) > 0`` and push it below the
+    projection with the split substituted in: two more splits per
+    row."""
+    return (tokenized(df, *cols)
+            .select(*cols, F.explode_outer("toks").alias("token"))
+            .where(F.col("token").isNotNull()))
+
+
+def _ngrams(toks, k: int):
+    """The k-gram MULTISET of a ``toks`` column, in position order: the
+    space-joined ``slice(toks, i, k)`` for i = 1 .. n-k+1; a document
+    with fewer than k tokens has none. The one k-gram builder — bigrams,
+    shingles and winnowing grams all derive from it."""
+    n = F.size(toks)
+    return F.when(
+        n >= k,
+        F.transform(
+            F.sequence(F.lit(1), n - (k - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _md5_u32(key, salt: str | None = None):
+    """Engine-portable uniform 32-bit hash of a string column — the
+    first 8 hex digits of md5 as a long (md5 is identical in Spark and
+    DuckDB, unlike xxhash64), optionally salted as ``salt_key``. The ONE
+    home of the convention: doc sampling and packing buckets, the
+    rolling/DSIR token hashes, the CMS and Bloom rows and the minhash
+    and winnowing gram hashes all derive from it. Inside
+    ``F.transform`` wrap it as ``lambda t: _md5_u32(t)`` — passed bare,
+    its second parameter flips pyspark into the (element, index)
+    form."""
+    if salt is not None:
+        key = F.concat_ws("_", F.lit(salt), key)
+    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
 
 
 _ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -83,8 +145,9 @@ _NORM_BODY_SQL = r"regexp_replace(trim(text), '\s+', ' ', 'g')"
 # ---------------------------------------------------------------------------
 
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _tokens()
-    return load_documents(spark, sf_dir).select(
+    toks = F.col("toks")
+    docs = tokenized(load_documents(spark, sf_dir), "doc_id", "text")
+    return docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
         F.aggregate(F.transform(toks, F.length), F.lit(0),
@@ -106,31 +169,36 @@ FROM documents
 # quality scoring (length / punctuation / stopword-ratio flags)
 # ---------------------------------------------------------------------------
 
-def _quality_cols(toks=None):
-    """(n_tokens, stop_hits, quality_ok) expressions — the SINGLE home
-    of the quality band, shared by quality_stats and source_stats
-    (review finding: the band was written out twice; a one-sided edit
-    would silently decouple the dashboard rollup from the per-doc
-    flags while each still matched its own oracle). Integer
-    cross-multiplication instead of a float ratio: stopword ratio
-    >= 10% and a sane length band. ``toks``: optional materialized
-    token-array column (hot paths — see _bigrams)."""
-    if toks is None:
-        toks = _tokens()
+def _stop_hits(toks):
+    """How many tokens are STOPWORDS (ASCII case fold) — shared by the
+    quality band and the language cascade."""
     stop = F.array(*[F.lit(w) for w in STOPWORDS])
-    n_tokens = F.size(toks)
-    stop_hits = F.size(
+    return F.size(
         F.filter(toks, lambda t: F.array_contains(stop, _ascii_lower(t))))
+
+
+def _quality_cols(toks):
+    """(n_tokens, stop_hits, quality_ok) expressions over a ``toks``
+    column — the SINGLE home of the quality band, shared by
+    quality_stats, source_stats and the curation funnel (review
+    finding: the band was written out twice; a one-sided edit would
+    silently decouple the dashboard rollup from the per-doc flags while
+    each still matched its own oracle). Integer cross-multiplication
+    instead of a float ratio: stopword ratio >= 10% and a sane length
+    band."""
+    n_tokens = F.size(toks)
+    stop_hits = _stop_hits(toks)
     quality_ok = ((stop_hits * 10 >= n_tokens)
                   & (n_tokens >= 5) & (n_tokens <= 10000))
     return n_tokens, stop_hits, quality_ok
 
 
 def quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n_tokens, stop_hits, quality_ok = _quality_cols()
+    n_tokens, stop_hits, quality_ok = _quality_cols(F.col("toks"))
     # dropping [A-Za-z0-9 ] keeps exactly the punctuation characters
     punct = F.length(F.regexp_replace("text", "[A-Za-z0-9 ]", ""))
-    return load_documents(spark, sf_dir).select(
+    docs = tokenized(load_documents(spark, sf_dir), "doc_id", "text")
+    return docs.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
         stop_hits.alias("stop_hits"),
@@ -160,27 +228,22 @@ FROM (SELECT doc_id, text, regexp_split_to_array(trim(text), '\s+') AS toks
 # language-ID heuristic (CJK presence, stopword density)
 # ---------------------------------------------------------------------------
 
-def _lang_pred_col(toks=None):
-    """The zh/en/unk language cascade — single home shared by lang_id
-    and the curation funnel (whose oracle composes LANG_ID_SQL, so a
-    one-sided threshold edit would silently decouple them).
-    ``toks``: optional materialized token-array column (hot paths)."""
-    if toks is None:
-        toks = _tokens()
-    stop = F.array(*[F.lit(w) for w in STOPWORDS])
+def _lang_pred_col(toks):
+    """The zh/en/unk language cascade over ``text`` and a ``toks``
+    column — single home shared by lang_id and the curation funnel
+    (whose oracle composes LANG_ID_SQL, so a one-sided threshold edit
+    would silently decouple them)."""
     cjk = (F.length("text")
            - F.length(F.regexp_replace("text", "[一-龥]", "")))
-    stop_hits = F.size(
-        F.filter(toks, lambda t: F.array_contains(stop, _ascii_lower(t))))
-    n_tokens = F.size(toks)
     return (F.when(cjk > 0, F.lit("zh"))
-            .when(stop_hits * 20 >= n_tokens, F.lit("en"))
+            .when(_stop_hits(toks) * 20 >= F.size(toks), F.lit("en"))
             .otherwise(F.lit("unk")))
 
 
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_documents(spark, sf_dir).select(
-        "doc_id", "lang", _lang_pred_col().alias("lang_pred"))
+    docs = tokenized(load_documents(spark, sf_dir), "doc_id", "lang", "text")
+    return docs.select(
+        "doc_id", "lang", _lang_pred_col(F.col("toks")).alias("lang_pred"))
 
 
 LANG_ID_SQL = rf"""
@@ -202,10 +265,9 @@ FROM (SELECT doc_id, text, lang, regexp_split_to_array(trim(text), '\s+') AS tok
 # but NOT \s: Java's includes \x0B, RE2's does not (fuzz-differential
 # finding: a \x0B next to punctuation flipped a piece between the
 # whitespace and symbol alternatives), so the whitespace class is
-# explicit like _tokens())
+# the explicit _WS, as in tokenized())
 # ---------------------------------------------------------------------------
 
-_WS = r" \t\n\f\r"
 BPE_PATTERN = (
     r"'s|'t|'re|'ve|'m|'ll|'d| ?\p{L}+| ?\p{N}+| ?[^"
     + _WS + r"\p{L}\p{N}]+|[" + _WS + r"]+"
@@ -245,17 +307,13 @@ ROLL_MOD = 2147483647
 
 
 def rolling_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _tokens()
-    hashes = F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"),
-    )
+    hashes = F.transform(F.col("toks"), lambda t: _md5_u32(t))
     rolled = F.aggregate(
         F.slice(hashes, 2, F.greatest(F.size(hashes) - 1, F.lit(0))),
         F.element_at(hashes, 1),
         lambda acc, x: (acc * 31 + x) % ROLL_MOD,
     )
-    return load_documents(spark, sf_dir).select(
+    return tokenized(load_documents(spark, sf_dir), "doc_id").select(
         "doc_id", rolled.alias("rolling_hash")
     )
 
@@ -275,13 +333,10 @@ FROM documents
 
 def _norm_text():
     """The whitespace-collapsed lowercased text — the single normalizer
-    home for fingerprints and the HLL register hash. Explicit class,
-    NOT \\s+, for the same reason as _tokens(): Java's \\s includes
-    vertical tab (\\x0B), RE2's (every DuckDB oracle) does not, so a
-    corpus document containing \\x0B would silently diverge the md5
-    between engines (the cross-engine probe test pins the agreement)."""
+    home for fingerprints and the HLL register hash (whitespace is the
+    explicit _WS class, as in tokenized())."""
     return _ascii_lower(F.regexp_replace(
-        F.trim(F.col("text")), r"[ \t\n\f\r]+", " "))
+        F.trim(F.col("text")), _WS_RUN, " "))
 
 
 def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,27 +358,10 @@ FROM documents
 # the standard filters a training-data pipeline applies before dedup)
 # ---------------------------------------------------------------------------
 
-def _bigrams(toks=None):
+def _bigrams(toks):
     """Token bigram MULTISET (no array_distinct — repetition measurement
-    needs duplicates preserved).
-
-    ``toks``: pass a MATERIALIZED array column (an attribute, not the
-    inline ``_tokens()`` expression) on any hot path. Higher-order
-    functions are interpreted (CodegenFallback, no common-subexpression
-    elimination), so the lambda body's ``slice(toks, i, 2)`` re-evaluates
-    its ``toks`` child PER POSITION — with the inline split expression
-    that is one full regex tokenization per bigram per row (measured
-    9x slower at sf1.0: 33 s -> 3.6 s for the bigram count pass)."""
-    if toks is None:
-        toks = _tokens()
-    n = F.size(toks)
-    return F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    needs duplicates preserved)."""
+    return _ngrams(toks, 2)
 
 
 def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,11 +381,10 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange in the plan is the round-robin repartition that
     parallelizes single-file local inputs, as in minhash_signatures —
     not a key shuffle."""
-    docs = spread(load_documents(spark, sf_dir)).select(
-        "doc_id", _tokens().alias("_toks"))
-    toks_n = F.size("_toks")
+    docs = tokenized(spread(load_documents(spark, sf_dir)), "doc_id")
+    toks_n = F.size("toks")
     n_bigrams = F.when(toks_n >= 2, toks_n - 1).otherwise(0).cast("long")
-    bgs = F.array_sort(_bigrams(F.col("_toks")))
+    bgs = F.array_sort(_bigrams(F.col("toks")))
     init = F.struct(
         F.lit(None).cast("string").alias("prev"),
         F.lit(0).cast("long").alias("run"),
@@ -429,17 +466,6 @@ GROUP BY doc_id
 SAMPLE_PCT = 10  # keep ~10% of docs
 
 
-def _md5_u32(salt: str | None = None):
-    """Engine-portable uniform 32-bit hash of doc_id (md5 is identical
-    in Spark and DuckDB, unlike xxhash64), optionally salted — the ONE
-    home of the hashing convention (doc_sample, pack_sequences,
-    stratified_sample all derive from it)."""
-    key = F.col("doc_id").cast("string")
-    if salt is not None:
-        key = F.concat_ws("_", F.lit(salt), key)
-    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-
-
 def _md5_u32_sql(salt: str | None = None) -> str:
     key = "CAST(doc_id AS VARCHAR)"
     if salt is not None:
@@ -448,7 +474,7 @@ def _md5_u32_sql(salt: str | None = None) -> str:
 
 
 def _md5_bucket(modulus: int):
-    return _md5_u32() % modulus
+    return _md5_u32(F.col("doc_id").cast("string")) % modulus
 
 
 def _md5_bucket_sql(modulus: int) -> str:
@@ -500,9 +526,8 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (review finding; cf. bm25_topk's postings)
     d = session_persisted(
         spark, ("bigram_lm", sf_dir),
-        lambda: spread(load_documents(spark, sf_dir))
-        .select("doc_id", _tokens().alias("_toks"))
-        .select("doc_id", F.explode_outer(_bigrams(F.col("_toks")))
+        lambda: tokenized(spread(load_documents(spark, sf_dir)), "doc_id")
+        .select("doc_id", F.explode_outer(_bigrams(F.col("toks")))
                 .alias("bg")))
     lm = d.where(F.col("bg").isNotNull()) \
         .groupBy("bg").agg(F.count("*").alias("freq"))
@@ -549,8 +574,9 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one count-per-source agg broadcast back onto the scan
     (tiny: one row per stratum), then a narrow filter — no sort, no
     window, unlike rate-free reservoir approaches."""
+    h32 = _md5_u32(F.col("doc_id").cast("string"), "strat")
     d = load_documents(spark, sf_dir).select(
-        "doc_id", "source", _md5_u32("strat").alias("h32"))
+        "doc_id", "source", h32.alias("h32"))
     counts = d.groupBy("source").agg(F.count("*").alias("n_stratum"))
     return (
         d.join(F.broadcast(counts), "source")
@@ -577,7 +603,7 @@ def length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing/batching planner consumes): bucket = floor(log2(n_tokens)),
     with counts and total tokens per bucket. One partial-aggregated
     groupBy on a tiny key domain."""
-    n = F.size(_tokens())
+    n = F.size("toks")
     # floor(log2) via the integer `length(bin(n)) - 1` trick (the
     # HLL/qsketch pattern): floating log2 routes through different
     # libm code paths in the JVM (ln/ln2) and DuckDB (std::log2), and
@@ -585,7 +611,7 @@ def length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.when(n <= 0, F.lit(-1)) \
         .otherwise((F.length(F.bin(n.cast("long"))) - 1).cast("int"))
     return (
-        load_documents(spark, sf_dir)
+        tokenized(load_documents(spark, sf_dir))
         .select(bucket.alias("len_bucket"), n.alias("n_tokens"))
         .groupBy("len_bucket")
         .agg(F.count("*").alias("n_docs"),
@@ -623,8 +649,7 @@ def top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
 
     tf = (
-        load_documents(spark, sf_dir)
-        .select("source", F.explode(_tokens()).alias("token"))
+        token_rows(load_documents(spark, sf_dir), "source")
         .where(F.col("token") != "")
         .groupBy("source", "token")
         .agg(F.count("*").alias("tf"))
@@ -664,8 +689,7 @@ def inverted_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     One explode + one (token, doc) pre-aggregation + one token
     aggregation, all map-side combined."""
     grams = (
-        load_documents(spark, sf_dir)
-        .select("doc_id", F.explode(_tokens()).alias("token"))
+        token_rows(load_documents(spark, sf_dir), "doc_id")
         .where(F.col("token") != "")
         .groupBy("token", "doc_id")
         .agg(F.count("*").alias("tf_doc"))
@@ -704,9 +728,9 @@ def source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same quality expression as quality_stats) — the per-domain rollup a
     curation dashboard reads. One scan, one tiny-key groupBy with
     map-side partials."""
-    n_tokens, _stop_hits, quality_ok = _quality_cols()
+    n_tokens, _, quality_ok = _quality_cols(F.col("toks"))
     return (
-        load_documents(spark, sf_dir)
+        tokenized(load_documents(spark, sf_dir), "source", "lang", "text")
         .select("source", "lang", F.length("text").alias("n_chars"),
                 n_tokens.alias("n_tokens"),
                 quality_ok.cast("int").alias("q"))
@@ -755,8 +779,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python in the path; the explode factor is n/STRIDE, and every output
     row carries only the chunk digest + length, never the token array,
     so shuffle width stays O(1) per chunk."""
-    d = load_documents(spark, sf_dir).select(
-        "doc_id", _tokens().alias("toks"))
+    d = tokenized(load_documents(spark, sf_dir), "doc_id")
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(CHUNK_STRIDE))
     chunk = F.slice(F.col("toks"), F.col("start"), CHUNK_SIZE)
     return (
@@ -816,9 +839,9 @@ def pack_sequences(spark: SparkSession, sf_dir: str,
     if n_buckets is None:
         n_buckets = max(spark.sparkContext.defaultParallelism,
                         N_PACK_BUCKETS)
-    n_tok = F.size(_tokens())
+    n_tok = F.size("toks")
     bucket = _md5_bucket(n_buckets).cast("int")
-    d = load_documents(spark, sf_dir).select(
+    d = tokenized(load_documents(spark, sf_dir), "doc_id").select(
         "doc_id", bucket.alias("bucket"), n_tok.alias("n_tokens"))
     w = (
         Window.partitionBy("bucket").orderBy("doc_id")
@@ -1019,9 +1042,7 @@ def _cms_hash_structs():
     return F.array(*[
         F.struct(
             F.lit(d).alias("d"),
-            (F.conv(F.substring(
-                F.md5(F.concat_ws("_", F.lit(str(d)), F.col("token"))),
-                1, 8), 16, 10).cast("long") % CMS_WIDTH).alias("c"),
+            (_md5_u32(F.col("token"), str(d)) % CMS_WIDTH).alias("c"),
         ) for d in range(CMS_DEPTH)
     ])
 
@@ -1044,8 +1065,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build and the exact top-k probe side (review finding)
     tok_occ = session_persisted(
         spark, ("cms_tokens", sf_dir),
-        lambda: spread(load_documents(spark, sf_dir))
-        .select(F.explode(_tokens()).alias("token")))
+        lambda: token_rows(spread(load_documents(spark, sf_dir))))
     rows = tok_occ.select(
         "token", F.explode(_cms_hash_structs()).alias("h")
     ).select("token", "h.d", "h.c")
@@ -1381,17 +1401,15 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and BROADCAST back onto the postings, so the scored relation is
     |top_terms| postings lists; one per-term window for the final
     rank (WindowGroupLimit pushes the top-k down)."""
-    toks = _tokens()
     postings = session_persisted(
         spark, ("bm25_postings", sf_dir),
         # spread: the index build is the expensive pass
-        lambda: spread(load_documents(spark, sf_dir))
-        .select("doc_id", F.explode(toks).alias("token"))
+        lambda: token_rows(spread(load_documents(spark, sf_dir)), "doc_id")
         .where(F.col("token") != "")
         .groupBy("token", "doc_id")
         .agg(F.count("*").cast("int").alias("tf")))
-    dl = load_documents(spark, sf_dir).select(
-        "doc_id", F.size(toks).alias("dl"))
+    dl = tokenized(load_documents(spark, sf_dir), "doc_id").select(
+        "doc_id", F.size("toks").alias("dl"))
     stats = dl.agg(F.count("*").alias("n_docs"),
                    F.sum("dl").cast("long").alias("sum_dl"))
     df_tbl = postings.groupBy("token").agg(
@@ -1485,20 +1503,14 @@ DSIR_TARGET_SOURCES = ("src0", "src1", "src2")   # the "target domain"
 DSIR_LLR_SCALE = 10000                  # llr quantization (1e-4)
 
 
-def _dsir_features(toks=None):
+def _dsir_features(toks):
     """Hashed unigram + bigram feature buckets per document (array of
     ints in [0, DSIR_BUCKETS)) — one expression home for the target
     and corpus distributions and the per-doc scorer; bigrams come from
-    the shared _bigrams() home (review finding: three inline copies).
-    ``toks``: pass a materialized array column on hot paths (see
-    _bigrams — the inline split re-evaluates per bigram position)."""
-    if toks is None:
-        toks = _tokens()
-    feats = F.concat(toks, _bigrams(toks))
+    the shared _bigrams() home (review finding: three inline copies)."""
     return F.transform(
-        feats,
-        lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10)
-                   .cast("long") % DSIR_BUCKETS).cast("int"),
+        F.concat(toks, _bigrams(toks)),
+        lambda t: (_md5_u32(t) % DSIR_BUCKETS).cast("int"),
     )
 
 
@@ -1576,10 +1588,9 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction on the pre-repartition single-partition scan
     # (measured: 32.7 s vs 2.5 s at sf1.0) — the cheap IsNotNull
     # predicate pushes into the parquet reader instead.
-    scored = spread(load_documents(spark, sf_dir)
-                    .where(F.col("text").isNotNull())) \
-        .select("doc_id", _tokens().alias("_toks")) \
-        .select("doc_id", _dsir_features(F.col("_toks")).alias("_f"))
+    scored = tokenized(spread(load_documents(spark, sf_dir)
+                              .where(F.col("text").isNotNull())), "doc_id") \
+        .select("doc_id", _dsir_features(F.col("toks")).alias("_f"))
     return scored.select(
         "doc_id",
         F.size("_f").cast("long").alias("n_features"),
@@ -1596,15 +1607,11 @@ def _dsir_feats_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the building block the distribution pass scans and
     stage_dsir_features writes to a bucketed table. Spread first:
     the sf-dir parquet is one file -> one scan partition (same
-    pattern as minhash_signatures), and the token
-    array is materialized behind the projection so the bigram lambda
-    reads an attribute, not the re-evaluated split (guide §4 / the
-    _bigrams docstring)."""
-    return spread(load_documents(spark, sf_dir)).select(
-        "doc_id", "source", _tokens().alias("_toks")
-    ).select(
+    pattern as minhash_signatures)."""
+    return tokenized(spread(load_documents(spark, sf_dir)),
+                     "doc_id", "source").select(
         "doc_id", "source",
-        F.explode(_dsir_features(F.col("_toks"))).alias("f"))
+        F.explode(_dsir_features(F.col("toks"))).alias("f"))
 
 
 def stage_dsir_features(spark: SparkSession, sf_dir: str,
@@ -1705,10 +1712,7 @@ def pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derives from the same aggregation subtree, so the shuffle is
     # planned once and reused (ReusedExchange — the map side runs one
     # time; plan-checked in plans/r08). spread() parallelizes the
-    # one-file scan (the minhash_signatures pattern); the token
-    # array is materialized behind a projection so the bigram lambda
-    # reads an attribute (_bigrams docstring — the inline split
-    # re-evaluated per position was ~90% of this query's cost).
+    # one-file scan (the minhash_signatures pattern).
     # persisted: the term-TYPE table (vocabulary + bigram types, never
     # corpus-sized) feeds five consumers (ux, uy, pairs, both totals);
     # AQE's exchange reuse only deduplicated some of them (measured 6
@@ -1718,10 +1722,9 @@ def pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lsh_candidate_pairs.
     terms = session_persisted(
         spark, ("pmi_terms", sf_dir),
-        lambda: spread(load_documents(spark, sf_dir))
-        .select(_tokens().alias("_toks"))
+        lambda: tokenized(spread(load_documents(spark, sf_dir)))
         .select(F.explode(
-            F.concat(F.col("_toks"), _bigrams(F.col("_toks"))))
+            F.concat(F.col("toks"), _bigrams(F.col("toks"))))
             .alias("term"))
         .groupBy("term").agg(F.count("*").alias("c")),
         lazy=True)
@@ -1890,11 +1893,10 @@ def gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules are exercised by the crafted cross-engine differential in
     tests/test_quality_filters.py (the same pattern test_pii.py uses
     for the digit-free corpus)."""
-    # token + line arrays materialized behind a projection (each is
-    # referenced by several count columns — inline they would be
-    # re-split once per column, and the stopword probe once per
-    # stopword; see _bigrams for the interpreted-HOF rationale)
-    toks = F.col("_toks")
+    # the line array sits beside toks in the tokenized projection:
+    # several count columns read it, so inline it would be re-split
+    # once per column
+    toks = F.col("toks")
     lines = F.col("_lines")
     ltoks = F.transform(toks, lambda t: _ascii_lower(t))
     n_words = F.size(toks)
@@ -1922,8 +1924,8 @@ def gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_stop = F.size(F.array_intersect(
         F.array(*[F.lit(w) for w in GOPHER_STOPWORDS]),
         F.coalesce(ltoks, F.array().cast("array<string>"))))
-    counts = load_documents(spark, sf_dir).select(
-        "doc_id", "text", _tokens().alias("_toks"),
+    counts = tokenized(
+        load_documents(spark, sf_dir), "doc_id", "text",
         F.split("text", "\n").alias("_lines"),
     ).select(
         "doc_id",
@@ -2009,7 +2011,7 @@ def _c4_line_keep(line):
     """The C4 per-line predicate over a TRIMMED line column — one home
     shared by c4_clean and any future streaming twin. Terminal set is
     the paper's (. ! ? ")."""
-    words = F.size(F.split(line, r"[ \t\n\f\r]+"))
+    words = F.size(F.split(line, _WS_RUN))
     term = (line.endswith(".") | line.endswith("!")
             | line.endswith("?") | line.endswith('"'))
     return (term & (words >= C4_MIN_LINE_WORDS)
@@ -2111,8 +2113,8 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread: the round-robin exchange costs more than it saves on this
     cheap size/groupBy pass (measured 0.779x at sf1.0 with it)."""
     per_src = (
-        load_documents(spark, sf_dir)
-        .select("source", F.size(_tokens()).alias("n_tokens"))
+        tokenized(load_documents(spark, sf_dir), "source")
+        .select("source", F.size("toks").alias("n_tokens"))
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"),
              F.sum("n_tokens").cast("long").alias("total_tokens"))

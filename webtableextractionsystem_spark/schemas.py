@@ -82,10 +82,6 @@ TABLE_OUT = T.StructType(
     ]
 )
 
-TABLES_OUT = T.StructType(
-    [T.StructField("doc_id", T.StringType(), False)] + list(TABLE_OUT.fields)
-)
-
 # ---------------------------------------------------------------------------
 # Output: entities / relation triples
 # (shapes mirror /root/reference/file/json/entity.json and
@@ -100,14 +96,6 @@ ENTITY = T.StructType(
     ]
 )
 
-ENTITIES = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("seq", T.IntegerType()),
-    ]
-    + list(ENTITY.fields)
-)
-
 TRIPLE = T.StructType(
     [
         T.StructField("subj_name", T.StringType()),
@@ -116,14 +104,6 @@ TRIPLE = T.StructType(
         T.StructField("obj_name", T.StringType()),
         T.StructField("obj_url", T.StringType()),
     ]
-)
-
-TRIPLES = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("seq", T.IntegerType()),
-    ]
-    + list(TRIPLE.fields)
 )
 
 # ---------------------------------------------------------------------------

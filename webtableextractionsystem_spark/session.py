@@ -15,6 +15,9 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+_ZIP_PREFIX = "wtes_spark_pkg-"
+
+
 def package_zip(path: str | None = None) -> str:
     """Zip this package for shipping to executors — the programmatic
     equivalent of ``spark-submit --py-files`` (north rule). The zip
@@ -41,7 +44,7 @@ def package_zip(path: str | None = None) -> str:
         h.update(sources[rel])
     digest = h.hexdigest()
     if path is None:
-        path = f"/tmp/wtes_spark_pkg-{digest[:16]}.zip"
+        path = f"/tmp/{_ZIP_PREFIX}{digest[:16]}.zip"
     if os.path.exists(path):
         with zipfile.ZipFile(path) as zf:
             if zf.comment == digest.encode():
@@ -83,15 +86,6 @@ def get_spark(app_name: str = "wtes-spark", cores: int | None = None,
         # extraction kernel: bound Arrow batch size so mega-docs (H11) can't
         # blow worker memory; many small batches also smooth skew
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        # scan split size, env-parameterised (guide §6). Default left at
-        # Spark's 128m: a 32m local override was MEASURED SLOWER on the
-        # TPC-H files (pricing 1.45/1.65/1.93 s at 128m vs
-        # 1.58/1.82/3.99 s at 32m; revenue likewise) — per-task reader
-        # init outweighs the decode parallelism at these sizes. A real
-        # cluster doing large sequential scans sets it to 512m-1g to
-        # cut task count feeding shuffles (guide §2.2/§6).
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -99,7 +93,18 @@ def get_spark(app_name: str = "wtes-spark", cores: int | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # ship the package to python workers (works for local AND cluster
-    # masters; equivalent to spark-submit --py-files)
-    spark.sparkContext.addPyFile(package_zip())
+    ship_package(spark)
     return spark
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Ship the package zip to the Python workers (local AND cluster
+    masters; the equivalent of spark-submit --py-files) — once per
+    SparkContext. A later call on the same context neither re-hashes
+    the sources nor adds a second zip: after a source edit mid-session
+    a second zip would put two package copies on new workers'
+    sys.path while reused workers keep the modules they imported
+    first."""
+    sc = spark.sparkContext
+    if not any(f.startswith(_ZIP_PREFIX) for f in sc._python_includes):
+        sc.addPyFile(package_zip())

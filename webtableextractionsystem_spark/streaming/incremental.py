@@ -316,11 +316,10 @@ def streaming_cms(spark: SparkSession, docs_dir: str,
     state is bounded by DxW forever (the whole point of a sketch —
     unbounded corpus, constant state), so NoTimeout state is not a
     growth risk here, unlike the dedup operators' per-key state."""
-    from ..operators.textstats import _cms_hash_structs, _tokens
+    from ..operators.textstats import _cms_hash_structs, token_rows
 
     sketch = (
-        _docs_stream(spark, docs_dir)
-        .select(F.explode(_tokens()).alias("token"))
+        token_rows(_docs_stream(spark, docs_dir))
         .select(F.explode(_cms_hash_structs()).alias("h"))
         .groupBy(F.col("h.d").alias("d"), F.col("h.c").alias("c"))
         .agg(F.count("*").alias("n"))

@@ -152,10 +152,11 @@ def streaming_neardup(spark: SparkSession, input_dir: str, output_dir: str,
     verify stage into the stream and is equivalence-tested against the
     batch pipeline."""
     from ..operators.dedup import banded_keys, row_minhash
+    from ..operators.textstats import tokenized
 
     stream = spark.readStream.schema(
         "doc_id long, text string").parquet(input_dir)
-    banded = banded_keys(row_minhash(stream))
+    banded = banded_keys(row_minhash(tokenized(stream, "doc_id")))
     flagged = banded.groupBy("band", "band_key").applyInPandasWithState(
         _neardup_fn,
         outputStructType=NEARDUP_OUTPUT,
@@ -267,23 +268,17 @@ def streaming_neardup_verified(spark: SparkSession, input_dir: str,
         _shingles,
         banded_keys,
         jaccard_verified,
-        row_minhash,
+        shingle_minhash,
     )
+    from ..operators.textstats import tokenized
 
     shingle_root = f"{state_dir}/shingles"
     metrics_root = f"{state_dir}/metrics"
 
     def stage_batch(batch, batch_id: int) -> None:
-        from ..operators.textstats import _tokens
-
-        # token array materialized behind a projection before the gram
-        # build (_shingles docstring: interpreted HOF lambdas
-        # re-evaluate the inline split per gram position)
-        staged = batch.select(
-            "doc_id", _tokens().alias("_toks"),
-        ).select(
+        staged = tokenized(batch, "doc_id").select(
             "doc_id",
-            _shingles(toks=F.col("_toks")).alias("sh"),
+            _shingles(F.col("toks")).alias("sh"),
             F.pmod(F.xxhash64("doc_id"), F.lit(_N_DBUCKETS))
             .alias("dbucket"),
         )
@@ -363,7 +358,7 @@ def streaming_neardup_verified(spark: SparkSession, input_dir: str,
     fs.mkdirs(path)
     stream = spark.readStream.schema(
         "doc_id long, sh array<string>").parquet(shingle_root)
-    banded = banded_keys(row_minhash(stream, shingles=F.col("sh")))
+    banded = banded_keys(shingle_minhash(stream, F.col("sh")))
     pairs = banded.groupBy("band", "band_key").applyInPandasWithState(
         _members_fn,
         outputStructType=NEARDUP_PAIR_OUTPUT,
