@@ -39,11 +39,11 @@ def test_media_schema_and_determinism(spark, media):
 
 def test_synth_media_payloads_real_decode(media):
     """Every synthesized payload decodes through the REAL codec path and
-    matches its declared meta dimensions — no fake fallback anywhere."""
+    matches its declared meta dimensions."""
     rows = media.collect()
     mimes = set()
     for r in rows:
-        img = MM.decode_image(bytes(r["payload"]))  # fake NOT set
+        img = MM.decode_image(bytes(r["payload"]))
         assert img.shape == (r["meta"]["height"], r["meta"]["width"], 3)
         mimes.add(r["meta"]["mime"])
     assert mimes == {"image/x-portable-pixmap", "image/bmp", "image/png",
@@ -60,9 +60,6 @@ def test_decode_stub_raises_without_fake():
         MM.decode_image(b"P6 garbage")
     with pytest.raises(ValueError):
         MM.decode_image(b"BM\x01\x02")
-    # with fake=True both fall back to the deterministic fake decoder
-    assert MM.decode_image(b"P6 garbage", fake=True).shape[2] == 3
-    assert MM.decode_image(b"abc", fake=True).shape[2] == 3
 
 
 def _test_img():
@@ -76,7 +73,7 @@ def test_ppm_roundtrip_real_decode():
     import numpy as np
 
     img = _test_img()
-    out = MM.decode_image(MM.encode_ppm(img))  # fake NOT set: real path
+    out = MM.decode_image(MM.encode_ppm(img))
     assert np.array_equal(out, img)
     # header comments + maxval parsing
     payload = b"P6\n# a comment\n7 5\n255\n" + img.tobytes()
@@ -200,12 +197,9 @@ def test_jpeg_roundtrip_and_variants():
     gflat = np.full((8, 8), 120, dtype=np.uint8)
     assert np.array_equal(J.decode_jpeg(J.encode_jpeg(gflat, 85)),
                           np.full((8, 8, 3), 120, dtype=np.uint8))
-    # header-shaped garbage diagnoses as ValueError, and decode_image's
-    # fake fallback therefore still decodes it
+    # header-shaped garbage diagnoses as ValueError
     with pytest.raises(ValueError):
         J.decode_jpeg(b"\xff\xd8\xff\xc0\x00\x04\x08")
-    assert MM.decode_image(b"\xff\xd8\xff\xc0\x00\x04\x08",
-                           fake=True).shape[2] == 3
     # decode_image sniffs the JPEG magic onto the real path
     assert np.array_equal(MM.decode_image(J.encode_jpeg(flat, 85)), flat)
 
@@ -328,7 +322,7 @@ def test_audio_features_real_decode(spark):
 
 
 def test_image_features_on_real_payloads(spark):
-    """End-to-end fake=False: real PPM/BMP payloads through the batched
+    """End to end: real PPM/BMP payloads through the batched
     Arrow feature pass — mean channel features must match numpy."""
     import numpy as np
 
@@ -341,7 +335,7 @@ def test_image_features_on_real_payloads(spark):
               "mime": "image/bmp"})]
     media = spark.createDataFrame(rows, MM.MEDIA)
     got = {r["media_ref"]: r for r in
-           MM.image_features(media, fake=False).collect()}
+           MM.image_features(media).collect()}
     want_mean = img.mean(axis=(0, 1)) / 255.0
     for ref in ("m://ppm", "m://bmp"):
         r = got[ref]
@@ -350,7 +344,7 @@ def test_image_features_on_real_payloads(spark):
 
 
 def test_image_features_shape(media):
-    feats = MM.image_features(media, fake=True)
+    feats = MM.image_features(media)
     rows = feats.collect()
     assert all(len(r["features"]) == MM.N_IMG_FEATURES for r in rows)
     assert all(0 <= r["features"][0] <= 1 for r in rows)
@@ -358,7 +352,7 @@ def test_image_features_shape(media):
 
 
 def test_resize_binary_roundtrip(media):
-    small = MM.resize_images(media, target=8, fake=True)
+    small = MM.resize_images(media, target=8)
     rows = small.collect()
     assert all(len(bytes(r["payload"])) == 8 * 8 * 3 for r in rows)
     assert all(r["width"] == 8 for r in rows)
@@ -613,7 +607,7 @@ def test_png_decodes_reference_repo_real_files():
     assert len(pngs) >= 7
     shapes = set()
     for p in pngs:
-        img = MM.decode_image(open(p, "rb").read())  # real path, no fake
+        img = MM.decode_image(open(p, "rb").read())
         assert img.ndim == 3 and img.shape[2] == 3
         shapes.add(img.shape[:2])
     assert (72, 72) in shapes and (16, 16) in shapes
@@ -1096,6 +1090,70 @@ def test_jpeg_zrl_past_block_end_raises():
                + b"\x00" + b"\xff\xd9")
     with pytest.raises(ValueError, match="AC run past block end"):
         J.decode_jpeg(payload)
+
+
+def test_jpeg_sequential_eobn_symbol_raises():
+    """T.81 F.1.2.2 defines no AC symbol (r, 0) with 0 < r < 15 in a
+    sequential scan: EOBn runs exist only in progressive AC scans. A
+    SOF0 stream that codes one is corrupt and must raise, not read it as
+    a run of zeros and decode a flat image."""
+    import pytest
+
+    from webtableextractionsystem_spark.operators import jpeg as J
+
+    # 1-bit Huffman tables: the only DC symbol is size 0; the AC table
+    # maps '0' to 0x10 (EOB1 in a progressive scan) and '1' to EOB, so
+    # the entropy byte 0x3F reads DC=0, then 0x10, then EOB
+    dqt = b"\xff\xdb\x00\x43\x00" + b"\x01" * 64
+    dht_dc = b"\xff\xc4\x00\x14\x00" + bytes([1] + [0] * 15) + b"\x00"
+    dht_ac = b"\xff\xc4\x00\x15\x10" + bytes([2] + [0] * 15) + b"\x10\x00"
+    sof = b"\xff\xc0\x00\x0b\x08\x00\x08\x00\x08\x01\x01\x11\x00"
+    sos = b"\xff\xda\x00\x08\x01\x01\x00\x00\x3f\x00"
+    payload = (b"\xff\xd8" + dqt + dht_dc + dht_ac + sof + sos
+               + b"\x3f" + b"\xff\xd9")
+    with pytest.raises(ValueError, match="EOBn"):
+        J.decode_jpeg(payload)
+
+
+_ENCODE_JPEG_MD5 = {
+    ("gray", "444", 0, False): "4b416aad8a538cb070df74bef538dbbc",
+    ("gray", "444", 0, True): "2544d282854cf749d9758f0a6bb0c608",
+    ("gray", "444", 3, False): "a3aeaef6fd2b4fdb781e08180c70d686",
+    ("gray", "444", 3, True): "66820a63975c7a1943a6df4e7411dfff",
+    ("rgb", "444", 0, False): "2189c64d2ee90e2e8fee5da99f571990",
+    ("rgb", "444", 0, True): "2482f178e9cc29f45085bba5c8eb7567",
+    ("rgb", "444", 3, False): "b620525db7f0682b2e9eedf485e41705",
+    ("rgb", "444", 3, True): "b4c06df48cefa69306b508b471e5f679",
+    ("rgb", "420", 0, False): "c8aa1957c85ad241f3b282aac67bb9a3",
+    ("rgb", "420", 0, True): "a4f7ff55b4de8a4b25edd8ef14fd93b2",
+    ("rgb", "420", 3, False): "db915007b25cdb5b0238553179832b36",
+    ("rgb", "420", 3, True): "8c9276fcc0a03f5bd90ac959fb954d66",
+    ("rgb", "422", 0, False): "61184123382d5e051a0855f288d607e8",
+    ("rgb", "422", 0, True): "d40e9235a67510a2c8f4e27b1b41436e",
+    ("rgb", "422", 3, False): "f571a2292c4ec71936fad7b15240e06c",
+    ("rgb", "422", 3, True): "eef2eef3639f89e8c446db7f02e5aa4e",
+}
+
+
+def test_encode_jpeg_bytes_pinned():
+    """encode_jpeg's exact bytes over a seeded matrix: gray and RGB,
+    each chroma subsampling, restart interval 0 and 3, baseline and
+    progressive. A change to quantization, the MCU walk, the scan
+    script, the entropy coder or a header shows as a changed digest."""
+    import hashlib
+
+    import numpy as np
+
+    from webtableextractionsystem_spark.operators import jpeg as J
+
+    rng = np.random.default_rng(13)
+    imgs = {"rgb": rng.integers(0, 256, size=(19, 23, 3), dtype=np.uint8),
+            "gray": rng.integers(0, 256, size=(19, 23), dtype=np.uint8)}
+    got = {(name, sub, ri, prog): hashlib.md5(J.encode_jpeg(
+               imgs[name], 75, restart_interval=ri, subsampling=sub,
+               progressive=prog)).hexdigest()
+           for name, sub, ri, prog in _ENCODE_JPEG_MD5}
+    assert got == _ENCODE_JPEG_MD5
 
 
 def test_jpeg_fill_bytes_and_lengthless_markers():
@@ -3079,8 +3137,8 @@ def test_frame_sample_skips_audio_and_frameless_media(spark):
 def test_jpeg_oversized_dc_size_symbol_raises_baseline():
     """T.81 F.1: DC size (SSSS) is at most 11 at 8-bit precision — a
     corrupt table symbol of 100 must raise ValueError, not overflow
-    the coefficient store with a 2^100 magnitude (OverflowError
-    escaped decode_image's ValueError-only fake fallback)."""
+    the coefficient store with a 2^100 magnitude (an OverflowError
+    would escape callers that handle the codecs' ValueError)."""
     import pytest
 
     from webtableextractionsystem_spark.operators import jpeg as J
@@ -3094,8 +3152,6 @@ def test_jpeg_oversized_dc_size_symbol_raises_baseline():
                + b"\x00\xff\xd9")
     with pytest.raises(ValueError, match="DC size symbol"):
         J.decode_jpeg(payload)
-    # and the batched image path must fall back, not crash the batch
-    assert MM.decode_image(payload, fake=True).shape[2] == 3
 
 
 def _entropy_bytes(bits: str) -> bytes:

@@ -8,7 +8,8 @@ gets none, and the answers agree across the two layouts. The store
 owns every relation it hands out, so clear_session_caches() leaves no
 cached block and no staged table behind. The token array
 (textstats.tokenized) is split once per documents scan and never
-inside a higher-order function's lambda.
+inside a higher-order function's lambda, and a hash array read more
+than once is hashed once per row.
 """
 
 import re
@@ -159,3 +160,27 @@ def test_tokenizer_split_once_per_scan_never_in_lambda(spark, tmp_path):
     finally:
         _cache.clear_session_caches()
     assert len(tokenizing) >= 30, tokenizing
+
+
+def test_hash_arrays_hashed_once_per_row(spark):
+    """A per-row hash array that is read more than once is built in its
+    own projection. The rolling hash's per-token md5 array appears once
+    in the optimized plan, not once per read. The curation funnel
+    explodes its band and 8-gram hash arrays without an inferred
+    ``size(...) > 0`` filter, which would rebuild them below the
+    projection that defines them."""
+    from webtableextractionsystem_spark import entry_queries
+
+    qs = entry_queries.queries()
+    try:
+        rolling = qs["q_doc_rolling_hash"](spark, SF)._jdf \
+            .queryExecution().optimizedPlan().toString()
+        assert rolling.count("md5(") == 1, rolling
+        funnel = qs["q_doc_curation_funnel"](spark, SF)._jdf \
+            .queryExecution().optimizedPlan().toString()
+        rebuilt = [line for line in funnel.splitlines()
+                   if re.match(r"[\s:+\-]*Filter ", line)
+                   and ("md5(" in line or "transform(" in line)]
+        assert not rebuilt, "\n".join(rebuilt)
+    finally:
+        _cache.clear_session_caches()

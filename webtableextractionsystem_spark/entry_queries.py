@@ -184,13 +184,13 @@ def x_er_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media e2e through the REAL codec path (pinned-literal oracle —
     image decode is not SQL-expressible): media spans -> deterministic
-    encoded PPM/BMP/PNG payloads -> batched decode + features with
-    fake=False, so a codec regression fails the driver gate."""
+    encoded PPM/BMP/PNG payloads -> batched decode + features, so a
+    codec regression fails the driver gate."""
     from .operators.multimodal import image_features, synth_media_for_spans
 
     spans = spans_view(_extracted(spark))
     media = synth_media_for_spans(spans)
-    return image_features(media, fake=False).select(
+    return image_features(media).select(
         "media_ref", "width", "height", F.size("features").alias("n_features")
     )
 

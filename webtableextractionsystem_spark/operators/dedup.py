@@ -970,9 +970,14 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = base.select(
         "doc_id", "quality_ok", "lang_pred",
         (F.col("doc_id") != F.min("doc_id").over(w)).alias("exact_dup"))
-    # near-dup: band equi-self-join + the shared Jaccard verifier
-    bk = base.select("doc_id", F.explode("bands").alias("bk")) \
-        .select("doc_id", "bk.band", "bk.band_key")
+    # near-dup: band equi-self-join + the shared Jaccard verifier. The
+    # explodes below are explode_outer + IS NOT NULL (the
+    # textstats.token_rows idiom): a plain explode of a base attribute
+    # makes the optimizer infer a size(...) > 0 filter and push it below
+    # base with the band/8-gram md5 expressions substituted in
+    bk = (base.select("doc_id", F.explode_outer("bands").alias("bk"))
+          .where(F.col("bk").isNotNull())
+          .select("doc_id", "bk.band", "bk.band_key"))
     cand = _band_selfjoin(bk)
     near = (
         jaccard_verified(cand, base.select("doc_id", "sh"))
@@ -982,11 +987,13 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decontamination: DISTINCT broadcast bench side, equi-join probe
     bench = (
         base.where(F.col("doc_id") < DECON_BENCH_MAX_ID)
-        .select(F.explode("g8").alias("h")).distinct()
+        .select(F.explode_outer("g8").alias("h"))
+        .where(F.col("h").isNotNull()).distinct()
     )
     contam = (
         base.where(F.col("doc_id") >= DECON_BENCH_MAX_ID)
-        .select("doc_id", F.explode("g8").alias("h"))
+        .select("doc_id", F.explode_outer("g8").alias("h"))
+        .where(F.col("h").isNotNull())
         .join(F.broadcast(bench), "h")
         .select("doc_id").distinct()
         .withColumn("contaminated", F.lit(True))

@@ -1,5 +1,4 @@
-"""JPEG (JFIF) codec in pure numpy/stdlib — the last media format the
-multimodal family stubbed, now real.
+"""JPEG (JFIF) codec in pure numpy/stdlib.
 
 Scope (honest and tested): baseline sequential DCT (SOF0) AND
 progressive DCT (SOF2 — spectral selection, successive approximation,
@@ -10,12 +9,22 @@ divide evenly — 4:4:4, 4:2:0 (the overwhelming real-web default) and
 nearest-neighbor (sample replication — T.81 leaves the filter to the
 decoder). The paired encoder emits 4:4:4 by default, 4:2:0 / 4:2:2 on
 request (box-averaged chroma), and SOF2 with the standard libjpeg scan
-script on ``progressive=True`` — over the SAME quantized coefficients
-as baseline, so the two decodes are bit-identical (the tests'
-invariant). Optional restart intervals both ways and in every
-progressive scan. Arithmetic-coded, hierarchical, lossless, and 12-bit
-streams raise ValueError naming the unsupported feature — corrupt data
-also ValueError; the magic-sniff boundary stays in decode_image.
+script on ``progressive=True``. Optional restart intervals both ways and
+in every progressive scan. Arithmetic-coded, hierarchical, lossless, and
+12-bit streams raise ValueError naming the unsupported feature — corrupt
+data also ValueError; the magic-sniff boundary stays in decode_image.
+
+One coefficient pipeline serves both modes, as in libjpeg. A frame
+(``_Frame``) holds one int32 zigzag-ordered coefficient buffer per
+component; every scan walks it through one MCU walk (``_mcus``) and one
+scan coder per direction (``_encode_scan`` / ``_decode_scan``) over a
+spectral band [Ss, Se] at a successive-approximation stage (Ah, Al).
+A sequential SOF0 stream is the one-scan case: the band 0..63 at
+Ah=Al=0 over all components (T.81 §F.1.2). The encoder quantizes each
+block once; the decoder runs one ``_reconstruct`` (dequantize, IDCT,
+crop, upsample, colour-convert) after the SOF0 scan or at a SOF2 EOI.
+So a baseline and a progressive stream of one image decode
+bit-identically.
 
 Everything is from the public standard: ITU-T T.81 — zigzag order
 (§A.3.6), quantization + Huffman tables from Annex K (the "typical"
@@ -26,9 +35,11 @@ coders); JFIF YCbCr from the JFIF 1.02 spec. JPEG is lossy: round-trips
 assert PSNR bounds, not equality (flat images survive near-exactly —
 DC-only blocks).
 
-DCT as an 8x8 matrix sandwich (T @ B @ T.T) over numpy float64; entropy
-coding is bit-level Python — fine for the thumbnail-scale media the
-pipeline decodes, and it runs inside the same bounded Arrow batches
+DCT as an 8x8 matrix sandwich (T @ B @ T.T) over numpy float64, one
+block at a time: a batched einsum sums in a different order and can
+round a coefficient or pixel sitting on a .5 boundary the other way.
+Entropy coding is bit-level Python — fine for the thumbnail-scale media
+the pipeline decodes, and it runs inside the same bounded Arrow batches
 (``_per_payload`` in multimodal.py) as every other codec.
 """
 
@@ -283,22 +294,79 @@ def _dht(tclass: int, tid: int, bits, values) -> bytes:
                 + bytes(values))
 
 
+class _Frame:
+    """One frame's T.81 geometry and coefficient store, shared by the
+    encoder, the decoder and every scan of either mode. ``comps`` is the
+    SOF's [(id, h, v, tq)]. A one-component frame is non-interleaved
+    (A.2.2): its sampling factors do not shape MCUs. ``coef[ci]`` is
+    (blocks_y, blocks_x, 64) int32 in zigzag order over the MCU-padded
+    grid; ``sizes[ci]`` is the component's true (width, height) in
+    samples (A.1.1 ceil dims)."""
+
+    def __init__(self, fh: int, fw: int, comps: list):
+        if fh == 0 or fw == 0:
+            raise ValueError("bad JPEG dimensions")
+        self.fh, self.fw, self.comps = fh, fw, comps
+        self.factors = ([(1, 1)] if len(comps) == 1
+                        else [(hi, vi) for _, hi, vi, _ in comps])
+        self.hmax = max(hi for hi, _ in self.factors)
+        self.vmax = max(vi for _, vi in self.factors)
+        for hi, vi in self.factors:
+            if self.hmax % hi or self.vmax % vi:
+                raise ValueError(
+                    "fractional JPEG sampling-factor ratios unsupported")
+        self.mcus_x = (fw + 8 * self.hmax - 1) // (8 * self.hmax)
+        self.mcus_y = (fh + 8 * self.vmax - 1) // (8 * self.vmax)
+        self.sizes = [((fw * hi + self.hmax - 1) // self.hmax,
+                       (fh * vi + self.vmax - 1) // self.vmax)
+                      for hi, vi in self.factors]
+        self.coef = [np.zeros((self.mcus_y * vi, self.mcus_x * hi, 64),
+                              dtype=np.int32) for hi, vi in self.factors]
+
+
+def _mcus(frame: _Frame, cis: list, restart_interval: int):
+    """The MCU walk of one scan (T.81 A.2), for the encoder and the
+    decoder alike: yield (restart, units) per MCU, where ``units`` lists
+    its (scan position, component, coefficient block) data units in
+    coding order and ``restart`` is the 1-based number of the RSTn due
+    before it (0 when none). A multi-component scan interleaves h*v
+    blocks per component over the MCU-padded grid; a one-component scan
+    codes one block per MCU over the component's true block grid."""
+    if len(cis) > 1:
+        rows, cols = frame.mcus_y, frame.mcus_x
+    else:
+        cw, ch = frame.sizes[cis[0]]
+        rows, cols = (ch + 7) // 8, (cw + 7) // 8
+    layout = []
+    for i, ci in enumerate(cis):
+        hi, vi = frame.factors[ci] if len(cis) > 1 else (1, 1)
+        layout += [(i, ci, hi, vi, y, x)
+                   for y in range(vi) for x in range(hi)]
+    for mcu in range(rows * cols):
+        my, mx = divmod(mcu, cols)
+        restart = (mcu // restart_interval if restart_interval
+                   and mcu % restart_interval == 0 else 0)
+        yield restart, [(i, ci, frame.coef[ci][my * vi + y, mx * hi + x])
+                        for i, ci, hi, vi, y, x in layout]
+
+
+# --- encoder -----------------------------------------------------------------
+
 def encode_jpeg(img: np.ndarray, quality: int = 85,
                 restart_interval: int = 0,
                 subsampling: str = "444",
                 progressive: bool = False) -> bytes:
-    """HxW (gray) or HxWx3 uint8 -> baseline JFIF JPEG (Annex K tables).
-    ``subsampling`` picks the luma sampling factors: '444' (default,
-    bit-identical to the pre-subsampling encoder), '420' (2x2 — the
-    overwhelming real-web default) or '422' (2x1); chroma is box-averaged
-    down accordingly. ``restart_interval`` > 0 emits a DRI segment and
-    RSTn markers every that many MCUs (DC predictors reset, stream
-    byte-aligned) — the error-resilience feature real encoders use, kept
-    selectable so the decoder's restart path is round-trip tested.
-    ``progressive=True`` emits SOF2 with the standard libjpeg-style scan
-    script (spectral selection + successive approximation) over the SAME
-    quantized coefficients, so its decode is bit-identical to the
-    baseline stream's — the invariant the progressive tests pin."""
+    """HxW (gray) or HxWx3 uint8 -> JFIF JPEG (Annex K tables).
+    ``subsampling`` picks the luma sampling factors: '444' (default),
+    '420' (2x2 — the overwhelming real-web default) or '422' (2x1);
+    chroma is box-averaged down accordingly. ``restart_interval`` > 0
+    emits a DRI segment and RSTn markers every that many MCUs (DC
+    predictors reset, stream byte-aligned) — the error-resilience
+    feature real encoders use, kept selectable so the decoder's restart
+    path is round-trip tested. The default SOF0 stream is one sequential
+    scan; ``progressive=True`` emits SOF2 with the standard libjpeg-style
+    scan script over the same quantized coefficients, so the two decode
+    bit-identically."""
     gray = img.ndim == 2
     h, w = img.shape[:2]
     if h == 0 or w == 0:
@@ -317,111 +385,156 @@ def encode_jpeg(img: np.ndarray, quality: int = 85,
             f"subsampling {subsampling!r} unsupported (444/420/422)")
     if gray:
         planes = [img.astype(np.float64)]
-        quants = [qlum]
+        tables = [(qlum, DC_LUM, AC_LUM)]
         factors = [(1, 1)]
     else:
-        factors = [lf, (1, 1), (1, 1)]
         ycc = _rgb_to_ycbcr(img[..., :3])
         planes = [ycc[..., 0],
                   _box_downsample(ycc[..., 1], lf[0], lf[1]),
                   _box_downsample(ycc[..., 2], lf[0], lf[1])]
-        quants = [qlum, qchr, qchr]
+        tables = [(qlum, DC_LUM, AC_LUM), (qchr, DC_CHR, AC_CHR)]
+        factors = [lf, (1, 1), (1, 1)]
+    # component ci is id ci + 1 and uses table set min(ci, 1)
+    frame = _Frame(h, w, [(ci + 1, hi, vi, min(ci, 1))
+                          for ci, (hi, vi) in enumerate(factors)])
 
-    hmax = max(hi for hi, _ in factors)
-    vmax = max(vi for _, vi in factors)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    # pad each plane to its MCU grid by edge replication
-    planes = [
-        np.pad(p, ((0, mcus_y * 8 * vi - p.shape[0]),
-                   (0, mcus_x * 8 * hi - p.shape[1])), mode="edge")
-        for (hi, vi), p in zip(factors, planes)
-    ]
+    for p, coef, (_, _, _, tq) in zip(planes, frame.coef, frame.comps):
+        by, bx = coef.shape[:2]
+        # pad the plane to its MCU grid by edge replication
+        p = np.pad(p, ((0, by * 8 - p.shape[0]), (0, bx * 8 - p.shape[1])),
+                   mode="edge")
+        q = tables[tq][0]
+        for y in range(by):
+            for x in range(bx):
+                block = p[y * 8:y * 8 + 8, x * 8:x * 8 + 8] - 128.0
+                coef[y, x] = np.round((_T @ block @ _T.T) / q).reshape(
+                    -1)[ZIGZAG]
 
-    if progressive:
-        return _encode_progressive(planes, factors, quants, gray, h, w,
-                                   restart_interval, mcus_x, mcus_y)
+    cis = list(range(len(factors)))
+    if not progressive:
+        script = [(cis, 0, 63, 0, 0)]
+    elif gray:
+        script = [(cis, 0, 0, 0, 1), ([0], 1, 63, 0, 2),
+                  ([0], 1, 63, 2, 1), (cis, 0, 0, 1, 0),
+                  ([0], 1, 63, 1, 0)]
+    else:
+        # libjpeg's default: DC first at Al=1, luma AC split 1-5/6-63 at
+        # Al=2, chroma AC at Al=1, then one refinement pass per band
+        script = [(cis, 0, 0, 0, 1),
+                  ([0], 1, 5, 0, 2), ([2], 1, 63, 0, 1),
+                  ([1], 1, 63, 0, 1), ([0], 6, 63, 0, 2),
+                  ([0], 1, 63, 2, 1), (cis, 0, 0, 1, 0),
+                  ([2], 1, 63, 1, 0), ([1], 1, 63, 1, 0),
+                  ([0], 1, 63, 1, 0)]
 
-    dc_tabs = [_build_code_table(*DC_LUM)] + (
-        [] if gray else [_build_code_table(*DC_CHR)] * 2)
-    ac_tabs = [_build_code_table(*AC_LUM)] + (
-        [] if gray else [_build_code_table(*AC_CHR)] * 2)
-
-    bw = _BitWriter()
-    prev_dc = [0] * len(planes)
-
-    def encode_block(ci: int, block: np.ndarray) -> None:
-        coefs = _T @ block @ _T.T
-        q = np.round(coefs / quants[ci]).astype(np.int64)
-        zz = q.reshape(-1)[ZIGZAG]
-        diff = int(zz[0]) - prev_dc[ci]
-        prev_dc[ci] = int(zz[0])
-        size, code = _encode_value(diff)
-        hc, hl = dc_tabs[ci][size]
-        bw.write(hc, hl)
-        if size:
-            bw.write(code, size)
-        run = 0
-        last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
-        for k in range(1, 64):
-            v = int(zz[k])
-            if k > last_nz:
-                break
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                hc, hl = ac_tabs[ci][0xF0]  # ZRL
-                bw.write(hc, hl)
-                run -= 16
-            size, code = _encode_value(v)
-            hc, hl = ac_tabs[ci][(run << 4) | size]
-            bw.write(hc, hl)
-            bw.write(code, size)
-            run = 0
-        if last_nz < 63:
-            hc, hl = ac_tabs[ci][0x00]  # EOB
-            bw.write(hc, hl)
-
-    mcu = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bw.restart_marker(mcu // restart_interval - 1)
-                prev_dc = [0] * len(planes)
-            mcu += 1
-            for ci, (hi, vi) in enumerate(factors):
-                for byi in range(vi):
-                    for bxi in range(hi):
-                        by = (my * vi + byi) * 8
-                        bx = (mx * hi + bxi) * 8
-                        encode_block(
-                            ci, planes[ci][by:by + 8, bx:bx + 8] - 128.0)
-    scan = bw.flush()
-
-    ncomp = 1 if gray else 3
-    sof_comps = b"".join(
-        bytes([i + 1, (factors[i][0] << 4) | factors[i][1],
-               0 if i == 0 else 1]) for i in range(ncomp))
-    sos_comps = b"".join(
-        bytes([i + 1, 0x00 if i == 0 else 0x11]) for i in range(ncomp))
     out = bytearray(b"\xff\xd8")  # SOI
     out += _seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    out += _dqt(0, qlum)
-    if not gray:
-        out += _dqt(1, qchr)
-    out += _seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-                + bytes([ncomp]) + sof_comps)
-    out += _dht(0, 0, *DC_LUM) + _dht(1, 0, *AC_LUM)
-    if not gray:
-        out += _dht(0, 1, *DC_CHR) + _dht(1, 1, *AC_CHR)
+    for tid, (q, _, _) in enumerate(tables):
+        out += _dqt(tid, q)
+    out += _seg(0xC2 if progressive else 0xC0,
+                bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
+                + bytes([len(cis)]) + b"".join(
+                    bytes([cid, (hi << 4) | vi, tq])
+                    for cid, hi, vi, tq in frame.comps))
+    for tid, (_, dc, ac) in enumerate(tables):
+        out += _dht(0, tid, *dc) + _dht(1, tid, *ac)
     if restart_interval:
         out += _seg(0xDD, restart_interval.to_bytes(2, "big"))
-    out += _seg(0xDA, bytes([ncomp]) + sos_comps + b"\x00\x3f\x00")
-    out += scan
+    codes = [(_build_code_table(*dc), _build_code_table(*ac))
+             for _, dc, ac in tables]
+    for scan in script:
+        scis, ss, se, ah, al = scan
+        out += _seg(0xDA, bytes([len(scis)]) + b"".join(
+            bytes([ci + 1, min(ci, 1) * 0x11]) for ci in scis)
+            + bytes([ss, se, (ah << 4) | al]))
+        out += _encode_scan(frame, codes, restart_interval, *scan)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
+
+def _encode_scan(frame, codes, restart_interval, cis, ss, se, ah,
+                 al) -> bytes:
+    """Entropy-code one scan: band [ss, se] of components ``cis`` at
+    successive-approximation stage (ah, al), T.81 Annex G. The
+    sequential scan is the band 0..63 at Ah=Al=0 (§F.1.2): each block's
+    DC difference then its AC run/size symbols. EOB runs are flushed per
+    block (EOB0), so the Annex K tables — which carry no EOBn>0 symbols —
+    suffice."""
+    bw = _BitWriter()
+    preds = dict.fromkeys(cis, 0)
+    for restart, units in _mcus(frame, cis, restart_interval):
+        if restart:
+            bw.restart_marker(restart - 1)
+            preds = dict.fromkeys(cis, 0)
+        for _, ci, blk in units:
+            dctab, actab = codes[frame.comps[ci][3]]
+            if ss == 0:
+                v = int(blk[0])
+                if ah:
+                    bw.write((v >> al) & 1, 1)
+                else:
+                    t = v >> al  # arithmetic shift per G.1.2.1
+                    size, code = _encode_value(t - preds[ci])
+                    preds[ci] = t
+                    bw.write(*dctab[size])
+                    if size:
+                        bw.write(code, size)
+            if se:
+                (_encode_ac_refine if ah else _encode_ac_first)(
+                    bw, actab, blk, max(ss, 1), se, al)
+    return bw.flush()
+
+
+def _encode_ac_first(bw, actab, blk, ss, se, al) -> None:
+    r = 0
+    for k in range(ss, se + 1):
+        v = int(blk[k])
+        t = abs(v) >> al  # AC point transform: toward zero
+        if t == 0:
+            r += 1
+            continue
+        while r > 15:
+            bw.write(*actab[0xF0])  # ZRL
+            r -= 16
+        size, code = _encode_value(t if v > 0 else -t)
+        bw.write(*actab[(r << 4) | size])
+        bw.write(code, size)
+        r = 0
+    if r > 0:
+        bw.write(*actab[0x00])  # EOB
+
+
+def _encode_ac_refine(bw, actab, blk, ss, se, al) -> None:
+    r = 0
+    pending = []  # correction bits buffered until the next symbol
+    for k in range(ss, se + 1):
+        v = int(blk[k])
+        t = abs(v) >> al
+        if t == 0:
+            r += 1
+            continue
+        while r > 15:
+            bw.write(*actab[0xF0])
+            r -= 16
+            for b in pending:
+                bw.write(b, 1)
+            pending = []
+        if t > 1:  # already nonzero at the prior precision
+            pending.append(t & 1)
+            continue
+        bw.write(*actab[(r << 4) | 1])
+        bw.write(1 if v > 0 else 0, 1)  # sign: 1 = positive
+        for b in pending:
+            bw.write(b, 1)
+        pending = []
+        r = 0
+    if r > 0 or pending:
+        bw.write(*actab[0x00])
+        for b in pending:
+            bw.write(b, 1)
+
+
+# --- decoder -----------------------------------------------------------------
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
     """Baseline (SOF0) or progressive (SOF2) JFIF JPEG -> HxWx3 uint8
@@ -444,9 +557,9 @@ def _decode_jpeg_impl(payload: bytes) -> np.ndarray:
     quant: dict[int, np.ndarray] = {}
     huff_dc: dict[int, dict] = {}
     huff_ac: dict[int, dict] = {}
-    frame = None
+    sof = None  # (height, width, comps) of the last SOF
     progressive = False
-    prog = None  # per-component coefficient state, built lazily at 1st SOS
+    frame = None  # coefficient store, built at the first SOS
     restart_interval = 0
 
     def u16(o):
@@ -462,11 +575,11 @@ def _decode_jpeg_impl(payload: bytes) -> np.ndarray:
         marker = payload[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
-            if prog is not None:
+            if frame is not None:
                 # progressive: the frame is whatever the scans built up
                 # (a truncated-but-valid prefix renders coarser, exactly
                 # like a browser's progressive paint)
-                return _reconstruct_progressive(prog, quant)
+                return _reconstruct(frame, quant)
             raise ValueError("JPEG stream has no scan")
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:
             # TEM / RSTn are standalone markers with no length field —
@@ -530,208 +643,64 @@ def _decode_jpeg_impl(payload: bytes) -> np.ndarray:
                     raise ValueError(
                         f"JPEG sampling factors {hi}x{vi} out of range")
                 comps.append((cid, hi, vi, tq))
-            frame = (fh, fw, comps)
+            sof = (fh, fw, comps)
         elif marker == 0xDD:  # DRI
             restart_interval = u16(pos + 2)
         elif marker == 0xDA:  # SOS — entropy data follows
-            if frame is None:
+            if sof is None:
                 raise ValueError("JPEG SOS before SOF")
             ncomp = body[0]
-            if progressive:
-                if prog is None:
-                    prog = _progressive_state(frame)
-                scan_cis = []
-                scan_tabs = []
-                frame_ids = [c[0] for c in frame[2]]
-                for c in range(ncomp):
-                    cs = body[1 + 2 * c]
-                    if cs not in frame_ids:
-                        raise ValueError(
-                            "JPEG scan selects a component not in frame")
-                    ci = frame_ids.index(cs)
-                    if scan_cis and ci <= scan_cis[-1]:
-                        # interleaved components must follow frame order
-                        # (T.81 B.2.3) — anything else would silently
-                        # pair the wrong tables/planes
-                        raise ValueError(
-                            "JPEG scan component order differs from frame")
-                    scan_cis.append(ci)
-                    scan_tabs.append((body[2 + 2 * c] >> 4,
-                                      body[2 + 2 * c] & 0xF))
-                ss, se, ahal = body[1 + 2 * ncomp:4 + 2 * ncomp]
-                ah, al = ahal >> 4, ahal & 0xF
-                pos += length
-                pos = _decode_progressive_scan(
-                    payload, pos, prog, scan_cis, scan_tabs,
-                    huff_dc, huff_ac, restart_interval, ss, se, ah, al)
-                continue
-            if ncomp != len(frame[2]):
+            if not progressive and ncomp != len(sof[2]):
                 raise ValueError(
                     "non-interleaved (per-component) JPEG scans unsupported")
+            if frame is None or not progressive:
+                # SOF2 scans accumulate into the store of the first SOS;
+                # the one SOF0 scan fills a fresh one
+                frame = _Frame(*sof)
+            scan_cis = []
             scan_tabs = []
+            frame_ids = [c[0] for c in sof[2]]
             for c in range(ncomp):
-                if body[1 + 2 * c] != frame[2][c][0]:
-                    # positional table pairing is only sound when the
-                    # scan's component selectors match the frame order —
-                    # anything else would be a wrong SILENT decode
+                cs = body[1 + 2 * c]
+                if cs not in frame_ids:
+                    raise ValueError(
+                        "JPEG scan selects a component not in frame")
+                ci = frame_ids.index(cs)
+                if scan_cis and ci <= scan_cis[-1]:
+                    # interleaved components must follow frame order
+                    # (T.81 B.2.3) — anything else would silently pair
+                    # the wrong tables/planes
                     raise ValueError(
                         "JPEG scan component order differs from frame")
-                td = body[2 + 2 * c] >> 4
-                ta = body[2 + 2 * c] & 0xF
-                scan_tabs.append((td, ta))
-            pos += length
-            return _decode_scan(payload, pos, frame, scan_tabs, quant,
-                                huff_dc, huff_ac, restart_interval)
+                scan_cis.append(ci)
+                scan_tabs.append((body[2 + 2 * c] >> 4,
+                                  body[2 + 2 * c] & 0xF))
+            if progressive:
+                ss, se, ahal = body[1 + 2 * ncomp:4 + 2 * ncomp]
+                ah, al = ahal >> 4, ahal & 0xF
+                if ss == 0 and se != 0:
+                    raise ValueError("progressive DC scan must have Se=0")
+                if ss and (ncomp != 1 or se > 63 or ss > se):
+                    raise ValueError("progressive AC scan must cover one "
+                                     "component, 1<=Ss<=Se<=63")
+                if al > 13 or (ah and ah != al + 1):
+                    raise ValueError(
+                        "bad successive-approximation parameters")
+            else:
+                # the sequential scan is the full band at full precision
+                # whatever its Ss/Se/Ah/Al bytes say (T.81 B.2.3)
+                ss, se, ah, al = 0, 63, 0, 0
+            pos = _decode_scan(payload, pos + length, frame, scan_cis,
+                               scan_tabs, huff_dc, huff_ac,
+                               restart_interval, ss, se, ah, al)
+            if not progressive:
+                return _reconstruct(frame, quant)
+            pos = _next_marker(payload, pos)
+            continue
         pos += length
     raise ValueError("truncated JPEG (no SOS reached)"
-                     if prog is None else
+                     if frame is None else
                      "truncated progressive JPEG (no EOI reached)")
-
-
-def _scan_factors(comps) -> list:
-    """T.81 A.2.3/A.2.4: a single-component scan is NON-interleaved —
-    data units follow in plain block raster order and the sampling
-    factors do not shape MCUs; multi-component scans interleave hi*vi
-    blocks per component per MCU."""
-    if len(comps) == 1:
-        return [(1, 1)]
-    return [(hi, vi) for _, hi, vi, _ in comps]
-
-
-def _frame_geometry(fh, fw, factors):
-    """(hmax, vmax, mcus_x, mcus_y, true_blocks) — the ONE home of the
-    T.81 frame geometry (sampling-ratio rule, MCU counts, ceil'd
-    per-component true-block dims), shared by the baseline scan
-    decoder, the progressive state, and the progressive encoder so the
-    three paths cannot desynchronize (the pinned
-    baseline==progressive bit-identity depends on them agreeing)."""
-    if fh == 0 or fw == 0:
-        raise ValueError("bad JPEG dimensions")
-    hmax = max(hi for hi, _ in factors)
-    vmax = max(vi for _, vi in factors)
-    for hi, vi in factors:
-        if hmax % hi or vmax % vi:
-            raise ValueError(
-                "fractional JPEG sampling-factor ratios unsupported")
-    mcus_x = (fw + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (fh + 8 * vmax - 1) // (8 * vmax)
-    true_blocks = []
-    for hi, vi in factors:
-        cw = (fw * hi + hmax - 1) // hmax
-        ch = (fh * vi + vmax - 1) // vmax
-        true_blocks.append(((cw + 7) // 8, (ch + 7) // 8))
-    return hmax, vmax, mcus_x, mcus_y, true_blocks
-
-
-# T.81 table F.1: for 8-bit precision the DC difference category (SSSS)
-# is at most 11 — a bigger size symbol is corrupt data whose magnitude
-# read would overflow the coefficient stores
-_MAX_DC_SIZE = 11
-
-
-def _decode_scan(payload, pos, frame, scan_tabs, quant, huff_dc, huff_ac,
-                 restart_interval):
-    fh, fw, comps = frame
-    factors = _scan_factors(comps)
-    hmax, vmax, mcus_x, mcus_y, _ = _frame_geometry(fh, fw, factors)
-    planes = [np.zeros((mcus_y * 8 * vi, mcus_x * 8 * hi), dtype=np.float64)
-              for hi, vi in factors]
-    br = _BitReader(payload, pos)
-    prev_dc = [0] * len(comps)
-
-    def read_symbol(table) -> int:
-        return _read_huff(br, table)  # shared canonical-code walk
-
-    def decode_block(ci, tq) -> np.ndarray:
-        td, ta = scan_tabs[ci]
-        if td not in huff_dc or ta not in huff_ac or tq not in quant:
-            raise ValueError("JPEG references an undefined table")
-        zz = np.zeros(64, dtype=np.int64)
-        size = read_symbol(huff_dc[td])
-        if size > _MAX_DC_SIZE:
-            raise ValueError(f"bad JPEG DC size symbol {size}")
-        prev_dc[ci] += _decode_value(size, br.bits(size))
-        zz[0] = prev_dc[ci]
-        k = 1
-        while k < 64:
-            sym = read_symbol(huff_ac[ta])
-            if sym == 0x00:  # EOB
-                break
-            if sym == 0xF0:  # ZRL
-                k += 16
-                if k > 63:
-                    # T.81 F.1.2.2: a final all-zero tail is coded with
-                    # EOB, never ZRL — past-the-end ZRL means a corrupt/
-                    # desynced stream; raising here (like the run/size
-                    # path below) beats silently exiting the loop and
-                    # desyncing later blocks
-                    raise ValueError("JPEG AC run past block end")
-                continue
-            run, size = sym >> 4, sym & 0xF
-            k += run
-            if k > 63:
-                raise ValueError("JPEG AC run past block end")
-            zz[k] = _decode_value(size, br.bits(size))
-            k += 1
-        coefs = np.zeros(64, dtype=np.float64)
-        coefs[ZIGZAG] = zz
-        return _T.T @ (coefs.reshape(8, 8) * quant[tq]) @ _T + 128
-
-    mcu = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                br.align()
-                if payload[br.pos] != 0xFF or not (
-                        0xD0 <= payload[br.pos + 1] <= 0xD7):
-                    raise ValueError("missing JPEG restart marker")
-                br.pos += 2
-                prev_dc = [0] * len(comps)
-            for ci, (hi, vi) in enumerate(factors):
-                tq = comps[ci][3]
-                for byi in range(vi):
-                    for bxi in range(hi):
-                        by = (my * vi + byi) * 8
-                        bx = (mx * hi + bxi) * 8
-                        planes[ci][by:by + 8, bx:bx + 8] = \
-                            decode_block(ci, tq)
-            mcu += 1
-
-    return _finish_planes(planes, factors, fh, fw, hmax, vmax)
-
-
-def _finish_planes(planes, factors, fh, fw, hmax, vmax) -> np.ndarray:
-    """Per-component crop to its true sample grid (T.81 A.1.1 ceil dims),
-    nearest-neighbor upsample to full resolution, color-convert — the
-    shared tail of the baseline and progressive decode paths."""
-    full = []
-    for ci, (hi, vi) in enumerate(factors):
-        cw = (fw * hi + hmax - 1) // hmax
-        ch = (fh * vi + vmax - 1) // vmax
-        p = planes[ci][:ch, :cw]
-        if hi != hmax or vi != vmax:
-            p = np.repeat(np.repeat(p, vmax // vi, axis=0),
-                          hmax // hi, axis=1)
-        full.append(p[:fh, :fw])
-
-    if len(full) == 1:
-        # round like the color path — truncation would bias gray decodes
-        # ~0.5 LSB low and break flat-block exactness
-        y = np.round(np.clip(full[0], 0, 255))
-        return np.repeat(y[..., None], 3, axis=2).astype(np.uint8)
-    ycc = np.stack(full, axis=-1)
-    return np.round(_ycbcr_to_rgb(ycc)).astype(np.uint8)
-
-
-# ---------------------------------------------------------------------------
-# Progressive JPEG (SOF2) — T.81 Annex G. Scans deposit coefficients into
-# per-component arrays; the IDCT runs once at EOI, vectorized over every
-# block. Spectral selection, successive approximation, EOBn runs, and
-# restart intervals are all decoded; the paired encoder emits the standard
-# libjpeg-style scan script over the SAME quantized coefficients as the
-# baseline path, so baseline and progressive decodes of one image are
-# bit-identical (the invariant the tests pin).
-# ---------------------------------------------------------------------------
 
 
 def _read_huff(br: _BitReader, table) -> int:
@@ -743,50 +712,30 @@ def _read_huff(br: _BitReader, table) -> int:
     raise ValueError("invalid JPEG Huffman code")
 
 
-def _progressive_state(frame) -> dict:
-    """Coefficient buffers + grid geometry shared by every scan of a
-    progressive frame. ``coef[ci]`` is (blocks_y, blocks_x, 64) int32 in
-    ZIGZAG order over the MCU-padded grid (interleaved DC scans cover
-    padded blocks; non-interleaved scans only touch the true grid)."""
-    fh, fw, comps = frame
-    factors = _scan_factors(comps)
-    hmax, vmax, mcus_x, mcus_y, true_blocks = _frame_geometry(
-        fh, fw, factors)
-    coef = [np.zeros((mcus_y * vi, mcus_x * hi, 64), dtype=np.int32)
-            for hi, vi in factors]
-    return {"fh": fh, "fw": fw, "comps": comps, "factors": factors,
-            "hmax": hmax, "vmax": vmax, "mcus_x": mcus_x, "mcus_y": mcus_y,
-            "coef": coef, "true_blocks": true_blocks}
+# T.81 table F.1: for 8-bit precision the DC difference category (SSSS)
+# is at most 11 — a bigger size symbol is corrupt data whose magnitude
+# read would overflow the coefficient stores
+_MAX_DC_SIZE = 11
 
 
-def _decode_progressive_scan(payload, pos, st, scan_cis, scan_tabs,
-                             huff_dc, huff_ac, restart_interval,
-                             ss, se, ah, al) -> int:
-    """Decode ONE SOF2 scan: spectral band [ss, se] of the selected
-    component(s) at successive-approximation stage (ah, al), per T.81
-    §G.2 (the control flow mirrors the public libjpeg phuff decoder,
-    which implements the spec's figures G.6/G.7). Returns the payload
-    offset of the next marker."""
-    dc_scan = ss == 0
-    if dc_scan and se != 0:
-        raise ValueError("progressive DC scan must have Se=0")
-    if not dc_scan and (len(scan_cis) != 1 or se > 63 or ss > se):
-        raise ValueError(
-            "progressive AC scan must cover one component, 1<=Ss<=Se<=63")
-    if al > 13 or (ah and ah != al + 1):
-        raise ValueError("bad successive-approximation parameters")
-    interleaved = len(scan_cis) > 1
-    coef = st["coef"]
-    factors = st["factors"]
+def _decode_scan(payload, pos, frame, scan_cis, scan_tabs, huff_dc, huff_ac,
+                 restart_interval, ss, se, ah, al) -> int:
+    """Decode ONE scan into ``frame.coef``: spectral band [ss, se] of the
+    selected component(s) at successive-approximation stage (ah, al), per
+    T.81 §G.2 (the control flow mirrors the public libjpeg phuff decoder,
+    which implements the spec's figures G.6/G.7). A sequential scan is
+    the band 0..63 at Ah=Al=0 (§F.2.2): each block's DC step then its
+    AC-first step over 1..63, in which EOBn symbols are undefined.
+    Returns the offset after the last entropy byte read."""
+    sequential = ss == 0 and se > 0
+    edge = "block" if sequential else "band"
     # validate tables up front so a missing one can't half-decode a scan
-    for i, ci in enumerate(scan_cis):
-        td, ta = scan_tabs[i]
-        if dc_scan and ah == 0 and td not in huff_dc:
-            raise ValueError("JPEG references an undefined table")
-        if not dc_scan and ta not in huff_ac:
+    for td, ta in scan_tabs:
+        if (ss == 0 and ah == 0 and td not in huff_dc) or (
+                se and ta not in huff_ac):
             raise ValueError("JPEG references an undefined table")
     br = _BitReader(payload, pos)
-    preds = {ci: 0 for ci in scan_cis}
+    preds = dict.fromkeys(scan_cis, 0)
     eobrun = 0
     p1 = 1 << al
 
@@ -814,13 +763,13 @@ def _decode_progressive_scan(payload, pos, st, scan_cis, scan_tabs,
         elif br.bit():  # refinement: append bit al (two's complement OR)
             blk[0] = int(blk[0]) | p1
 
-    def ac_first_block(blk):
+    def ac_first_block(i, blk):
         nonlocal eobrun
         if eobrun:
             eobrun -= 1
             return
-        tab = huff_ac[scan_tabs[0][1]]
-        k = ss
+        tab = huff_ac[scan_tabs[i][1]]
+        k = max(ss, 1)
         while k <= se:
             sym = _read_huff(br, tab)
             r, s = sym >> 4, sym & 0xF
@@ -828,24 +777,26 @@ def _decode_progressive_scan(payload, pos, st, scan_cis, scan_tabs,
                 if r == 15:  # ZRL
                     k += 16
                     if k > se:
-                        # same contract as baseline: a zero tail is
-                        # coded with EOB, never ZRL — silence here
-                        # desyncs every later block
-                        raise ValueError("JPEG AC run past band end")
+                        # T.81 F.1.2.2: a zero tail is coded with EOB,
+                        # never ZRL — silence here desyncs every later
+                        # block
+                        raise ValueError(f"JPEG AC run past {edge} end")
                     continue
+                if r and sequential:
+                    raise ValueError("JPEG EOBn symbol in a sequential scan")
                 eobrun = (1 << r) - 1  # EOBn: this block + eobrun more
                 if r:
                     eobrun += br.bits(r)
                 break
             k += r
             if k > se:
-                raise ValueError("JPEG AC run past band end")
+                raise ValueError(f"JPEG AC run past {edge} end")
             blk[k] = _decode_value(s, br.bits(s)) << al
             k += 1
 
-    def ac_refine_block(blk):
+    def ac_refine_block(i, blk):
         nonlocal eobrun
-        tab = huff_ac[scan_tabs[0][1]]
+        tab = huff_ac[scan_tabs[i][1]]
         k = ss
         if eobrun == 0:
             while k <= se:
@@ -890,48 +841,27 @@ def _decode_progressive_scan(payload, pos, st, scan_cis, scan_tabs,
                 k += 1
             eobrun -= 1
 
-    def expect_rst():
-        nonlocal eobrun
-        br.align()
-        if br.pos + 1 >= len(payload) or payload[br.pos] != 0xFF \
-                or not (0xD0 <= payload[br.pos + 1] <= 0xD7):
-            raise ValueError("missing JPEG restart marker")
-        br.pos += 2
-        for ci in preds:
-            preds[ci] = 0
-        eobrun = 0
+    for restart, units in _mcus(frame, scan_cis, restart_interval):
+        if restart:
+            br.align()
+            if br.pos + 1 >= len(payload) or payload[br.pos] != 0xFF \
+                    or not (0xD0 <= payload[br.pos + 1] <= 0xD7):
+                raise ValueError("missing JPEG restart marker")
+            br.pos += 2
+            preds = dict.fromkeys(scan_cis, 0)
+            eobrun = 0
+        for i, ci, blk in units:
+            if ss == 0:
+                dc_block(i, ci, blk)
+            if se:
+                (ac_refine_block if ah else ac_first_block)(i, blk)
+    return br.pos
 
-    mcu = 0
-    if interleaved:  # DC scan over the MCU grid (AC scans are 1-comp)
-        for my in range(st["mcus_y"]):
-            for mx in range(st["mcus_x"]):
-                if restart_interval and mcu and mcu % restart_interval == 0:
-                    expect_rst()
-                mcu += 1
-                for i, ci in enumerate(scan_cis):
-                    hi, vi = factors[ci]
-                    for byi in range(vi):
-                        for bxi in range(hi):
-                            dc_block(i, ci,
-                                     coef[ci][my * vi + byi, mx * hi + bxi])
-    else:  # non-interleaved: MCU = one block, true (unpadded) grid
-        ci = scan_cis[0]
-        nbx, nby = st["true_blocks"][ci]
-        for by in range(nby):
-            for bx in range(nbx):
-                if restart_interval and mcu and mcu % restart_interval == 0:
-                    expect_rst()
-                mcu += 1
-                blk = coef[ci][by, bx]
-                if dc_scan:
-                    dc_block(0, ci, blk)
-                elif ah == 0:
-                    ac_first_block(blk)
-                else:
-                    ac_refine_block(blk)
 
-    # skip to the next marker (stuffed 0x00, fill 0xFF, stray RSTn)
-    p, n = br.pos, len(payload)
+def _next_marker(payload: bytes, p: int) -> int:
+    """Offset of the marker after a progressive scan's entropy data
+    (skipping stuffed 0x00, fill 0xFF and stray RSTn)."""
+    n = len(payload)
     while p + 1 < n:
         if payload[p] != 0xFF:
             p += 1
@@ -944,221 +874,33 @@ def _decode_progressive_scan(payload, pos, st, scan_cis, scan_tabs,
     raise ValueError("truncated progressive JPEG scan")
 
 
-def _reconstruct_progressive(st, quant) -> np.ndarray:
-    """Dequantize + IDCT every accumulated block and assemble. The
-    per-block matmul is the EXACT expression of the baseline decoder
-    (decode_block) — a batched einsum sums in a different order, and a
-    one-ulp difference before the final round() flips pixels sitting on
-    .5 boundaries, breaking baseline==progressive bit-identity."""
-    planes = []
-    for ci, (hi, vi) in enumerate(st["factors"]):
-        tq = st["comps"][ci][3]
+def _reconstruct(frame: _Frame, quant) -> np.ndarray:
+    """Dequantize and IDCT each component's true blocks, crop it to its
+    sample grid, upsample it to full resolution by nearest neighbour and
+    colour-convert."""
+    full = []
+    for (hi, vi), (_, _, _, tq), zz, (cw, ch) in zip(
+            frame.factors, frame.comps, frame.coef, frame.sizes):
         if tq not in quant:
             raise ValueError("JPEG references an undefined table")
-        zz = st["coef"][ci]
-        by, bx = zz.shape[:2]
-        plane = np.zeros((by * 8, bx * 8), dtype=np.float64)
         q = quant[tq]
+        by, bx = (ch + 7) // 8, (cw + 7) // 8
+        p = np.zeros((by * 8, bx * 8), dtype=np.float64)
         for y in range(by):
             for x in range(bx):
                 coefs = np.zeros(64, dtype=np.float64)
                 coefs[ZIGZAG] = zz[y, x]
-                plane[y * 8:y * 8 + 8, x * 8:x * 8 + 8] = \
+                p[y * 8:y * 8 + 8, x * 8:x * 8 + 8] = \
                     _T.T @ (coefs.reshape(8, 8) * q) @ _T + 128
-        planes.append(plane)
-    return _finish_planes(planes, st["factors"], st["fh"], st["fw"],
-                          st["hmax"], st["vmax"])
+        p = p[:ch, :cw]
+        if hi != frame.hmax or vi != frame.vmax:
+            p = np.repeat(np.repeat(p, frame.vmax // vi, axis=0),
+                          frame.hmax // hi, axis=1)
+        full.append(p[:frame.fh, :frame.fw])
 
-
-# --- progressive encoder ----------------------------------------------------
-
-def _encode_progressive(planes, factors, quants, gray, h, w,
-                        restart_interval, mcus_x, mcus_y) -> bytes:
-    """SOF2 stream over the SAME quantized coefficients as the baseline
-    encoder, using the standard libjpeg scan script (DC first at Al=1,
-    luma AC split 1-5/6-63 at Al=2, chroma AC at Al=1, then one
-    refinement pass per band, DC refine last-but-one). EOB runs are
-    flushed per block (EOB0), so the Annex K tables — which carry no
-    EOBn>0 symbols — suffice; decoders must still handle general EOBn,
-    which the hand-built-stream test covers."""
-    coef = []
-    for (hi, vi), p, q in zip(factors, planes, quants):
-        by, bx = p.shape[0] // 8, p.shape[1] // 8
-        qz = np.zeros((by, bx, 64), dtype=np.int64)
-        for y in range(by):
-            for x in range(bx):
-                # the EXACT per-block expression of the baseline
-                # encoder (encode_block) — a batched einsum sums in a
-                # different order and can round a coefficient sitting
-                # exactly on a .5 quantization boundary the other way,
-                # breaking the bit-identical-decode invariant (caught
-                # by fuzzing: 2/120 random images differed)
-                block = p[y * 8:y * 8 + 8, x * 8:x * 8 + 8] - 128.0
-                c = _T @ block @ _T.T
-                qz[y, x] = np.round(c / q).astype(np.int64).reshape(-1)
-        coef.append(qz[..., ZIGZAG])
-
-    hmax, vmax, _, _, true_blocks = _frame_geometry(h, w, factors)
-
-    dc_codetabs = [_build_code_table(*DC_LUM)] + (
-        [] if gray else [_build_code_table(*DC_CHR)] * 2)
-    ac_codetabs = [_build_code_table(*AC_LUM)] + (
-        [] if gray else [_build_code_table(*AC_CHR)] * 2)
-
-    ncomp = len(factors)
-    all_cis = list(range(ncomp))
-    if gray:
-        script = [(all_cis, 0, 0, 0, 1), ([0], 1, 63, 0, 2),
-                  ([0], 1, 63, 2, 1), (all_cis, 0, 0, 1, 0),
-                  ([0], 1, 63, 1, 0)]
-    else:
-        script = [(all_cis, 0, 0, 0, 1),
-                  ([0], 1, 5, 0, 2), ([2], 1, 63, 0, 1),
-                  ([1], 1, 63, 0, 1), ([0], 6, 63, 0, 2),
-                  ([0], 1, 63, 2, 1), (all_cis, 0, 0, 1, 0),
-                  ([2], 1, 63, 1, 0), ([1], 1, 63, 1, 0),
-                  ([0], 1, 63, 1, 0)]
-
-    def blocks_of(cis):
-        """Yield (scan comp position, ci, block) in scan order, with a
-        per-MCU restart flag first in each tuple."""
-        mcu = 0
-        if len(cis) > 1:
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    at_rst = (restart_interval and mcu
-                              and mcu % restart_interval == 0)
-                    first = True
-                    for i, ci in enumerate(cis):
-                        hi, vi = factors[ci]
-                        for byi in range(vi):
-                            for bxi in range(hi):
-                                yield (at_rst and first, mcu, i, ci,
-                                       coef[ci][my * vi + byi,
-                                                mx * hi + bxi])
-                                first = False
-                    mcu += 1
-        else:
-            ci = cis[0]
-            nbx, nby = true_blocks[ci]
-            for by in range(nby):
-                for bx in range(nbx):
-                    at_rst = (restart_interval and mcu
-                              and mcu % restart_interval == 0)
-                    yield (at_rst, mcu, 0, ci, coef[ci][by, bx])
-                    mcu += 1
-
-    def dc_scan_bytes(cis, ah, al):
-        bw = _BitWriter()
-        preds = {ci: 0 for ci in cis}
-        for at_rst, mcu, i, ci, blk in blocks_of(cis):
-            if at_rst:
-                bw.restart_marker(mcu // restart_interval - 1)
-                for c in preds:
-                    preds[c] = 0
-            v = int(blk[0])
-            if ah == 0:
-                t = v >> al  # arithmetic shift per G.1.2.1
-                size, code = _encode_value(t - preds[ci])
-                preds[ci] = t
-                hc, hl = dc_codetabs[ci][size]
-                bw.write(hc, hl)
-                if size:
-                    bw.write(code, size)
-            else:
-                bw.write((v >> al) & 1, 1)
-        return bw.flush()
-
-    def ac_first_bytes(ci, ss, se, al):
-        bw = _BitWriter()
-        actab = ac_codetabs[ci]
-        for at_rst, mcu, _i, _ci, blk in blocks_of([ci]):
-            if at_rst:
-                bw.restart_marker(mcu // restart_interval - 1)
-            r = 0
-            for k in range(ss, se + 1):
-                v = int(blk[k])
-                t = abs(v) >> al  # AC point transform: toward zero
-                if t == 0:
-                    r += 1
-                    continue
-                while r > 15:
-                    hc, hl = actab[0xF0]
-                    bw.write(hc, hl)
-                    r -= 16
-                size, code = _encode_value(t if v > 0 else -t)
-                hc, hl = actab[(r << 4) | size]
-                bw.write(hc, hl)
-                bw.write(code, size)
-                r = 0
-            if r > 0:
-                hc, hl = actab[0x00]  # per-block EOB0 flush
-                bw.write(hc, hl)
-        return bw.flush()
-
-    def ac_refine_bytes(ci, ss, se, al):
-        bw = _BitWriter()
-        actab = ac_codetabs[ci]
-        for at_rst, mcu, _i, _ci, blk in blocks_of([ci]):
-            if at_rst:
-                bw.restart_marker(mcu // restart_interval - 1)
-            r = 0
-            pending = []  # correction bits buffered until the next symbol
-            for k in range(ss, se + 1):
-                v = int(blk[k])
-                t = abs(v) >> al
-                if t == 0:
-                    r += 1
-                    continue
-                while r > 15:
-                    hc, hl = actab[0xF0]
-                    bw.write(hc, hl)
-                    r -= 16
-                    for b in pending:
-                        bw.write(b, 1)
-                    pending = []
-                if t > 1:  # already nonzero at the prior precision
-                    pending.append(t & 1)
-                    continue
-                hc, hl = actab[(r << 4) | 1]
-                bw.write(hc, hl)
-                bw.write(1 if v > 0 else 0, 1)  # sign: 1 = positive
-                for b in pending:
-                    bw.write(b, 1)
-                pending = []
-                r = 0
-            if r > 0 or pending:
-                hc, hl = actab[0x00]
-                bw.write(hc, hl)
-                for b in pending:
-                    bw.write(b, 1)
-        return bw.flush()
-
-    sof_comps = b"".join(
-        bytes([i + 1, (factors[i][0] << 4) | factors[i][1],
-               0 if i == 0 else 1]) for i in range(ncomp))
-    out = bytearray(b"\xff\xd8")
-    out += _seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    out += _dqt(0, quants[0])
-    if not gray:
-        out += _dqt(1, quants[1])
-    out += _seg(0xC2, bytes([8]) + h.to_bytes(2, "big")
-                + w.to_bytes(2, "big") + bytes([ncomp]) + sof_comps)
-    out += _dht(0, 0, *DC_LUM) + _dht(1, 0, *AC_LUM)
-    if not gray:
-        out += _dht(0, 1, *DC_CHR) + _dht(1, 1, *AC_CHR)
-    if restart_interval:
-        out += _seg(0xDD, restart_interval.to_bytes(2, "big"))
-    for cis, ss, se, ah, al in script:
-        hdr = bytes([len(cis)]) + b"".join(
-            bytes([ci + 1, 0x00 if ci == 0 else 0x11]) for ci in cis
-        ) + bytes([ss, se, (ah << 4) | al])
-        out += _seg(0xDA, hdr)
-        if ss == 0:
-            out += dc_scan_bytes(cis, ah, al)
-        elif ah == 0:
-            out += ac_first_bytes(cis[0], ss, se, al)
-        else:
-            out += ac_refine_bytes(cis[0], ss, se, al)
-    out += b"\xff\xd9"
-    return bytes(out)
+    if len(full) == 1:
+        # round like the color path — truncation would bias gray decodes
+        # ~0.5 LSB low and break flat-block exactness
+        y = np.round(np.clip(full[0], 0, 255))
+        return np.repeat(y[..., None], 3, axis=2).astype(np.uint8)
+    return np.round(_ycbcr_to_rgb(np.stack(full, axis=-1))).astype(np.uint8)

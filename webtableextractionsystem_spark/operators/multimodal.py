@@ -24,18 +24,17 @@ Spark-side design (all real and tested):
   join a local zipper at scale.
 
 Codecs — ALL REAL, pure numpy/stdlib: binary PPM (P6), uncompressed
-24-bit BMP, non-interlaced 8-bit gray/RGB/RGBA or 1/2/4/8-bit palette
-PNG (zlib inflate + all five scanline filters, CRC-checked), GIF87a/89a
-(operators/gif.py — full LZW, interlace), baseline JFIF JPEG
+24-bit BMP, 8-bit gray/RGB/RGBA or 1/2/4/8-bit palette PNG (zlib
+inflate + all five scanline filters, Adam7, CRC-checked), GIF87a/89a
+(operators/gif.py — full LZW, interlace), JFIF JPEG
 (operators/jpeg.py — DCT + Annex K tables, 4:4:4/4:2:0/4:2:2, baseline
 AND progressive SOF2; lossy, so round-trips assert PSNR), WAV PCM16
 audio, MJPEG/AVI video, and classic-PDF text+layout parse
 (operators/pdf.py — xref tables, FlateDecode, full positioned-text
-operator set, reading-order layout pass). Unknown magic raises NotImplementedError unless
-``fake=True``, which substitutes the deterministic md5-seeded decoder
-(kept for tests that need arbitrary payloads to decode). The Spark
-plumbing — schema, batching, partitioning, UDF signatures — is the same
-for every format.
+operator set, reading-order layout pass). Unknown magic raises
+NotImplementedError; a corrupt payload of a known format raises
+ValueError. The Spark plumbing — schema, batching, partitioning, UDF
+signatures — is the same for every format.
 """
 
 from __future__ import annotations
@@ -104,7 +103,7 @@ def synth_media_for_spans(spans_out: DataFrame) -> DataFrame:
     alternating interlace, TIFF across none/LZW+predictor-2/PackBits x
     both byte orders with small strips) with pixels seeded from
     md5(media_ref). Stands in for the real object store; every payload
-    decodes through the real codec path (``decode_image(fake=False)``)."""
+    decodes through the real codec path (``decode_image``)."""
 
     def gen(ref: str) -> dict:
         h = hashlib.md5(ref.encode()).digest()
@@ -551,66 +550,48 @@ def encode_png_palette(img: np.ndarray, depth: int = 8,
             + _png_chunk(b"IEND", b""))
 
 
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
+def decode_image(payload: bytes) -> np.ndarray:
     """Decode an image payload to an HxWx3 uint8 array.
 
     REAL formats (pure numpy/stdlib, no external libs), sniffed by magic
-    bytes: binary PPM (P6), uncompressed 24-bit BMP, non-interlaced
-    8-bit gray/RGB/RGBA or 1/2/4/8-bit palette PNG (zlib inflate +
-    un-filter, CRC-checked), GIF87a/89a, and baseline JFIF JPEG incl.
-    4:2:0/4:2:2 chroma subsampling. Only UNRECOGNIZED magic
-    raises NotImplementedError — or falls back to the deterministic
-    md5-seeded fake decoder when ``fake=True`` (which keeps arbitrary
-    payloads decodable in tests)."""
-    try:
-        if payload[:2] == b"P6":
-            return _decode_ppm(payload)
-        if payload[:2] == b"BM":
-            return _decode_bmp(payload)
-        if payload[:8] == _PNG_SIG:
-            return _decode_png(payload)
-        if payload[:2] == b"\xff\xd8":
-            from .jpeg import decode_jpeg
+    bytes: binary PPM (P6), uncompressed 24-bit BMP, 8-bit gray/RGB/RGBA
+    or 1/2/4/8-bit palette PNG (zlib inflate + un-filter, Adam7,
+    CRC-checked), GIF87a/89a, baseline TIFF, and baseline or progressive
+    JFIF JPEG incl. 4:2:0/4:2:2 chroma subsampling. A payload whose magic
+    matches but whose body does not parse is a corrupt file of a
+    supported format and raises ValueError; unrecognized magic raises
+    NotImplementedError."""
+    if payload[:2] == b"P6":
+        return _decode_ppm(payload)
+    if payload[:2] == b"BM":
+        return _decode_bmp(payload)
+    if payload[:8] == _PNG_SIG:
+        return _decode_png(payload)
+    if payload[:2] == b"\xff\xd8":
+        from .jpeg import decode_jpeg
 
-            return decode_jpeg(payload)
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            from .gif import decode_gif
+        return decode_jpeg(payload)
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        from .gif import decode_gif
 
-            return decode_gif(payload)
-        if payload[:4] in (b"II*\x00", b"MM\x00*"):
-            from .tiff import decode_tiff
+        return decode_gif(payload)
+    if payload[:4] in (b"II*\x00", b"MM\x00*"):
+        from .tiff import decode_tiff
 
-            return decode_tiff(payload)
-    except ValueError:
-        # magic matched but the body didn't parse. With fake=True this is
-        # expected for random synthetic payloads and falls through to the
-        # fake decoder (keeps arbitrary test payloads decodable); with
-        # fake=False it is a CORRUPT file of a supported format — re-raise
-        # as such rather than claiming the format is unsupported.
-        if not fake:
-            raise
-    if not fake:
-        raise NotImplementedError(
-            "unrecognized image magic: PPM(P6), 24-bit BMP, 8-bit PNG, "
-            "GIF, baseline TIFF, and baseline JPEG are the decodable "
-            "formats; pass fake=True for the deterministic test decoder"
-        )
-    h = hashlib.md5(payload).digest()
-    rng = np.random.default_rng(int.from_bytes(h[:8], "little"))
-    side = 8 + h[8] % 8
-    return rng.integers(0, 256, size=(side, side, 3), dtype=np.uint8)
+        return decode_tiff(payload)
+    raise NotImplementedError(
+        "unrecognized image magic: PPM(P6), 24-bit BMP, 8-bit PNG, "
+        "GIF, baseline TIFF, and baseline or progressive JPEG are the "
+        "decodable formats")
 
 
-def image_features(media: DataFrame, fake: bool = False) -> DataFrame:
+def image_features(media: DataFrame) -> DataFrame:
     """(media_ref, features array<float>, width, height), one row per
-    media row: decode -> per-channel stats -> fixed-dim vector.
-
-    ``fake`` defaults to False like decode_image: real payloads decode
-    for real, and an undecodable payload raises instead of silently
-    substituting md5-garbage pixels — tests opt in to fake=True."""
+    media row: decode -> per-channel stats -> fixed-dim vector. An
+    undecodable payload raises."""
 
     def features(payload: bytes) -> dict:
-        img = decode_image(payload, fake=fake)
+        img = decode_image(payload)
         v = np.zeros(N_IMG_FEATURES, dtype=np.float32)
         v[0:3] = img.mean(axis=(0, 1)) / 255.0
         v[3:6] = img.std(axis=(0, 1)) / 255.0
@@ -625,14 +606,12 @@ def image_features(media: DataFrame, fake: bool = False) -> DataFrame:
                         "features array<float>, width int, height int")
 
 
-def resize_images(media: DataFrame, target: int = 8,
-                  fake: bool = False) -> DataFrame:
+def resize_images(media: DataFrame, target: int = 8) -> DataFrame:
     """Nearest-neighbor resize returning new payloads — exercises
-    binary-in/binary-out Arrow round-tripping. ``fake`` defaults to
-    False like decode_image (see image_features)."""
+    binary-in/binary-out Arrow round-tripping."""
 
     def resize(payload: bytes) -> dict:
-        img = decode_image(payload, fake=fake)
+        img = decode_image(payload)
         idx = (np.linspace(0, img.shape[0] - 1, target).astype(int),
                np.linspace(0, img.shape[1] - 1, target).astype(int))
         return {"payload": img[np.ix_(idx[0], idx[1])].tobytes(),

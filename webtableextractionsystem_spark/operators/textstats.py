@@ -307,15 +307,17 @@ ROLL_MOD = 2147483647
 
 
 def rolling_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hashes = F.transform(F.col("toks"), lambda t: _md5_u32(t))
+    # the per-token hashes are read three times below, so they get their
+    # own projection: inline, each token would be md5-hashed three times
+    hashed = tokenized(load_documents(spark, sf_dir), "doc_id").select(
+        "doc_id", F.transform("toks", lambda t: _md5_u32(t)).alias("hs"))
+    hs = F.col("hs")
     rolled = F.aggregate(
-        F.slice(hashes, 2, F.greatest(F.size(hashes) - 1, F.lit(0))),
-        F.element_at(hashes, 1),
+        F.slice(hs, 2, F.greatest(F.size(hs) - 1, F.lit(0))),
+        F.element_at(hs, 1),
         lambda acc, x: (acc * 31 + x) % ROLL_MOD,
     )
-    return tokenized(load_documents(spark, sf_dir), "doc_id").select(
-        "doc_id", rolled.alias("rolling_hash")
-    )
+    return hashed.select("doc_id", rolled.alias("rolling_hash"))
 
 
 ROLLING_SQL = rf"""
