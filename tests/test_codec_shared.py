@@ -1,6 +1,10 @@
 """The codec primitives PNG, PDF, TIFF, GIF and JPEG share
 (operators/pdf.py), without Spark: PDF's PNG predictors over every row
-filter, their malformed inputs, and the one image pixel bound."""
+filter, their malformed inputs, and the one image pixel bound; GIF's
+use of the one LZW decoder; and the RIFF chunk walk WAV shares with AVI
+(operators/video.py), which reads chunks in any order."""
+
+import time
 
 import numpy as np
 import pytest
@@ -10,6 +14,7 @@ from webtableextractionsystem_spark.operators import jpeg as J
 from webtableextractionsystem_spark.operators import multimodal as MM
 from webtableextractionsystem_spark.operators import pdf as P
 from webtableextractionsystem_spark.operators import tiff as TF
+from webtableextractionsystem_spark.operators import video as V
 
 
 @pytest.mark.parametrize("cols,colors", [(7, 3), (5, 1), (4, 4)])
@@ -50,3 +55,62 @@ def test_one_pixel_bound_for_every_image_codec():
     assert P._MAX_PIXELS == 1 << 26
     for mod in (G, J, MM, TF):
         assert mod._MAX_PIXELS is P._MAX_PIXELS, mod.__name__
+
+
+def test_gif_min_code_size_below_two_raises():
+    """GIF89a allows LZW minimum code sizes 2..8. A 1x1 image whose
+    stream is recoded at size 1 (Clear=2, pixel 0, End=3 at 2 bits) is
+    refused rather than read with codes that never widen."""
+    gif = G.encode_gif(np.zeros((1, 1, 3), dtype=np.uint8))
+    assert gif.count(b"\x02\x02\x44\x01\x00") == 1
+    bad = gif.replace(b"\x02\x02\x44\x01\x00", b"\x01\x01\x32\x00")
+    with pytest.raises(ValueError, match="min code size 1"):
+        G.decode_gif(bad)
+
+
+@pytest.mark.parametrize("codec", ["pcm16", "ulaw", "alaw", "adpcm"])
+def test_wav_data_chunk_before_fmt_decodes(codec):
+    """RIFF fixes no chunk order: a data chunk ahead of fmt (and fact)
+    decodes like the usual order, for every codec."""
+    rng = np.random.default_rng(3)
+    sig = rng.integers(-20000, 20000, size=(121, 2)).astype(np.int16)
+    wav = MM.encode_wav(sig, 16000, codec=codec)
+    at = wav.index(b"data")  # the encoder writes data last
+    reordered = V._chunk(b"RIFF", b"WAVE" + wav[at:] + wav[12:at])
+    want, rate = MM.decode_audio(wav)
+    got, got_rate = MM.decode_audio(reordered)
+    assert got_rate == rate == 16000
+    assert np.array_equal(got, want)
+    if codec == "pcm16":
+        assert np.array_equal(got, sig)
+
+
+def test_wav_pcm_valid_bits_round_up_to_container_bytes():
+    """A PCM fmt declaring 9..16 valid bits stores 2-byte samples, so a
+    12-bit header reads the same 16-bit samples; 8 and 17 bits are not
+    2-byte PCM and raise."""
+    sig = np.arange(-40, 40, dtype=np.int16).reshape(-1, 2) * 16
+    wav = bytearray(MM.encode_wav(sig, 8000))
+    assert wav[12:16] == b"fmt " and wav[34:36] == (16).to_bytes(2, "little")
+    for bits in (9, 12):
+        wav[34:36] = bits.to_bytes(2, "little")
+        out, rate = MM.decode_audio(bytes(wav))
+        assert rate == 8000 and out.dtype == np.int16
+        assert np.array_equal(out, sig)
+    for bits in (8, 17):
+        wav[34:36] = bits.to_bytes(2, "little")
+        with pytest.raises(ValueError):
+            MM.decode_audio(bytes(wav))
+
+
+def test_lzw_coding_time_is_linear_in_stream_length():
+    """The MSB-first reader and writer keep only their pending bits. An
+    accumulator holding every bit so far made each shift cost the stream
+    length: 200 KB of incompressible data took about 20 s to encode and
+    as long to decode, where a linear coder takes well under one."""
+    data = np.random.default_rng(8).integers(
+        0, 256, size=200_000, dtype=np.uint8).tobytes()
+    t0 = time.perf_counter()
+    coded = P._lzw_encode(data, 1)
+    assert P._lzw_decode(coded, 1) == data
+    assert time.perf_counter() - t0 < 5.0

@@ -724,12 +724,14 @@ def test_gif_decoder_handles_dictionary_grown_lzw():
         return bw.flush()
 
     rng = np.random.default_rng(21)
-    # repetitive pixels -> real dictionary reuse incl. KwKwK patterns
-    base = rng.integers(0, 4, size=64, dtype=np.uint8)
-    pixels = np.tile(base, 40)  # 2560 px, heavy repetition
-    stream = lzw_compress(pixels, min_code=2)
-    out = G._lzw_decode(stream, 2, len(pixels))
-    assert np.array_equal(out, pixels)
+    for min_code in (2, 5, 8):
+        # repetitive pixels -> real dictionary reuse incl. KwKwK patterns
+        base = rng.integers(0, 1 << min_code, size=64, dtype=np.uint8)
+        pixels = np.tile(base, 40)  # 2560 px, heavy repetition
+        stream = lzw_compress(pixels, min_code)
+        out = G._lzw_decode(stream, early=0, min_code=min_code, lsb=True,
+                            n_out=len(pixels))
+        assert out == pixels.tobytes()
 
 
 def test_tiff_roundtrip_all_forms():

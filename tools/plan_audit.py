@@ -1,13 +1,16 @@
 """Regenerate PLANS.md: formatted physical plans of the headline queries
 with the scale-relevant lines highlighted (PushedFilters / ReadSchema /
-join strategies / exchanges / codegen spans).
+join strategies / exchanges / codegen spans), each under a digest of
+the whole formatted plan.
 
     python tools/plan_audit.py
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -34,6 +37,17 @@ def key_lines(plan: str) -> str:
         if any(k in ls for k in KEY):
             out.append(ls[:160])
     return "\n".join(out)
+
+
+def digest(plan: str, warehouse: str) -> str:
+    """Short sha256 of the whole formatted plan, with expression ids
+    (``#123``), exchange ids (``plan_id=4``) and the warehouse directory
+    of the staged tables (it follows the working directory) normalized:
+    the key lines show node names only, so a change inside an expression
+    moves this digest and nothing else in PLANS.md."""
+    norm = re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
+    norm = norm.replace(warehouse, "<warehouse>")
+    return hashlib.sha256(norm.encode()).hexdigest()[:16]
 
 
 def main() -> None:
@@ -216,20 +230,19 @@ def main() -> None:
     # formatted first, showing the default persisted shape, and the two
     # below show consumers reading the bucketed staged table (zero
     # exchange on the bucket-keyed aggregation)
-    plans = {title: key_lines(fmt(spark, df))
-             for title, df in sections.items()}
+    plans = {title: fmt(spark, df) for title, df in sections.items()}
     DD.stage_gram_relation(spark, SF)
     TS.stage_dsir_features(spark, SF)
     plans[
         "q_doc_repeated_ngrams AFTER stage_gram_relation — consumers "
         "scan the h-bucketed staged parquet table; the incidence "
         "groupBy(h) inherits the bucketing (no exchange of the "
-        "corpus-token-sized relation)"] = key_lines(
-        fmt(spark, DD.repeated_ngrams(spark, SF)))
+        "corpus-token-sized relation)"] = \
+        fmt(spark, DD.repeated_ngrams(spark, SF))
     plans[
         "q_doc_dsir_weights AFTER stage_dsir_features — distribution "
         "build aggregates straight off the f-bucketed staged scan"] = \
-        key_lines(fmt(spark, TS.dsir_weights(spark, SF)))
+        fmt(spark, TS.dsir_weights(spark, SF))
 
     parts = [
         "# PLANS — physical-plan audit of the headline queries",
@@ -244,9 +257,11 @@ def main() -> None:
         "generator, not part of the pipeline).",
         "",
     ]
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
     for title, plan in plans.items():
         parts.append(f"## {title}\n")
-        parts.append("```\n" + plan + "\n```\n")
+        parts.append(f"plan sha256 `{digest(plan, warehouse)}`\n")
+        parts.append("```\n" + key_lines(plan) + "\n```\n")
     spark.stop()
 
     path = os.path.join(os.path.dirname(os.path.dirname(

@@ -1,5 +1,7 @@
 """GIF87a/89a codec in pure numpy/stdlib — LZW decode with full
 dictionary growth (handles real-world files), plus a paired encoder.
+The LZW data decodes through pdf._lzw_decode, which PDF and TIFF share
+(GIF: LSB-first codes, min code size 2..8, no early change).
 
 Scope: static GIFs (first image block of an animated file), global or
 local color tables, interlaced or sequential row order, 8-bit palettes.
@@ -26,31 +28,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from .pdf import _MAX_PIXELS
+from .pdf import _MAX_PIXELS, _lzw_decode
 
 _GIF_MAGICS = (b"GIF87a", b"GIF89a")
-
-
-class _BitReaderLSB:
-    """LZW code reader: GIF packs codes least-significant-bit first."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def read(self, width: int) -> int:
-        while self.n < width:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated GIF LZW stream")
-            self.acc |= self.data[self.pos] << self.n
-            self.pos += 1
-            self.n += 8
-        v = self.acc & ((1 << width) - 1)
-        self.acc >>= width
-        self.n -= width
-        return v
 
 
 class _BitWriterLSB:
@@ -81,42 +61,6 @@ def _deinterlace(rows: np.ndarray) -> np.ndarray:
     out = np.empty_like(rows)
     out[order] = rows
     return out
-
-
-def _lzw_decode(data: bytes, min_code: int, n_pixels: int) -> np.ndarray:
-    clear = 1 << min_code
-    end = clear + 1
-    br = _BitReaderLSB(data)
-    width = min_code + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    out = bytearray()
-    prev: bytes | None = None
-    while len(out) < n_pixels:
-        code = br.read(width)
-        if code == clear:
-            table = table[: clear + 2]
-            width = min_code + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        # clear/end were handled above, so any in-table code is a
-        # literal single or a grown entry
-        if code < len(table):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]  # the KwKwK case
-        else:
-            raise ValueError("invalid GIF LZW code")
-        out += entry
-        if prev is not None:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    if len(out) < n_pixels:
-        raise ValueError("GIF pixel data ended early")
-    return np.frombuffer(bytes(out[:n_pixels]), dtype=np.uint8)
 
 
 def decode_gif(payload: bytes) -> np.ndarray:
@@ -184,7 +128,7 @@ def _decode_gif_impl(payload: bytes) -> np.ndarray:
                     f"GIF dimensions {sw}x{sh} (frame {w}x{h}) exceed "
                     f"the {_MAX_PIXELS}-pixel decode bound")
             min_code = payload[pos]
-            if not 1 <= min_code <= 8:
+            if not 2 <= min_code <= 8:
                 raise ValueError(f"bad GIF LZW min code size {min_code}")
             pos += 1
             lzw = bytearray()
@@ -192,7 +136,11 @@ def _decode_gif_impl(payload: bytes) -> np.ndarray:
                 ln = payload[pos]
                 lzw += payload[pos + 1:pos + 1 + ln]
                 pos += 1 + ln
-            idx = _lzw_decode(bytes(lzw), min_code, w * h)
+            pixels = _lzw_decode(bytes(lzw), early=0, min_code=min_code,
+                                 lsb=True, n_out=w * h)
+            if len(pixels) < w * h:
+                raise ValueError("GIF pixel data ended early")
+            idx = np.frombuffer(pixels, dtype=np.uint8)
             if int(idx.max()) >= pal.shape[0]:
                 raise ValueError("GIF pixel index outside color table")
             rows = idx.reshape(h, w)

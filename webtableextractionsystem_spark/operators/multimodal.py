@@ -28,8 +28,10 @@ Codecs — ALL REAL, pure numpy/stdlib: binary PPM (P6), uncompressed
 inflate + all five scanline filters, Adam7, CRC-checked), GIF87a/89a
 (operators/gif.py — full LZW, interlace), JFIF JPEG
 (operators/jpeg.py — DCT + Annex K tables, 4:4:4/4:2:0/4:2:2, baseline
-AND progressive SOF2; lossy, so round-trips assert PSNR), WAV PCM16
-audio, MJPEG/AVI video, and classic-PDF text+layout parse
+AND progressive SOF2; lossy, so round-trips assert PSNR), WAV audio
+(PCM16, G.711 u-law/A-law, IMA ADPCM), MJPEG/AVI video (WAV and AVI
+share one RIFF chunk writer and walker, operators/video.py), and
+classic-PDF text+layout parse
 (operators/pdf.py — xref tables, FlateDecode, full positioned-text
 operator set, reading-order layout pass). Unknown magic raises
 NotImplementedError; a corrupt payload of a known format raises
@@ -644,7 +646,8 @@ def frame_sample(media: DataFrame, every_n: int = 2,
 
 
 # ---------------------------------------------------------------------------
-# audio: REAL WAV (RIFF PCM16) codec — pure stdlib `wave` + numpy, same
+# audio: REAL WAV codec (PCM16, G.711, IMA ADPCM) — pure numpy over the
+# RIFF chunk writer/walker shared with the AVI codec (video.py), same
 # discipline as the image codecs (round-trip tested, corrupt -> ValueError,
 # anything non-WAV -> NotImplementedError)
 # ---------------------------------------------------------------------------
@@ -811,24 +814,24 @@ def _ima_decode(data: bytes, ch: int, spb: int,
 def encode_wav(samples: np.ndarray, sample_rate: int = 8000,
                codec: str = "pcm16") -> bytes:
     """[n] or [n, ch] int16 -> RIFF/WAVE payload. ``codec``: 'pcm16'
-    (format tag 1, stdlib wave), 'ulaw' or 'alaw' (G.711 format tags
-    7/6, 8-bit companded — written by hand since stdlib wave is
-    PCM-only)."""
-    import io
-    import wave
+    (format tag 1, 16-bit PCM), 'ulaw' or 'alaw' (G.711 format tags
+    7/6, 8-bit companded), or 'adpcm' (IMA ADPCM, format tag 0x11)."""
+    from .video import _chunk
 
     if samples.ndim == 1:
         samples = samples[:, None]
-    if codec == "pcm16":
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(samples.shape[1])
-            w.setsampwidth(2)
-            w.setframerate(sample_rate)
-            w.writeframes(samples.astype("<i2").tobytes())
-        return buf.getvalue()
     ch = samples.shape[1]
-    if codec == "adpcm":
+    if ch < 1 or sample_rate <= 0:
+        raise ValueError(
+            f"bad WAV parameters: {ch} channels at {sample_rate} Hz")
+    if codec == "pcm16":
+        tag = _WAV_FMT_PCM16
+        data = samples.astype("<i2").tobytes()
+        block_align = 2 * ch
+        bits = 16
+        ext = b""
+        byte_rate = sample_rate * block_align
+    elif codec == "adpcm":
         tag = _WAV_FMT_IMA_ADPCM
         data = _ima_encode(samples.astype(np.int16))
         block_align = ch * (4 + (_IMA_SPB - 1) // 2)
@@ -847,107 +850,67 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 8000,
         byte_rate = sample_rate * ch
     else:
         raise ValueError(f"unknown WAV codec {codec!r}")
-    # non-PCM format tags require the extended fmt (cbSize present) and
-    # a 'fact' chunk with the frame count — strict external readers
-    # (libsndfile, ACM) reject compressed WAVs without them
     fmt = (tag.to_bytes(2, "little") + ch.to_bytes(2, "little")
            + sample_rate.to_bytes(4, "little")
            + byte_rate.to_bytes(4, "little")
            + block_align.to_bytes(2, "little")
            + bits.to_bytes(2, "little")
            + ext)
-    fact = samples.shape[0].to_bytes(4, "little")
-    body = (b"WAVEfmt " + len(fmt).to_bytes(4, "little") + fmt
-            + b"fact" + len(fact).to_bytes(4, "little") + fact
-            + b"data" + len(data).to_bytes(4, "little") + data
-            + (b"\x00" if len(data) % 2 else b""))
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
+    # non-PCM format tags require the extended fmt (cbSize present) and
+    # a 'fact' chunk with the frame count — strict external readers
+    # (libsndfile, ACM) reject compressed WAVs without them
+    fact = b"" if tag == _WAV_FMT_PCM16 else \
+        _chunk(b"fact", samples.shape[0].to_bytes(4, "little"))
+    return _chunk(b"RIFF", b"WAVE" + _chunk(b"fmt ", fmt) + fact
+                  + _chunk(b"data", data))
 
 
 def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
-    """WAV payload -> ([n, ch] int16 array, sample_rate). PCM16 via
-    stdlib wave; G.711 u-law/A-law (format tags 7/6) via the expansion
-    tables. Corrupt RIFF/fmt data raises ValueError; non-WAV magic
-    raises NotImplementedError (other compressed codecs need external
-    libs)."""
-    import io
-    import struct
-    import wave
+    """WAV payload -> ([n, ch] int16 array, sample_rate). PCM (9-16
+    bit), G.711 u-law/A-law (format tags 7/6) via the expansion tables,
+    and IMA ADPCM (tag 0x11). Corrupt RIFF/fmt data raises ValueError;
+    non-WAV magic raises NotImplementedError (other compressed codecs
+    need external libs)."""
+    from .video import _chunks
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise NotImplementedError(
-            "only RIFF/WAVE PCM or G.711 is decodable without audio "
-            "libraries")
-    # ONE chunk walk shared by every decode path (fmt dispatch + the
-    # non-PCM decoders used to re-walk the same list)
-    chunks = _wav_first_chunks(payload, (b"fmt ", b"data", b"fact"))
+            "only RIFF/WAVE PCM, G.711 or IMA ADPCM is decodable without "
+            "audio libraries")
+    # first occurrence of each chunk, wherever it sits
+    chunks: dict = {}
+    for cc, start, end in _chunks(payload, 12, len(payload)):
+        chunks.setdefault(cc, payload[start:end])
     fmt = chunks.get(b"fmt ")
     if fmt is None:
         raise ValueError("WAV without fmt chunk")
     if len(fmt) < 16:
         raise ValueError("truncated WAV fmt chunk")
+    data = chunks.get(b"data")
+    if data is None:
+        raise ValueError("WAV missing data chunk")
     tag = int.from_bytes(fmt[0:2], "little")
-    if tag in (_WAV_FMT_ULAW, _WAV_FMT_ALAW):
-        data, rate = _decode_wav_g711(chunks, tag)
-    elif tag == _WAV_FMT_IMA_ADPCM:
-        data, rate = _decode_wav_ima(chunks)
+    rate = int.from_bytes(fmt[4:8], "little")
+    if tag == _WAV_FMT_IMA_ADPCM:
+        out = _decode_wav_ima(fmt, data, chunks.get(b"fact"))
+    elif tag in (_WAV_FMT_PCM16, _WAV_FMT_ULAW, _WAV_FMT_ALAW):
+        out = _decode_wav_fixed(fmt, data, tag)
     else:
-        try:
-            with wave.open(io.BytesIO(payload), "rb") as w:
-                if w.getsampwidth() != 2:
-                    raise ValueError(
-                        f"unsupported WAV sample width {w.getsampwidth()}")
-                ch = w.getnchannels()
-                frames = w.readframes(w.getnframes())
-                rate = w.getframerate()
-        # truncated containers surface as EOFError/struct.error from the
-        # stdlib chunk reader, not only wave.Error — all are data errors
-        except (wave.Error, EOFError, struct.error) as e:
-            raise ValueError("corrupt WAV container") from e
-        pcm = np.frombuffer(frames, dtype="<i2")
-        if ch <= 0 or pcm.size % max(ch, 1):
-            raise ValueError("truncated WAV frame data")
-        data = pcm.reshape(-1, ch)
+        raise ValueError(f"unsupported WAV format tag {tag}")
     # degenerate-but-parseable payloads must raise here, not divide by
-    # zero / NaN downstream in audio_features (rate=0 passes stdlib
-    # wave; an empty data chunk yields int(sqrt(nan)))
+    # zero / NaN downstream in audio_features (an empty data chunk
+    # yields int(sqrt(nan)))
     if rate <= 0:
         raise ValueError(f"bad WAV sample rate {rate}")
-    if data.shape[0] == 0:
+    if out.shape[0] == 0:
         raise ValueError("empty WAV data chunk")
-    return data, rate
+    return out, rate
 
 
-def _wav_chunks(payload: bytes):
-    """Yield (fourcc, data) for the RIFF/WAVE payload's chunks."""
-    pos = 12
-    n = len(payload)
-    while pos + 8 <= n:
-        cc = payload[pos:pos + 4]
-        ln = int.from_bytes(payload[pos + 4:pos + 8], "little")
-        data = payload[pos + 8:pos + 8 + ln]
-        if len(data) < ln:
-            raise ValueError("truncated WAV chunk")
-        yield cc, data
-        pos += 8 + ln + (ln & 1)  # chunks are word-aligned
-
-
-def _wav_first_chunks(payload: bytes, wanted: tuple) -> dict:
-    """First occurrence of each wanted fourcc — the one chunk walk
-    shared by every non-PCM WAV decode path."""
-    out: dict = {}
-    for cc, data in _wav_chunks(payload):
-        if cc in wanted and cc not in out:
-            out[cc] = data
-    return out
-
-
-def _decode_wav_ima(chunks: dict) -> tuple[np.ndarray, int]:
-    fmt = chunks.get(b"fmt ")
-    data_chunk = chunks.get(b"data")
-    fact = chunks.get(b"fact")
-    if fmt is None or data_chunk is None or len(fmt) < 20:
-        raise ValueError("WAV missing fmt/data chunk")
+def _decode_wav_ima(fmt: bytes, data: bytes,
+                    fact: bytes | None) -> np.ndarray:
+    if len(fmt) < 20:
+        raise ValueError("truncated IMA ADPCM fmt chunk")
     ch = int.from_bytes(fmt[2:4], "little")
     rate = int.from_bytes(fmt[4:8], "little")
     block_align = int.from_bytes(fmt[12:14], "little")
@@ -955,30 +918,34 @@ def _decode_wav_ima(chunks: dict) -> tuple[np.ndarray, int]:
     spb = int.from_bytes(fmt[18:20], "little")
     if ch <= 0 or rate <= 0 or bits != 4 or spb < 2:
         raise ValueError("bad IMA ADPCM WAV fmt parameters")
-    out = _ima_decode(data_chunk, ch, spb, block_align)
+    out = _ima_decode(data, ch, spb, block_align)
     if fact is not None and len(fact) >= 4:
         n = int.from_bytes(fact[0:4], "little")
         if n > len(out):
             raise ValueError("IMA ADPCM fact count exceeds decoded data")
         out = out[:n]  # trim tail-block padding
-    return out, rate
+    return out
 
 
-def _decode_wav_g711(chunks: dict, tag: int) -> tuple[np.ndarray, int]:
-    fmt = chunks.get(b"fmt ")
-    data_chunk = chunks.get(b"data")
-    if fmt is None or data_chunk is None:
-        raise ValueError("WAV missing fmt/data chunk")
+def _decode_wav_fixed(fmt: bytes, data: bytes, tag: int) -> np.ndarray:
+    """PCM (tag 1) and G.711 (tags 6/7): frames of ``ch`` fixed-width
+    samples. PCM keeps the RIFF container rounding (9-16 valid bits are
+    stored as 2-byte samples) and drops a trailing partial frame; a
+    G.711 partial frame raises."""
     ch = int.from_bytes(fmt[2:4], "little")
-    rate = int.from_bytes(fmt[4:8], "little")
     bits = int.from_bytes(fmt[14:16], "little")
-    if ch <= 0 or rate <= 0 or bits != 8:
-        raise ValueError("bad G.711 WAV fmt parameters")
-    if len(data_chunk) % ch:
+    pcm = tag == _WAV_FMT_PCM16
+    if ch <= 0 or not (9 <= bits <= 16 if pcm else bits == 8):
+        raise ValueError(f"bad WAV fmt parameters: {ch} channels, "
+                         f"{bits} bits per sample")
+    frame = ch * (2 if pcm else 1)
+    if not pcm and len(data) % frame:
         raise ValueError("truncated WAV frame data")
+    data = data[:len(data) - len(data) % frame]
+    if pcm:
+        return np.frombuffer(data, dtype="<i2").reshape(-1, ch)
     table = _ULAW_TABLE if tag == _WAV_FMT_ULAW else _ALAW_TABLE
-    codes = np.frombuffer(data_chunk, dtype=np.uint8)
-    return table[codes].reshape(-1, ch), rate
+    return table[np.frombuffer(data, dtype=np.uint8)].reshape(-1, ch)
 
 
 def synth_audio_for_spans(spans_out: DataFrame) -> DataFrame:

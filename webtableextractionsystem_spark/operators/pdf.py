@@ -827,72 +827,67 @@ def _run_length_encode(data: bytes) -> bytes:
 _LZW_CLEAR, _LZW_EOD, _LZW_FIRST = 256, 257, 258
 
 
-def _lzw_width(next_code: int, early: int) -> int:
-    v = next_code + early
-    if v < 512:
-        return 9
-    if v < 1024:
-        return 10
-    if v < 2048:
-        return 11
-    # capped at 12, never raised: §7.4.4.2 permits an encoder to defer
-    # the Clear until the table is COMPLETELY full (4096 entries), so
-    # a decoder that errored at the width recomputation after entry
-    # 4095 would reject valid streams (review finding). The table-full
-    # state itself stops growth in _lzw_decode.
-    return 12
-
-
-def _lzw_decode(raw: bytes, early: int = 1) -> bytes:
-    """§7.4.4 (TIFF-style) LZW: codes packed MSB-first, 9 bits growing
-    to 12, Clear=256 resets the table, EOD=257 ends the stream
-    (required). ``early`` is /EarlyChange: 1 (default) bumps the code
-    width one code before the table index strictly requires it. NOTE:
-    bit order and the fixed 256-literal alphabet differ from GIF's LZW
-    (gif.py) — the dictionary-growth procedure is the same."""
+def _lzw_decode(raw: bytes, early: int = 1, min_code: int = 8,
+                lsb: bool = False, n_out: int | None = None) -> bytes:
+    """The package's one LZW decoder (§7.4.4, TIFF §13, GIF89a): Clear =
+    2**min_code resets the table, Clear+1 ends the stream, table codes
+    start at Clear+2, and each code is min(12, (next_code +
+    early).bit_length()) bits wide. PDF and TIFF read MSB-first codes over
+    256 literals with /EarlyChange ``early`` and require the end code; GIF
+    reads LSB-first (``lsb``) with early 0 and stops at ``n_out`` pixels,
+    returning them short on an early end code. A full 4096-entry table
+    stops growing (§7.4.4.2 lets an encoder defer the Clear until then).
+    Without ``n_out`` the output is bounded by _MAX_STREAM_BYTES."""
+    clear = 1 << min_code
+    first = clear + 2
     out = bytearray()
     table: list[bytes] = []
-    next_code = _LZW_FIRST
+    next_code = first
     prev: bytes | None = None
-    width = 9
     acc = nbits = 0
     i, n = 0, len(raw)
-    while True:
+    while n_out is None or len(out) < n_out:
+        width = min(12, (next_code + early).bit_length())
         while nbits < width:
             if i >= n:
-                raise ValueError("truncated PDF LZW stream")
-            acc = (acc << 8) | raw[i]
+                raise ValueError("truncated LZW stream")
+            if lsb:
+                acc |= raw[i] << nbits
+            else:
+                acc = (acc << 8) | raw[i]
             nbits += 8
             i += 1
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
         nbits -= width
-        if code == _LZW_EOD:
-            return bytes(out)
-        if code == _LZW_CLEAR:
-            table = []
-            next_code = _LZW_FIRST
-            prev = None
-            width = 9
+        if lsb:
+            code = acc & ((1 << width) - 1)
+            acc >>= width
+        else:
+            # keep only the unread bits: an accumulator that keeps every
+            # byte grows with the stream, making each shift (and the
+            # decode) quadratic
+            code = acc >> nbits
+            acc &= (1 << nbits) - 1
+        if code == clear + 1:
+            break
+        if code == clear:
+            table, next_code, prev = [], first, None
             continue
-        if code < 256:
-            entry = bytes([code])
-        elif code - _LZW_FIRST < len(table):
-            entry = table[code - _LZW_FIRST]
+        if code < clear:
+            entry = bytes((code,))
+        elif code - first < len(table):
+            entry = table[code - first]
         elif code == next_code and prev is not None:
             entry = prev + prev[:1]     # the KwKwK case
         else:
-            raise ValueError("invalid PDF LZW code")
+            raise ValueError("invalid LZW code")
         if prev is not None and next_code < 4096:
-            # 12-bit code space: a full table stops growing (memory
-            # bound); codes stay <= 4095 so reads remain valid until
-            # the encoder's (spec-required) Clear arrives
             table.append(prev + entry[:1])
             next_code += 1
         out += entry
-        if len(out) > _MAX_STREAM_BYTES:
+        if n_out is None and len(out) > _MAX_STREAM_BYTES:
             raise ValueError("PDF stream exceeds the inflate bound")
         prev = entry
-        width = _lzw_width(next_code, early)
+    return bytes(out[:n_out])
 
 
 def _lzw_encode(data: bytes, early: int = 1,
@@ -914,6 +909,7 @@ def _lzw_encode(data: bytes, early: int = 1,
         while nbits >= 8:
             out.append((acc >> (nbits - 8)) & 0xFF)
             nbits -= 8
+        acc &= (1 << nbits) - 1  # unwritten bits only, as in the decoder
 
     def flush() -> None:
         nonlocal acc, nbits
@@ -936,7 +932,7 @@ def _lzw_encode(data: bytes, early: int = 1,
             first = False
         else:
             dec_next += 1
-        width = _lzw_width(dec_next, early)
+        width = min(12, (dec_next + early).bit_length())
 
     cur = b""
     for k in range(len(data)):

@@ -932,31 +932,31 @@ def hll_distinct(spark: SparkSession, sf_dir: str,
     register layout and estimate, but the only shuffle is the 256-row
     register merge (partial max per register map-side) — the plan audit
     pins that the sketch-only form has no distinct-fp exchange."""
+    return _hll_sketch(load_documents(spark, sf_dir), [], with_exact)
+
+
+def _hll_sketch(docs: DataFrame, keys: list[str],
+                with_exact: bool) -> DataFrame:
+    """The one register pipeline behind hll_distinct (no ``keys``) and
+    hll_by_source (``keys=["source"]``): registers keyed by (*keys,
+    bucket), partial max per register map-side, then one fold per group.
+    ``with_exact`` adds the exact_distinct gate: the bucket is a function
+    of fp, so distinct fps partition by bucket and the per-bucket
+    distinct counts sum to the group's exact count in the same pass."""
     bucket, rho, h = _hll_doc_cols()
     # spread the one-file scan: the normalize+md5 register projection
     # is the whole per-row cost and would otherwise run on one core
-    docs = spread(load_documents(spark, sf_dir)).select(
-        bucket.alias("b"), rho.alias("r"), h.alias("fp"))
-    if not with_exact:
-        regs = docs.groupBy("b").agg(F.max("r").alias("mr"))
-        sketch = regs.agg(
-            F.count("*").alias("n_registers_set"),
-            F.sum(F.pow(F.lit(2.0), -F.col("mr"))).alias("zsum"),
-        )
-        return sketch.select("n_registers_set", *_hll_estimate_cols())
-    # ONE scan: the bucket is a function of fp, so distinct fps
-    # partition by bucket and per-bucket distinct counts sum to the
-    # global exact count — no second pass over the corpus
-    regs = docs.groupBy("b").agg(
-        F.max("r").alias("mr"),
-        F.countDistinct("fp").alias("nd"))
-    sketch = regs.agg(
+    docs = spread(docs).select(
+        *keys, bucket.alias("b"), rho.alias("r"), h.alias("fp"))
+    nd, exact = ([F.countDistinct("fp").alias("nd")], ["exact_distinct"]) \
+        if with_exact else ([], [])
+    regs = docs.groupBy(*keys, "b").agg(F.max("r").alias("mr"), *nd)
+    sketch = regs.groupBy(*keys).agg(
         F.count("*").alias("n_registers_set"),
         F.sum(F.pow(F.lit(2.0), -F.col("mr"))).alias("zsum"),
-        F.sum("nd").alias("exact_distinct"),
-    )
+        *[F.sum("nd").alias(c) for c in exact])
     return sketch.select(
-        "n_registers_set", *_hll_estimate_cols(), "exact_distinct")
+        *keys, "n_registers_set", *_hll_estimate_cols(), *exact)
 
 
 def _hll_doc_cols():
@@ -1199,27 +1199,8 @@ def hll_by_source(spark: SparkSession, sf_dir: str,
     hll_distinct): same registers/estimate, no per-group
     countDistinct(fp) — the shuffle payload is <=256 rows per group
     regardless of corpus size."""
-    bucket, rho, h = _hll_doc_cols()
-    docs = spread(load_documents(spark, sf_dir)).select(
-        "source", bucket.alias("b"), rho.alias("r"), h.alias("fp"))
-    if not with_exact:
-        regs = docs.groupBy("source", "b").agg(F.max("r").alias("mr"))
-        sketch = regs.groupBy("source").agg(
-            F.count("*").alias("n_registers_set"),
-            F.sum(F.pow(F.lit(2.0), -F.col("mr"))).alias("zsum"),
-        )
-        return sketch.select(
-            "source", "n_registers_set", *_hll_estimate_cols())
-    regs = docs.groupBy("source", "b").agg(
-        F.max("r").alias("mr"), F.countDistinct("fp").alias("nd"))
-    sketch = regs.groupBy("source").agg(
-        F.count("*").alias("n_registers_set"),
-        F.sum(F.pow(F.lit(2.0), -F.col("mr"))).alias("zsum"),
-        F.sum("nd").alias("exact_distinct"),
-    )
-    return sketch.select(
-        "source", "n_registers_set", *_hll_estimate_cols(),
-        "exact_distinct")
+    return _hll_sketch(load_documents(spark, sf_dir), ["source"],
+                       with_exact)
 
 
 HLL_BY_SOURCE_SQL = rf"""

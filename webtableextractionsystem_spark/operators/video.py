@@ -26,8 +26,22 @@ from .jpeg import decode_jpeg, encode_jpeg
 
 
 def _chunk(fourcc: bytes, data: bytes) -> bytes:
+    """One RIFF chunk: the writer shared by the AVI and WAV encoders."""
     pad = b"\x00" if len(data) % 2 else b""  # RIFF chunks are word-aligned
     return fourcc + len(data).to_bytes(4, "little") + data + pad
+
+
+def _chunks(data: bytes, off: int, end: int):
+    """Yield (fourcc, body_start, body_end) per RIFF chunk in
+    data[off:end], skipping pad bytes: the walker shared by the AVI and
+    WAV decoders. A chunk running past ``end`` raises ValueError."""
+    while off + 8 <= end:
+        size = int.from_bytes(data[off + 4:off + 8], "little")
+        body_end = off + 8 + size
+        if body_end > end:
+            raise ValueError("truncated RIFF chunk")
+        yield data[off:off + 4], off + 8, body_end
+        off = body_end + size % 2
 
 
 def _list(fourcc: bytes, data: bytes) -> bytes:
@@ -79,8 +93,7 @@ def encode_avi_mjpeg(frames: list[np.ndarray] | np.ndarray,
                  + _list(b"strl", _chunk(b"strh", strh)
                          + _chunk(b"strf", strf)))
     movi = _list(b"movi", b"".join(_chunk(b"00dc", j) for j in jpegs))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
+    return _chunk(b"RIFF", b"AVI " + hdrl + movi)
 
 
 def decode_video(payload: bytes) -> tuple[np.ndarray, int]:
@@ -101,32 +114,24 @@ def decode_video(payload: bytes) -> tuple[np.ndarray, int]:
     fourccs: list[bytes] = []
     raw_frames: list[bytes] = []
 
-    def walk(data: bytes, off: int, end: int) -> None:
+    def walk(off: int, end: int) -> None:
         nonlocal us_per_frame
-        while off + 8 <= end:
-            cid = data[off:off + 4]
-            size = int.from_bytes(data[off + 4:off + 8], "little")
-            body_end = off + 8 + size
-            if body_end > end:
-                raise ValueError("truncated AVI chunk")
+        for cid, body, body_end in _chunks(payload, off, end):
             if cid == b"LIST":
-                walk(data, off + 12, body_end)
+                walk(body + 4, body_end)
             elif cid == b"avih":
-                us_per_frame = int.from_bytes(
-                    data[off + 8:off + 12], "little")
-            elif cid == b"strh":
-                if data[off + 8:off + 12] == b"vids":
-                    fourccs.append(data[off + 12:off + 16])
-                    # dwScale/dwRate (fps = rate/scale) live after
-                    # fccType+handler+dwFlags+wPriority+wLanguage+dwInitial
-                    scale_rate.append((
-                        int.from_bytes(data[off + 28:off + 32], "little"),
-                        int.from_bytes(data[off + 32:off + 36], "little")))
+                us_per_frame = int.from_bytes(payload[body:body + 4], "little")
+            elif cid == b"strh" and payload[body:body + 4] == b"vids":
+                strh = payload[body:body + 28]
+                fourccs.append(strh[4:8])
+                # dwScale/dwRate (fps = rate/scale) live after
+                # fccType+handler+dwFlags+wPriority+wLanguage+dwInitial
+                scale_rate.append((int.from_bytes(strh[20:24], "little"),
+                                   int.from_bytes(strh[24:28], "little")))
             elif cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
-                raw_frames.append(data[off + 8:body_end])
-            off = body_end + (size % 2)  # skip the word-alignment pad
+                raw_frames.append(payload[body:body_end])
 
-    walk(payload, 12, len(payload))
+    walk(12, len(payload))
     if not us_per_frame:
         # avih absent OR dwMicroSecPerFrame == 0 (encoders that rely on
         # strh dwScale/dwRate): fall back to the video strh's rate/scale
