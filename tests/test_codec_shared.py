@@ -2,7 +2,8 @@
 (operators/pdf.py), without Spark: PDF's PNG predictors over every row
 filter, their malformed inputs, and the one image pixel bound; GIF's
 use of the one LZW decoder; and the RIFF chunk walk WAV shares with AVI
-(operators/video.py), which reads chunks in any order."""
+(operators/video.py), which reads chunks in any order and LISTs nested
+to any depth."""
 
 import time
 
@@ -101,6 +102,35 @@ def test_wav_pcm_valid_bits_round_up_to_container_bytes():
         wav[34:36] = bits.to_bytes(2, "little")
         with pytest.raises(ValueError):
             MM.decode_audio(bytes(wav))
+
+
+def _nest(chunk: bytes, depth: int) -> bytes:
+    """``chunk`` wrapped in ``depth`` nested LIST chunks."""
+    for _ in range(depth):
+        chunk = V._chunk(b"LIST", b"xxxx" + chunk)
+    return chunk
+
+
+def test_avi_deeply_nested_lists_walk_without_recursion():
+    """The AVI walk keeps its own stack: 1,200 nested LISTs holding
+    nothing are a corrupt container (ValueError, not RecursionError),
+    and frames spread over top-level and deeply nested LISTs decode in
+    document order."""
+    with pytest.raises(ValueError):
+        V.decode_video(V._chunk(b"RIFF", b"AVI " + _nest(b"", 1200)))
+
+    frames = [np.full((8, 8, 3), 40 + 60 * i, dtype=np.uint8)
+              for i in range(3)]
+    avi = V.encode_avi_mjpeg(frames, fps=10)
+    movi = avi.index(b"movi") - 8
+    dc = list(V._chunks(avi, movi + 12, len(avi)))
+    assert [cid for cid, _, _ in dc] == [b"00dc"] * 3
+    c0, c1, c2 = (V._chunk(b"00dc", avi[a:b]) for _, a, b in dc)
+    body = (avi[12:movi] + V._chunk(b"LIST", b"movi" + c0)
+            + _nest(c1, 1200) + c2)
+    out, us = V.decode_video(V._chunk(b"RIFF", b"AVI " + body))
+    assert us == 100_000
+    assert np.array_equal(out, np.stack(frames))
 
 
 def test_lzw_coding_time_is_linear_in_stream_length():

@@ -1837,6 +1837,40 @@ def test_streaming_neardup_verified_empty_input_noop(spark, tmp_path):
                                str(tmp_path / "ck"), str(tmp_path / "st"))
 
 
+def test_streaming_neardup_verify_failure_releases_persists(
+        spark, tmp_path, monkeypatch):
+    """A pairs microbatch whose verify raises fails the stream and
+    leaves none of the relations it persisted (candidate pairs, their
+    docs, the fetched shingles) cached in the session."""
+    from webtableextractionsystem_spark.operators import dedup as DD
+    from webtableextractionsystem_spark.streaming.stateful import (
+        streaming_neardup_verified,
+    )
+
+    in_dir = str(tmp_path / "in")
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
+        .select("doc_id", "text").where(F.col("doc_id") < 60)
+    copy = docs.where(F.col("doc_id") == 0) \
+        .select(F.lit(999999).cast("long").alias("doc_id"), "text")
+    docs.unionByName(copy).write.parquet(in_dir)
+
+    verified = []
+
+    def failing_verify(cand, sh):
+        verified.append(sh)
+        raise RuntimeError("verify failed on purpose")
+
+    monkeypatch.setattr(DD, "jaccard_verified", failing_verify)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    with pytest.raises(Exception, match="verify failed on purpose"):
+        streaming_neardup_verified(spark, in_dir, str(tmp_path / "out"),
+                                   str(tmp_path / "ck"),
+                                   str(tmp_path / "st"))
+    assert verified  # the batch got as far as the shingle fetch
+    assert set(jsc.getPersistentRDDs()) <= before
+
+
 def test_pdf_roundtrip_and_layout():
     """encode_pdf -> decode_pdf is exact on positions/sizes/text for
     Flate and plain streams, multi-page, with every string-escape class;

@@ -6,7 +6,9 @@ defaultParallelism: the one-file testdata keeps its round-robin
 Exchange, a multi-file corpus of at least defaultParallelism files
 gets none, and the answers agree across the two layouts. The store
 owns every relation it hands out, so clear_session_caches() leaves no
-cached block and no staged table behind. The token array
+cached block behind, and a miss forgets the entries of dead sessions.
+decontaminate answers the same rows whether or not the gram relation
+is already stored. The token array
 (textstats.tokenized) is split once per documents scan and never
 inside a higher-order function's lambda, and a hash array read more
 than once is hashed once per row.
@@ -14,6 +16,7 @@ than once is hashed once per row.
 
 import re
 
+import duckdb
 import pytest
 
 from webtableextractionsystem_spark.operators import _cache
@@ -77,31 +80,62 @@ def test_spread_decision_runs_no_job(spark, multi_file_sf):
         spark.sparkContext.defaultParallelism
 
 
-def _staged_tables(spark) -> set:
-    return {t.name for t in spark.catalog.listTables()
-            if t.name.startswith("staged_")}
-
-
 def test_clear_session_caches_releases_every_entry(spark):
     # start from an empty cache manager: other tests may have cached
     # relations the store does not own
     _cache.clear_session_caches()
     spark.catalog.clearCache()
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    assert cache_manager.isEmpty() and not _staged_tables(spark)
+    assert cache_manager.isEmpty()
 
     DD.bloom_filter_stats(spark, SF).collect()   # eager persists
     TS.bm25_topk(spark, SF).count()
     TS.pmi_topk(spark, SF).collect()             # lazy persist
-    TS.stage_dsir_features(spark, SF)            # staged table
     assert not cache_manager.isEmpty()
-    assert _staged_tables(spark)
 
     _cache.clear_session_caches()
     assert cache_manager.isEmpty()
-    assert not _staged_tables(spark)
     # the next call rebuilds from scratch
     assert TS.bm25_topk(spark, SF).count() > 0
+
+
+def test_session_persisted_sweeps_dead_session_entries(spark):
+    """A store miss evicts the entries keyed to other (dead)
+    SparkContexts: without the sweep a long-lived process would
+    accumulate their JVM references."""
+    dead = ("dead-app-id", "grams", "bogus", 99)
+    _cache._STORE[dead] = object()
+    try:
+        _cache.session_persisted(spark, ("sweep-probe",),
+                                 lambda: spark.range(3), lazy=True)
+        assert dead not in _cache._STORE
+    finally:
+        _cache.clear_session_caches()
+
+
+def test_decontaminate_with_and_without_stored_grams(spark):
+    """decontaminate's probe side scans the grams lazily until another
+    operator (repeated_ngrams) stores the gram relation, then reads the
+    stored one. Both branches answer the same rows as DuckDB's
+    decontaminate_sql()."""
+    key = ("grams", SF, DD.DECON_K)
+    _cache.clear_session_caches()
+    try:
+        cold_rows, cold_plan = _rows_and_plan(DD.decontaminate(spark, SF))
+        assert _cache.session_peek(spark, key) is None
+        assert "InMemoryTableScan" not in cold_plan, cold_plan
+        DD.repeated_ngrams(spark, SF)
+        assert _cache.session_peek(spark, key) is not None
+        warm_rows, warm_plan = _rows_and_plan(DD.decontaminate(spark, SF))
+        assert "InMemoryTableScan" in warm_plan, warm_plan
+    finally:
+        _cache.clear_session_caches()
+    con = duckdb.connect()
+    con.sql("CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{SF}/documents.parquet')")
+    duck_rows = sorted(con.sql(DD.decontaminate_sql()).fetchall())
+    assert cold_rows == warm_rows == duck_rows
+    assert any(r[2] for r in cold_rows)
 
 
 # the document tokenizer as an optimized plan prints it

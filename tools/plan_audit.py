@@ -20,7 +20,8 @@ KEY = ["PushedFilters", "ReadSchema", "WholeStageCodegen", "HashAggregate",
        "BroadcastNestedLoopJoin", "Join type", "Scan parquet", "Window",
        "ArrowEvalPython", "MapInPandas", "MapInArrow", "Project", "Filter",
        # cache boundaries: without these a persisted subtree prints as a
-       # recompute, hiding (or masking a regression of) a staged table
+       # recompute, hiding (or masking a regression of) a session-store
+       # persist
        "InMemoryTableScan", "InMemoryRelation"]
 
 
@@ -39,14 +40,12 @@ def key_lines(plan: str) -> str:
     return "\n".join(out)
 
 
-def digest(plan: str, warehouse: str) -> str:
+def digest(plan: str) -> str:
     """Short sha256 of the whole formatted plan, with expression ids
-    (``#123``), exchange ids (``plan_id=4``) and the warehouse directory
-    of the staged tables (it follows the working directory) normalized:
-    the key lines show node names only, so a change inside an expression
-    moves this digest and nothing else in PLANS.md."""
+    (``#123``) and exchange ids (``plan_id=4``) normalized: the key
+    lines show node names only, so a change inside an expression moves
+    this digest and nothing else in PLANS.md."""
     norm = re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
-    norm = norm.replace(warehouse, "<warehouse>")
     return hashlib.sha256(norm.encode()).hexdigest()[:16]
 
 
@@ -225,24 +224,7 @@ def main() -> None:
             DD.winnowing_fingerprints(spark, SF),
     }
 
-    # staging forms LAST: stage_* replaces (and unpersists) the session
-    # store's in-memory entry, so every section above this line is
-    # formatted first, showing the default persisted shape, and the two
-    # below show consumers reading the bucketed staged table (zero
-    # exchange on the bucket-keyed aggregation)
     plans = {title: fmt(spark, df) for title, df in sections.items()}
-    DD.stage_gram_relation(spark, SF)
-    TS.stage_dsir_features(spark, SF)
-    plans[
-        "q_doc_repeated_ngrams AFTER stage_gram_relation — consumers "
-        "scan the h-bucketed staged parquet table; the incidence "
-        "groupBy(h) inherits the bucketing (no exchange of the "
-        "corpus-token-sized relation)"] = \
-        fmt(spark, DD.repeated_ngrams(spark, SF))
-    plans[
-        "q_doc_dsir_weights AFTER stage_dsir_features — distribution "
-        "build aggregates straight off the f-bucketed staged scan"] = \
-        fmt(spark, TS.dsir_weights(spark, SF))
 
     parts = [
         "# PLANS — physical-plan audit of the headline queries",
@@ -257,10 +239,9 @@ def main() -> None:
         "generator, not part of the pipeline).",
         "",
     ]
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
     for title, plan in plans.items():
         parts.append(f"## {title}\n")
-        parts.append(f"plan sha256 `{digest(plan, warehouse)}`\n")
+        parts.append(f"plan sha256 `{digest(plan)}`\n")
         parts.append("```\n" + key_lines(plan) + "\n```\n")
     spark.stop()
 

@@ -10,9 +10,9 @@ interchange formats users of the reference expect:
   ``[name,url],rel,[name,url]`` per row (FileIO.writeTriad2csv,
   FileIO.py:144-155).
 * ``write_entities_json`` — entity.json-shaped output.
-* ``write_bucketed_table`` — hash-bucketed managed tables for
-  shuffle-free joins; plain parquet partitioned by bucket is the pickle
-  replacement and needs no helper.
+* The pickle replacement (S10) is plain parquet partitioned by bucket
+  (``partitionBy("bucket")``, as ``checkpoint.py`` writes EXTRACTED)
+  and needs no helper.
 * ``tables_docx`` (S13) and ``er_graph_json`` (S15) — the derived
   per-table Word XML and per-document relation graph. Each is a per-row
   ``operators.extraction.arrow_map`` over one Spark-free function
@@ -108,18 +108,6 @@ def write_entity_props_csv(entities: DataFrame, path: str) -> None:
     flat = entities.select(
         "name", F.explode("props").alias("prop", "value"))
     flat.write.mode("overwrite").option("escape", '"').csv(path)
-
-
-def write_bucketed_table(df: DataFrame, table: str, key: str,
-                         n_buckets: int = 32) -> None:
-    """Hash-bucketed + bucket-sorted managed table (Spark bucketing,
-    Hive layout): two tables bucketed the same way on their join key
-    join WITHOUT a shuffle Exchange on either side — the co-located-join
-    lever for repeatedly-joined big tables at 100 TB (e.g. spans <->
-    media on media_ref, signatures <-> docs on doc_id). Asserted against
-    the physical plan in tests/test_urlfilters_io.py."""
-    df.write.mode("overwrite").format("parquet") \
-        .bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
 
 
 # ---------------------------------------------------------------------------

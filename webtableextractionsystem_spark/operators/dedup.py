@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._cache import session_peek, session_persisted, session_staged
+from ._cache import session_peek, session_persisted
 from .textstats import _md5_u32, _ngrams, load_documents, spread, tokenized
 
 SHINGLE_K = 3
@@ -1353,35 +1353,10 @@ def _gram_relation(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     the corpus shingle+hash pass runs once per session). Only operators
     with MULTIPLE full-corpus consumers should call this; anything that
     needs a filtered slice must scan `_grams_lazy` bespoke to keep
-    predicate pushdown (see decontaminate).
-
-    Storage contract: the relation is ~10x the corpus width (one row
-    per token), so the in-memory persist is the right trade only
-    WITHIN one query (or a short bench session at test scale). A
-    multi-query 100 TB session calls ``stage_gram_relation`` first —
-    every consumer then transparently reads the h-bucketed staged
-    table instead (same cache key), and the incidence groupBy('h') /
-    probe equi-joins reuse the bucketing with zero exchange."""
+    predicate pushdown (see decontaminate)."""
     return session_persisted(
         spark, ("grams", sf_dir, k),
         lambda: _grams_lazy(spark, sf_dir, k))
-
-
-def stage_gram_relation(spark: SparkSession, sf_dir: str,
-                        k: int = DECON_K,
-                        n_buckets: int = 64) -> DataFrame:
-    """Write-once h-bucketed staging form of the gram relation (the
-    100 TB path for multi-query sessions — see _gram_relation's storage
-    contract and operators/_cache.session_staged). After this call,
-    repeated_ngrams / ngram_clean / decontaminate's probe side all
-    read the staged table: the gram-vocabulary aggregation and the
-    hash equi-joins inherit HashPartitioning(h) from the bucketed scan
-    (plan-asserted in tests) rather than exchanging a corpus-token-
-    sized relation."""
-    return session_staged(
-        spark, ("grams", sf_dir, k),
-        lambda: _grams_lazy(spark, sf_dir, k),
-        bucket_col="h", n_buckets=n_buckets)
 
 
 def _gram_incidence(grams: DataFrame) -> DataFrame:

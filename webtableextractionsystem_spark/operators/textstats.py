@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._cache import session_peek, session_persisted, session_staged
+from ._cache import session_persisted
 
 # common-word list for the stopword/langid heuristics (includes the
 # synthetic corpus' function-ish words so the signal is non-trivial)
@@ -1527,17 +1527,12 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring pass needs ZERO shuffles, no persist, and no join at any
     corpus size. Integer llr_q summation is order-independent, so the
     restructure is value-identical to the joined form (equivalence
-    pinned by test_staging / the driver oracle).
+    pinned by the driver oracle).
 
-    The distribution pass reuses a session-staged/persisted feature
-    relation OPPORTUNISTICALLY (session_peek — if stage_dsir_features
-    ran, the groupBy('f') inherits the f-bucketing with zero exchange);
-    otherwise it scans the lazy explode. Nothing here forces a
-    corpus-token-sized materialization anymore — the 100 TB-safe path
-    is now the DEFAULT, staging an optional accelerator."""
-    docs = session_peek(spark, ("dsir_feats", sf_dir))
-    if docs is None:
-        docs = _dsir_feats_lazy(spark, sf_dir)
+    The distribution pass scans the lazy feature explode
+    (_dsir_feats_lazy): nothing here forces a corpus-token-sized
+    materialization."""
+    docs = _dsir_feats_lazy(spark, sf_dir)
     tgt = F.col("source").isin(*DSIR_TARGET_SOURCES)
     counts = docs.groupBy("f").agg(
         F.count("*").alias("cq"),
@@ -1587,28 +1582,13 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dsir_feats_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The un-persisted (doc_id, source, f) hashed-feature explode —
-    the building block the distribution pass scans and
-    stage_dsir_features writes to a bucketed table. Spread first:
+    the relation the distribution pass scans. Spread first:
     the sf-dir parquet is one file -> one scan partition (same
     pattern as minhash_signatures)."""
     return tokenized(spread(load_documents(spark, sf_dir)),
                      "doc_id", "source").select(
         "doc_id", "source",
         F.explode(_dsir_features(F.col("toks"))).alias("f"))
-
-
-def stage_dsir_features(spark: SparkSession, sf_dir: str,
-                        n_buckets: int = 64) -> DataFrame:
-    """Write-once f-bucketed staging form of the DSIR feature relation
-    (the 100 TB path for multi-query sessions — see dsir_weights'
-    storage contract and operators/_cache.session_staged). After this
-    call dsir_weights reads the staged table: the <=B-row distribution
-    build aggregates straight off the bucketed scan with no exchange
-    of the corpus-token-sized relation."""
-    return session_staged(
-        spark, ("dsir_feats", sf_dir),
-        lambda: _dsir_feats_lazy(spark, sf_dir),
-        bucket_col="f", n_buckets=n_buckets)
 
 
 _DSIR_FEATS_SQL = rf"""

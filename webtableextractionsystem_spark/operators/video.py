@@ -114,12 +114,17 @@ def decode_video(payload: bytes) -> tuple[np.ndarray, int]:
     fourccs: list[bytes] = []
     raw_frames: list[bytes] = []
 
-    def walk(off: int, end: int) -> None:
-        nonlocal us_per_frame
-        for cid, body, body_end in _chunks(payload, off, end):
+    # an explicit stack of chunk iterators, not recursion: a LIST body
+    # is walked before its parent's next chunk (document order for
+    # avih, strh and frames), and LIST nesting depth is bounded only by
+    # the payload size
+    stack = [_chunks(payload, 12, len(payload))]
+    while stack:
+        for cid, body, body_end in stack[-1]:
             if cid == b"LIST":
-                walk(body + 4, body_end)
-            elif cid == b"avih":
+                stack.append(_chunks(payload, body + 4, body_end))
+                break
+            if cid == b"avih":
                 us_per_frame = int.from_bytes(payload[body:body + 4], "little")
             elif cid == b"strh" and payload[body:body + 4] == b"vids":
                 strh = payload[body:body + 28]
@@ -130,8 +135,8 @@ def decode_video(payload: bytes) -> tuple[np.ndarray, int]:
                                    int.from_bytes(strh[24:28], "little")))
             elif cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
                 raw_frames.append(payload[body:body_end])
-
-    walk(12, len(payload))
+        else:
+            stack.pop()
     if not us_per_frame:
         # avih absent OR dwMicroSecPerFrame == 0 (encoders that rely on
         # strh dwScale/dwRate): fall back to the video strh's rate/scale

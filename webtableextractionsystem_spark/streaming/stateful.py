@@ -305,47 +305,53 @@ def streaming_neardup_verified(spark: SparkSession, input_dir: str,
         # the doc IN-list whose pushdown reaches the parquet row groups
         # (<= _MAX_INLIST_DOCS rows); past that, a semi join fetches.
         cand = pairs_batch.select("doc_a", "doc_b").distinct().persist()
-        n_pairs = cand.count()
-        n_cand = 0
-        n_fetched = 0
-        n_dbuckets = 0
-        if n_pairs == 0:
-            verified = spark.createDataFrame([], NEARDUP_PAIR_OUTPUT)
-        else:
-            docs = (
-                cand.select(F.col("doc_a").alias("doc_id"))
-                .union(cand.select(F.col("doc_b").alias("doc_id")))
-                .distinct().persist()
-            )
-            n_cand = docs.count()
-            buckets = sorted(
-                r["b"] for r in docs.select(
-                    F.pmod(F.xxhash64("doc_id"), F.lit(_N_DBUCKETS))
-                    .alias("b")).distinct().collect()
-            )
-            n_dbuckets = len(buckets)
-            sh = (spark.read.parquet(shingle_root)
-                  .where(F.col("dbucket").isin(buckets)))
-            if n_cand <= _MAX_INLIST_DOCS:
-                cand_ids = sorted(int(r[0]) for r in docs.collect())
-                sh = sh.where(F.col("doc_id").isin(cand_ids))
+        # every relation this batch persists, released in finally: a
+        # failed verify or write must not leave them cached in the
+        # session for the rest of the stream
+        held = [cand]
+        try:
+            n_pairs = cand.count()
+            n_cand = 0
+            n_fetched = 0
+            n_dbuckets = 0
+            if n_pairs == 0:
+                verified = spark.createDataFrame([], NEARDUP_PAIR_OUTPUT)
             else:
-                sh = sh.join(docs, "doc_id", "left_semi")
-            sh = sh.select("doc_id", "sh").persist()
-            n_fetched = sh.count()
-            # the SAME verify expression as the batch pipeline (shared
-            # helper — equivalence by construction)
-            verified = jaccard_verified(cand, sh)
-        batch_dirs(output_dir)(verified, batch_id)
-        batch_dirs(metrics_root)(spark.createDataFrame(
-            [(n_pairs, n_cand, n_fetched, n_dbuckets)],
-            "n_pairs long, n_cand_docs long, n_state_rows_fetched long, "
-            "n_dbuckets_read long",
-        ).coalesce(1), batch_id)
-        cand.unpersist()
-        if n_pairs:
-            docs.unpersist()
-            sh.unpersist()
+                docs = (
+                    cand.select(F.col("doc_a").alias("doc_id"))
+                    .union(cand.select(F.col("doc_b").alias("doc_id")))
+                    .distinct().persist()
+                )
+                held.append(docs)
+                n_cand = docs.count()
+                buckets = sorted(
+                    r["b"] for r in docs.select(
+                        F.pmod(F.xxhash64("doc_id"), F.lit(_N_DBUCKETS))
+                        .alias("b")).distinct().collect()
+                )
+                n_dbuckets = len(buckets)
+                sh = (spark.read.parquet(shingle_root)
+                      .where(F.col("dbucket").isin(buckets)))
+                if n_cand <= _MAX_INLIST_DOCS:
+                    cand_ids = sorted(int(r[0]) for r in docs.collect())
+                    sh = sh.where(F.col("doc_id").isin(cand_ids))
+                else:
+                    sh = sh.join(docs, "doc_id", "left_semi")
+                sh = sh.select("doc_id", "sh").persist()
+                held.append(sh)
+                n_fetched = sh.count()
+                # the SAME verify expression as the batch pipeline
+                # (shared helper — equivalence by construction)
+                verified = jaccard_verified(cand, sh)
+            batch_dirs(output_dir)(verified, batch_id)
+            batch_dirs(metrics_root)(spark.createDataFrame(
+                [(n_pairs, n_cand, n_fetched, n_dbuckets)],
+                "n_pairs long, n_cand_docs long, n_state_rows_fetched long, "
+                "n_dbuckets_read long",
+            ).coalesce(1), batch_id)
+        finally:
+            for df in held:
+                df.unpersist()
 
     # the pairs pass sources from the STAGED table: availableNow on the
     # stage stream has already landed every input doc's shingles before
