@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 from webtableextractionsystem_spark.datagen import gen_documents_df
 from webtableextractionsystem_spark.operators.extraction import extract_all, spans_view
 from webtableextractionsystem_spark.operators import multimodal as MM
-from webtableextractionsystem_spark.streaming.incremental import (
-    incremental_extract,
-    windowed_event_counts,
-)
+from webtableextractionsystem_spark.streaming.incremental import incremental_extract
 
 
 @pytest.fixture(scope="module")
@@ -365,28 +362,35 @@ def test_frame_sample_plumbing(spark, media):
     assert frames.columns == ["media_ref", "frame_idx"]
 
 
-def test_incremental_extract_exactly_once(spark, tmp_path):
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
+def test_incremental_extract_exactly_once(spark, tmp_path, monkeypatch):
+    """Each run extracts exactly the files that arrived since the last
+    one. A file:// output root gives the same result as a plain path
+    and leaves no relative 'file:' directory in the working directory."""
+    monkeypatch.chdir(tmp_path)
+    for scheme in ("", "file://"):
+        run = tmp_path / ("uri" if scheme else "path")
+        in_dir, ckpt = str(run / "in"), str(run / "ckpt")
+        out_dir = scheme + str(run / "out")
+        os.makedirs(in_dir)
 
-    gen_documents_df(spark, 40).coalesce(1).write.mode("append").parquet(in_dir)
-    incremental_extract(spark, in_dir, out_dir, ckpt, num_buckets=8)
-    first = spark.read.parquet(out_dir)
-    assert first.select("doc_id").distinct().count() == 40
+        gen_documents_df(spark, 40).coalesce(1).write.mode("append") \
+            .parquet(in_dir)
+        incremental_extract(spark, in_dir, out_dir, ckpt, num_buckets=8)
+        first = spark.read.parquet(out_dir)
+        assert first.select("doc_id").distinct().count() == 40
 
-    # second wave of files; rerun processes ONLY the new ones
-    gen_documents_df(spark, 70).where(F.col("doc_id") >= "doc-00000040") \
-        .coalesce(1).write.mode("append").parquet(in_dir)
-    incremental_extract(spark, in_dir, out_dir, ckpt, num_buckets=8)
-    out = spark.read.parquet(out_dir)
-    assert out.count() == 70
-    assert out.select("doc_id").distinct().count() == 70  # no reprocessing
+        # second wave of files; rerun processes ONLY the new ones
+        gen_documents_df(spark, 70).where(F.col("doc_id") >= "doc-00000040") \
+            .coalesce(1).write.mode("append").parquet(in_dir)
+        incremental_extract(spark, in_dir, out_dir, ckpt, num_buckets=8)
+        out = spark.read.parquet(out_dir)
+        assert out.count() == 70
+        assert out.select("doc_id").distinct().count() == 70  # no reprocessing
 
-    # idempotent third run with nothing new
-    incremental_extract(spark, in_dir, out_dir, ckpt, num_buckets=8)
-    assert spark.read.parquet(out_dir).count() == 70
+        # idempotent third run with nothing new
+        incremental_extract(spark, in_dir, out_dir, ckpt, num_buckets=8)
+        assert spark.read.parquet(out_dir).count() == 70
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("file:")]
 
 
 def test_incremental_extract_refuses_legacy_flat_layout(spark, tmp_path):
@@ -409,64 +413,6 @@ def test_incremental_extract_refuses_legacy_flat_layout(spark, tmp_path):
                             str(tmp_path / "ckpt2"), num_buckets=8)
 
 
-def test_streaming_stateful_dedup(spark, tmp_path):
-    """applyInPandasWithState online dedup: duplicates suppressed within
-    a batch, across batches, and across availableNow restarts (state
-    store persistence)."""
-    from webtableextractionsystem_spark.streaming.stateful import streaming_dedup
-
-    in_dir = str(tmp_path / "sin")
-    out_dir = str(tmp_path / "sout")
-    ckpt = str(tmp_path / "sck")
-    os.makedirs(in_dir)
-
-    docs = gen_documents_df(spark, 30).cache()
-    # wave 1: docs 0-29 plus duplicated CONTENT under different ids
-    dup = docs.where(F.col("doc_id") < "doc-00000005") \
-        .withColumn("doc_id", F.concat(F.lit("copy-"), "doc_id"))
-    docs.unionByName(dup).coalesce(1).write.mode("append").parquet(in_dir)
-    streaming_dedup(spark, in_dir, out_dir, ckpt)
-    out1 = spark.read.parquet(out_dir)
-    n1 = out1.count()
-    assert n1 == out1.select("fp").distinct().count()  # one doc per fp
-    # fingerprint covers (kind, text, media_ref): the 30 originals are all
-    # distinct (media-only docs differ by media_ref), only the 5 renamed
-    # copies dedup away
-    assert n1 == 30
-
-    # wave 2 (restart): resend everything -> nothing new may pass
-    docs.coalesce(1).write.mode("append").parquet(in_dir)
-    streaming_dedup(spark, in_dir, out_dir, ckpt)
-    out2 = spark.read.parquet(out_dir)
-    assert out2.count() == n1
-    assert out2.select("fp").distinct().count() == n1
-
-
-def test_windowed_event_counts_matches_batch(spark, tmp_path):
-    out_dir = str(tmp_path / "agg")
-    ckpt = str(tmp_path / "ckpt2")
-    events_dir = str(tmp_path / "events")  # file source needs a DIRECTORY
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .coalesce(2).write.parquet(events_dir)
-    windowed_event_counts(spark, events_dir, out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-    # append mode only emits windows past the watermark: compare against
-    # the batch equivalent restricted to expired windows (correct
-    # late-data semantics, not a bug)
-    max_ts = spark.read.parquet(events_dir).agg(F.max("ts")).first()[0]
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("w.end") <= F.lit(max_ts) - F.expr("INTERVAL 2 HOURS"))
-    )
-    emitted = got.where(
-        F.col("window_end") <= F.lit(max_ts) - F.expr("INTERVAL 2 HOURS"))
-    assert emitted.agg(F.sum("n")).first()[0] == batch.agg(F.sum("n")).first()[0]
-    assert emitted.count() == batch.count()
-    assert got.count() >= batch.count()
-
-
 def test_row_minhash_matches_aggregate_form(spark):
     """Per-row array_min minhash must equal the explode->groupBy(min)
     signatures for every doc (same algebra, different plan shape)."""
@@ -480,117 +426,6 @@ def test_row_minhash_matches_aggregate_form(spark):
                DD.load_documents(spark, sf), "doc_id")).select(
                "doc_id", *[f"mh{s}" for s in range(DD.N_SEEDS)]).collect()}
     assert agg == row
-
-
-def test_streaming_neardup_online_and_restart(spark, tmp_path):
-    """Online near-dup: a later near-identical document is flagged
-    against the bucket owner from an EARLIER batch (state survives the
-    availableNow restart), and every flagged pair is a batch LSH
-    candidate pair on the combined corpus."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.operators import dedup as DD
-    from webtableextractionsystem_spark.streaming.stateful import (
-        streaming_neardup,
-    )
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text").where(F.col("doc_id") < 100)
-    docs.write.mode("overwrite").parquet(in_dir)
-    streaming_neardup(spark, in_dir, out_dir, ck_dir)
-
-    # batch 2: a near-copy of doc 0 (same text) with a fresh id
-    copy = docs.where(F.col("doc_id") == 0) \
-        .select(F.lit(999999).cast("long").alias("doc_id"), "text")
-    copy.write.mode("append").parquet(in_dir)
-    streaming_neardup(spark, in_dir, out_dir, ck_dir)
-
-    out = spark.read.parquet(out_dir)
-    hits = out.where(F.col("owner_id") != F.col("doc_id")) \
-        .select("doc_id", "owner_id").distinct().collect()
-    flagged = {(min(r["doc_id"], r["owner_id"]), max(r["doc_id"], r["owner_id"]))
-               for r in hits}
-    assert (0, 999999) in flagged  # cross-batch: owner from batch 1
-
-    # soundness: streaming pairs are a subset of batch LSH candidates
-    combined_dir = str(tmp_path / "combined")
-    os.makedirs(combined_dir, exist_ok=True)
-    docs.unionByName(copy).write.mode("overwrite") \
-        .parquet(f"{combined_dir}/documents.parquet")
-    batch_pairs = {(r["doc_a"], r["doc_b"]) for r in
-                   DD.lsh_candidate_pairs(spark, combined_dir).collect()}
-    assert flagged <= batch_pairs
-
-
-def test_streaming_neardup_verified_equals_batch(spark, tmp_path):
-    """The composed online pipeline (LSH candidates + in-stream Jaccard
-    verify): after two waves with a restart in between, the online
-    verified-pair set must EQUAL the batch _verified_pairs on the same
-    corpus, and the derived dup set must equal neardup_canonical's."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.operators import dedup as DD
-    from webtableextractionsystem_spark.streaming.stateful import (
-        streaming_neardup_verified,
-    )
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    st_dir = str(tmp_path / "state")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text").where(F.col("doc_id") < 120).cache()
-
-    # wave 1: ids < 60
-    docs.where(F.col("doc_id") < 60).write.mode("overwrite").parquet(in_dir)
-    streaming_neardup_verified(spark, in_dir, out_dir, ck_dir, st_dir)
-
-    # wave 2 (restart): the rest, plus a near-copy of doc 0 under a new id
-    copy = docs.where(F.col("doc_id") == 0) \
-        .select(F.lit(999999).cast("long").alias("doc_id"), "text")
-    docs.where(F.col("doc_id") >= 60).unionByName(copy) \
-        .write.mode("append").parquet(in_dir)
-    streaming_neardup_verified(spark, in_dir, out_dir, ck_dir, st_dir)
-
-    online = {(r["doc_a"], r["doc_b"])
-              for r in spark.read.parquet(out_dir)
-              .select("doc_a", "doc_b").distinct().collect()}
-
-    combined_dir = str(tmp_path / "combined")
-    os.makedirs(combined_dir, exist_ok=True)
-    docs.unionByName(copy).write.mode("overwrite") \
-        .parquet(f"{combined_dir}/documents.parquet")
-    batch = {(r["doc_a"], r["doc_b"]) for r in
-             DD._verified_pairs(spark, combined_dir).collect()}
-    assert (0, 999999) in online  # cross-restart pair actually verified
-    assert online == batch
-
-    # dup-set equivalence: doc is dup iff some verified partner < doc
-    online_dups = {b for a, b in online}
-    canon = {r["doc_id"] for r in
-             DD.neardup_canonical(spark, combined_dir)
-             .where("is_dup").collect()}
-    assert online_dups == canon
-
-    # SCALE pin: per-batch reads from the staged state are O(candidate
-    # docs), NOT O(corpus) — every batch fetched exactly one staged row
-    # per candidate doc (the pre-fix design re-read all 121 staged docs
-    # every microbatch, so cumulative stream work grew quadratically)
-    metrics = spark.read.parquet(f"{st_dir}/metrics").collect()
-    assert metrics, "per-batch lineage metrics missing"
-    n_staged = spark.read.parquet(f"{st_dir}/shingles").count()
-    assert n_staged == 121
-    for m in metrics:
-        assert m["n_state_rows_fetched"] == m["n_cand_docs"]
-        assert m["n_state_rows_fetched"] < n_staged
-        assert m["n_dbuckets_read"] <= m["n_cand_docs"]
 
 
 def test_png_decodes_reference_repo_real_files():
@@ -614,57 +449,6 @@ def test_png_decodes_reference_repo_real_files():
     for p in sorted(glob.glob("/root/reference/file/images/*.ico")):
         with pytest.raises(NotImplementedError):
             MM.decode_image(open(p, "rb").read())
-
-
-def test_stream_stream_attribution_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream join: one availableNow pass over the
-    full events table must produce exactly the batch inner-join result
-    (clicks x same-user purchases within 1 hour after), and a second
-    run with no new files must add nothing (checkpoint idempotence)."""
-    from webtableextractionsystem_spark.streaming.incremental import (
-        attribution_join,
-    )
-
-    ev_dir = str(tmp_path / "events")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ev.coalesce(2).write.parquet(ev_dir)
-
-    attribution_join(spark, ev_dir, out_dir, ck_dir)
-    got = {(r["click_id"], r["purchase_id"])
-           for r in spark.read.parquet(out_dir).collect()}
-
-    c = ev.where("event_type = 'click'").select(
-        F.col("user_id").alias("cu"), F.col("event_id").alias("cid"),
-        F.col("ts").alias("cts"))
-    p = ev.where("event_type = 'purchase'").select(
-        F.col("user_id").alias("pu"), F.col("event_id").alias("pid"),
-        F.col("ts").alias("pts"))
-    batch = {(r["cid"], r["pid"]) for r in c.join(
-        p, F.expr("cu = pu AND pts >= cts AND "
-                  "pts <= cts + interval 1 hour")).collect()}
-    assert got == batch
-    assert len(got) > 0  # the corpus genuinely produces attributions
-
-    attribution_join(spark, ev_dir, out_dir, ck_dir)  # no new files
-    assert spark.read.parquet(out_dir).count() == len(got)
-
-    # cross-batch, IN-HORIZON late data: a new click+purchase pair with
-    # event times at/after the corpus max is above the persisted
-    # watermark and MUST be attributed on the next incremental run
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    late = spark.createDataFrame(
-        [(900001, max_ts, 424242, "click", 0.0, "{}"),
-         (900002, max_ts, 424242, "purchase", 5.0, "{}")],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string")
-    late.coalesce(1).write.mode("append").parquet(ev_dir)
-    attribution_join(spark, ev_dir, out_dir, ck_dir)
-    got2 = {(r["click_id"], r["purchase_id"])
-            for r in spark.read.parquet(out_dir).collect()}
-    assert (900001, 900002) in got2
-    assert got2 - got == {(900001, 900002)}  # no duplicates, one addition
 
 
 def test_gif_roundtrip_and_interlace():
@@ -1409,41 +1193,6 @@ def test_gif_giant_logical_screen_bounded():
         G.decode_gif(bytes(enc))
 
 
-def test_neardup_members_fn_skips_replayed_docs():
-    """A doc re-seen by the pairs stream (stage-pass crash replay
-    rewrites staged part files) must not re-emit its pairs or be
-    double-counted in the bucket member state."""
-    import pandas as pd
-
-    from webtableextractionsystem_spark.streaming import stateful as S
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    st = FakeState()
-    key = (0, "k")
-
-    def run(ids):
-        out = list(S._members_fn(key, iter([pd.DataFrame({"doc_id": ids})]), st))
-        return sorted(map(tuple, out[0].itertuples(index=False))) if out else []
-
-    assert run([1, 2]) == [(1, 2)]
-    assert st.get[0] == [1, 2]
-    # replay of doc 2 plus a genuinely new doc 3
-    assert run([2, 3]) == [(1, 3), (2, 3)]
-    assert st.get[0] == [1, 2, 3]
-
-
 def test_real_world_media_goldens_from_reference_repo():
     """The strongest external-interop evidence available in this
     sandbox: the reference repo's manual ships REAL third-party media —
@@ -1513,185 +1262,6 @@ def test_real_world_media_goldens_from_reference_repo():
         out = MM.decode_image(open(f"{root}/{name}", "rb").read())
         assert out.shape == shape, name
         assert hashlib.md5(out.tobytes()).hexdigest() == digest, name
-
-
-def test_streaming_sessionize_equals_batch(spark, tmp_path):
-    """Streaming sessionization == batch event_sessions over the same
-    corpus: sessions close in-stream (later event past the gap) or by
-    event-time timeout (watermark passes last+gap, driven here by a
-    far-future sentinel). A session STRADDLING the availableNow restart
-    must merge — only persistent per-user state can do that."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.operators.relational import (
-        event_sessions,
-    )
-    from webtableextractionsystem_spark.streaming.stateful import (
-        streaming_sessionize,
-    )
-
-    base = datetime(2024, 3, 1, 9, 0, 0)
-    M = timedelta(minutes=1)
-
-    def ev(eid, uid, minutes):
-        return (eid, base + minutes * M, uid, "view", 1.0, "{}")
-
-    SCHEMA = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-
-    # wave 1: u1 has an in-wave closed session (gap >30min) + an open
-    # tail; u2 has one open session
-    wave1 = [ev(1, 1, 0), ev(2, 1, 10), ev(3, 1, 50),   # close 0-10, open 50
-             ev(4, 2, 0), ev(5, 2, 20)]                 # open 0-20
-    spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
-        .parquet(in_dir)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir)
-
-    # wave 2 (restart): u1 continues its open session WITHIN the gap
-    # (55' -> must merge with 50'), u2 starts a new session (gap),
-    # u3 appears fresh
-    wave2 = [ev(6, 1, 55), ev(7, 1, 70),
-             ev(8, 2, 60),
-             ev(9, 3, 65)]
-    spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
-        .parquet(in_dir)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir)
-
-    # sentinel waves: user 9999 events 30 days out advance the global
-    # watermark past every real session's last+gap, firing the timeouts
-    for k, days in ((10, 30), (11, 31)):
-        spark.createDataFrame(
-            [ev(k, 9999, days * 24 * 60)], SCHEMA
-        ).write.mode("append").parquet(in_dir)
-        streaming_sessionize(spark, in_dir, out_dir, ck_dir)
-
-    got = {tuple(r) for r in spark.read.parquet(out_dir)
-           .where(F.col("user_id") != 9999)
-           .select("user_id", "session_id", "n_events",
-                   "session_start", "duration_s").collect()}
-
-    batch_dir = str(tmp_path / "batch")
-    spark.createDataFrame(wave1 + wave2, SCHEMA).write.mode("overwrite") \
-        .parquet(f"{batch_dir}/events.parquet")
-    want = {tuple(r) for r in event_sessions(spark, batch_dir)
-            .select("user_id", "session_id", "n_events",
-                    "session_start", "duration_s").collect()}
-    assert got == want
-    # the straddling u1 session merged: events at 50/55/70 = one session
-    assert (1, 1, 3, "2024-03-01 09:50:00", 20 * 60) in got
-
-
-def test_sessionize_retain_counters_false_reclaims_state(spark, tmp_path):
-    """retain_counters=False removes a user's state on timeout close:
-    the observable contract is that a reappearing user restarts
-    session_id at 0 (vs 1 with the default counter-retaining state),
-    while the session rows themselves are unchanged."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.streaming.stateful import (
-        streaming_sessionize,
-    )
-
-    base = datetime(2024, 3, 1, 9, 0, 0)
-    M = timedelta(minutes=1)
-
-    def ev(eid, uid, minutes):
-        return (eid, base + minutes * M, uid, "view", 1.0, "{}")
-
-    SCHEMA = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    in_dir, out_dir, ck_dir = (str(tmp_path / d) for d in
-                               ("in", "out", "ck"))
-    # wave 1: u1 one session; sentinel u9999 a month out advances the
-    # watermark so u1's session timeout-closes on the next pass
-    spark.createDataFrame(
-        [ev(1, 1, 0), ev(2, 9999, 30 * 24 * 60)], SCHEMA
-    ).write.mode("overwrite").parquet(in_dir)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir,
-                         retain_counters=False)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir,
-                         retain_counters=False)  # fire the timeout
-    # wave 2: u1 reappears (well past the old session); sentinel again
-    spark.createDataFrame(
-        [ev(3, 1, 31 * 24 * 60), ev(4, 9999, 62 * 24 * 60)], SCHEMA
-    ).write.mode("append").parquet(in_dir)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir,
-                         retain_counters=False)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir,
-                         retain_counters=False)
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(out_dir)
-        .where(F.col("user_id") == 1)
-        .select("session_id", "n_events", "session_start").collect())
-    # both sessions numbered 0 — state was removed between them
-    assert got == [(0, 1, "2024-03-01 09:00:00"),
-                   (0, 1, "2024-04-01 09:00:00")]
-
-
-def test_closed_sessions_matches_streaming_emit_rule(spark, tmp_path):
-    """closed_sessions = the batch twin of streaming_sessionize's OUTPUT:
-    every non-final session of a user is in-stream-closed, the final one
-    only once the watermark (max ts - 10h) passes last+gap. Verified
-    directly against what the stream actually emitted BEFORE any
-    watermark-advancing sentinel."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.operators.relational import (
-        closed_sessions,
-        event_sessions,
-    )
-    from webtableextractionsystem_spark.streaming.stateful import (
-        streaming_sessionize,
-    )
-
-    base = datetime(2024, 3, 1, 9, 0, 0)
-    M = timedelta(minutes=1)
-
-    def ev(eid, uid, minutes):
-        return (eid, base + minutes * M, uid, "view", 1.0, "{}")
-
-    SCHEMA = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    # u1: closed session (0-10), then a tail at 50' — the tail is the
-    # user's final session and the max ts (u2 at 26h) leaves the
-    # watermark at 16h, past 50'+30', so the tail is timeout-CLOSED.
-    # u2: single session at 26h — open (watermark never passes it).
-    rows = [ev(1, 1, 0), ev(2, 1, 10), ev(3, 1, 50),
-            ev(4, 2, 26 * 60)]
-    batch_dir = str(tmp_path / "batch")
-    spark.createDataFrame(rows, SCHEMA).write.mode("overwrite") \
-        .parquet(f"{batch_dir}/events.parquet")
-
-    got = {tuple(r) for r in closed_sessions(spark, batch_dir).collect()}
-    full = {tuple(r) for r in event_sessions(spark, batch_dir)
-            .select("user_id", "session_id", "n_events",
-                    "session_start", "duration_s").collect()}
-    assert got == {(1, 0, 2, "2024-03-01 09:00:00", 600),
-                   (1, 1, 1, "2024-03-01 09:50:00", 0)}
-    assert got < full  # u2's open session excluded
-
-    # and the stream, run over the same input with NO sentinel, emits
-    # exactly those rows (u1's tail times out because u2's 26h event
-    # advances the watermark at end-of-batch; a second pass fires it)
-    in_dir, out_dir, ck_dir = (str(tmp_path / d) for d in
-                               ("in", "out", "ck"))
-    spark.createDataFrame(rows, SCHEMA).write.mode("overwrite") \
-        .parquet(in_dir)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir)  # fire timeouts
-    emitted = {tuple(r) for r in spark.read.parquet(out_dir)
-               .select("user_id", "session_id", "n_events",
-                       "session_start", "duration_s").collect()}
-    assert emitted == got
 
 
 def test_png_giant_declared_dims_bounded_before_alloc():
@@ -1772,103 +1342,6 @@ def test_gif_giant_frame_dims_bounded_before_lzw():
         enc[desc + off:desc + off + 2] = (65535).to_bytes(2, "little")
     with pytest.raises(ValueError, match="decode bound"):
         G.decode_gif(bytes(enc))
-
-
-def test_session_fn_absorbs_out_of_order_without_rewind():
-    """A within-watermark out-of-order arrival from a later microbatch
-    must widen the open session (min start / max last), never rewind
-    last_s — rewinding produced negative durations and spurious
-    splits."""
-    import pandas as pd
-
-    from webtableextractionsystem_spark.streaming import stateful as S
-
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-        _v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-        def setTimeoutTimestamp(self, ms):
-            self.timeout_ms = ms
-
-    st = FakeState()
-    H = 3600
-
-    def run(epochs):
-        pdf = pd.DataFrame({
-            "ts": pd.to_datetime([e * 10**9 for e in epochs]),
-            "event_id": range(len(epochs)),
-        })
-        return list(S._session_fn((1,), iter([pdf]), st))
-
-    base = 12 * H
-    run([base])                          # open session at 12:00
-    out = run([base - 600, base + 1500])  # 11:50 (late), 12:25
-    assert out == []                      # still one open session
-    sid, start_s, last_s, n = st.get
-    assert (start_s, last_s, n) == (base - 600, base + 1500, 3)
-    # close via a far gap: duration must be the widened, non-negative span
-    closed = run([base + 3 * H])
-    row = closed[0].iloc[0]
-    assert row["duration_s"] == 2100 and row["n_events"] == 3
-
-
-def test_streaming_neardup_verified_empty_input_noop(spark, tmp_path):
-    """First-ever call over an existing-but-empty input dir must be a
-    clean no-op (the staged-table source is created empty), not a
-    path-does-not-exist failure."""
-    import os
-
-    from webtableextractionsystem_spark.streaming.stateful import (
-        streaming_neardup_verified,
-    )
-
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    streaming_neardup_verified(spark, in_dir, str(tmp_path / "out"),
-                               str(tmp_path / "ck"), str(tmp_path / "st"))
-
-
-def test_streaming_neardup_verify_failure_releases_persists(
-        spark, tmp_path, monkeypatch):
-    """A pairs microbatch whose verify raises fails the stream and
-    leaves none of the relations it persisted (candidate pairs, their
-    docs, the fetched shingles) cached in the session."""
-    from webtableextractionsystem_spark.operators import dedup as DD
-    from webtableextractionsystem_spark.streaming.stateful import (
-        streaming_neardup_verified,
-    )
-
-    in_dir = str(tmp_path / "in")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text").where(F.col("doc_id") < 60)
-    copy = docs.where(F.col("doc_id") == 0) \
-        .select(F.lit(999999).cast("long").alias("doc_id"), "text")
-    docs.unionByName(copy).write.parquet(in_dir)
-
-    verified = []
-
-    def failing_verify(cand, sh):
-        verified.append(sh)
-        raise RuntimeError("verify failed on purpose")
-
-    monkeypatch.setattr(DD, "jaccard_verified", failing_verify)
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs())
-    with pytest.raises(Exception, match="verify failed on purpose"):
-        streaming_neardup_verified(spark, in_dir, str(tmp_path / "out"),
-                                   str(tmp_path / "ck"),
-                                   str(tmp_path / "st"))
-    assert verified  # the batch got as far as the shingle fetch
-    assert set(jsc.getPersistentRDDs()) <= before
 
 
 def test_pdf_roundtrip_and_layout():
@@ -2413,72 +1886,6 @@ def test_wav_g711_companding_roundtrip_and_boundaries():
         MM.decode_audio(bytes(wav))
 
 
-def test_streaming_anomalies_equals_batch(spark, tmp_path):
-    """Online anomaly monitoring == batch event_anomalies over the same
-    corpus, including counts that straddle the availableNow restart
-    (hour 0 receives events in BOTH waves — only the state store's
-    windowed count merges them) and a within-watermark late event."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.operators.relational import (
-        event_anomalies,
-    )
-    from webtableextractionsystem_spark.streaming.incremental import (
-        streaming_anomalies,
-    )
-
-    base = datetime(2024, 3, 1, 0, 0, 0)
-    M = timedelta(minutes=1)
-
-    def ev(eid, minutes):
-        return (eid, base + minutes * M, 1, "view", 1.0, "{}")
-
-    SCHEMA = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    # wave 1: steady 2 events/hour for hours 0-25
-    wave1 = [ev(100 * h + k, 60 * h + 10 * k)
-             for h in range(26) for k in range(2)]
-    # wave 2: a 9-event spike in hour 26 (>2x the trailing mean of 2),
-    # plus a LATE event for hour 0 (straddles the restart; within the
-    # 10h watermark measured from the stream head at the time)
-    wave2 = [ev(9000 + k, 60 * 26 + k) for k in range(9)] + [ev(9999, 30)]
-    in_dir, out_dir, ck_dir, st_dir = (
-        str(tmp_path / d) for d in ("in", "out", "ck", "st"))
-
-    spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
-        .parquet(in_dir)
-    streaming_anomalies(spark, in_dir, out_dir, ck_dir, st_dir,
-                        watermark="100 hours")
-    spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
-        .parquet(in_dir)
-    streaming_anomalies(spark, in_dir, out_dir, ck_dir, st_dir,
-                        watermark="100 hours")
-
-    got = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
-    batch_dir = str(tmp_path / "batch")
-    spark.createDataFrame(wave1 + wave2, SCHEMA).write.mode("overwrite") \
-        .parquet(f"{batch_dir}/events.parquet")
-    want = {tuple(r) for r in event_anomalies(spark, batch_dir).collect()}
-    assert got == want
-    # the spike hour is flagged, and hour 0's count merged to 3 across
-    # the restart (2 from wave 1 + the late event)
-    flagged = {r[0] for r in got if r[4]}
-    assert "2024-03-02 02:00:00" in flagged
-    h0 = next(r for r in got if r[0] == "2024-03-01 00:00:00")
-    assert h0[1] == 3
-    # versioned state: the current and one fallback version remain, and
-    # the current version carries the FULL history (crash-safety: prior
-    # state is never overwritten in place)
-    import os
-    vs = sorted(d for d in os.listdir(f"{st_dir}/hourly")
-                if d.startswith("v="))
-    assert 1 <= len(vs) <= 2
-    latest = spark.read.parquet(f"{st_dir}/hourly/{vs[-1]}")
-    assert latest.count() == 27  # hours 0-26 all present
-
-
 def test_wav_ima_adpcm_roundtrip_and_boundaries():
     """IMA ADPCM WAV (format tag 0x11): standard block layout (per-
     channel 4-byte headers + 4-byte-word interleaved nibbles) round-
@@ -2993,117 +2400,6 @@ def test_pdf_lzw_earlychange_parm_hand_built():
         pass
 
 
-def test_streaming_quantile_hist_equals_batch(spark, tmp_path, monkeypatch):
-    """The streamed quantile histogram == the batch lattice over the
-    same corpus, across an availableNow restart, and the online
-    estimates (qsketch_estimates over state) == the batch
-    quantile_sketch fold — both sides share the bucket and estimate
-    expressions, so the only thing under test is the update-mode
-    mergeable accumulation and the versioned state layer. A file://
-    output root gives the same result as a plain path and leaves no
-    relative 'file:' directory in the working directory."""
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.operators.textstats import (
-        qsketch_buckets,
-        qsketch_estimates,
-    )
-    from webtableextractionsystem_spark.streaming.incremental import (
-        read_latest_version,
-        read_streaming_quantiles,
-        streaming_quantile_hist,
-    )
-
-    SCHEMA = ("doc_id long, text string, lang string, source string, "
-              "n_chars long")
-    # lengths straddle the small-value (v<16) and several power-of-two
-    # octaves so multiple lattice regions get state
-    wave1 = [(i, "x", "en", f"s{i % 3}", [3, 17, 250, 4097][i % 4])
-             for i in range(40)]
-    wave2 = [(100 + i, "x", "en", f"s{i % 3}", [9, 33, 1023][i % 3])
-             for i in range(30)]
-    all_docs = spark.createDataFrame(wave1 + wave2, SCHEMA)
-    want = {(r["source"], r["bucket"]): r["cnt"]
-            for r in qsketch_buckets(all_docs)
-            .groupBy("source", "bucket").agg(F.count("*").alias("cnt"))
-            .collect()}
-    batch = {r["source"]: tuple(r)[1:] for r in
-             qsketch_estimates(
-                 qsketch_buckets(all_docs).groupBy("source", "bucket")
-                 .agg(F.count("*").alias("cnt"))).collect()}
-    monkeypatch.chdir(tmp_path)
-    for scheme in ("", "file://"):
-        run = tmp_path / ("uri" if scheme else "path")
-        in_dir, ck_dir = str(run / "in"), str(run / "ck")
-        out_dir = scheme + str(run / "out")
-        spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
-            .parquet(in_dir)
-        streaming_quantile_hist(spark, in_dir, out_dir, ck_dir)
-        spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
-            .parquet(in_dir)
-        streaming_quantile_hist(spark, in_dir, out_dir, ck_dir)
-
-        got = {(r["source"], r["bucket"]): r["cnt"] for r in
-               read_latest_version(spark, f"{out_dir}/v").collect()}
-        assert got == want and len(got) > 5
-        # and the online estimates equal the batch fold over the same docs
-        online = {r["source"]: tuple(r)[1:] for r in
-                  read_streaming_quantiles(spark, out_dir).collect()}
-        assert online == batch and len(online) == 3
-    assert not [e for e in os.listdir(tmp_path) if e.startswith("file:")]
-
-
-def test_streaming_cms_equals_batch_sketch(spark, tmp_path, monkeypatch):
-    """The streamed Count-Min sketch == the batch sketch build over the
-    same corpus, across an availableNow restart: update-mode aggregation
-    into the fixed DxW domain IS the mergeable-sketch union, and the
-    per-batch merge keeps cells untouched by the current batch. A
-    file:// output root gives the same sketch as a plain path and
-    leaves no relative 'file:' directory in the working directory."""
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.operators.textstats import (
-        _cms_hash_structs,
-        tokenized,
-    )
-    from webtableextractionsystem_spark.streaming.incremental import (
-        read_streaming_cms,
-        streaming_cms,
-    )
-
-    SCHEMA = ("doc_id long, text string, lang string, source string, "
-              "n_chars long")
-    wave1 = [(i, f"alpha beta gamma tok{i % 7} alpha", "en", "s", 0)
-             for i in range(40)]
-    wave2 = [(100 + i, f"beta delta tok{i % 5} beta beta", "en", "s", 0)
-             for i in range(30)]
-    batch = (
-        tokenized(spark.createDataFrame(wave1 + wave2, SCHEMA))
-        .select(F.explode("toks").alias("token"))
-        .select(F.explode(_cms_hash_structs()).alias("h"))
-        .groupBy(F.col("h.d").alias("d"), F.col("h.c").alias("c"))
-        .agg(F.count("*").alias("n"))
-    )
-    want = {(r["d"], r["c"]): r["n"] for r in batch.collect()}
-    monkeypatch.chdir(tmp_path)
-    for scheme in ("", "file://"):
-        run = tmp_path / ("uri" if scheme else "path")
-        in_dir, ck_dir = str(run / "in"), str(run / "ck")
-        out_dir = scheme + str(run / "out")
-        spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
-            .parquet(in_dir)
-        streaming_cms(spark, in_dir, out_dir, ck_dir)
-        spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
-            .parquet(in_dir)
-        streaming_cms(spark, in_dir, out_dir, ck_dir)
-
-        got = {(r["d"], r["c"]): r["n"]
-               for r in read_streaming_cms(spark, out_dir).collect()}
-        assert got == want
-        assert len(got) > 0 and sum(got.values()) == 70 * 5 * 4  # 5 toks x D
-    assert not [e for e in os.listdir(tmp_path) if e.startswith("file:")]
-
-
 # ---------------------------------------------------------------------------
 # round-6 file-level review regressions: degenerate media payloads
 # ---------------------------------------------------------------------------
@@ -3236,78 +2532,3 @@ def test_encode_jpeg_rejects_16bit_dim_overflow():
     with pytest.raises(ValueError, match="65535"):
         J.encode_jpeg(np.zeros((8, 70000, 3), dtype=np.uint8),
                       progressive=True)
-
-
-def test_streaming_sessionize_cross_batch_disorder_equals_batch(
-        spark, tmp_path):
-    """Within-watermark stragglers arriving in a LATER microbatch must
-    match the batch twin: a straggler >gap older than the open session
-    becomes its own session (not min()-absorbed into a session with an
-    internal >30-min hole), straggler runs sessionize among
-    themselves, and a straggler chain bridging into the open session
-    merges the whole chain."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import functions as F
-
-    from webtableextractionsystem_spark.operators.relational import (
-        event_sessions,
-    )
-    from webtableextractionsystem_spark.streaming.stateful import (
-        streaming_sessionize,
-    )
-
-    base = datetime(2024, 3, 1, 9, 0, 0)
-    M = timedelta(minutes=1)
-
-    def ev(eid, uid, minutes):
-        return (eid, base + minutes * M, uid, "view", 1.0, "{}")
-
-    SCHEMA = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-
-    # wave 1 opens sessions late in event time
-    wave1 = [ev(1, 1, 100), ev(2, 1, 105),   # u1 open 100-105
-             ev(3, 2, 70),                   # u2 open at 70
-             ev(4, 3, 70)]                   # u3 open at 70
-    spark.createDataFrame(wave1, SCHEMA).write.mode("overwrite") \
-        .parquet(in_dir)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir)
-
-    # wave 2: in-watermark stragglers (10h watermark; all within)
-    wave2 = [
-        # u1: straggler run 0,10 — one separate session (gap to 100
-        # is 90min), NOT absorbed into 100-105
-        ev(5, 1, 0), ev(6, 1, 10),
-        # u2: isolated straggler at 20 (gap 50 to 70) — own session
-        ev(7, 2, 20),
-        # u3: chain 20,45 bridges into the open 70 (gaps 25,25) —
-        # batch merges ALL THREE into one session 20-70
-        ev(8, 3, 20), ev(9, 3, 45),
-    ]
-    spark.createDataFrame(wave2, SCHEMA).write.mode("append") \
-        .parquet(in_dir)
-    streaming_sessionize(spark, in_dir, out_dir, ck_dir)
-
-    for k, days in ((10, 30), (11, 31)):
-        spark.createDataFrame(
-            [ev(k, 9999, days * 24 * 60)], SCHEMA
-        ).write.mode("append").parquet(in_dir)
-        streaming_sessionize(spark, in_dir, out_dir, ck_dir)
-
-    got = {tuple(r) for r in spark.read.parquet(out_dir)
-           .where(F.col("user_id") != 9999)
-           .select("user_id", "session_id", "n_events",
-                   "session_start", "duration_s").collect()}
-    batch_dir = str(tmp_path / "batch")
-    spark.createDataFrame(wave1 + wave2, SCHEMA).write.mode("overwrite") \
-        .parquet(f"{batch_dir}/events.parquet")
-    want = {tuple(r) for r in event_sessions(spark, batch_dir)
-            .select("user_id", "session_id", "n_events",
-                    "session_start", "duration_s").collect()}
-    assert got == want
-    # the u3 bridge merged into ONE session spanning 20->70
-    assert (3, 0, 3, "2024-03-01 09:20:00", 50 * 60) in got

@@ -320,6 +320,20 @@ def test_deeply_nested_tables_scale_near_linearly():
     assert worst_doubling <= 2.5, runs
 
 
+def test_nested_tables_holding_lists_extract_fast():
+    """2,000 nested tables that each hold a ul and no list-table title:
+    every table looks its titles up, so a per-table subtree walk is
+    quadratic in depth (about 9 s here); the class-index lookup takes
+    about 0.1 s."""
+    depth = 2000
+    html = ("<table><tr><td><ul><li>a</li></ul>" * depth + "x"
+            + "</td></tr></table>" * depth)
+    t0 = time.perf_counter()
+    res = run(html)
+    assert time.perf_counter() - t0 < 2.0
+    assert res["tables"] == []
+
+
 def test_h14_multitoken_header_classifies_property_rel():
     """儿女 carries two caption-relationship tokens, so the per-pair count
     (2 > 3/2) classifies 属性关系表; no relation or person column exists,

@@ -240,49 +240,53 @@ def test_connected_components_multihop(spark):
 
 
 def test_loground_cc_matches_label_propagation(spark):
-    """large-star/small-star must agree with min-label propagation on a
-    multi-component random graph (differential test of the two CC
-    algorithms over the identical edge list)."""
+    """large-star/small-star must label every node with its component's
+    minimum on a multi-component random graph — the labels min-label
+    propagation converges to, computed here by a union-find over the
+    identical edge list."""
     import random
 
     from webtableextractionsystem_spark.operators.dedup import (
         connected_components,
-        connected_components_loground,
     )
 
     rng = random.Random(42)
     n = 120
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(90)]
     edges = [(a, b) for a, b in edges if a != b]
+    parent = list(range(n))
+
+    def root(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root is the minimum
+    want = {i: root(i) for i in range(n)}
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    lp = {r["doc_id"]: r["component_id"]
-          for r in connected_components(nodes, pairs, max_iters=100).collect()}
-    ls = {r["doc_id"]: r["component_id"]
-          for r in connected_components_loground(nodes, pairs).collect()}
-    assert lp == ls
+    got = {r["doc_id"]: r["component_id"]
+           for r in connected_components(nodes, pairs).collect()}
+    assert got == want
+    assert len(set(want.values())) > 1
 
 
 def test_loground_cc_long_chain_converges_in_log_rounds(spark):
-    """An 80-node path graph: min-label propagation needs O(n) rounds
-    (raises at max_iters=15), large-star/small-star needs O(log n)
-    (converges within the same 15-round budget). This is the 100 TB
-    posture claim, pinned."""
-    import pytest
-
+    """An 80-node path graph: min-label propagation would need O(n)
+    rounds, large-star/small-star needs O(log n) and converges within a
+    15-round budget. This is the 100 TB posture claim, pinned."""
     from webtableextractionsystem_spark.operators.dedup import (
         connected_components,
-        connected_components_loground,
     )
 
     n = 80
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, pairs, max_iters=15)
     got = {r["doc_id"]: r["component_id"]
-           for r in connected_components_loground(
+           for r in connected_components(
                nodes, pairs, max_iters=15).collect()}
     assert got == {i: 0 for i in range(n)}
 
@@ -455,6 +459,128 @@ def test_event_asof_join_semantics(spark, tmp_path):
     assert out[4]["asof_click_ts"] == "2024-01-01 10:30:00"
     assert out[4]["gap_us"] == 30 * 60 * 1_000_000
     assert out[6]["gap_us"] == 0
+
+
+_EVENTS_SCHEMA = ("event_id long, ts timestamp_ntz, user_id long, "
+                  "event_type string, value double, props string")
+
+
+def _crafted_events(spark, sf_dir, rows):
+    """Write (event_id, minutes after 2024-03-01 09:00, user_id) rows
+    as the events table under ``sf_dir``."""
+    from datetime import datetime, timedelta
+
+    base = datetime(2024, 3, 1, 9, 0, 0)
+    spark.createDataFrame(
+        [(eid, base + timedelta(minutes=m), uid, "view", 1.0, "{}")
+         for eid, m, uid in rows], _EVENTS_SCHEMA,
+    ).write.parquet(f"{sf_dir}/events.parquet")
+
+
+def test_event_sessions_gap_rule_crafted(spark, tmp_path):
+    """Sessions split on a > 30-min gap, on crafted users: a session
+    whose events span 50' to 70' stays one session, a run 90' before an
+    open session is its own session, and a chain of 25' gaps is one
+    session across 50'."""
+    from webtableextractionsystem_spark.operators.relational import (
+        event_sessions,
+    )
+
+    sf_dir = str(tmp_path)
+    _crafted_events(spark, sf_dir, [
+        (1, 0, 1), (2, 10, 1), (3, 50, 1), (6, 55, 1), (7, 70, 1),
+        (4, 0, 2), (5, 20, 2), (8, 60, 2),
+        (9, 65, 3),
+        (11, 100, 11), (12, 105, 11), (15, 0, 11), (16, 10, 11),
+        (13, 70, 12), (17, 20, 12),
+        (14, 70, 13), (18, 20, 13), (19, 45, 13),
+    ])
+    got = {tuple(r) for r in event_sessions(spark, sf_dir)
+           .select("user_id", "session_id", "n_events",
+                   "session_start", "duration_s").collect()}
+    assert got == {
+        (1, 0, 2, "2024-03-01 09:00:00", 600),
+        (1, 1, 3, "2024-03-01 09:50:00", 1200),
+        (2, 0, 2, "2024-03-01 09:00:00", 1200),
+        (2, 1, 1, "2024-03-01 10:00:00", 0),
+        (3, 0, 1, "2024-03-01 10:05:00", 0),
+        (11, 0, 2, "2024-03-01 09:00:00", 600),
+        (11, 1, 2, "2024-03-01 10:40:00", 300),
+        (12, 0, 1, "2024-03-01 09:20:00", 0),
+        (12, 1, 1, "2024-03-01 10:10:00", 0),
+        (13, 0, 3, "2024-03-01 09:20:00", 3000),
+    }
+
+
+def test_closed_sessions_emit_rule(spark, tmp_path):
+    """closed_sessions keeps every non-final session of a user, and the
+    final one only once the watermark (max ts - 10h) passes last+gap.
+    u1: a closed session (0-10'), then a final session at 50'; u2's one
+    event at 26h puts the watermark at 16h, past 50'+30', so u1's final
+    session is closed. u2's session is still open and is excluded."""
+    from webtableextractionsystem_spark.operators.relational import (
+        closed_sessions,
+        event_sessions,
+    )
+
+    sf_dir = str(tmp_path)
+    _crafted_events(spark, sf_dir,
+                    [(1, 0, 1), (2, 10, 1), (3, 50, 1), (4, 26 * 60, 2)])
+    got = {tuple(r) for r in closed_sessions(spark, sf_dir).collect()}
+    full = {tuple(r) for r in event_sessions(spark, sf_dir)
+            .select("user_id", "session_id", "n_events",
+                    "session_start", "duration_s").collect()}
+    assert got == {(1, 0, 2, "2024-03-01 09:00:00", 600),
+                   (1, 1, 1, "2024-03-01 09:50:00", 0)}
+    assert got < full  # u2's open session excluded
+
+
+def test_event_anomalies_flags_spike_crafted(spark, tmp_path):
+    """Two events an hour for hours 0-25, a 9-event spike in hour 26
+    (> 2x the trailing mean of 2) and one more event in hour 0: only
+    the spike hour is flagged, hour 0 counts 3, and every hour is
+    present."""
+    from datetime import datetime, timedelta
+
+    from webtableextractionsystem_spark.operators.relational import (
+        event_anomalies,
+    )
+
+    base = datetime(2024, 3, 1, 0, 0, 0)
+    minutes = ([60 * h + 10 * k for h in range(26) for k in range(2)]
+               + [60 * 26 + k for k in range(9)] + [30])
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(
+        [(i, base + timedelta(minutes=m), 1, "view", 1.0, "{}")
+         for i, m in enumerate(minutes)], _EVENTS_SCHEMA,
+    ).write.parquet(f"{sf_dir}/events.parquet")
+    got = {r["hour"]: r for r in event_anomalies(spark, sf_dir).collect()}
+    assert len(got) == 27
+    assert {h for h, r in got.items() if r["anomaly"]} == {
+        "2024-03-02 02:00:00"}
+    assert got["2024-03-01 00:00:00"]["n"] == 3
+
+
+def test_neardup_canonical_dups_are_verified_partners(spark, tmp_path):
+    """A copy of doc 0 under a new id is an LSH candidate and a verified
+    pair of doc 0, and neardup_canonical's dup set is exactly the
+    larger member of each verified pair."""
+    from webtableextractionsystem_spark.operators import dedup as DD
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
+        .where(F.col("doc_id") < 120)
+    copy = docs.where(F.col("doc_id") == 0) \
+        .withColumn("doc_id", F.lit(999999).cast("long"))
+    sf_dir = str(tmp_path)
+    docs.unionByName(copy).write.parquet(f"{sf_dir}/documents.parquet")
+    assert (0, 999999) in {(r["doc_a"], r["doc_b"]) for r in
+                           DD.lsh_candidate_pairs(spark, sf_dir).collect()}
+    verified = {(r["doc_a"], r["doc_b"])
+                for r in DD._verified_pairs(spark, sf_dir).collect()}
+    assert (0, 999999) in verified
+    dups = {r["doc_id"] for r in
+            DD.neardup_canonical(spark, sf_dir).where("is_dup").collect()}
+    assert dups == {b for _, b in verified}
 
 
 def test_doc_chunks_and_packing_invariants(spark, tmp_path):

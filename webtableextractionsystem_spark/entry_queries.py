@@ -285,7 +285,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
        neardup_components_lsss), plus 5 of round-6's first-rowed
        additions whose machinery stays exercised by rowed twins or
        dedicated tests: quantile_sketch (lattice pinned by the
-       est-bound test + streaming online==batch twin; percentile
+       est-bound test; percentile
        semantics twinned by the now-rowed length_quantiles),
        ngram_clean (its _gram_relation/_gram_incidence shared with the
        now-rowed repeated_ngrams), bm25_topk and dsir_weights (each
@@ -377,7 +377,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_events_anomalies": REL.event_anomalies,
         "q_rel_queue_batch": REL.queue_batch,
         "q_rel_name_union": REL.name_union,
-        "q_doc_neardup_components_lsss": DD.neardup_components_lsss,
+        "q_doc_neardup_components_lsss": DD.neardup_components,
         "q_doc_simhash_pairs": DD.simhash_neardup_pairs,
         "q_rel_top_orders": REL.top_orders_per_customer,
         "q_rel_pricing_summary": REL.pricing_summary,

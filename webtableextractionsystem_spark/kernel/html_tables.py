@@ -371,10 +371,12 @@ def extract_docx_tables(root: Node) -> list[RawTable]:
 def extract_list_tables(tag: Node) -> list[RawTable]:
     out: list[RawTable] = []
     uls = tag.find_all("ul")
-    if not uls:  # titles only pair with uls: skip the subtree walk
+    if not uls:  # titles only pair with uls: skip the title lookup
         return out
-    titles = [n for n in tag.iter_desc()
-              if n.attrs.get("class", "") == LIST_TABLE_TITLE_CLASS]
+    # the class index, not a subtree walk: walking every table's subtree
+    # is quadratic on nested tables
+    titles = [n for n in tag.find_all()
+              if n.attrs["class"] == LIST_TABLE_TITLE_CLASS]
     if len(titles) != len(uls):
         return out
     for title, ul in zip(titles, uls):

@@ -24,9 +24,8 @@ construction per Broder (1997, "On the resemblance and containment of
 documents"); LSH banding per Leskovec/Rajaraman/Ullman, Mining of
 Massive Datasets ch.3; 64-bit SimHash + chunk-table hamming search per
 Charikar (2002) and Manku/Jain/Sarma (WWW'07, "Detecting near-duplicates
-for web crawling"); connected components via min-label propagation with
-the large-star/small-star contraction (Kiveris et al., SoCC'14) noted as
-the log-round production variant.
+for web crawling"); connected components via the log-round
+large-star/small-star contraction (Kiveris et al., SoCC'14).
 """
 
 from __future__ import annotations
@@ -111,23 +110,17 @@ SEED_PARAMS = [(2 * s + 3, 1000003 * (s + 1) % MINHASH_P)
 
 
 def row_minhash(docs: DataFrame) -> DataFrame:
-    """``shingle_minhash`` over the shingles of the docs' ``toks``
-    column (see textstats.tokenized)."""
-    return shingle_minhash(docs, _shingles(F.col("toks")))
-
-
-def shingle_minhash(docs: DataFrame, shingles) -> DataFrame:
-    """Per-ROW minhash signature of an array<string> ``shingles``
-    column: a single higher-order fold carries all N_SEEDS running
-    minima across the shingle hash array — one md5 per shingle (the
-    fold input is evaluated once per row), no explode, no aggregation,
-    no shuffle. Same algebra (and same values, differential-tested) as
-    the explode form this replaced; being aggregation-free it is also
-    legal before stateful streaming operators. Docs too short to
-    shingle get NULL signatures (the MINHASH_P sentinel can never be a
-    real minimum — every permuted hash is strictly below the modulus).
+    """Per-ROW minhash signature of the shingles of the docs' ``toks``
+    column (see textstats.tokenized): a single higher-order fold
+    carries all N_SEEDS running minima across the shingle hash array —
+    one md5 per shingle (the fold input is evaluated once per row), no
+    explode, no aggregation, no shuffle. Same algebra (and same values,
+    differential-tested) as the explode form this replaced. Docs too
+    short to shingle get NULL signatures (the MINHASH_P sentinel can
+    never be a real minimum — every permuted hash is strictly below the
+    modulus).
     """
-    hs = F.transform(shingles, lambda sh: _md5_u32(sh))
+    hs = F.transform(_shingles(F.col("toks")), lambda sh: _md5_u32(sh))
     a_arr = F.array(*[F.lit(a).cast("long") for a, _ in SEED_PARAMS])
     b_arr = F.array(*[F.lit(b).cast("long") for _, b in SEED_PARAMS])
     minima = F.aggregate(
@@ -154,8 +147,7 @@ def shingle_minhash(docs: DataFrame, shingles) -> DataFrame:
 
 def band_structs():
     """The LSH band array (band index + md5 over its BAND_ROWS signature
-    columns) — shared by the batch band-keys query and the streaming
-    online near-dup operator."""
+    columns) — shared by lsh_band_keys and curation_funnel."""
     n_bands = N_SEEDS // BAND_ROWS
     return F.array(
         *[
@@ -218,27 +210,20 @@ GROUP BY doc_id
 # LSH banding + candidate pairs
 # ---------------------------------------------------------------------------
 
-def banded_keys(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) from any mh0..-bearing signature
-    relation — the ONE home of the band-explode shape shared by the
-    batch band-keys query and both streaming near-dup stages. The
-    mh0-not-null guard is load-bearing: docs with < SHINGLE_K tokens
-    have NULL signatures (empty shingle set) and must emit NO bands —
-    otherwise concat_ws collapses the NULLs into a shared md5('') band
-    key and every short doc becomes a spurious near-dup candidate of
-    every other."""
-    return (
-        sig.where(F.col("mh0").isNotNull())
-        .select("doc_id", F.explode(band_structs()).alias("bk"))
-        .select("doc_id", "bk.band", "bk.band_key")
-    )
-
-
 def lsh_band_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, band, band_key). The mh0-not-null guard is load-bearing:
+    docs with < SHINGLE_K tokens have NULL signatures (empty shingle
+    set) and must emit NO bands — otherwise concat_ws collapses the
+    NULLs into a shared md5('') band key and every short doc becomes a
+    spurious near-dup candidate of every other."""
     # the aggregate in minhash_signatures is itself a projection-collapse
     # barrier, so band structs reference the materialized mh columns —
     # no persist needed for the single-consumer band-keys query
-    return banded_keys(minhash_signatures(spark, sf_dir))
+    return (
+        minhash_signatures(spark, sf_dir).where(F.col("mh0").isNotNull())
+        .select("doc_id", F.explode(band_structs()).alias("bk"))
+        .select("doc_id", "bk.band", "bk.band_key")
+    )
 
 
 def lsh_band_keys_sql() -> str:
@@ -338,8 +323,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     array is evaluated once per row), a 64-counter array accumulated
     across tokens, then the majority vote packed into a signed BIGINT.
     Measured ~10x faster than the explode -> groupBy(64 sums) form at
-    sf0.1 (0.18s vs 1.72s) with bit-identical output; being
-    aggregation-free it is also legal in streaming pipelines.
+    sf0.1 (0.18s vs 1.72s) with bit-identical output.
 
     NULL-text docs are filtered exactly like the explode form dropped
     them (explode of a NULL token array emits nothing) — the DuckDB
@@ -529,12 +513,10 @@ JACCARD_PCT = 50  # integer threshold (x100): verify survivors at J >= 0.5
 
 def jaccard_verified(cand: DataFrame, shingles: DataFrame,
                      pct: int = JACCARD_PCT) -> DataFrame:
-    """THE near-dup verify expression, shared verbatim by the batch
-    pipeline (_verified_pairs) and the streaming one
-    (streaming_neardup_verified) so the online==batch equivalence holds
-    by construction, not by parallel maintenance. ``cand`` carries
-    (doc_a, doc_b); ``shingles`` carries (doc_id, sh). Integer
-    cross-multiplied threshold — no float in either engine."""
+    """THE near-dup verify expression, shared verbatim by
+    _verified_pairs and curation_funnel. ``cand`` carries (doc_a,
+    doc_b); ``shingles`` carries (doc_id, sh). Integer cross-multiplied
+    threshold — no float in either engine."""
     a = shingles.select(F.col("doc_id").alias("doc_a"),
                         F.col("sh").alias("sh_a"))
     b = shingles.select(F.col("doc_id").alias("doc_b"),
@@ -618,93 +600,27 @@ GROUP BY doc.doc_id
 """
 
 
-def neardup_components(spark: SparkSession, sf_dir: str,
-                       max_iters: int = 50) -> DataFrame:
+def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the verified near-dup graph: every doc
     labeled with the smallest doc_id reachable through verified pairs
     (full transitive closure — the canonical-id assignment a dedup
     pipeline actually keeps).
 
-    Spark side is iterative min-label propagation: each round joins
-    labels to the (undirected) edge list, takes the min neighbor label,
-    and stops when no label changed. Rounds are bounded by the component
-    diameter (near-dup components are shallow — duplicates of duplicates
-    — so a handful of rounds suffices; production-scale CC would switch
-    to the large-star/small-star contraction of Kiveris et al. for
-    log-bounded rounds, same join/agg shape). ``localCheckpoint``
-    truncates the growing lineage each round — at cluster scale that is
-    a checkpoint to reliable storage.
+    Spark side is the log-round large-star/small-star contraction
+    (``connected_components``): rounds are bounded by O(log n), not by
+    the component diameter, so a long duplication chain
+    (scrape-of-a-scrape-of-a-scrape) costs O(log) rounds.
 
     The DuckDB oracle is a recursive CTE computing reachability then
     min per source — genuinely SQL-expressible, so this iterative
     operator is hash-checked like everything else."""
     verified = _verified_pairs(spark, sf_dir)
     nodes = load_documents(spark, sf_dir).select("doc_id")
-    return connected_components(nodes, verified, max_iters)
+    return connected_components(nodes, verified)
 
 
 def connected_components(nodes: DataFrame, pairs: DataFrame,
-                         max_iters: int = 50) -> DataFrame:
-    """Min-label propagation over an undirected pair list; see
-    neardup_components for the scale discussion."""
-    edges = pairs.union(
-        pairs.select(F.col(pairs.columns[1]), F.col(pairs.columns[0]))
-    ).toDF("src", "dst").persist()
-    try:
-        labels = nodes.select(
-            "doc_id", F.col("doc_id").alias("component_id"))
-        changed = "unknown (max_iters <= 0: loop never ran)"
-        for _ in range(max_iters):
-            nbr = (
-                edges.join(labels, edges["src"] == labels["doc_id"])
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("component_id").alias("nbr_min"))
-            )
-            new_labels = (
-                labels.join(nbr, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.least(
-                        "component_id",
-                        F.coalesce("nbr_min", "component_id"),
-                    ).alias("component_id"),
-                    (F.coalesce("nbr_min", "component_id")
-                     < F.col("component_id")).alias("changed"),
-                )
-            ).localCheckpoint()
-            changed = new_labels.where("changed").count()
-            labels = new_labels.select("doc_id", "component_id")
-            if changed == 0:
-                return labels
-        # exhausting max_iters with changes pending would silently return
-        # partial components (and fail the recursive-CTE oracle with no
-        # hint why) — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            f"({changed} labels still changing); raise max_iters or switch "
-            f"to connected_components_loground"
-        )
-    finally:
-        # the returned labels hang off a localCheckpoint, not off edges,
-        # so the cache can be released eagerly (a long-lived session
-        # running many queries would otherwise accumulate cached blocks)
-        edges.unpersist()
-
-
-def neardup_components_lsss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """neardup_components computed by the LOG-ROUND large-star/small-star
-    contraction (Kiveris et al., SoCC'14) instead of min-label
-    propagation — same verified-pair graph, same recursive-CTE oracle,
-    rounds bounded by O(log n) instead of the component diameter. This is
-    the 100 TB form: a long duplication chain (scrape-of-a-scrape-of-a-
-    scrape) gives label propagation O(chain) rounds but this O(log)."""
-    verified = _verified_pairs(spark, sf_dir)
-    nodes = load_documents(spark, sf_dir).select("doc_id")
-    return connected_components_loground(nodes, verified)
-
-
-def connected_components_loground(nodes: DataFrame, pairs: DataFrame,
-                                  max_iters: int = 30) -> DataFrame:
+                         max_iters: int = 30) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.,
     SoCC'14 "Connected Components in MapReduce and Beyond", alg. 2):
 
@@ -713,15 +629,14 @@ def connected_components_loground(nodes: DataFrame, pairs: DataFrame,
     * small-star: per node u over its smaller neighbors (edges oriented
       big -> small), link u and every such neighbor to their minimum.
 
-    Each round is two groupBy/join pairs — the same shuffle shape as one
-    label-propagation round — but the round count is O(log n) in the
-    worst case instead of O(diameter). Edges converge to a star from
-    every non-minimum node to its component minimum. Convergence is
-    detected by an order-independent edge-set digest (count + sum of
-    xxhash64): iteration stops when the edge set reaches a fixed point.
-    ``localCheckpoint`` truncates lineage per round, as in
-    connected_components; differential-tested against it and hash-checked
-    by the same recursive-CTE DuckDB oracle."""
+    Each round is two groupBy/join pairs, and the round count is
+    O(log n) in the worst case instead of O(diameter). Edges converge to
+    a star from every non-minimum node to its component minimum.
+    Convergence is detected by an order-independent edge-set digest
+    (count + sum of xxhash64): iteration stops when the edge set reaches
+    a fixed point. ``localCheckpoint`` truncates the growing lineage
+    each round — at cluster scale that is a checkpoint to reliable
+    storage."""
     edges = (
         pairs.toDF("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -776,7 +691,7 @@ def connected_components_loground(nodes: DataFrame, pairs: DataFrame,
             )
         prev = cur
     raise RuntimeError(
-        f"connected_components_loground did not converge in {max_iters} "
+        f"connected_components did not converge in {max_iters} "
         f"rounds — not expected for any graph of < 2^{max_iters} nodes"
     )
 

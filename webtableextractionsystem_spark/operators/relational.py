@@ -314,19 +314,16 @@ FROM sessions
 
 # --- events: watermark-confirmed (closed) sessions ---------------------------
 #
-# Batch twin of streaming/stateful.streaming_sessionize's OUTPUT (not just
-# its session split): the streaming path emits a session only once its
-# close is confirmed — in-stream, when a later event of the same user
-# arrives past the gap (guaranteed for every non-final session of a user
-# once the whole input is consumed), or by timeout, when the event-time
-# watermark (max event ts seen minus the delay) passes last_event + gap
-# (the only close a user's FINAL session can get). This query applies
-# exactly those two rules over the static table, so its row set equals
-# what the stream has emitted after an availableNow pass whose final
-# watermark is max(ts) - delay. Scale: the same single user_id shuffle
-# as event_sessions + a broadcast one-row watermark scalar.
+# The sessions whose close is confirmed: a session closes when a later
+# event of the same user arrives past the gap (every non-final session
+# of a user), or when the event-time watermark (max event ts minus the
+# delay) passes last_event + gap (the only close a user's FINAL session
+# can get). This query applies exactly those two rules over the static
+# table — what an event-time session stream would have emitted once its
+# final watermark is max(ts) - delay. Scale: the same single user_id
+# shuffle as event_sessions + a broadcast one-row watermark scalar.
 
-SESSION_WATERMARK_DELAY_S = 10 * 3600  # streaming_sessionize default
+SESSION_WATERMARK_DELAY_S = 10 * 3600
 
 
 def closed_sessions(spark, sf_dir):
@@ -480,11 +477,13 @@ ANOMALY_TRAIL_H = 24
 ANOMALY_FACTOR = 2
 
 
-def anomaly_flags(hourly):
-    """(hour_idx, n) -> flagged rows; the single home of the threshold
-    rule, shared by the batch query and the streaming monitor
-    (streaming/incremental.streaming_anomalies) so online == batch by
-    construction."""
+def event_anomalies(spark, sf_dir):
+    e = _t(spark, sf_dir, "events")
+    # integral `div`, never double `/` + cast —
+    # matches the oracle's BIGINT // 3600 exactly at any magnitude
+    hour_idx = F.expr("cast(cast(ts as timestamp) as long) div 3600")
+    hourly = e.groupBy(hour_idx.alias("hour_idx")).agg(
+        F.count("*").alias("n"))
     w = (Window.orderBy("hour_idx")
          .rangeBetween(-ANOMALY_TRAIL_H, -1))
     return hourly.select(
@@ -500,16 +499,6 @@ def anomaly_flags(hourly):
          & (F.col("n") * F.col("trail_n")
             > ANOMALY_FACTOR * F.col("trail_sum"))).alias("anomaly"),
     )
-
-
-def event_anomalies(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    # integral `div`, never double `/` + cast (CLAUDE.md discipline) —
-    # matches the oracle's BIGINT // 3600 exactly at any magnitude
-    hour_idx = F.expr("cast(cast(ts as timestamp) as long) div 3600")
-    hourly = e.groupBy(hour_idx.alias("hour_idx")).agg(
-        F.count("*").alias("n"))
-    return anomaly_flags(hourly)
 
 
 EVENT_ANOMALIES_SQL = f"""
@@ -652,12 +641,10 @@ GROUP BY r_name, p_brand
 
 
 def event_attribution(spark, sf_dir):
-    """Batch twin of the streaming attribution_join (clicks x same-user
-    purchases within 1 hour after the click) — a range-condition
-    self-join on the events fact, aggregated per user so the oracle
-    output is compact and integer/decimal-disciplined. The streaming
-    variant (streaming/incremental.attribution_join) is equality-tested
-    against this join's pair set."""
+    """Click attribution (clicks x same-user purchases within 1 hour
+    after the click) — a range-condition self-join on the events fact,
+    aggregated per user so the oracle output is compact and
+    integer/decimal-disciplined."""
     e = _t(spark, sf_dir, "events")
     c = e.where(F.col("event_type") == "click").select(
         F.col("user_id").alias("cu"), F.col("ts").alias("cts"))

@@ -1258,20 +1258,10 @@ def quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole int64 range), a (source, bucket) shuffle whose payload is the
     lattice size regardless of corpus size, then a window + fold over
     the tiny per-group histogram. Sketches merge by adding counts —
-    the form a 1000-executor job or a streaming accumulator needs. No
-    full sort, no corpus-sized exchange."""
-    hist = (qsketch_buckets(load_documents(spark, sf_dir))
-            .groupBy("source", "bucket").agg(F.count("*").alias("cnt")))
-    return qsketch_estimates(hist)
-
-
-def qsketch_buckets(docs: DataFrame) -> DataFrame:
-    """(source, n_chars) -> (source, bucket): the single home of the
-    lattice mapping, shared by the batch query and the streaming
-    histogram maintainer (divergence would decouple the online sketch
-    from its batch twin and the oracle). Works on batch AND streaming
-    relations (pure row-local projection)."""
-    d = (docs.select("source", F.col("n_chars").cast("long").alias("v"))
+    the form a 1000-executor job needs. No full sort, no corpus-sized
+    exchange."""
+    d = (load_documents(spark, sf_dir)
+         .select("source", F.col("n_chars").cast("long").alias("v"))
          .withColumn("e", (F.length(F.bin(F.col("v"))) - 1).cast("int")))
     bucket = (
         F.when(F.col("v") < _QSK_SUB, F.col("v").cast("int"))
@@ -1279,13 +1269,8 @@ def qsketch_buckets(docs: DataFrame) -> DataFrame:
                     + F.expr(f"shiftright(v, e - {QSKETCH_SUB_BITS})"))
                    .cast("int"))
     )
-    return d.select("source", bucket.alias("bucket"))
-
-
-def qsketch_estimates(hist: DataFrame) -> DataFrame:
-    """(source, bucket, cnt) histogram -> per-source quantile
-    estimates; the single home of the rank fold + lower-bound
-    reconstruction, shared with the streaming reader."""
+    hist = (d.select("source", bucket.alias("bucket"))
+            .groupBy("source", "bucket").agg(F.count("*").alias("cnt")))
     w_cum = (Window.partitionBy("source").orderBy("bucket")
              .rowsBetween(Window.unboundedPreceding, 0))
     ranked = hist.select(
@@ -1971,9 +1956,8 @@ C4_MIN_LINE_WORDS = 5
 
 
 def _c4_line_keep(line):
-    """The C4 per-line predicate over a TRIMMED line column — one home
-    shared by c4_clean and any future streaming twin. Terminal set is
-    the paper's (. ! ? ")."""
+    """The C4 per-line predicate over a TRIMMED line column. Terminal
+    set is the paper's (. ! ? ")."""
     words = F.size(F.split(line, _WS_RUN))
     term = (line.endswith(".") | line.endswith("!")
             | line.endswith("?") | line.endswith('"'))
