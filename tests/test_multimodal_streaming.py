@@ -475,37 +475,43 @@ def test_gif_roundtrip_and_interlace():
 
 
 def test_gif_decoder_handles_dictionary_grown_lzw():
-    """Our encoder emits the no-growth 'uncompressed' LZW stream; REAL
-    encoders build the dictionary. Compress with a reference LZW
-    implementation (dictionary growth + width bumps, the KwKwK pattern
-    included) and require the decoder to reproduce the pixels."""
+    """The decoder reads streams the package's encoder did not make: an
+    independent LZW compressor written here (its own LSB-first bit
+    packing, dictionary growth + width bumps, the KwKwK pattern
+    included) must decode back to its pixels."""
     import numpy as np
 
     from webtableextractionsystem_spark.operators import gif as G
 
     def lzw_compress(pixels, min_code):
         clear, end = 1 << min_code, (1 << min_code) + 1
-        bw = G._BitWriterLSB()
+        acc = nbits = 0
+
+        def write(code, width):
+            nonlocal acc, nbits
+            acc |= code << nbits
+            nbits += width
+
         width = min_code + 1
         table = {bytes([i]): i for i in range(clear)}
         next_code = clear + 2
-        bw.write(clear, width)
+        write(clear, width)
         prev = b""
         for p in pixels:
             cur = prev + bytes([int(p)])
             if cur in table:
                 prev = cur
                 continue
-            bw.write(table[prev], width)
+            write(table[prev], width)
             table[cur] = next_code
             next_code += 1
             if next_code - 1 == (1 << width) and width < 12:
                 width += 1
             prev = bytes([int(p)])
         if prev:
-            bw.write(table[prev], width)
-        bw.write(end, width)
-        return bw.flush()
+            write(table[prev], width)
+        write(end, width)
+        return acc.to_bytes((nbits + 7) // 8, "little")
 
     rng = np.random.default_rng(21)
     for min_code in (2, 5, 8):
@@ -1077,20 +1083,20 @@ def test_png_palette_roundtrip_and_errors():
     rng = np.random.default_rng(3)
     img8 = rng.integers(0, 256, size=(9, 13, 3), dtype=np.uint8)
     for ft in range(5):
-        enc = MM.encode_png_palette(img8, 8, filter_type=ft)
+        enc = MM.encode_png(img8, filter_type=ft, depth=8)
         assert np.array_equal(MM.decode_image(enc), img8)
     for depth in (1, 2, 4):
         pal = rng.integers(0, 256, size=(1 << depth, 3), dtype=np.uint8)
         img = pal[rng.integers(0, 1 << depth, size=(11, 7))]
         for ft in (0, 1, 2, 3, 4):
-            enc = MM.encode_png_palette(img, depth, filter_type=ft)
+            enc = MM.encode_png(img, filter_type=ft, depth=depth)
             assert np.array_equal(MM.decode_image(enc), img), (depth, ft)
     with pytest.raises(ValueError, match="exceed"):
-        MM.encode_png_palette(
-            rng.integers(0, 256, size=(30, 30, 3), dtype=np.uint8), 2)
+        MM.encode_png(
+            rng.integers(0, 256, size=(30, 30, 3), dtype=np.uint8), depth=2)
     # PLTE stripped out -> missing-palette diagnosis (rebuild the chunk
     # walk without PLTE, CRCs intact)
-    enc = bytearray(MM.encode_png_palette(img8, 8))
+    enc = bytearray(MM.encode_png(img8, depth=8))
     p = enc.index(b"PLTE") - 4
     ln = int.from_bytes(enc[p:p + 4], "big")
     del enc[p:p + 12 + ln]
@@ -1114,7 +1120,7 @@ def test_png_adam7_interlace_roundtrip():
         pal = rng.integers(0, 256, size=(1 << depth, 3), dtype=np.uint8)
         img = pal[rng.integers(0, 1 << depth, size=(11, 7))]
         out = MM.decode_image(
-            MM.encode_png_palette(img, depth, 4, interlace=True))
+            MM.encode_png(img, 4, interlace=True, depth=depth))
         assert np.array_equal(out, img), depth
 
     @settings(max_examples=30, deadline=None)

@@ -189,6 +189,22 @@ def test_interleaved_spans_order():
     assert [s["seq"] for s in res["out_spans"]] == list(range(9))
 
 
+def test_null_offset_sorts_and_emits_as_zero():
+    """A span with a null offset next to others sorts and emits as offset
+    0; comparing None with an int must not lose the whole document."""
+    spans = [
+        {"kind": "text", "text": "结语", "media_ref": "", "offset": 3},
+        {"kind": "html", "text": ARCHETYPES["H3"], "media_ref": "", "offset": 1},
+        {"kind": "text", "text": "前言", "media_ref": "", "offset": None},
+    ]
+    res = extract_document("doc-null-offset", spans)
+    assert res["n_errors"] == 0
+    seq = [(s["kind"], s["offset"]) for s in res["out_spans"]]
+    assert seq[0] == ("text", 0)
+    assert seq[1] == ("header_cell", 1)
+    assert seq[-1] == ("text", 3)
+
+
 def test_h13_docx_table():
     from webtableextractionsystem_spark.fixtures import H13_DOCX_TABLE
 

@@ -112,6 +112,7 @@ def _boundary_docs():
         ("empty", []),
         ("media-only", [_span("media", None, "img/a.png"),
                         _span("media", "", "img/b.png", 1)]),
+        ("null-offset", [_span("text", "a", offset=None)] + table),
     ] + [(d["doc_id"], d["spans"])
          for d in map(gen_document, [*range(1, 41), MEGA_EVERY])]
 
@@ -162,6 +163,9 @@ def test_arrow_boundary_matches_in_process_kernel(spark):
     assert by_id[gen_document(MEGA_EVERY)["doc_id"]]["n_spans"] > 1000
     assert by_id["null-list"]["n_spans"] == 0
     assert [s["kind"] for s in by_id["media-only"]["out_spans"]] == ["media"] * 2
+    assert by_id["null-offset"]["n_errors"] == 0
+    assert by_id["null-offset"]["error"] == ""
+    assert by_id["null-offset"]["out_spans"][0]["offset"] == 0
 
 
 _PYTHON_NODE = re.compile(

@@ -32,8 +32,7 @@ from .kernel.html_tables import render_table_docx
 from .operators.extraction import arrow_map, per_batch
 
 
-def write_triples_csv(triples: DataFrame, path: str,
-                      header: bool = False) -> None:
+def write_triples_csv(triples: DataFrame, path: str) -> None:
     """Flat triple CSV, byte-compatible with the reference's
     file/Triad/relationship.csv: csv.writer rows of
     [str([name, url]), rel, str([name, url])] (FileIO.writeTriad2csv,
@@ -53,7 +52,7 @@ def write_triples_csv(triples: DataFrame, path: str,
     # escape='"' doubles embedded quotes the way Python csv.writer
     # (QUOTE_MINIMAL) does; Spark's default backslash escape would
     # diverge from the reference bytes on any value containing '"'
-    flat.write.mode("overwrite").option("header", header) \
+    flat.write.mode("overwrite").option("header", False) \
         .option("escape", '"').csv(path)
 
 

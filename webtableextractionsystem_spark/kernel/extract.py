@@ -236,13 +236,13 @@ def extract_entities(table: Table) -> list[tuple[str, str, dict]]:
     return out
 
 
-def _not_null_append(out: list, a: str, b: str, c: str,
-                     is_name: bool = False) -> None:
+def _not_null_append(out: list, a: str, b: str, c: str) -> None:
     """_notNullAppend (table.py:55-79): pre-clean empty/length gates, then
     bracket + punctuation cleaning (angle brackets NOT stripped — the
     reference regex at table.py:71 has the unreachable ``||\\<.*?\\>``
-    alternative, see RE_BRACKETS_NO_ANGLE); post-clean length gate on c
-    when it is a name."""
+    alternative, see RE_BRACKETS_NO_ANGLE). Its one caller passes a
+    property value as c, so the reference's name-only punctuation strip
+    and length gate on c never apply."""
     if not a or a.isspace() or not b or b.isspace() or not c or c.isspace():
         return
     if len(a) > 7 or len(b) > 7:
@@ -250,10 +250,6 @@ def _not_null_append(out: list, a: str, b: str, c: str,
     a = RE_PUNCT.sub("", RE_BRACKETS_NO_ANGLE.sub("", a))
     b = RE_PUNCT.sub("", RE_BRACKETS_NO_ANGLE.sub("", b))
     c = RE_BRACKETS_NO_ANGLE.sub("", c)
-    if is_name:
-        c = RE_PUNCT.sub("", c)
-        if len(c) > 7:
-            return
     out.append((a, b, c))
 
 

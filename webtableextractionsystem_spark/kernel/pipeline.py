@@ -138,9 +138,12 @@ def extract_document(doc_id: str, spans: list[dict]) -> dict:
     n_errors = 0
     seq = 0
     table_idx = 0
-    for span in sorted(spans, key=lambda s: s["offset"]):
+    # one read of the offset serves the sort and the emit: a null offset
+    # is 0 in both, so it cannot meet an int in the comparison
+    keyed = sorted(((int(s.get("offset") or 0), s) for s in spans),
+                   key=lambda p: p[0])
+    for offset, span in keyed:
         kind = span.get("kind") or ""
-        offset = int(span.get("offset") or 0)
         if kind == "text":
             out_spans.append({"seq": seq, "kind": "text",
                               "text": clean_cell_text(span.get("text") or ""),

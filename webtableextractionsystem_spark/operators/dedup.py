@@ -511,8 +511,7 @@ WHERE a.doc_id < b.doc_id
 JACCARD_PCT = 50  # integer threshold (x100): verify survivors at J >= 0.5
 
 
-def jaccard_verified(cand: DataFrame, shingles: DataFrame,
-                     pct: int = JACCARD_PCT) -> DataFrame:
+def jaccard_verified(cand: DataFrame, shingles: DataFrame) -> DataFrame:
     """THE near-dup verify expression, shared verbatim by
     _verified_pairs and curation_funnel. ``cand`` carries (doc_a,
     doc_b); ``shingles`` carries (doc_id, sh). Integer cross-multiplied
@@ -530,7 +529,7 @@ def jaccard_verified(cand: DataFrame, shingles: DataFrame,
         # duplicates for a caller whose candidates are not
         # band-filtered (review finding; the SQL twin carries the
         # same guard)
-        .where((inter * 100 >= union * pct) & (union > 0))
+        .where((inter * 100 >= union * JACCARD_PCT) & (union > 0))
         .select("doc_a", "doc_b")
     )
 
@@ -759,7 +758,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe = session_peek(spark, ("grams", sf_dir, DECON_K))
     if probe is None:
-        probe = _grams_lazy(spark, sf_dir, DECON_K)
+        probe = _grams_lazy(spark, sf_dir)
     hits = (
         probe.where(F.col("doc_id") >= DECON_BENCH_MAX_ID)
         .join(F.broadcast(bench), "h")
@@ -1097,8 +1096,7 @@ PR_ITERS = 5          # fixed iteration count (deterministic contract)
 PR_D_NUM = 85         # damping d = 85/100
 
 
-def neardup_pagerank(spark: SparkSession, sf_dir: str,
-                     iters: int = PR_ITERS) -> DataFrame:
+def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (Brin/Page 1998) over the symmetric verified near-dup
     graph in int64 fixed point: r0 = SCALE//N; each iteration
     r'_v = teleport + d * (sum over in-edges of r_u DIV deg_u) DIV 100,
@@ -1129,7 +1127,7 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str,
     edges_deg = session_persisted(
         spark, ("pagerank_edges", sf_dir),
         lambda: _edges_with_deg(_verified_pairs(spark, sf_dir)))
-    return pagerank(docs, edges_deg=edges_deg, iters=iters)
+    return pagerank(docs, edges_deg=edges_deg)
 
 
 
@@ -1144,7 +1142,6 @@ def _edges_with_deg(pairs: DataFrame) -> DataFrame:
 
 
 def pagerank(docs: DataFrame, pairs: DataFrame | None = None,
-             iters: int = PR_ITERS,
              edges_deg: DataFrame | None = None) -> DataFrame:
     """The int64 fixed-point PR loop over any (doc_id) node set and
     (doc_a, doc_b) undirected pair set — factored so crafted-graph
@@ -1163,7 +1160,7 @@ def pagerank(docs: DataFrame, pairs: DataFrame | None = None,
     r = docs.join(F.broadcast(n)).select(
         "doc_id", base.alias("rank_fp"), "n")
     teleport = F.expr(f"(({PR_SCALE} div n) * 15) div 100")
-    for _ in range(iters):
+    for _ in range(PR_ITERS):
         contrib = (
             edges_deg.join(r.select(F.col("doc_id").alias("src"),
                                     "rank_fp"), "src")
@@ -1184,7 +1181,7 @@ def pagerank(docs: DataFrame, pairs: DataFrame | None = None,
     return r.select("doc_id", "rank_fp")
 
 
-def neardup_pagerank_sql(iters: int = PR_ITERS) -> str:
+def neardup_pagerank_sql() -> str:
     base = f"({PR_SCALE} // n)"
     teleport = f"({base} * 15 // 100)"
     parts = [f"WITH {_verified_sql()},",
@@ -1196,7 +1193,7 @@ def neardup_pagerank_sql(iters: int = PR_ITERS) -> str:
              f"r0 AS (SELECT doc_id, CAST({base} AS BIGINT) AS rank_fp"
              " FROM docs, n),"]
     prev = "r0"
-    for i in range(1, iters + 1):
+    for i in range(1, PR_ITERS + 1):
         parts.append(
             f"s{i} AS (SELECT e.dst, sum(r.rank_fp // e.deg) AS s "
             f"FROM (SELECT edges.src, edges.dst, deg.deg FROM edges "
@@ -1221,8 +1218,7 @@ def neardup_pagerank_sql(iters: int = PR_ITERS) -> str:
 # documents; the scalable Spark form is hashed k-gram incidence.
 # ---------------------------------------------------------------------------
 
-def repeated_ngrams(spark: SparkSession, sf_dir: str,
-                    k: int = DECON_K) -> DataFrame:
+def repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_ngrams, n_crossdup) per document: n_crossdup = how
     many of the doc's DISTINCT k-grams also appear in at least one
     OTHER document. All integer.
@@ -1235,7 +1231,7 @@ def repeated_ngrams(spark: SparkSession, sf_dir: str,
     shape for substring-level dedup at 100 TB, where the suffix-array
     form of Lee et al. doesn't distribute. ``_shingles`` output is
     already per-doc distinct."""
-    grams = _gram_relation(spark, sf_dir, k)
+    grams = _gram_relation(spark, sf_dir)
     incidence = _gram_incidence(grams)
     return (
         grams.join(incidence, "h", "left")
@@ -1248,7 +1244,7 @@ def repeated_ngrams(spark: SparkSession, sf_dir: str,
 
 
 
-def _grams_lazy(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+def _grams_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-persisted per-doc-DISTINCT hashed k-gram relation — the
     lazy building block `_gram_relation` persists and `decontaminate`
     scans directly (its doc_id filter still pushes through the
@@ -1258,20 +1254,20 @@ def _grams_lazy(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     expensive pass."""
     return tokenized(spread(load_documents(spark, sf_dir)), "doc_id").select(
         "doc_id",
-        F.explode_outer(_shingles(F.col("toks"), k)).alias("g"),
+        F.explode_outer(_shingles(F.col("toks"), DECON_K)).alias("g"),
     ).select("doc_id", F.md5("g").alias("h"))
 
 
-def _gram_relation(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+def _gram_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted per-doc-DISTINCT hashed k-gram relation shared by
-    repeated_ngrams and ngram_clean (cached per (session, sf_dir, k) —
+    repeated_ngrams and ngram_clean (cached per (session, sf_dir) —
     the corpus shingle+hash pass runs once per session). Only operators
     with MULTIPLE full-corpus consumers should call this; anything that
     needs a filtered slice must scan `_grams_lazy` bespoke to keep
     predicate pushdown (see decontaminate)."""
     return session_persisted(
-        spark, ("grams", sf_dir, k),
-        lambda: _grams_lazy(spark, sf_dir, k))
+        spark, ("grams", sf_dir, DECON_K),
+        lambda: _grams_lazy(spark, sf_dir))
 
 
 def _gram_incidence(grams: DataFrame) -> DataFrame:
@@ -1281,8 +1277,7 @@ def _gram_incidence(grams: DataFrame) -> DataFrame:
             .groupBy("h").agg(F.count("*").alias("nd")))
 
 
-def ngram_clean(spark: SparkSession, sf_dir: str,
-                k: int = DECON_K) -> DataFrame:
+def ngram_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document substring REMOVAL — the action step after
     repeated_ngrams' detection (Lee et al. 2022's ExactSubstr dedup in
     its distributable form): every token covered by a k-gram that also
@@ -1300,7 +1295,7 @@ def ngram_clean(spark: SparkSession, sf_dir: str,
     posexplode+anti-join form whose exchanges are corpus-token-sized.
     The oracle SQL deliberately uses that naive relational form, so the
     two formulations are independent."""
-    grams = _gram_relation(spark, sf_dir, k)
+    grams = _gram_relation(spark, sf_dir)
     incidence = _gram_incidence(grams)
     doc_dups = (
         grams.join(incidence.where(F.col("nd") > 1), "h")
@@ -1321,9 +1316,10 @@ def ngram_clean(spark: SparkSession, sf_dir: str,
         # tokens i..i+k-1); n<k has no grams -> CASE guard keeps every
         # sequence() ascending (sequence(1,0) would DESCEND)
         .withColumn("dup_starts", F.expr(
-            f"CASE WHEN n >= {k} THEN filter(sequence(1, n-{k}+1), "
+            f"CASE WHEN n >= {DECON_K} THEN "
+            f"filter(sequence(1, n-{DECON_K}+1), "
             f"i -> array_contains(dup, md5(concat_ws(' ', "
-            f"slice(toks, i, {k}))))) "
+            f"slice(toks, i, {DECON_K}))))) "
             f"ELSE CAST(array() AS array<int>) END"))
         # keep mask: fold the (usually short) dup-start list over an
         # all-true mask, clearing each start's k-token cover. Every
@@ -1339,7 +1335,8 @@ def ngram_clean(spark: SparkSession, sf_dir: str,
         .withColumn("keep_mask", F.expr(
             f"aggregate(dup_starts, array_repeat(true, n), "
             f"(acc, i) -> transform(acc, "
-            f"(v, idx) -> v AND NOT (idx + 1 >= i AND idx + 1 <= i + {k - 1})))"))
+            f"(v, idx) -> v AND NOT "
+            f"(idx + 1 >= i AND idx + 1 <= i + {DECON_K - 1})))"))
         .withColumn("clean_toks", F.expr(
             "filter(zip_with(toks, keep_mask, "
             "(t, m) -> CASE WHEN m THEN t END), x -> x IS NOT NULL)"))
@@ -1353,7 +1350,7 @@ def ngram_clean(spark: SparkSession, sf_dir: str,
     )
 
 
-def ngram_clean_sql(k: int = DECON_K) -> str:
+def ngram_clean_sql() -> str:
     """Independent relational formulation: positional grams + incidence
     + coverage positions + left-join filter (the shape the Spark side
     deliberately avoids for its token-shuffle cost — here it is the
@@ -1365,9 +1362,9 @@ WITH base AS (
 ),
 pos_grams AS (
   SELECT doc_id, i,
-         md5(array_to_string(tk[i:i+{k - 1}], ' ')) AS h
-  FROM base, unnest(range(1, len(tk)-{k}+2)) AS t(i)
-  WHERE len(tk) >= {k}
+         md5(array_to_string(tk[i:i+{DECON_K - 1}], ' ')) AS h
+  FROM base, unnest(range(1, len(tk)-{DECON_K}+2)) AS t(i)
+  WHERE len(tk) >= {DECON_K}
 ),
 incidence AS (
   SELECT h, count(*) AS nd
@@ -1376,7 +1373,7 @@ incidence AS (
 cov AS (
   SELECT DISTINCT pg.doc_id, u.p
   FROM pos_grams pg
-  JOIN incidence USING (h), unnest(range(pg.i, pg.i+{k})) AS u(p)
+  JOIN incidence USING (h), unnest(range(pg.i, pg.i+{DECON_K})) AS u(p)
   WHERE nd > 1
 ),
 toks AS (
@@ -1400,13 +1397,13 @@ FROM clean
 """
 
 
-def repeated_ngrams_sql(k: int = DECON_K) -> str:
+def repeated_ngrams_sql() -> str:
     return rf"""
 WITH grams AS (
   SELECT doc_id, unnest(CASE WHEN len(sh) > 0
                              THEN [md5(g) FOR g IN sh]
                              ELSE [NULL] END) AS h
-  FROM (SELECT doc_id, {_shingles_sql(k)} AS sh
+  FROM (SELECT doc_id, {_shingles_sql(DECON_K)} AS sh
         FROM (SELECT doc_id, text,
                      regexp_split_to_array(trim(text), '\s+') AS toks
               FROM documents))
@@ -1483,7 +1480,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def winnowing_sql(k: int = WINNOW_K, w: int = WINNOW_W) -> str:
+def winnowing_sql() -> str:
     return rf"""
 WITH t AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
@@ -1491,9 +1488,9 @@ WITH t AS (
 ),
 g AS (
   SELECT doc_id,
-         CASE WHEN len(toks) >= {k}
-              THEN [array_to_string(toks[i:i+{k - 1}], ' ')
-                    FOR i IN range(1, len(toks)-{k}+2)]
+         CASE WHEN len(toks) >= {WINNOW_K}
+              THEN [array_to_string(toks[i:i+{WINNOW_K - 1}], ' ')
+                    FOR i IN range(1, len(toks)-{WINNOW_K}+2)]
               ELSE [] END AS grams
   FROM t
 ),
@@ -1506,9 +1503,9 @@ h AS (
 m AS (
   SELECT doc_id, len(hs) AS n_grams,
          CASE WHEN len(hs) = 0 THEN []::BIGINT[]
-              WHEN len(hs) < {w} THEN [list_min(hs)]
-              ELSE [list_min(hs[j:j+{w - 1}])
-                    FOR j IN range(1, len(hs)-{w}+2)] END AS mins
+              WHEN len(hs) < {WINNOW_W} THEN [list_min(hs)]
+              ELSE [list_min(hs[j:j+{WINNOW_W - 1}])
+                    FOR j IN range(1, len(hs)-{WINNOW_W}+2)] END AS mins
   FROM h
 )
 SELECT doc_id,

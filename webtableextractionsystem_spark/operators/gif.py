@@ -12,13 +12,11 @@ Transparency (GCE) is ignored — frames decode as opaque RGB, consistent
 with the PNG path dropping alpha. Corrupt streams raise ValueError;
 non-GIF magic raises NotImplementedError at the decode_image boundary.
 
-The encoder emits the classic "uncompressed GIF" LZW stream: a Clear
-code is issued before the dictionary could force a code-width bump, so
-every symbol stays at min_code_size+1 bits — a fully conformant stream
-any GIF decoder accepts (and our own decoder, which DOES grow the
-dictionary, reads it like any other). Palette = the image's unique
-colors; images with more than 256 distinct colors are rejected
-(quantization is a preprocessing choice, not a codec concern).
+The encoder is that decoder's pair, pdf._lzw_encode, called with the
+same GIF parameters (dictionary-grown codes), plus the 255-byte
+sub-block framing. Palette = the image's unique colors; images with
+more than 256 distinct colors are rejected (quantization is a
+preprocessing choice, not a codec concern).
 
 Format from the public GIF89a specification (CompuServe, 1990) and the
 LZW variable-code procedure described there.
@@ -28,39 +26,15 @@ from __future__ import annotations
 
 import numpy as np
 
-from .pdf import _MAX_PIXELS, _lzw_decode
+from .pdf import _MAX_PIXELS, _lzw_decode, _lzw_encode
 
 _GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
 
-class _BitWriterLSB:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, width: int) -> None:
-        self.acc |= code << self.n
-        self.n += width
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def flush(self) -> bytes:
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-        return bytes(self.out)
-
-
-def _deinterlace(rows: np.ndarray) -> np.ndarray:
-    """GIF 4-pass interlace: rows arrive in pass order; restore."""
-    h = rows.shape[0]
-    order = ([*range(0, h, 8)] + [*range(4, h, 8)]
-             + [*range(2, h, 4)] + [*range(1, h, 2)])
-    out = np.empty_like(rows)
-    out[order] = rows
-    return out
+def _interlace_order(h: int) -> list[int]:
+    """GIF 4-pass interlace: the image row stored at each stream row."""
+    return ([*range(0, h, 8)] + [*range(4, h, 8)]
+            + [*range(2, h, 4)] + [*range(1, h, 2)])
 
 
 def decode_gif(payload: bytes) -> np.ndarray:
@@ -145,7 +119,7 @@ def _decode_gif_impl(payload: bytes) -> np.ndarray:
                 raise ValueError("GIF pixel index outside color table")
             rows = idx.reshape(h, w)
             if iflags & 0x40:
-                rows = _deinterlace(rows)
+                rows = rows[np.argsort(_interlace_order(h))]
             frame = pal[rows]  # fancy indexing already allocates fresh
             if left == 0 and top == 0 and (w, h) == (sw, sh):
                 return frame
@@ -183,28 +157,10 @@ def encode_gif(img: np.ndarray, interlace: bool = False) -> bytes:
     pal_bytes[: pal.shape[0]] = pal
     rows = idx.reshape(h, w)
     if interlace:
-        order = ([*range(0, h, 8)] + [*range(4, h, 8)]
-                 + [*range(2, h, 4)] + [*range(1, h, 2)])
-        rows = rows[order]
-    pixels = rows.reshape(-1)
-
+        rows = rows[_interlace_order(h)]
     min_code = max(2, pal_bits)
-    clear = 1 << min_code
-    width = min_code + 1
-    bw = _BitWriterLSB()
-    bw.write(clear, width)
-    # uncompressed-GIF trick: re-Clear before the table (which a
-    # conformant decoder grows by one per emitted code) would widen codes
-    budget = (1 << width) - clear - 2
-    count = 0
-    for p in pixels:
-        bw.write(int(p), width)
-        count += 1
-        if count == budget:
-            bw.write(clear, width)
-            count = 0
-    bw.write(clear + 1, width)  # End Of Information
-    stream = bw.flush()
+    stream = _lzw_encode(rows.astype(np.uint8).tobytes(), early=0,
+                         min_code=min_code, lsb=True)
 
     out = bytearray(b"GIF89a")
     out += w.to_bytes(2, "little") + h.to_bytes(2, "little")

@@ -214,7 +214,10 @@ class _BitReader:
                 # a real marker inside the scan (EOI / RSTn): the caller
                 # handles markers; reaching here mid-symbol is truncation
                 raise ValueError("unexpected marker in JPEG entropy stream")
-        self.acc = (self.acc << 8) | b
+        # keep only the unread bits: an accumulator that keeps every
+        # byte grows with the scan, making each shift (and the decode)
+        # quadratic
+        self.acc = ((self.acc & ((1 << self.n) - 1)) << 8) | b
         self.n += 8
 
     def bit(self) -> int:

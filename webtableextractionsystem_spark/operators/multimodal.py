@@ -25,8 +25,10 @@ Spark-side design (all real and tested):
 
 Codecs — ALL REAL, pure numpy/stdlib: binary PPM (P6), uncompressed
 24-bit BMP, 8-bit gray/RGB/RGBA or 1/2/4/8-bit palette PNG (zlib
-inflate + all five scanline filters, Adam7, CRC-checked), GIF87a/89a
-(operators/gif.py — full LZW, interlace), JFIF JPEG
+inflate + all five scanline filters, Adam7, CRC-checked; one writer,
+and writer and reader walk one pass list, a sequential image being the
+one-pass case of Adam7), GIF87a/89a (operators/gif.py — full LZW
+through pdf.py's one encoder/decoder pair, interlace), JFIF JPEG
 (operators/jpeg.py — DCT + Annex K tables, 4:4:4/4:2:0/4:2:2, baseline
 AND progressive SOF2; lossy, so round-trips assert PSNR), WAV audio
 (PCM16, G.711 u-law/A-law, IMA ADPCM), MJPEG/AVI video (WAV and AVI
@@ -101,11 +103,12 @@ def synth_media_for_spans(spans_out: DataFrame) -> DataFrame:
     JPEG 4:4:4 baseline and subsampled 4:2:0/4:2:2 baseline OR
     progressive / GIF / baseline TIFF; PNG rows cycle through all five
     scanline filters and alternate Adam7 interlacing, palette PNGs
-    through depths 1/2/4/8, JPEG across qualities 75-95, GIF
-    alternating interlace, TIFF across none/LZW+predictor-2/PackBits x
-    both byte orders with small strips) with pixels seeded from
-    md5(media_ref). Stands in for the real object store; every payload
-    decodes through the real codec path (``decode_image``)."""
+    (``encode_png(..., depth=)``) through depths 1/2/4/8, JPEG across
+    qualities 75-95, GIF (dictionary-grown LZW) alternating interlace,
+    TIFF across none/LZW+predictor-2/PackBits x both byte orders with
+    small strips) with pixels seeded from md5(media_ref). Stands in for
+    the real object store; every payload decodes through the real codec
+    path (``decode_image``)."""
 
     def gen(ref: str) -> dict:
         h = hashlib.md5(ref.encode()).digest()
@@ -145,9 +148,8 @@ def synth_media_for_spans(spans_out: DataFrame) -> DataFrame:
             pal = rng.integers(0, 256, size=(1 << depth, 3),
                                dtype=np.uint8)
             img = pal[rng.integers(0, 1 << depth, size=(ht, w))]
-            payload = encode_png_palette(
-                img, depth, filter_type=h[4] % 5,
-                interlace=bool(h[5] % 2))
+            payload = encode_png(img, filter_type=h[4] % 5,
+                                 interlace=bool(h[5] % 2), depth=depth)
             mime = "image/png"
         elif fmt == 7:
             from .jpeg import encode_jpeg
@@ -292,9 +294,13 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 6: 4}
 
 
-# Adam7 pass grid: (x0, y0, dx, dy) per pass (PNG spec §8.2)
-_ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
+# IHDR interlace method -> pass grid, (x0, y0, dx, dy) per pass (PNG
+# spec §8.2): a sequential image is the one-pass case of Adam7's seven
+_PNG_PASSES = {
+    0: [(0, 0, 1, 1)],
+    1: [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)],
+}
 
 
 def _unpack_indices(rows: np.ndarray, depth: int, pw: int) -> np.ndarray:
@@ -352,7 +358,7 @@ def _decode_png(payload: bytes) -> np.ndarray:
     paletted = color == 3
     ok_depth = depth in (1, 2, 4, 8) if paletted else depth == 8
     if not ok_depth or (not paletted and color not in _PNG_CHANNELS) \
-            or comp != 0 or filt != 0 or interlace not in (0, 1):
+            or comp != 0 or filt != 0 or interlace not in _PNG_PASSES:
         raise ValueError(
             f"unsupported PNG variant (depth={depth}, color={color}, "
             f"interlace={interlace}); only 8-bit gray/RGB/RGBA and "
@@ -374,18 +380,15 @@ def _decode_png(payload: bytes) -> np.ndarray:
     def stride_of(width: int) -> int:
         return (width * depth + 7) // 8 if paletted else width * ch
 
-    # exact inflated size is known from the header (per-pass for Adam7),
-    # so cap the inflate at it: a deflate bomb (~1000:1) can't expand
-    # past the bounded dims' worth of scanline bytes + 1 probe byte
-    if interlace == 0:
-        expected = h * (1 + stride_of(w))
-    else:
-        expected = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw > 0 and ph > 0:
-                expected += ph * (1 + stride_of(pw))
+    passes = []
+    for x0, y0, dx, dy in _PNG_PASSES[interlace]:
+        pw, ph = (w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:  # an empty pass contributes NO bytes (§8.2)
+            passes.append((x0, y0, dx, dy, pw, ph))
+    # exact inflated size is known from the header, so cap the inflate
+    # at it: a deflate bomb (~1000:1) can't expand past the bounded
+    # dims' worth of scanline bytes + 1 probe byte
+    expected = sum(ph * (1 + stride_of(pw)) for *_, pw, ph in passes)
     dec = zlib.decompressobj()
     try:
         raw = dec.decompress(bytes(idat), expected + 1)
@@ -394,28 +397,15 @@ def _decode_png(payload: bytes) -> np.ndarray:
     if len(raw) > expected:
         raise ValueError("PNG pixel data longer than header dimensions")
 
-    if interlace == 0:
-        rows = _png_unfilter(raw, h, stride_of(w), bpp)
-        px = (_unpack_indices(rows, depth, w) if paletted
-              else rows.reshape(h, w, ch))
-    else:
-        px = (np.zeros((h, w), dtype=np.uint8) if paletted
-              else np.zeros((h, w, ch), dtype=np.uint8))
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue  # empty pass contributes NO bytes (spec §8.2)
-            stride = stride_of(pw)
-            nbytes = ph * (1 + stride)
-            rows = _png_unfilter(raw[off:off + nbytes], ph, stride, bpp)
-            off += nbytes
-            sub = (_unpack_indices(rows, depth, pw) if paletted
-                   else rows.reshape(ph, pw, ch))
-            px[y0::dy, x0::dx] = sub
-        if off != len(raw):
-            raise ValueError("PNG interlaced pixel data length mismatch")
+    px = np.zeros((h, w) if paletted else (h, w, ch), dtype=np.uint8)
+    off = 0
+    for x0, y0, dx, dy, pw, ph in passes:
+        stride = stride_of(pw)
+        nbytes = ph * (1 + stride)
+        rows = _png_unfilter(raw[off:off + nbytes], ph, stride, bpp)
+        off += nbytes
+        px[y0::dy, x0::dx] = (_unpack_indices(rows, depth, pw) if paletted
+                              else rows.reshape(ph, pw, ch))
     if paletted:
         if plte is None or len(plte) == 0 or len(plte) % 3:
             raise ValueError("palette PNG with missing/malformed PLTE")
@@ -424,45 +414,61 @@ def _decode_png(payload: bytes) -> np.ndarray:
             raise ValueError("PNG pixel index outside PLTE")
         return pal[px]
     if ch == 1:
-        return np.repeat(px[..., None] if px.ndim == 2 else px, 3,
-                         axis=2).copy()
+        return np.repeat(px, 3, axis=2)
     return px[..., :3].copy()
 
 
 def encode_png(img: np.ndarray, filter_type: int = 0,
-               interlace: bool = False) -> bytes:
-    """HxW (gray) / HxWx3 / HxWx4 uint8 -> 8-bit PNG, sequential or
-    Adam7-interlaced. ``filter_type`` applies that PNG scanline filter
-    (0-4) to every row, so tests can exercise each decoder un-filter
-    path individually."""
-    if img.ndim == 2:
-        color, ch = 0, 1
-        px = img[..., None]
+               interlace: bool = False, depth: int | None = None) -> bytes:
+    """The package's one PNG writer, sequential or Adam7-interlaced.
+    Without ``depth``: HxW (gray) / HxWx3 / HxWx4 uint8 -> 8-bit PNG.
+    With ``depth`` 1/2/4/8: HxWx3 uint8 (<= 2^depth distinct colors) ->
+    color-type-3 PNG, PLTE from the image's unique colors and indices
+    MSB-first packed — the dominant real-web icon/sprite form.
+    ``filter_type`` applies that PNG scanline filter (0-4) to every row,
+    so tests can exercise each decoder un-filter path individually."""
+    if depth is not None:
+        if img.ndim != 3 or img.shape[2] < 3:
+            raise ValueError(
+                f"palette encode_png needs HxWx(>=3), got shape {img.shape}")
+        if depth not in (1, 2, 4, 8):
+            raise ValueError(f"bad palette depth {depth}")
+        color, bpp = 3, 1
+    elif img.ndim == 2:
+        color, bpp = 0, 1
+        img = img[..., None]
     elif img.shape[2] == 3:
-        color, ch = 2, 3
-        px = img
+        color, bpp = 2, 3
     elif img.shape[2] == 4:
-        color, ch = 6, 4
-        px = img
+        color, bpp = 6, 4
     else:
         raise ValueError(f"unsupported channel count {img.shape[2]}")
     if not 0 <= filter_type <= 4:
         raise ValueError(f"bad PNG filter type {filter_type}")
-    h, w = px.shape[:2]
-    if interlace:
-        scan = b"".join(
-            _png_filter_rows(
-                px[y0::dy, x0::dx].astype(np.int64).reshape(
-                    px[y0::dy, x0::dx].shape[0], -1),
-                ch, filter_type)
-            for x0, y0, dx, dy in _ADAM7
-            if px[y0::dy, x0::dx].size)
+    h, w = img.shape[:2]
+    if h == 0 or w == 0:
+        raise ValueError("empty image")
+    plte = b""
+    if depth is not None:
+        pal, inv = np.unique(img[..., :3].reshape(-1, 3), axis=0,
+                             return_inverse=True)
+        if pal.shape[0] > (1 << depth):
+            raise ValueError(f"{pal.shape[0]} distinct colors exceed a "
+                             f"{1 << depth}-entry palette; quantize first")
+        plte = _png_chunk(b"PLTE", pal.astype(np.uint8).tobytes())
+        px = inv.reshape(h, w).astype(np.int64)
     else:
-        scan = _png_filter_rows(px.astype(np.int64).reshape(h, w * ch),
-                                ch, filter_type)
+        px = img.astype(np.int64)
+    scan = bytearray()
+    for x0, y0, dx, dy in _PNG_PASSES[int(interlace)]:
+        sub = px[y0::dy, x0::dx]
+        if sub.size:  # an empty pass contributes NO bytes (§8.2)
+            rows = (_pack_indices(sub, depth) if depth is not None
+                    else sub.reshape(sub.shape[0], -1))
+            scan += _png_filter_rows(rows, bpp, filter_type)
     ihdr = (w.to_bytes(4, "big") + h.to_bytes(4, "big")
-            + bytes([8, color, 0, 0, int(interlace)]))
-    return (_PNG_SIG + _png_chunk(b"IHDR", ihdr)
+            + bytes([depth or 8, color, 0, 0, int(interlace)]))
+    return (_PNG_SIG + _png_chunk(b"IHDR", ihdr) + plte
             + _png_chunk(b"IDAT", zlib.compress(scan))
             + _png_chunk(b"IEND", b""))
 
@@ -511,45 +517,6 @@ def _pack_indices(idx: np.ndarray, depth: int) -> np.ndarray:
     for i in range(per):
         packed |= padded[:, i::per] << (8 - depth * (i + 1))
     return packed
-
-
-def encode_png_palette(img: np.ndarray, depth: int = 8,
-                       filter_type: int = 0,
-                       interlace: bool = False) -> bytes:
-    """HxWx3 uint8 (<= 2^depth distinct colors) -> color-type-3 PNG with
-    depth-bit palette indices (1/2/4/8), MSB-first packed, PLTE from the
-    image's unique colors, sequential or Adam7-interlaced. The dominant
-    real-web icon/sprite form."""
-    if img.ndim != 3 or img.shape[2] < 3:
-        raise ValueError(
-            f"encode_png_palette needs HxWx(>=3), got shape {img.shape}")
-    if depth not in (1, 2, 4, 8):
-        raise ValueError(f"bad palette depth {depth}")
-    if not 0 <= filter_type <= 4:
-        raise ValueError(f"bad PNG filter type {filter_type}")
-    h, w = img.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("empty image")
-    pal, inv = np.unique(img[..., :3].reshape(-1, 3), axis=0,
-                         return_inverse=True)
-    if pal.shape[0] > (1 << depth):
-        raise ValueError(f"{pal.shape[0]} distinct colors exceed a "
-                         f"{1 << depth}-entry palette; quantize first")
-    idx = inv.reshape(h, w).astype(np.int64)
-    if interlace:
-        scan = b"".join(
-            _png_filter_rows(_pack_indices(idx[y0::dy, x0::dx], depth),
-                             1, filter_type)
-            for x0, y0, dx, dy in _ADAM7
-            if idx[y0::dy, x0::dx].size)
-    else:
-        scan = _png_filter_rows(_pack_indices(idx, depth), 1, filter_type)
-    ihdr = (w.to_bytes(4, "big") + h.to_bytes(4, "big")
-            + bytes([depth, 3, 0, 0, int(interlace)]))
-    return (_PNG_SIG + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"PLTE", pal.astype(np.uint8).tobytes())
-            + _png_chunk(b"IDAT", zlib.compress(scan))
-            + _png_chunk(b"IEND", b""))
 
 
 def decode_image(payload: bytes) -> np.ndarray:
@@ -623,18 +590,18 @@ def resize_images(media: DataFrame, target: int = 8) -> DataFrame:
                         "width int, height int")
 
 
-def frame_sample(media: DataFrame, every_n: int = 2,
-                 kinds: tuple = ("image", "video")) -> DataFrame:
+def frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:
     """Frame-sampling plumbing for frame-bearing media: emits one row
     per sampled frame index (pure Catalyst: sequence + explode; the
     decode of each frame would plug into decode_image batch-wise).
-    Restricted to ``kinds`` — audio rows reuse meta.n_frames as the
-    SAMPLE count (up to ~1000s), which must not explode into bogus
+    Restricted to image and video rows — audio rows reuse meta.n_frames
+    as the SAMPLE count (up to ~1000s), which must not explode into bogus
     frame rows — and media with n_frames <= 0 emit no rows (not a
     phantom frame 0)."""
     return (
         media
-        .where(F.col("kind").isin(*kinds) & (F.col("meta.n_frames") > 0))
+        .where(F.col("kind").isin("image", "video")
+               & (F.col("meta.n_frames") > 0))
         .select(
             "media_ref",
             F.explode(
@@ -734,7 +701,7 @@ def _ima_step_sample(nibble: int, pred: int, index: int) -> tuple[int, int]:
 _IMA_SPB = 57  # samples per block: (spb-1) % 8 == 0 (4-byte word layout)
 
 
-def _ima_encode(samples: np.ndarray, spb: int = _IMA_SPB) -> bytes:
+def _ima_encode(samples: np.ndarray) -> bytes:
     """[n, ch] int16 -> standard IMA-WAV block stream: per block, one
     4-byte header per channel (initial sample + step index), then the
     channels' nibble data interleaved in 4-byte words (8 samples per
@@ -742,11 +709,11 @@ def _ima_encode(samples: np.ndarray, spb: int = _IMA_SPB) -> bytes:
     n, ch = samples.shape
     indices = [0] * ch
     out = bytearray()
-    for start in range(0, n, spb):
-        chunk = samples[start:start + spb]
-        if len(chunk) < spb:  # pad the tail block (fact chunk trims)
-            chunk = np.concatenate(
-                [chunk, np.repeat(chunk[-1:], spb - len(chunk), axis=0)])
+    for start in range(0, n, _IMA_SPB):
+        chunk = samples[start:start + _IMA_SPB]
+        if len(chunk) < _IMA_SPB:  # pad the tail block (fact chunk trims)
+            chunk = np.concatenate([chunk, np.repeat(
+                chunk[-1:], _IMA_SPB - len(chunk), axis=0)])
         nibs = []
         for c in range(ch):
             pred = int(chunk[0, c])
@@ -767,7 +734,7 @@ def _ima_encode(samples: np.ndarray, spb: int = _IMA_SPB) -> bytes:
                 ch_nibs.append(nib)
             indices[c] = index
             nibs.append(ch_nibs)
-        for w in range(0, spb - 1, 8):
+        for w in range(0, _IMA_SPB - 1, 8):
             for c in range(ch):
                 for i in range(w, w + 8, 2):
                     out.append(nibs[c][i] | (nibs[c][i + 1] << 4))

@@ -824,9 +824,6 @@ def _run_length_encode(data: bytes) -> bytes:
     return _packbits_encode(data) + b"\x80"
 
 
-_LZW_CLEAR, _LZW_EOD, _LZW_FIRST = 256, 257, 258
-
-
 def _lzw_decode(raw: bytes, early: int = 1, min_code: int = 8,
                 lsb: bool = False, n_out: int | None = None) -> bytes:
     """The package's one LZW decoder (§7.4.4, TIFF §13, GIF89a): Clear =
@@ -890,38 +887,45 @@ def _lzw_decode(raw: bytes, early: int = 1, min_code: int = 8,
     return bytes(out[:n_out])
 
 
-def _lzw_encode(data: bytes, early: int = 1,
-                full_tables: bool = False) -> bytes:
-    """Paired greedy LZW encoder, bit-synchronized with _lzw_decode:
+def _lzw_encode(data: bytes, early: int = 1, full_tables: bool = False,
+                min_code: int = 8, lsb: bool = False) -> bytes:
+    """The package's one LZW encoder, greedy and bit-synchronized with
+    _lzw_decode under the same ``early``, ``min_code`` and ``lsb``: PDF
+    and TIFF keep the defaults, GIF passes early 0, its min code size
+    and LSB-first codes (every ``data`` byte must then be < Clear). The
     width is recomputed from the DECODER's table size (one entry behind
     the encoder's — the decoder adds on read, starting from the second
     code). The default emits a conservative early Clear; §7.4.4.2 also
     permits deferring the Clear until the table is COMPLETELY full —
     ``full_tables=True`` exercises that spec edge (the decoder must
     cap the width at 12 and stop growing, not raise)."""
+    clear = 1 << min_code
+    first_code = clear + 2
     acc = nbits = 0
     out = bytearray()
 
     def emit(code: int, width: int) -> None:
         nonlocal acc, nbits
-        acc = (acc << width) | code
+        if lsb:
+            acc |= code << nbits
+        else:
+            acc = (acc << width) | code
         nbits += width
         while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
             nbits -= 8
-        acc &= (1 << nbits) - 1  # unwritten bits only, as in the decoder
+            if lsb:
+                out.append(acc & 0xFF)
+                acc >>= 8
+            else:
+                out.append((acc >> nbits) & 0xFF)
+        if not lsb:
+            acc &= (1 << nbits) - 1  # unwritten bits only, as in the decoder
 
-    def flush() -> None:
-        nonlocal acc, nbits
-        if nbits:
-            out.append((acc << (8 - nbits)) & 0xFF)
-            acc = nbits = 0
-
-    emit(_LZW_CLEAR, 9)
+    emit(clear, min_code + 1)
     table: dict[bytes, int] = {}
-    enc_next = _LZW_FIRST
-    dec_next = _LZW_FIRST
-    width = 9
+    enc_next = first_code
+    dec_next = first_code
+    width = min_code + 1
     first = True
 
     def emitted_one() -> None:
@@ -948,17 +952,18 @@ def _lzw_encode(data: bytes, early: int = 1,
         if dec_next >= (4096 - early if full_tables else 4094 - early):
             # default: reset conservatively early; full_tables: defer
             # to the completely-full table per §7.4.4.2
-            emit(_LZW_CLEAR, width)
+            emit(clear, width)
             table.clear()
-            enc_next = _LZW_FIRST
-            dec_next = _LZW_FIRST
-            width = 9
+            enc_next = first_code
+            dec_next = first_code
+            width = min_code + 1
             first = True
     if cur:
         emit(table[cur] if len(cur) > 1 else cur[0], width)
         emitted_one()
-    emit(_LZW_EOD, width)
-    flush()
+    emit(clear + 1, width)
+    if nbits:  # pad the last byte with zero bits
+        out.append(acc & 0xFF if lsb else (acc << (8 - nbits)) & 0xFF)
     return bytes(out)
 
 

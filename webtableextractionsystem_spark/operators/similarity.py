@@ -70,8 +70,7 @@ def _emb_with_norm(spark: SparkSession, sf_dir: str,
     return raw.select("vec_id", e.alias("e"), _norm(e).alias("nrm"))
 
 
-def topk_bruteforce(spark: SparkSession, sf_dir: str,
-                    top_k: int = TOP_K) -> DataFrame:
+def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb_with_norm(spark, sf_dir)
     q = emb.where(F.col("vec_id") < N_QUERIES) \
            .select(F.col("vec_id").alias("q_id"), F.col("e").alias("qe"),
@@ -90,7 +89,7 @@ def topk_bruteforce(spark: SparkSession, sf_dir: str,
         .where(F.col("q_id") != F.col("nbr_id"))
         .select("q_id", "nbr_id", F.round(sim, 4).alias("sim_r"))
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
+        .where(F.col("rank") <= TOP_K)
     )
 
 
@@ -290,8 +289,7 @@ def ivf_assignments(spark: SparkSession, sf_dir: str,
     return assigned, centroids
 
 
-def ivf_topk(spark: SparkSession, sf_dir: str, k_cells: int = IVF_K,
-             n_probe: int = IVF_NPROBE, top_k: int = TOP_K,
+def ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int = IVF_NPROBE,
              quantizer: tuple | None = None) -> DataFrame:
     """ANN search: route each query to its n_probe nearest centroids
     (tiny broadcast cross join), then exact cosine only within those
@@ -301,7 +299,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, k_cells: int = IVF_K,
     so multi-probe sweeps (ivf_recall) fit k-means once, not per probe."""
     raw = load_embeddings(spark, sf_dir)
     assigned, centroids = quantizer or ivf_assignments(
-        spark, sf_dir, k_cells, emb_raw=raw)
+        spark, sf_dir, emb_raw=raw)
     emb = _emb_with_norm(spark, sf_dir, emb_raw=raw)
     q = emb.where(F.col("vec_id") < N_QUERIES) \
            .select(F.col("vec_id").alias("q_id"), F.col("e").alias("qe"),
@@ -327,17 +325,15 @@ def ivf_topk(spark: SparkSession, sf_dir: str, k_cells: int = IVF_K,
         .where(F.col("q_id") != F.col("nbr_id"))
         .select("q_id", "nbr_id", F.round(sim, 4).alias("sim_r"))
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
+        .where(F.col("rank") <= TOP_K)
     )
 
 
 IVF_RECALL_PROBES = (1, 2, 4)
 
 
-def ivf_recall(spark: SparkSession, sf_dir: str,
-               probes: tuple = IVF_RECALL_PROBES,
-               top_k: int = TOP_K) -> DataFrame:
-    """Recall@top_k of the IVF ANN against exact brute force, one row per
+def ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@TOP_K of the IVF ANN against exact brute force, one row per
     n_probe — this gates ANN *quality*, not just determinism: a quantizer
     or probe-routing regression that still produced deterministic-but-
     worse neighbors would fail this pin while q_emb_ivf_topk alone might
@@ -356,14 +352,13 @@ def ivf_recall(spark: SparkSession, sf_dir: str,
     # reuse ONE resident copy; the k-means quantizer is fit ONCE and
     # shared across probes
     brute = session_persisted(
-        spark, ("ivf_brute", sf_dir, top_k),
-        lambda: topk_bruteforce(spark, sf_dir, top_k=top_k)
-        .select("q_id", "nbr_id"))
+        spark, ("ivf_brute", sf_dir),
+        lambda: topk_bruteforce(spark, sf_dir).select("q_id", "nbr_id"))
     quantizer = ivf_assignments(spark, sf_dir)
     den = brute.agg(F.count("*").alias("n_total"))
     rows = []
-    for n_probe in probes:
-        ivf = ivf_topk(spark, sf_dir, n_probe=n_probe, top_k=top_k,
+    for n_probe in IVF_RECALL_PROBES:
+        ivf = ivf_topk(spark, sf_dir, n_probe=n_probe,
                        quantizer=quantizer).select("q_id", "nbr_id")
         num = brute.join(ivf, ["q_id", "nbr_id"]) \
             .agg(F.count("*").alias("n_hits"))
@@ -488,8 +483,7 @@ def semdedup_k_cells(n_vectors: int) -> int:
 
 def semdedup(spark: SparkSession, sf_dir: str,
              tau: float = SEMDEDUP_TAU,
-             k_cells: int | None = None,
-             quantizer: tuple | None = None) -> DataFrame:
+             k_cells: int | None = None) -> DataFrame:
     """SemDeDup per-cell verdicts: (cell, n_vecs, n_kept, dropped).
 
     A vector is DROPPED iff some same-cell vector with a smaller vec_id
@@ -510,10 +504,9 @@ def semdedup(spark: SparkSession, sf_dir: str,
     default is exactly the IVF_K floor, so the pin stays on the
     fixed-k form (test_semdedup_default_k_matches_pinned_gate_form)."""
     raw = load_embeddings(spark, sf_dir)
-    if quantizer is None and k_cells is None:
+    if k_cells is None:
         k_cells = semdedup_k_cells(raw.count())
-    assigned, _ = quantizer or ivf_assignments(
-        spark, sf_dir, k_cells, emb_raw=raw)
+    assigned, _ = ivf_assignments(spark, sf_dir, k_cells, emb_raw=raw)
     side = _emb_with_norm(spark, sf_dir, emb_raw=raw).join(assigned, "vec_id")
     a = side.select(F.col("vec_id").alias("id_a"), F.col("e").alias("ea"),
                     F.col("nrm").alias("na"), "cell")

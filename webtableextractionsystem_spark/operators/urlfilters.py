@@ -46,10 +46,10 @@ def person_url_relevance(url: Column) -> Column:
     return F.when(decoded.rlike(RE_PERSON_NAME), F.lit(1)).otherwise(F.lit(0))
 
 
-def classify_urls(df, url_col: str = "url", extra_cols: tuple = ()):
+def classify_urls(df, extra_cols: tuple = ()):
     """(url, possible, relevance, keep[, *extra_cols]) — keep mirrors the
     reference's 'useful' routing: possible AND relevance >= 0.8."""
-    url = F.col(url_col)
+    url = F.col("url")
     rel = person_url_relevance(url)
     possible = is_possible_item_url(url)
     return df.select(
